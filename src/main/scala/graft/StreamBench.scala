@@ -7,7 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.{PriceAlertsStream, ProcessorAlerts, StreamJoins, StreamingDedup, TwsAlerts}
+import graft.streaming.{PriceAlertsStream, ProcessorAlerts, StreamJoins, StreamingDedup}
 
 /** Streaming throughput benchmark battery: drives every stateful
   * streaming SHAPE the library ships (update-mode windowed agg,
@@ -140,7 +140,7 @@ object StreamBench {
         (PriceAlertsStream.processorAlertsAppend(purchases(20000000L), products,
           threshold = 500.0, watermarkDelay = "5 seconds"), "append")),
       "tws_processor" -> (() =>
-        (TwsAlerts.alerts(spark,
+        (ProcessorAlerts.alerts(spark,
           graft.operators.PriceAlerts.purchasesWithProducts(
             purchases(2000000L), products),
           threshold = 500.0, watermarkDelay = "5 seconds").toDF(), "append")),
@@ -297,22 +297,20 @@ object StreamBench {
         (graft.streaming.StreamingCusum.detect(spark, s).toDF(), "append")
       }),
 
-      "fmgws_wallclock_hotkey" -> (() => {
-        // the r12 W7 liveness fix's regression surface: 8 continuously
-        // hot product keys, so ProcessingTimeTimeout (an INACTIVITY
-        // timeout, re-armed by every data batch) never fires and every
-        // window must close on the DATA path. Event time rides 2
-        // minutes behind the wall clock, so each batch's windows are
-        // already past the punctuator bound — out_rows_per_sec is the
-        // hot-key emission throughput, and it reads ZERO on any
-        // regression back to timeout-only closing.
+      "wallclock_hotkey" -> (() => {
+        // the wall-clock processor (W7) on 8 continuously hot product
+        // keys. Event time rides 2 minutes behind the wall clock, so
+        // every window a batch touches has already ended in processing
+        // time: its timer fires in the same batch and the alert leaves
+        // on the data path. out_rows_per_sec is the hot-key emission
+        // throughput; it reads ZERO if a busy key stops closing windows.
         val s = purchases(2000000L).select(
           col("id"), col("quantity"),
           (col("id") % 8L).as("productid"),
           (col("ts") - expr("INTERVAL 2 minutes")).as("ts"))
         (ProcessorAlerts.alertsWallClock(spark,
           graft.operators.PriceAlerts.purchasesWithProducts(s, products),
-          threshold = 0.0, punctuatePeriod = "1 second").toDF(), "append")
+          threshold = 0.0).toDF(), "append")
       }),
       "forward_asof" -> (() => {
         // q180's streaming twin: timer-resolved purchase→next-error

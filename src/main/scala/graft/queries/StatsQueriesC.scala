@@ -15,6 +15,33 @@ import graft.QueryHelpers._
   */
 object StatsQueriesC {
 
+  /** q246's per-part aggregate, the prefix ahead of its eager
+    * distributedCumSum — shared with `graft.Explain`'s `q246_perpart`
+    * fragment, whose plan the full query hides. ONE exchange on
+    * l_partkey serves BOTH aggregates (r17, guide §2.4): hash(l_partkey)
+    * satisfies the (l_partkey, mon) clustering (subset rule) and the
+    * l_partkey rollup — the default plan shuffled twice ((l_partkey,
+    * mon) grain, then l_partkey; plans/r17/q246_perpart_before.txt),
+    * and the month grain is ~1 row per map partition per key, so the
+    * first shuffle's map-side combine bought nothing. partkey is
+    * high-cardinality: parallelism unharmed.
+    */
+  private[graft] def q246PerPart(s: SparkSession, dir: String): DataFrame =
+    Tables.lineitem(s, dir)
+      .join(Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_orderdate")),
+        col("l_orderkey") === col("o_orderkey"))
+      .repartition(col("l_partkey"))
+      .groupBy(col("l_partkey"),
+        date_format(col("o_orderdate"), "yyyy-MM").as("mon"))
+      .agg(sum(col("l_quantity").cast("long")).as("q_m"),
+        sum(floor(col("l_extendedprice") * 100 + lit(0.5))
+          .cast("long")).as("rev_m"))
+      .groupBy(col("l_partkey"))
+      .agg(count(lit(1)).as("n_m"), sum(col("q_m")).as("sq"),
+        sum(col("q_m") * col("q_m")).as("sq2"),
+        sum(col("rev_m")).as("rev_c"))
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Order-fulfillment latency buckets by priority: days from order
@@ -587,27 +614,7 @@ object StatsQueriesC {
     // aggregate, so no single-partition window anywhere.
     "q246_abc_xyz_matrix" -> ((s, dir) => {
       val dec = "decimal(38,0)"
-      val perPart = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderdate")),
-          col("l_orderkey") === col("o_orderkey"))
-        // ONE exchange on l_partkey serves BOTH aggregates (r17, guide
-        // §2.4): hash(l_partkey) satisfies the (l_partkey, mon)
-        // clustering (subset rule) and the l_partkey rollup — the
-        // default plan shuffled twice ((l_partkey, mon) grain, then
-        // l_partkey), and the month grain is ~1 row per map partition
-        // per key, so the first shuffle's map-side combine bought
-        // nothing. partkey is high-cardinality: parallelism unharmed.
-        .repartition(col("l_partkey"))
-        .groupBy(col("l_partkey"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("mon"))
-        .agg(sum(col("l_quantity").cast("long")).as("q_m"),
-          sum(floor(col("l_extendedprice") * 100 + lit(0.5))
-            .cast("long")).as("rev_m"))
-        .groupBy(col("l_partkey"))
-        .agg(count(lit(1)).as("n_m"), sum(col("q_m")).as("sq"),
-          sum(col("q_m") * col("q_m")).as("sq2"),
-          sum(col("rev_m")).as("rev_c"))
+      val perPart = q246PerPart(s, dir)
       val cum = graft.operators.ScaleOps.distributedCumSum(perPart,
         Seq(col("rev_c").desc, col("l_partkey")), "rev_c",
         cumCol = "cum_c", rankCol = "rk_p")

@@ -21,6 +21,13 @@ import graft.operators.PriceAlerts
   *    reference's punctuator, whose late-data state leak (W6) we
   *    deliberately do not reproduce.
   *
+  * The reference's hand-written processor (keyed store + punctuator)
+  * has one imperative twin, [[ProcessorAlerts]]: a single
+  * transformWithState processor closing windows on the watermark
+  * (`alerts`) or on the wall clock (`alertsWallClock`, exact W7). It
+  * needs the RocksDB state store; [[processorAlertsAppend]] stays the
+  * fast path for the event-time semantics.
+  *
   * Emission-granularity caveat (SURVEY.md §7.5.1): KS update-emits per
   * record, Spark per micro-batch; final per-window values agree, which
   * is what the golden tests assert.

@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.streaming.{PriceAlertsStream, ProcessorAlerts, StreamingDedup, TwsAlerts}
+import graft.streaming.{PriceAlertsStream, ProcessorAlerts, StreamingDedup}
 
 /** Checkpoint recovery: the Spark analogue of the reference runtime's
   * restart story (consumer offsets + changelog topics,
@@ -90,7 +90,7 @@ class CheckpointRecoverySpec extends SparkSpec {
         val in = MemoryStream[P]
         val joined = graft.operators.PriceAlerts.purchasesWithProducts(
           in.toDF(), products(300.0))
-        (in, TwsAlerts.alerts(spark, joined, threshold = 10.0).toDF())
+        (in, ProcessorAlerts.alerts(spark, joined, threshold = 10.0).toDF())
       }
       val resumed = runAppendPhases(mk _, twsPhases, interrupt = true)
       val straight = runAppendPhases(mk _, twsPhases, interrupt = false)
@@ -100,21 +100,6 @@ class CheckpointRecoverySpec extends SparkSpec {
       assert(resumed.exists(_.contains("3600.0")),
         "the 3600 golden sum must be rebuilt from checkpointed state")
     }
-  }
-
-  // ---- FMGWS (flatMapGroupsWithState, default HDFS provider) -----------
-
-  test("FMGWS alerts recover from checkpoint: kill mid-window, resume, identical output") {
-    def mk() = {
-      val in = MemoryStream[P]
-      val joined = graft.operators.PriceAlerts.purchasesWithProducts(
-        in.toDF(), products(300.0))
-      (in, ProcessorAlerts.alerts(spark, joined, threshold = 10.0).toDF())
-    }
-    val resumed = runAppendPhases(mk _, twsPhases, interrupt = true)
-    val straight = runAppendPhases(mk _, twsPhases, interrupt = false)
-    assert(resumed.nonEmpty && resumed == straight)
-    assert(resumed.exists(_.contains("3600.0")))
   }
 
   // ---- DSL append mode (built-in windowed agg state) -------------------

@@ -93,8 +93,6 @@ class CodegenFallbackSpec extends SparkSpec {
       val ts = Timestamp.valueOf("2024-01-01 00:00:01")
       assert(roundTrip(graft.streaming.ProcessorAlerts.PurchaseAmount(
         "p1", ts, 3.5)).amount == 3.5)
-      assert(roundTrip(graft.streaming.ProcessorAlerts.WindowSums(
-        Map(60L -> 1.5))).sums(60L) == 1.5)
       assert(roundTrip(graft.streaming.StreamingAnomaly.Pt(
         "k", ts, 1L, 2.0)).value == 2.0)
       assert(roundTrip(graft.streaming.StreamingAnomaly.Verdict(

@@ -4,14 +4,14 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.streaming.{PriceAlertsStream, ProcessorAlerts}
 
 /** Streaming twins of the golden scenarios: W3 (update-mode eager
   * emission) and W4 (append-mode emit-once-on-close), plus the
-  * flatMapGroupsWithState processor escape hatch and the streaming
-  * latest-per-key compaction.
+  * transformWithState processor escape hatch on both clocks and the
+  * streaming latest-per-key compaction.
   */
 class PriceAlertsStreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -33,6 +33,40 @@ class PriceAlertsStreamingSpec extends SparkSpec {
     val q = df.writeStream.format("memory").queryName(name).outputMode(mode).start()
     try drive(q) finally q.stop()
     spark.table(name)
+  }
+
+  /** transformWithState keeps state and timers in separate column
+    * families, which only the RocksDB provider supports.
+    */
+  private def withRocksDb(body: => Unit): Unit = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  private def joined(in: MemoryStream[P]): DataFrame =
+    graft.operators.PriceAlerts.purchasesWithProducts(in.toDF(), products(300.0))
+
+  /** Processing-time timers keep the engine running a batch per
+    * trigger (processAllAvailable never settles), so wall-clock tests
+    * start on a fixed trigger and poll the sink instead.
+    */
+  private def startPolled(df: DataFrame, name: String): StreamingQuery =
+    df.writeStream.format("memory").queryName(name).outputMode("append")
+      .trigger(Trigger.ProcessingTime("500 milliseconds")).start()
+
+  /** Product-1 rows in sink `name`, polled until non-empty or `waitMs`. */
+  private def pollAlerts(name: String, waitMs: Long): Array[org.apache.spark.sql.Row] = {
+    def rows() = spark.table(name).collect()
+      .filter(_.getAs[String]("product_id") == "1")
+    val deadline = System.currentTimeMillis() + waitMs
+    while (rows().isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(500)
+    rows()
   }
 
   test("W3 DSL update mode: alert emitted eagerly, without window close") {
@@ -81,86 +115,74 @@ class PriceAlertsStreamingSpec extends SparkSpec {
     assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
   }
 
-  test("processor escape hatch (flatMapGroupsWithState): golden 3600 + state cleanup") {
-    val in = MemoryStream[P]
-    val joined = graft.operators.PriceAlerts.purchasesWithProducts(
-      in.toDF(), products(300.0))
-    val alerts = ProcessorAlerts.alerts(spark, joined, threshold = 10.0)
-    val out = runQuery(alerts.toDF(), "append", "fmgws_out") { q =>
-      in.addData((1L to 6L).map(i => P(i, 2L, 1L, t0230)))
-      q.processAllAvailable()
-      in.addData(P(100L, 1L, 1L, Timestamp.valueOf("2024-01-01 00:05:00")))
-      q.processAllAvailable()
-      // third batch: nothing new for window 02:00 => no duplicate emission
-      in.addData(P(101L, 1L, 1L, Timestamp.valueOf("2024-01-01 00:06:00")))
-      q.processAllAvailable()
-    }
-    val rows = out.collect().filter(_.getAs[Timestamp]("window_start") == w0200)
-    assert(rows.length == 1, "window 02:00 must be emitted exactly once")
-    assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
-    assert(rows.head.getAs[String]("product_id") == "1")
-  }
-
   test("transformWithState processor: golden 3600, emit-once via timers") {
-    // transformWithState requires a multi-column-family store → RocksDB
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try testTws() finally spark.conf.unset(key)
-  }
-
-  private def testTws(): Unit = {
-    val in = MemoryStream[P]
-    val joined = graft.operators.PriceAlerts.purchasesWithProducts(
-      in.toDF(), products(300.0))
-    val alerts = graft.streaming.TwsAlerts.alerts(spark, joined, threshold = 10.0)
-    val out = runQuery(alerts.toDF(), "append", "tws_out") { q =>
-      in.addData((1L to 6L).map(i => P(i, 2L, 1L, t0230)))
-      q.processAllAvailable()
-      in.addData(P(100L, 1L, 1L, Timestamp.valueOf("2024-01-01 00:05:00")))
-      q.processAllAvailable()
-      in.addData(P(101L, 1L, 1L, Timestamp.valueOf("2024-01-01 00:07:00")))
-      q.processAllAvailable()
+    withRocksDb {
+      val in = MemoryStream[P]
+      val alerts = ProcessorAlerts.alerts(spark, joined(in), threshold = 10.0)
+      val out = runQuery(alerts.toDF(), "append", "tws_out") { q =>
+        in.addData((1L to 6L).map(i => P(i, 2L, 1L, t0230)))
+        q.processAllAvailable()
+        in.addData(P(100L, 1L, 1L, Timestamp.valueOf("2024-01-01 00:05:00")))
+        q.processAllAvailable()
+        // third batch: nothing new for window 02:00 => no duplicate emission
+        in.addData(P(101L, 1L, 1L, Timestamp.valueOf("2024-01-01 00:07:00")))
+        q.processAllAvailable()
+      }
+      val rows = out.collect().filter(_.getAs[Timestamp]("window_start") == w0200)
+      assert(rows.length == 1, "window 02:00 must be emitted exactly once")
+      assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
+      assert(rows.head.getAs[String]("product_id") == "1")
     }
-    val rows = out.collect().filter(_.getAs[Timestamp]("window_start") == w0200)
-    assert(rows.length == 1, "window 02:00 must be emitted exactly once")
-    assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
   }
 
   test("W7 wall-clock punctuator variant: emits after processing-time period") {
-    // NOTE: processAllAvailable() never settles once processing-time
-    // timeouts are registered (the engine keeps scheduling timer
-    // batches), so this test polls the sink with a deadline instead.
-    val in = MemoryStream[P]
-    val joined = graft.operators.PriceAlerts.purchasesWithProducts(
-      in.toDF(), products(300.0))
-    val alerts = ProcessorAlerts.alertsWallClock(spark, joined,
-      threshold = 10.0, punctuatePeriod = "1 second")
-    val q = alerts.toDF().writeStream.format("memory")
-      .queryName("wallclock_out").outputMode("append").start()
-    try {
-      in.addData((1L to 6L).map(i => P(i, 2L, 1L, t0230)))
-      def alertRows() = spark.table("wallclock_out").collect()
-        .filter(_.getAs[String]("product_id") == "1")
-      val deadline = System.currentTimeMillis() + 60000
-      while (alertRows().isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(500)
-      }
-      val rows = alertRows()
-      assert(rows.length == 1, "one emission after the punctuator fires")
-      assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
-      assert(rows.head.getAs[Timestamp]("window_start") == w0200)
-      Thread.sleep(3000) // further punctuations must not re-emit
-      assert(alertRows().length == 1, "state deleted after emission (no re-emit)")
-    } finally q.stop()
+    // 2024 windows ended long ago in processing time: the timer
+    // registered on the data path fires in the same batch
+    withRocksDb {
+      val in = MemoryStream[P]
+      val alerts = ProcessorAlerts.alertsWallClock(spark, joined(in), threshold = 10.0)
+      val q = startPolled(alerts.toDF(), "wallclock_out")
+      try {
+        in.addData((1L to 6L).map(i => P(i, 2L, 1L, t0230)))
+        val rows = pollAlerts("wallclock_out", 60000)
+        assert(rows.length == 1, "one emission after the punctuator fires")
+        assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
+        assert(rows.head.getAs[Timestamp]("window_start") == w0200)
+        Thread.sleep(3000) // further timer batches must not re-emit
+        assert(pollAlerts("wallclock_out", 0).length == 1,
+          "state deleted after emission (no re-emit)")
+      } finally q.stop()
+    }
+  }
+
+  test("W7 wall-clock: an idle key's open window closes on its timer, exactly once") {
+    withRocksDb {
+      val in = MemoryStream[P]
+      val alerts = ProcessorAlerts.alertsWallClock(spark, joined(in), threshold = 10.0)
+      val q = startPolled(alerts.toDF(), "idle_out")
+      try {
+        // keep >= 5 s of the current minute so the data batch lands
+        // while its window is still open
+        if (60000 - System.currentTimeMillis() % 60000 < 5000)
+          Thread.sleep(60000 - System.currentTimeMillis() % 60000 + 100)
+        val now = System.currentTimeMillis()
+        val windowStart = now - now % 60000
+        in.addData((1L to 6L).map(i => P(i, 2L, 1L, new Timestamp(now))))
+        // no further input for the key: only its timer can close the window
+        val rows = pollAlerts("idle_out", 90000)
+        val seenAt = System.currentTimeMillis()
+        assert(rows.length == 1, "one emission once the window has ended")
+        assert(seenAt >= windowStart + 60000, "no emission while the window is open")
+        assert(rows.head.getAs[Timestamp]("window_start") == new Timestamp(windowStart))
+        assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
+        Thread.sleep(3000)
+        assert(pollAlerts("idle_out", 0).length == 1, "no re-emit")
+      } finally q.stop()
+    }
   }
 
   test("W4 append mode runs on the RocksDB state store provider") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val in = MemoryStream[P]
       val alerts = PriceAlertsStream.processorAlertsAppend(
         in.toDF(), products(300.0), threshold = 10.0)
@@ -173,11 +195,6 @@ class PriceAlertsStreamingSpec extends SparkSpec {
       val rows = out.collect().filter(_.getAs[Timestamp]("window_start") == w0200)
       assert(rows.length == 1)
       assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
-    } finally {
-      prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
     }
   }
 
@@ -379,11 +396,7 @@ class PriceAlertsStreamingSpec extends SparkSpec {
   }
 
   test("streaming funnel: stage advances in-stream, first-touch order") {
-    // transformWithState requires a multi-column-family store → RocksDB
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try testFunnel() finally spark.conf.unset(key)
+    withRocksDb(testFunnel())
   }
 
   private def testFunnel(): Unit = {
@@ -409,10 +422,7 @@ class PriceAlertsStreamingSpec extends SparkSpec {
   }
 
   test("streaming funnel == batch funnel on time-ordered fixture events") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try testFunnelEquivalence() finally spark.conf.unset(key)
+    withRocksDb(testFunnelEquivalence())
   }
 
   private def testFunnelEquivalence(): Unit = {
@@ -538,11 +548,7 @@ class PriceAlertsStreamingSpec extends SparkSpec {
   }
 
   test("streaming near-dup simhash dedup: NON-identical hamming<=3 pair dropped in-stream") {
-    // transformWithState (ListState) needs a multi-column-family store
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try testNearDup() finally spark.conf.unset(key)
+    withRocksDb(testNearDup())
   }
 
   private def testNearDup(): Unit = {

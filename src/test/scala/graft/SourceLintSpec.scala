@@ -128,6 +128,15 @@ class SourceLintSpec extends AnyFunSuite {
         (1, "missing languages per source: dimension-grain")))
   }
 
+  test("no (flat)mapGroupsWithState: transformWithState is the one arbitrary-state API") {
+    // every hand-written stateful operator runs on transformWithState;
+    // a second arbitrary-state API would split state layout, timer
+    // semantics and the state-store provider requirement across two
+    // engines
+    check("(flat)mapGroupsWithState", """[mM]apGroupsWithState|GroupStateTimeout""".r,
+      Map.empty)
+  }
+
   test("udf( is confined to the streaming image dHash") {
     check("udf(", """(?<![\w.])udf\(""".r, Map(
       "src/main/scala/graft/streaming/StreamingDedup.scala" ->
