@@ -470,7 +470,9 @@ case class FromAvroGraft(child: Expression, schemaJson: String,
   private def mkConv = new AvroStructConverter(schemaJson, confluentFraming, 0,
     readerSchemaJson, writerSchemasById)
   @transient private lazy val conv = mkConv
-  override def dataType: DataType = mkConv.structType
+  // the analyzer and optimizer ask for dataType many times per plan:
+  // parse the schema once per expression instance, not once per call
+  override def dataType: DataType = conv.structType
   override def nullable: Boolean = permissive || super.nullable
   override protected def nullSafeEval(input: Any): Any =
     if (permissive) conv.decodeOrNull(input.asInstanceOf[Array[Byte]])

@@ -140,7 +140,11 @@ object KafkaIO {
   /** S2/S4 — the products dimension: read the topic as a bounded batch
     * (earliest→latest) and compact to latest-per-key — the GlobalKTable
     * materialization. Re-run per deploy or wrapped in a refresh loop;
-    * stream-static joins re-read the static side each micro-batch.
+    * stream-static joins re-read this source-backed side each
+    * micro-batch (`PriceAlerts.purchasesWithProducts` turns only inline
+    * dimensions into an RDD-backed frame, once per query: materializing
+    * this one would pin the snapshot to the Kafka offsets of its first
+    * read).
     */
   def productsSnapshot(spark: SparkSession, bootstrap: String,
                        topic: String = "products"): DataFrame = {

@@ -33,7 +33,10 @@ import graft.operators.PriceAlerts
   * is what the golden tests assert.
   *
   * Scale notes: the dimension side of the join is static and broadcast
-  * (the GlobalKTable analogue); streaming state is hash-partitioned by
+  * (the GlobalKTable analogue). An inline dimension is turned into an
+  * RDD-backed frame once per query, so the per-trigger re-planning does
+  * not walk its rows; a source-backed one (parquet, Kafka snapshot) is
+  * still re-read each micro-batch. Streaming state is hash-partitioned by
   * (window, product_id) across executors, and append mode bounds state
   * size by the watermark horizon.
   */

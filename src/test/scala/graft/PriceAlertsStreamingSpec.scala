@@ -3,7 +3,12 @@ package graft
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.streaming.{PriceAlertsStream, ProcessorAlerts}
@@ -51,6 +56,13 @@ class PriceAlertsStreamingSpec extends SparkSpec {
 
   private def joined(in: MemoryStream[P]): DataFrame =
     graft.operators.PriceAlerts.purchasesWithProducts(in.toDF(), products(300.0))
+
+  /** Physical plan of the query's last micro-batch. */
+  private def lastPlan(q: StreamingQuery): SparkPlan =
+    q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+
+  /** Plan walks that descend into adaptive query stages. */
+  private object Aqe extends AdaptiveSparkPlanHelper
 
   /** Processing-time timers keep the engine running a batch per
     * trigger (processAllAvailable never settles), so wall-clock tests
@@ -196,6 +208,44 @@ class PriceAlertsStreamingSpec extends SparkSpec {
       assert(rows.length == 1)
       assert(rows.head.getAs[Double]("total_sum_per_minute") == 3600.0)
     }
+  }
+
+  test("streaming join: an inline products dimension leaves no LocalRelation, still broadcast") {
+    val in = MemoryStream[P]
+    val j = joined(in)
+    assert(j.queryExecution.analyzed.collect { case l: LocalRelation => l }.isEmpty,
+      "the inline rows must not be re-planned at every trigger")
+    var plan: SparkPlan = null
+    val out = runQuery(j, "append", "dim_inline_out") { q =>
+      in.addData(P(1L, 2L, 1L, t0230), P(2L, 3L, 9L, t0230))
+      q.processAllAvailable()
+      plan = lastPlan(q)
+    }
+    assert(Aqe.collect(plan) { case b: BroadcastHashJoinExec => b }.nonEmpty,
+      s"the dimension must stay broadcast:\n$plan")
+    val rows = out.collect()
+    assert(rows.length == 1, "product 9 has no dimension row: inner join drops it")
+    assert(rows.head.getAs[String]("product_name") == "prod")
+    assert(rows.head.getAs[Double]("product_price") == 300.0)
+  }
+
+  test("streaming join: a parquet products dimension keeps its file scan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-dim").toFile.getAbsolutePath + "/products"
+    products(300.0).write.parquet(dir)
+    val in = MemoryStream[P]
+    val j = graft.operators.PriceAlerts.purchasesWithProducts(in.toDF(), spark.read.parquet(dir))
+    assert(j.queryExecution.analyzed.collect { case l: LogicalRelation => l }.nonEmpty,
+      "a source-backed dimension must stay a source, re-read each micro-batch")
+    var plan: SparkPlan = null
+    val out = runQuery(j, "append", "dim_parquet_out") { q =>
+      in.addData(P(1L, 2L, 1L, t0230))
+      q.processAllAvailable()
+      plan = lastPlan(q)
+    }
+    assert(Aqe.collect(plan) { case f: FileSourceScanExec => f }.nonEmpty,
+      s"the micro-batch must scan the parquet files:\n$plan")
+    assert(Aqe.collect(plan) { case b: BroadcastHashJoinExec => b }.nonEmpty)
+    assert(out.collect().map(_.getAs[Double]("product_price")).toSeq == Seq(300.0))
   }
 
   test("A3 streaming latest-per-key: last write per product wins") {
