@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -31,8 +33,22 @@ import org.apache.spark.sql.functions._
   * trap; on a cluster with an HDFS checkpoint dir, `checkpoint()` is
   * the fault-tolerant drop-in. Peak footprint is two label generations
   * regardless of round count (the previous round is unpersisted).
+  *
+  * Every iterative operator here (CC, PageRank and its personalized
+  * form, kCore, coreNumbers, LPA, HITS) runs through one loop skeleton,
+  * [[iterate]], which owns that checkpoint lifecycle.
   */
 object GraphOps {
+
+  /** Damping factor of [[pageRank]] and [[personalizedPageRank]] (the
+    * q61/q134 oracles unroll the same constant).
+    */
+  private val Damping = 0.85
+
+  /** Round cap of [[connectedComponents]]: pointer jumping converges in
+    * O(log n) rounds, so the cap only bounds a defect, never a graph.
+    */
+  private val CcMaxRounds = 50
 
   /** Eager lineage-truncating checkpoint for loop frames, with the
     * checkpoint's copied statistics replaced by the MEASURED block
@@ -56,36 +72,98 @@ object GraphOps {
     * MEMORY_AND_DISK generation lingers until the driver GCs the
     * Dataset and the ContextCleaner reaps the RDD, so a long loop's
     * storage grows with round count. Call only once every dependent
-    * plan is materialized: each loop below materializes round N+1
-    * eagerly (loopCheckpoint) before freeing round N, and never frees
-    * a frame the RETURNED plan still references.
+    * plan is materialized. Only [[iterate]] and [[triangleCount]] call
+    * it (SourceLintSpec pins the count), so no loop hand-rolls its own
+    * freeing.
     */
   private def loopUnpersist(df: DataFrame): Unit =
     org.apache.spark.sql.classic.GraftPlanBridge.unpersistCheckpoint(df)
 
-  /** [[loopCheckpoint]] with per-round scalar aggregates folded into
-    * the checkpoint's own materialization pass via `observe()` (r17,
-    * guide §1.2/§2: remove whole passes). Every GraphOps loop needs
-    * one or two O(1) scalars per round — a convergence witness
-    * (changed-count / Σest / max-delta) and/or PageRank's dangling
-    * mass — and computing them as separate `count()`/`head()` actions
-    * over the just-checkpointed frame costs one extra vertex-scale
-    * pass AND one extra driver round trip per round. `observe()`
-    * evaluates the same aggregates DURING the eager localCheckpoint's
-    * materialization (CollectMetrics is a partitioning-preserving
-    * pass-through node), so the scalar arrives for free; `obs.get`
-    * returns instantly because the checkpoint action has already
-    * completed. Exactness: counts, maxes and decimal sums are
-    * order-insensitive, so those witnesses are bit-identical to the
-    * replaced actions; the dangling DOUBLE sum has the same summands
-    * with a possibly different merge grouping (same caveat any
-    * repartitioned float aggregate carries) — oracle-verified at r4.
+  /** One round of an [[iterate]] loop: the generation it reads, the
+    * frames the previous round [[carry]]'d next to it, and the witness
+    * values observed while that generation was materialized (a NULL
+    * value means the aggregate saw no rows).
     */
-  private def loopCheckpointObs(df: DataFrame,
-      obs: org.apache.spark.sql.Observation,
-      metric: org.apache.spark.sql.Column,
-      metrics: org.apache.spark.sql.Column*): DataFrame =
-    loopCheckpoint(df.observe(obs, metric, metrics: _*))
+  private final class Round(val gen: DataFrame, val carried: Seq[DataFrame],
+                            val seen: Map[String, Any]) {
+    private[GraphOps] val scratch, carries = ArrayBuffer.empty[DataFrame]
+
+    /** Checkpoints a frame this round reads more than once; it is freed
+      * as soon as the round's output generation is materialized.
+      */
+    def checkpoint(df: DataFrame): DataFrame = {
+      val c = loopCheckpoint(df); scratch += c; c
+    }
+
+    /** Checkpoints a frame that belongs to the NEXT generation beside
+      * the step's output: the next round reads it as `carried`, and it
+      * is freed with that generation.
+      */
+    def carry(df: DataFrame): DataFrame = {
+      val c = loopCheckpoint(df); carries += c; c
+    }
+  }
+
+  /** What [[iterate]] returns: the output frame, the rounds run, and
+    * whether `done` ended the loop (rather than the round cap).
+    */
+  private final case class Loop(out: DataFrame, rounds: Int, converged: Boolean)
+
+  /** The loop skeleton of every iterative operator in this file.
+    * Generation 0 is `init`; each round builds the next generation from
+    * the current one with `step`. The skeleton owns the lifecycle:
+    *  - Each generation is materialized by one eager [[loopCheckpoint]],
+    *    and the `witness` aggregates (a convergence witness such as a
+    *    changed-count, Σest or max-delta, and/or PageRank's dangling
+    *    mass) are evaluated DURING that pass via `observe()` (r17):
+    *    CollectMetrics is a partitioning-preserving pass-through, so the
+    *    scalars arrive with no extra action, no extra vertex-scale pass
+    *    and no extra driver round trip per round. Exactness: counts,
+    *    maxes and decimal sums are order-insensitive; a double sum has
+    *    the same summands with a possibly different merge grouping (the
+    *    caveat any repartitioned float aggregate carries). Generation 0
+    *    is observed too, so it carries every column a witness reads.
+    *  - Generation N, what it carried, and round N's scratch checkpoints
+    *    are freed as soon as generation N+1 is materialized, so the peak
+    *    footprint is two generations whatever the round count.
+    *  - The loop ends after `maxRounds` rounds, or earlier once
+    *    `done(witnesses of generation N, witnesses of N+1)` holds.
+    *  - At exit the loop-invariant `setup` frames are freed. The output
+    *    is the last generation, kept materialized for the lazy result
+    *    the caller builds over it; with `finish`, the output is instead
+    *    `finish(last round)`, materialized, and the last generation is
+    *    freed too.
+    */
+  private def iterate(init: DataFrame, maxRounds: Int,
+      setup: Seq[DataFrame] = Nil, witness: Seq[Column] = Nil,
+      done: (Map[String, Any], Map[String, Any]) => Boolean = (_, _) => false,
+      finish: Option[Round => DataFrame] = None)(
+      step: Round => DataFrame): Loop = {
+    def materialize(df: DataFrame, carried: Seq[DataFrame]): Round =
+      if (witness.isEmpty) new Round(loopCheckpoint(df), carried, Map.empty)
+      else {
+        val obs = Observation()
+        val gen = loopCheckpoint(df.observe(obs, witness.head, witness.tail: _*))
+        new Round(gen, carried, obs.get)
+      }
+    var cur = materialize(init, Nil)
+    var rounds = 0
+    var converged = false
+    while (rounds < maxRounds && !converged) {
+      val next = materialize(step(cur), cur.carries.toSeq)
+      (cur.scratch ++ cur.carried :+ cur.gen).foreach(loopUnpersist)
+      converged = done(cur.seen, next.seen)
+      cur = next
+      rounds += 1
+    }
+    val out = finish.fold(cur.gen) { f =>
+      val o = loopCheckpoint(f(cur))
+      (cur.carried :+ cur.gen).foreach(loopUnpersist)
+      o
+    }
+    setup.foreach(loopUnpersist)
+    Loop(out, rounds, converged)
+  }
 
   /** Connected components of the undirected graph given by `pairs`
     * (columns `doc_a`, `doc_b`; each undirected edge once). Returns one
@@ -93,14 +171,13 @@ object GraphOps {
     * cluster_id = the component's minimum vertex id. Deterministic:
     * min-label is order- and partitioning-independent.
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
-    ccWithStats(pairs, maxIter)._1
+  def connectedComponents(pairs: DataFrame): DataFrame =
+    ccWithStats(pairs)._1
 
   /** As [[connectedComponents]], also returning the round count — the
     * O(log n) convergence claim is spec-asserted through this.
     */
-  private[graft] def ccWithStats(pairs: DataFrame,
-                                 maxIter: Int = 50): (DataFrame, Int) = {
+  private[graft] def ccWithStats(pairs: DataFrame): (DataFrame, Int) = {
     // materialized once; every round re-reads the cached edge list
     // (loopCheckpoint: measured stats — the estimate here is already a
     // multi-join product and every round's plan consumes it)
@@ -122,97 +199,55 @@ object GraphOps {
       .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .repartition(col("dst")))
-
-    var labels = loopCheckpoint(
+    // every generation carries its round-start label as `old_label`, so
+    // the convergence test is a count over the already-materialized
+    // frame instead of a vertex-scale join of two label generations
+    // (r16: one fewer per-round pass at every scale; labels only
+    // decrease, so `label < old_label` is exactly "changed"). The
+    // changed-count is observed during the checkpoint's own pass (r17).
+    val loop = iterate(
       edges.select(col("src").as("v")).distinct()
-        .withColumn("label", col("v"))
-        .repartition(col("v")))
-
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
+        .select(col("v"), col("v").as("label"), col("v").as("old_label"))
+        .repartition(col("v")),
+      CcMaxRounds, setup = Seq(edges),
+      witness = Seq(count(when(col("label") < col("old_label"), 1)).as("changed")),
+      done = (_, next) => next("changed") == 0L) { r =>
       // each neighbor offers its current label; a vertex keeps the min
       // of its own label and the best offer. Formulated as
       // aggregate-then-least (NOT union+groupBy: checkpointing an
       // Aggregate-over-Union trips Catalyst's union constraint rewrite
       // with a missing-attribute error in LogicalRDD.fromDataset).
-      // The eager checkpoint cuts lineage so round N+1 plans against a
-      // flat scan — the truncation discipline iterative Spark needs.
       val offers = edges
-        .join(labels.select(col("v").as("src"), col("label")), "src")
+        .join(r.gen.select(col("v").as("src"), col("label")), "src")
         .groupBy(col("dst").as("v"))
         .agg(min(col("label")).as("offer"))
-      // carry the round-start label through both checkpoints so the
-      // convergence test is a FILTER over the already-materialized
-      // frame instead of a vertex-scale join of two label generations
-      // (r16: one fewer per-round pass at every scale; labels only
-      // decrease, so `label < old_label` is exactly "changed")
-      val propagated = loopCheckpoint(
-        labels.join(offers, Seq("v"), "left")
+      val propagated = r.checkpoint(
+        r.gen.join(offers, Seq("v"), "left")
           .select(col("v"),
             least(col("label"), coalesce(col("offer"), col("label"))).as("label"),
             col("label").as("old_label")))
       // pointer jump (path halving): l(v) <- l(l(v)). Labels are vertex
       // ids with l(w) <= w, so the self-join resolves and only lowers.
-      // The changed-count convergence witness rides the checkpoint's
-      // own materialization (observe — r17): previously a separate
-      // filter+count action re-scanned the just-materialized frame
-      // every round. count(when(...)) is exact — same integer.
-      val obs = org.apache.spark.sql.Observation()
-      val next = loopCheckpointObs(propagated.as("a")
+      propagated.as("a")
         .join(propagated.select(col("v").as("lv"), col("label").as("ll")).as("b"),
           col("a.label") === col("b.lv"), "left")
         .select(col("a.v").as("v"),
           coalesce(col("b.ll"), col("a.label")).as("label"),
-          col("a.old_label").as("old_label")),
-        obs, count(when(col("label") < col("old_label"), 1)).as("changed"))
-      loopUnpersist(propagated)
-      val changed = obs.get("changed").asInstanceOf[Long]
-      loopUnpersist(labels)
-      labels = next
-      converged = changed == 0
-      iter += 1
+          col("a.old_label").as("old_label"))
     }
-    loopUnpersist(edges)
-    (labels.select(col("v").as("doc_id"), col("label").as("cluster_id")), iter)
+    (loop.out.select(col("v").as("doc_id"), col("label").as("cluster_id")), loop.rounds)
   }
 
   /** Near-dup clusters with sizes: connected components of the pair
     * graph plus the component population (window count — rides the
     * cluster_id sort the output wants anyway).
     */
-  def dedupClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame =
-    connectedComponents(pairs, maxIter)
+  def dedupClusters(pairs: DataFrame): DataFrame =
+    connectedComponents(pairs)
       .withColumn("cluster_size",
         count(lit(1)).over(Window.partitionBy(col("cluster_id"))))
       .select(col("doc_id"), col("cluster_id"), col("cluster_size"))
 
-  /** Fixed-iteration PageRank over the directed graph `edges`
-    * (columns `src`, `dst`; duplicates are collapsed — simple-graph
-    * semantics). Returns (v, pr) for every vertex incident to an edge.
-    *
-    * pr_{t+1}(v) = (1-d)/N + d·(Σ_{u→v} pr_t(u)/outdeg(u) + D_t/N)
-    * where D_t is the total mass on dangling vertices (no out-edges),
-    * redistributed uniformly — the standard teleport formulation, so
-    * Σ pr = 1 is invariant at every step (spec-asserted).
-    *
-    * Deterministic by construction: the round count is FIXED (not
-    * convergence-tested), so the result is a pure function of the edge
-    * set — required for oracle verification and for reproducible
-    * corpus-quality weights (the LLM-pipeline use: rank documents by
-    * link authority before mixture sampling).
-    *
-    * Scale posture: per round, one shuffle for the contribution
-    * groupBy(dst) and one join back to the vertex list — both keyed,
-    * both spill-able; the dangling mass is a 1-row aggregate OBSERVED
-    * during the previous round's checkpoint materialization (r17 —
-    * `observe()` folds it into the pass the checkpoint already makes;
-    * r16 pulled it as a separate per-round filter+sum action) and
-    * folded into the update as a literal. Driver-side state is that
-    * scalar plus the one-time vertex count N. Lineage is
-    * truncated per round with an eager localCheckpoint exactly as in
-    * [[connectedComponents]]; peak footprint is two pr generations.
-    */
   /** Exact triangle count of the undirected graph given by `edges`
     * (columns `a`, `b`; duplicates/self-loops/direction tolerated —
     * canonicalized here). Returns one row:
@@ -277,42 +312,115 @@ object GraphOps {
     loopUnpersist(canon); loopUnpersist(oriented); loopUnpersist(deg)
     out
   }
-
-  /** PageRank with dangling-mass teleport. `iters` is the ROUND CAP;
-    * when `tol > 0` the loop also stops as soon as
-    * `max_v |pr_t(v) − pr_{t−1}(v)| < tol` — the convergence check is
-    * one extra 1-row aggregate over the already-materialized step
-    * (same pattern as the dangling-mass term), and on a converged
-    * graph it saves whole rounds of join+shuffle, which at 100 TB is
-    * the dominant cost. `tol = 0` (default) runs exactly `iters`
-    * rounds — the oracle-pinned configuration (q61's DuckDB twin
-    * unrolls a fixed iteration count, so the gate needs determinate
-    * round semantics); production runs set e.g.
-    * `pageRank(e, iters = 50, tol = 1e-6)`.
+  /** PageRank over the directed graph `edges` (columns `src`, `dst`;
+    * duplicates are collapsed — simple-graph semantics). Returns (v, pr)
+    * for every vertex incident to an edge.
     *
-    * Early-exit error bound: per-round updates contract by the damping
-    * factor, so stopping when the max-norm delta is below `tol` leaves
-    * ranks within ~`tol·d/(1−d)` (≈ 5.7·tol at d = 0.85) of the
-    * fixed-point — the property spec asserts this against a
-    * run-to-the-cap reference.
+    * pr_{t+1}(v) = (1-d)/N + d·(Σ_{u→v} pr_t(u)/outdeg(u) + D_t/N)
+    * where D_t is the total mass on dangling vertices (no out-edges),
+    * redistributed uniformly — the standard teleport formulation, so
+    * Σ pr = 1 is invariant at every step (spec-asserted). d = 0.85.
     *
-    * `relTol` is the SCALE-INVARIANT form of the same rule and the
-    * production knob: ranks sum to 1, so `max_v |Δpr|` shrinks ~1/n as
-    * the graph grows and any fixed absolute `tol` degenerates with
-    * scale — the r15 scaling curve measured the q61 twin's tol=3e-4
-    * exit at round 6 on the sf0.1 graph (~16 k nodes) and round 1 on
-    * the 10× graph; at 10^9 nodes it would never iterate at all.
-    * `relTol` thresholds the NORMALIZED rank `n·pr` (uniform ≡ 1.0):
-    * converged when `max_v |Δpr| < relTol / n`, which keeps the round
-    * count fixed across self-similar scale-ups (same curve: 6 rounds
-    * at both SFs with relTol = 4.8). The ε-bound above then holds in
-    * normalized units: n·pr within ~relTol·d/(1−d) of the fixed-point.
-    * If both are set the TIGHTER threshold wins (max-norm conjunction);
-    * `tol` keeps its absolute meaning for the property spec.
+    * `iters` is the ROUND CAP. With `relTol = 0` (the default) the loop
+    * runs exactly `iters` rounds, so the result is a pure function of
+    * the edge set — the oracle-pinned configuration (q61's DuckDB twin
+    * unrolls a fixed iteration count) and reproducible corpus-quality
+    * weights (the LLM-pipeline use: rank documents by link authority
+    * before mixture sampling).
+    *
+    * `relTol > 0` is the production early exit. It thresholds the
+    * NORMALIZED rank `n·pr` (uniform ≡ 1.0): the loop stops once
+    * `max_v |pr_t(v) − pr_{t−1}(v)| < relTol / n`. The normalization is
+    * what makes it scale-invariant: ranks sum to 1, so `max_v |Δpr|`
+    * shrinks ~1/n as the graph grows, and an absolute threshold
+    * degenerates with scale — the r15 scaling curve measured an
+    * absolute 3e-4 exiting at round 6 on the sf0.1 graph (~16 k nodes)
+    * and round 1 on the 10× graph, while relTol = 4.8 exits at round 6
+    * at both SFs. The max-delta rides the step's own checkpoint pass.
+    * Error bound: per-round updates contract by d, so on exit n·pr is
+    * within ~relTol·d/(1−d) (≈ 5.7·relTol) of the fixed point — the
+    * property spec asserts this against a run-to-the-cap reference.
+    *
+    * Scale posture: per round, one shuffle for the contribution
+    * groupBy(dst) and one join back to the vertex list — both keyed,
+    * both spill-able; the dangling mass is a 1-row aggregate OBSERVED
+    * during the previous round's checkpoint materialization and folded
+    * into the update as a literal. Driver-side state is that scalar plus
+    * the one-time vertex count N.
     */
-  def pageRank(edges: DataFrame, iters: Int = 10,
-               damping: Double = 0.85, tol: Double = 0.0,
-               relTol: Double = 0.0): DataFrame = {
+  def pageRank(edges: DataFrame, iters: Int = 10, relTol: Double = 0.0): DataFrame =
+    pageRankWithStats(edges, iters, relTol)._1
+
+  /** As [[pageRank]], also returning the rounds run — the relTol
+    * stopping rule is spec-asserted through this.
+    */
+  private[graft] def pageRankWithStats(edges: DataFrame, iters: Int,
+                                       relTol: Double): (DataFrame, Int) = {
+    val loop = rankWalk(edges, iters) { nodes =>
+      val n = nodes.count().toDouble
+      Restart(init = lit(1.0 / n), teleport = lit((1 - Damping) / n),
+        dangling = d => lit(d) / n, thresh = if (relTol > 0.0) relTol / n else 0.0)
+    }
+    if (relTol > 0.0)
+      // the stopping rule is the whole point of relTol mode, and a
+      // one-round shift is invisible in wall time alone (r14's 1.31×
+      // q61_pagerank_tol reading could not distinguish "the exit now
+      // fires a round later" from host noise)
+      System.err.println(s"[graft] pageRank relTol=$relTol exited after " +
+        s"${loop.rounds} rounds (converged=${loop.converged})")
+    (loop.out.select(col("v"), col("pr")), loop.rounds)
+  }
+
+  /** Personalized PageRank (q134): PageRank where BOTH the teleport
+    * mass (1−d) and the recycled dangling mass return only to the
+    * `seeds` set (uniformly), not to all vertices — the random walk
+    * restarts at the seeds, so ranks measure proximity TO the seeds
+    * (the recommender / related-entities primitive; Haveliwala 2002).
+    * Init puts all mass on the seeds. The same fixed-round walk as
+    * [[pageRank]] (the oracle unrolls the rounds; every float op
+    * mirrored term for term). Seeds are a bounded literal list — the
+    * standard usage is a handful of query entities.
+    */
+  def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
+                           iters: Int = 10): DataFrame = {
+    require(seeds.nonEmpty, "personalized PageRank needs >= 1 seed")
+    require(seeds.distinct.size == seeds.size,
+      "personalized PageRank: duplicate seed ids — each duplicate would " +
+        "silently scale the seed's share of the teleport mass")
+    val isSeed = col("v").isin(seeds: _*)
+    val nS = seeds.size.toDouble
+    def onSeeds(c: Column): Column = when(isSeed, c).otherwise(lit(0.0))
+    rankWalk(edges, iters) { nodes =>
+      // a seed absent from the vertex set would silently LEAK its 1/|S|
+      // share of the teleport mass every round (rank mass sums < 1 with
+      // no error, breaking pageRank's inherited sum-pr=1 contract) —
+      // fail loudly instead; one tiny count over the checkpointed frame
+      val present = nodes.filter(isSeed).count()
+      require(present == seeds.size,
+        s"personalized PageRank: ${seeds.size - present} seed id(s) not in " +
+          "the graph — off-graph seeds would silently leak teleport mass")
+      Restart(init = onSeeds(lit(1.0 / nS)),
+        teleport = onSeeds(lit((1 - Damping) / nS)),
+        dangling = d => onSeeds(lit(d) / nS), thresh = 0.0)
+    }.out.select(col("v"), col("pr"))
+  }
+
+  /** Where a PageRank walk restarts, as the per-vertex Column terms of
+    * its update — built by each caller so each query keeps its exact
+    * float ops (the q61/q134 oracles unroll them): `init` is round 0's
+    * rank, `teleport` the (1−d) share, `dangling(D)` the share of the
+    * observed dangling mass D, and `thresh` the early exit on
+    * max|Δpr| (0 runs every round).
+    */
+  private final case class Restart(init: Column, teleport: Column,
+                                   dangling: Double => Column, thresh: Double)
+
+  /** The PageRank body behind [[pageRank]] and [[personalizedPageRank]]:
+    * pr' = teleport + d·(contrib + dangling(D)), with `restartAt` given
+    * the checkpointed vertex frame (v, isd) to size its terms.
+    */
+  private def rankWalk(edges: DataFrame, iters: Int)(
+      restartAt: DataFrame => Restart): Loop = {
     val e = loopCheckpoint(edges.select(col("src"), col("dst")).distinct())
     // nodes is v-partitioned and eOutd dst-partitioned ONCE (the q137
     // anatomy): with pr broadcast into the contribution join,
@@ -333,173 +441,41 @@ object GraphOps {
       .join(outDeg.select(col("src").as("v"), lit(true).as("has_out")),
         Seq("v"), "left")
       .select(col("v"), col("has_out").isNull.as("isd")))
-    val n = nodes.count().toDouble
-    // effective early-exit threshold: absolute and/or normalized (see
-    // scaladoc); both set -> the tighter (smaller) one governs
-    val thresh = Seq[Option[Double]](
-      if (tol > 0.0) Some(tol) else None,
-      if (relTol > 0.0) Some(relTol / n) else None)
-      .flatten.reduceOption((a, b) => math.min(a, b)).getOrElse(0.0)
+    val restart = restartAt(nodes)
     // loop-invariant prework, hoisted: edges pre-joined with out-degree
     // (saves one join per iteration)
     val eOutd = loopCheckpoint(e.join(outDeg, "src")
       .select(col("src"), col("dst"), col("outd"))
       .repartition(col("dst")))
-
-    // mass sitting on dangling vertices — a 1-row aggregate folded
-    // into every pr checkpoint's OWN materialization pass (observe,
-    // r17): the r16 form pulled it as a separate per-round
-    // filter+sum+head() action, i.e. one extra vertex-scale pass over
-    // the frame the checkpoint had just written. sum(when(isd, pr))
-    // has the same summands as the old filter(isd).agg(sum(pr));
-    // tol-mode's max-delta witness rides the same pass (max is
-    // order-exact). NULL (no dangling vertices / empty graph) reads
-    // as 0.0 / converged.
-    val dangMetric = sum(when(col("isd"), col("pr"))).as("dang")
-    def dangOf(o: org.apache.spark.sql.Observation): Double =
-      Option(o.get("dang")).map(_.asInstanceOf[Double]).getOrElse(0.0)
-    var prObs = org.apache.spark.sql.Observation()
-    var pr = loopCheckpointObs(nodes.select(col("v"), col("isd"),
-      lit(1.0 / n).as("pr")), prObs, dangMetric)
-    // the frame holding the round's materialized checkpoint (what we
-    // unpersist) — `pr` itself may be a projection over it in tol mode
-    var prStore = pr
-    var i = 0
-    var converged = false
-    while (i < iters && !converged) {
-      val dangVal = dangOf(prObs)
+    // the early exit carries the previous rank through the step so the
+    // max-delta is an aggregate over the checkpointed frame (no extra
+    // re-join of the big sides); generation 0 carries its own rank
+    val early = restart.thresh > 0.0
+    // sum(when(isd, pr)) has the same summands as a filter(isd) sum; max
+    // is order-exact. NULL (no dangling vertices / empty graph) reads as
+    // 0.0 / converged.
+    def scalar(seen: Map[String, Any], name: String): Double =
+      Option(seen(name)).map(_.asInstanceOf[Double]).getOrElse(0.0)
+    val init = nodes.select(col("v"), col("isd"), restart.init.as("pr"))
+    iterate(if (early) init.withColumn("pr_prev", col("pr")) else init, iters,
+      setup = Seq(e, outDeg, nodes, eOutd),
+      witness = sum(when(col("isd"), col("pr"))).as("dang") +:
+        (if (early) Seq(max(abs(col("pr") - col("pr_prev"))).as("delta")) else Nil),
+      done = (_, next) => early && scalar(next, "delta") < restart.thresh) { r =>
       val contrib = eOutd
-        .join(pr.select(col("v").as("src"), col("pr")), "src")
-        .groupBy(col("dst").as("v"))
-        .agg(sum(col("pr") / col("outd")).as("contrib"))
-      val core = nodes.join(contrib, Seq("v"), "left")
-        .select(col("v"), col("isd"),
-          (lit((1 - damping) / n) + lit(damping) *
-            (coalesce(col("contrib"), lit(0.0)) + lit(dangVal) / n))
-            .as("pr"))
-      val nextObs = org.apache.spark.sql.Observation()
-      if (thresh > 0.0) {
-        // carry the previous rank through the step so the delta is an
-        // aggregate over the checkpointed frame (no extra re-join of
-        // the big sides), then project it back off
-        val stepped = loopCheckpointObs(core
-          .join(pr.select(col("v"), col("pr").as("pr_prev")), Seq("v")),
-          nextObs, dangMetric,
-          max(abs(col("pr") - col("pr_prev"))).as("delta"))
-        // empty graph: max over zero rows is NULL — trivially converged
-        val delta = Option(nextObs.get("delta"))
-          .map(_.asInstanceOf[Double]).getOrElse(0.0)
-        converged = delta < thresh
-        loopUnpersist(prStore)
-        prStore = stepped
-        pr = stepped.select(col("v"), col("isd"), col("pr"))
-      } else {
-        val next = loopCheckpointObs(core, nextObs, dangMetric)
-        loopUnpersist(prStore)
-        prStore = next
-        pr = next
-      }
-      prObs = nextObs
-      i += 1
-    }
-    loopUnpersist(outDeg); loopUnpersist(nodes); loopUnpersist(e)
-    loopUnpersist(eOutd)
-    if (thresh > 0.0) {
-      // the stopping rule is the whole point of tol mode, and a
-      // one-round shift is invisible in wall time alone (r14's 1.31×
-      // q61_pagerank_tol reading could not distinguish "tol now fires
-      // a round later" from host noise) — make the round count a
-      // first-class observable of every tol run
-      lastTolRounds = i
-      System.err.println(
-        s"[graft] pageRank tol=$tol relTol=$relTol thresh=$thresh " +
-          s"exited after $i rounds (converged=$converged)")
-    }
-    pr.select(col("v"), col("pr"))
-  }
-
-  /** Round count of the most recent `pageRank(tol > 0)` call in this
-    * JVM — bench/spec instrumentation for the stopping rule (see the
-    * tol-mode log line in [[pageRank]]).
-    */
-  @volatile var lastTolRounds: Int = -1
-
-  /** Personalized PageRank (q134): PageRank where BOTH the teleport
-    * mass (1−d) and the recycled dangling mass return only to the
-    * `seeds` set (uniformly), not to all vertices — the random walk
-    * restarts at the seeds, so ranks measure proximity TO the seeds
-    * (the recommender / related-entities primitive; Haveliwala 2002).
-    * Init puts all mass on the seeds. Same fixed-iteration loop,
-    * checkpoint hygiene, and float contract as [[pageRank]] (the
-    * oracle unrolls the rounds; every float op mirrored term for
-    * term). Seeds are a bounded literal list — the standard usage is
-    * a handful of query entities.
-    */
-  def personalizedPageRank(edges: DataFrame, seeds: Seq[Long],
-                           iters: Int = 10,
-                           damping: Double = 0.85): DataFrame = {
-    require(seeds.nonEmpty, "personalized PageRank needs >= 1 seed")
-    require(seeds.distinct.size == seeds.size,
-      "personalized PageRank: duplicate seed ids — each duplicate would " +
-        "silently scale the seed's share of the teleport mass")
-    val e = loopCheckpoint(edges.select(col("src"), col("dst")).distinct())
-    // same one-time partitioning as [[pageRank]] — zero per-round
-    // exchanges in the broadcast-pr regime
-    val outDeg = loopCheckpoint(e.groupBy("src").agg(count(lit(1)).as("outd")))
-    // dangling flag folded into `nodes` exactly as in [[pageRank]]
-    // (r16): the per-round dangling-mass semi-join becomes a filter
-    // over the round's checkpointed pr frame — same summands, one
-    // fewer vertex-scale pass per round, one fewer setup checkpoint
-    val nodes = loopCheckpoint(e.select(col("src").as("v"))
-      .union(e.select(col("dst").as("v")))
-      .distinct()
-      .repartition(col("v"))
-      .join(outDeg.select(col("src").as("v"), lit(true).as("has_out")),
-        Seq("v"), "left")
-      .select(col("v"), col("has_out").isNull.as("isd")))
-    // a seed absent from the vertex set would silently LEAK its 1/|S|
-    // share of the teleport mass every round (rank mass sums < 1 with
-    // no error, breaking pageRank's inherited sum-pr=1 contract) —
-    // fail loudly instead; one tiny count over the checkpointed frame
-    val present = nodes.filter(col("v").isin(seeds: _*)).count()
-    require(present == seeds.size,
-      s"personalized PageRank: ${seeds.size - present} seed id(s) not in " +
-        "the graph — off-graph seeds would silently leak teleport mass")
-    val eOutd = loopCheckpoint(e.join(outDeg, "src")
-      .select(col("src"), col("dst"), col("outd"))
-      .repartition(col("dst")))
-    val isSeed = col("v").isin(seeds: _*)
-    val nS = seeds.size.toDouble
-    // dangling mass observed during each checkpoint's own
-    // materialization — same rationale, summands and NULL handling as
-    // [[pageRank]] (r17; r16 pulled it as a separate per-round action)
-    val dangMetric = sum(when(col("isd"), col("pr"))).as("dang")
-    var prObs = org.apache.spark.sql.Observation()
-    var pr = loopCheckpointObs(nodes.select(col("v"), col("isd"),
-      when(isSeed, lit(1.0 / nS)).otherwise(lit(0.0)).as("pr")),
-      prObs, dangMetric)
-    for (_ <- 0 until iters) {
-      val dangVal = Option(prObs.get("dang"))
-        .map(_.asInstanceOf[Double]).getOrElse(0.0)
-      val contrib = eOutd
-        .join(pr.select(col("v").as("src"), col("pr")), "src")
+        .join(r.gen.select(col("v").as("src"), col("pr")), "src")
         .groupBy(col("dst").as("v"))
         .agg(sum(col("pr") / col("outd")).as("contrib"))
       val next = nodes.join(contrib, Seq("v"), "left")
         .select(col("v"), col("isd"),
-          (when(isSeed, lit((1 - damping) / nS)).otherwise(lit(0.0)) +
-            lit(damping) * (coalesce(col("contrib"), lit(0.0)) +
-              when(isSeed, lit(dangVal) / nS).otherwise(lit(0.0)))).as("pr"))
-      val nextObs = org.apache.spark.sql.Observation()
-      val mat = loopCheckpointObs(next, nextObs, dangMetric)
-      loopUnpersist(pr)
-      pr = mat
-      prObs = nextObs
+          (restart.teleport + lit(Damping) *
+            (coalesce(col("contrib"), lit(0.0)) + restart.dangling(scalar(r.seen, "dang"))))
+            .as("pr"))
+      if (early) next.join(r.gen.select(col("v"), col("pr").as("pr_prev")), Seq("v"))
+      else next
     }
-    loopUnpersist(eOutd)
-    loopUnpersist(outDeg); loopUnpersist(nodes); loopUnpersist(e)
-    pr.select(col("v"), col("pr"))
   }
+
 
   /** k-core decomposition by iterative peeling (q130): repeatedly drop
     * vertices whose CURRENT degree is < k together with their incident
@@ -510,7 +486,8 @@ object GraphOps {
     * PageRank): once converged, further rounds are provable no-ops
     * (the edge set is unchanged, so degrees are unchanged), so any
     * rounds ≥ the cascade depth yields the true k-core. Returns the
-    * surviving vertices with their core degree.
+    * surviving vertices with their core degree; a cascade deeper than
+    * `rounds` fails loudly.
     *
     * Scale: each round is one vertex-keyed degree aggregation + two
     * vertex-keyed semi joins over the shrinking edge set;
@@ -519,44 +496,37 @@ object GraphOps {
     * parallelizes trivially — no per-vertex ordering is needed, unlike
     * exact coreness numbering.
     */
-  def kCore(edges: DataFrame, k: Int = 10, rounds: Int = 4,
-            requireConverged: Boolean = true): DataFrame = {
-    var cur = loopCheckpoint(edges
+  def kCore(edges: DataFrame, k: Int = 10, rounds: Int = 4): DataFrame = {
+    val core = iterate(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct())
-    for (_ <- 0 until rounds) {
+      .distinct(), rounds) { r =>
       // keep feeds BOTH semi-join legs: checkpoint it once per round
       // (r17) so the union+groupBy degree pass — a full scan of the
       // surviving edge frame — runs once, not twice (the same
       // multi-consumer discipline as triangleCount's `deg`), and the
       // planner sees its measured vertex-scale size for the semi joins
-      val keep = loopCheckpoint(
-        cur.select(col("a").as("v")).union(cur.select(col("b").as("v")))
+      val keep = r.checkpoint(
+        r.gen.select(col("a").as("v")).union(r.gen.select(col("b").as("v")))
           .groupBy("v").agg(count(lit(1)).as("deg"))
           .filter(col("deg") >= k)
           .select("v"))
-      val next = loopCheckpoint(cur
+      r.gen
         .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
-        .select(col("a"), col("b")))
-      loopUnpersist(keep)
-      loopUnpersist(cur)
-      cur = next
-    }
-    val deg = cur.select(col("a").as("v")).union(cur.select(col("b").as("v")))
+        .select(col("a"), col("b"))
+    }.out
+    val deg = core.select(col("a").as("v")).union(core.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).cast("long").as("deg"))
-    if (requireConverged) {
-      // a deeper-than-`rounds` cascade would silently return sub-k
-      // vertices and break the "maximal subgraph with min degree k"
-      // contract; one cheap aggregate makes the truncation loud. The
-      // check rides the checkpointed edge frame, not a recompute.
-      val below = deg.filter(col("deg") < k).count()
-      require(below == 0L,
-        s"kCore(k=$k) did not converge in $rounds rounds: $below vertices " +
-          s"below degree $k remain — raise `rounds` (cascade is deeper)")
-    }
+    // a deeper-than-`rounds` cascade would silently return sub-k
+    // vertices and break the "maximal subgraph with min degree k"
+    // contract; one cheap aggregate makes the truncation loud. The
+    // check rides the checkpointed edge frame, not a recompute.
+    val below = deg.filter(col("deg") < k).count()
+    require(below == 0L,
+      s"kCore(k=$k) did not converge in $rounds rounds: $below vertices " +
+        s"below degree $k remain — raise `rounds` (cascade is deeper)")
     deg
   }
 
@@ -593,15 +563,12 @@ object GraphOps {
     * picks broadcast at small |V| from the checkpoint's measured
     * stats and a vertex-keyed shuffle join at billions of vertices —
     * no forced hint). Order-invariant across ties, so
-    * partitioning cannot change the result. Each round ends with a
-    * vertex-scale change count against the previous round: est
-    * unchanged over a round ⇔ fixed point, so the loop EXITS EARLY
-    * once converged (skipping whole edge-scale updates — `rounds` is
-    * a ceiling, not a count) and, with `requireConverged`, truncation
-    * fails loudly — same contract as [[kCore]].
+    * partitioning cannot change the result. Est unchanged over a round
+    * ⇔ fixed point, so the loop EXITS EARLY once converged (skipping
+    * whole edge-scale updates — `rounds` is a ceiling, not a count),
+    * and truncation fails loudly — same contract as [[kCore]].
     */
-  def coreNumbers(edges: DataFrame, rounds: Int = 8,
-                  requireConverged: Boolean = true): DataFrame = {
+  def coreNumbers(edges: DataFrame, rounds: Int = 8): DataFrame = {
     require(rounds >= 1, "coreNumbers needs at least one round")
     val e = edges
       .select(least(col("src"), col("dst")).as("a"),
@@ -635,62 +602,29 @@ object GraphOps {
     // NON-INCREASING per vertex, so "no vertex changed this round" ⟺
     // "Σ_v est is unchanged". decimal(38,0) keeps the sum exact at any
     // graph size (Σ deg ≤ |V|² overflows long at ~10⁹·10⁹), and a
-    // decimal sum is order-insensitive, so it is also safe to OBSERVE
-    // during the checkpoint's own materialization (r17) — the r16 form
-    // re-scanned the just-checkpointed frame with a separate 1-row
-    // aggregate action every round.
-    val estMetric = sum(col("est").cast("decimal(38,0)")).as("est_sum")
-    def estSumOf(o: org.apache.spark.sql.Observation): java.math.BigDecimal =
+    // decimal sum is order-insensitive, so it is safe to observe.
+    // Post-fixed-point updates are the identity, so the early exit
+    // returns what all `rounds` would, and the unrolled fixed-round
+    // oracle still matches bit-exactly.
+    def estSumOf(seen: Map[String, Any]): java.math.BigDecimal =
       // empty graph: sum over zero rows is NULL — treat as 0. (A NULL
       // can in principle also mean decimal(38,0) overflow in non-ANSI
       // mode, and two consecutive overflow rounds would read as
       // converged — unreachable here: Σest ≤ |V|·max_deg < 10³⁸ for
       // any graph below ~10¹⁹ vertices; noted per r16 ADVICE.)
-      Option(o.get("est_sum")).map(_.asInstanceOf[java.math.BigDecimal])
+      Option(seen("est_sum")).map(_.asInstanceOf[java.math.BigDecimal])
         .getOrElse(java.math.BigDecimal.ZERO)
-    var prev: DataFrame = null
-    val initObs = org.apache.spark.sql.Observation()
-    var est = loopCheckpointObs(
-      adj.groupBy("v").agg(count(lit(1)).cast("long").as("est")),
-      initObs, estMetric)
-    var prevSum = estSumOf(initObs)
-    // Early exit on the fixed point: est unchanged over a round ⇔ the
-    // exact core numbers (the h-index iteration is monotone
-    // non-increasing). The per-round change count joins two
-    // CHECKPOINTED vertex frames — vertex-scale, both already
-    // materialized — while each round it skips is an edge-scale
-    // h-index update (adj join + two aggregations over 2|E| rows), so
-    // the check pays for itself whenever `rounds` is conservative; the
-    // fixture graph converges in 4–6 rounds against the default 8.
-    // Output is identical to running all `rounds` (post-fixed-point
-    // updates are the identity), so the unrolled fixed-round oracle
-    // still matches bit-exactly.
-    var converged = false
-    var used = 0
-    while (used < rounds && !converged) {
-      val obs = org.apache.spark.sql.Observation()
-      val next = loopCheckpointObs(hIndexUpdate(est), obs, estMetric)
-      // The witness only feeds the early exit and the convergence
-      // assertion; observing it costs one expression per row inside
-      // the checkpoint pass, reading it costs nothing (the action has
-      // completed). The r13 final-round skip is kept for the READ so
-      // requireConverged=false keeps its fixed-budget semantics.
-      if (used < rounds - 1 || requireConverged) {
-        val nextSum = estSumOf(obs)
-        converged = nextSum.compareTo(prevSum) == 0
-        prevSum = nextSum
-      }
-      if (prev != null) loopUnpersist(prev)
-      prev = est
-      est = next
-      used += 1
+    val loop = iterate(
+      adj.groupBy("v").agg(count(lit(1)).cast("long").as("est")), rounds,
+      setup = Seq(adj),
+      witness = Seq(sum(col("est").cast("decimal(38,0)")).as("est_sum")),
+      done = (prev, next) => estSumOf(next).compareTo(estSumOf(prev)) == 0) { r =>
+      hIndexUpdate(r.gen)
     }
-    require(!requireConverged || converged,
+    require(loop.converged,
       s"coreNumbers did not converge in $rounds rounds: estimates still " +
         "moved in the final round — raise `rounds`")
-    if (prev != null) loopUnpersist(prev) // rounds = 0 leaves prev null
-    loopUnpersist(adj)
-    est.select(col("v").as("node_id"), col("est").cast("long").as("coreness"))
+    loop.out.select(col("v").as("node_id"), col("est").cast("long").as("coreness"))
   }
 
   /** Synchronous label propagation communities (q138) — Raghavan et
@@ -735,21 +669,15 @@ object GraphOps {
       e.select(col("a").as("v"), col("b").as("nbr"))
         .union(e.select(col("b").as("v"), col("a").as("nbr")))
         .repartition(col("v")))
-    var labels = loopCheckpoint(
-      adj.select(col("v")).distinct().withColumn("label", col("v")))
-    for (_ <- 0 until rounds) {
-      val next = loopCheckpoint(
-        adj.join(labels.select(col("v").as("nbr"), col("label")), Seq("nbr"))
-          .groupBy(col("v"), col("label")).agg(count(lit(1)).as("c"))
-          // argmax by (count desc, label asc) as a mergeable struct-max
-          .groupBy(col("v"))
-          .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("top"))
-          .select(col("v"), (-col("top.nl")).as("label")))
-      loopUnpersist(labels)
-      labels = next
-    }
-    loopUnpersist(adj)
-    labels.select(col("v").as("node_id"), col("label").cast("long").as("community"))
+    iterate(adj.select(col("v")).distinct().withColumn("label", col("v")),
+      rounds, setup = Seq(adj)) { r =>
+      adj.join(r.gen.select(col("v").as("nbr"), col("label")), Seq("nbr"))
+        .groupBy(col("v"), col("label")).agg(count(lit(1)).as("c"))
+        // argmax by (count desc, label asc) as a mergeable struct-max
+        .groupBy(col("v"))
+        .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("top"))
+        .select(col("v"), (-col("top.nl")).as("label"))
+    }.out.select(col("v").as("node_id"), col("label").cast("long").as("community"))
   }
 
   /** HITS hubs & authorities (q139) — Kleinberg, JACM 1999 — with
@@ -783,50 +711,42 @@ object GraphOps {
     val nodes = loopCheckpoint(e.select(col("src").as("v"))
       .union(e.select(col("dst").as("v")))
       .distinct())
-    var hub = loopCheckpoint(e.select(col("src").as("v")).distinct()
-      .withColumn("h", lit(1.0)))
-    // NOTE (r17, measured): skipping the aNext checkpoint (lazy auth
-    // half-step, one checkpoint per FULL round) was A/B'd per the r16
-    // verdict and REVERTED: without the checkpoint's MEASURED stats the
-    // hub half-step joins e against an estimate-sized Aggregate
-    // subtree, the vertex frame loses its broadcast, and the round
-    // degrades to an edge-frame shuffle join — q139 ran 0.99× absolute
-    // and ~0.8× normalized against an untouched control at sf0.1
-    // (BENCH_touched_before/after1, 2026-08-19). The per-half-step
-    // checkpoint is what keeps the zero-exchange regime; it stays.
-    var auth: DataFrame = null
-    for (_ <- 0 until iters) {
-      val aNext = loopCheckpoint(
-        e.join(hub.select(col("v").as("src"), col("h")), Seq("src"))
+    // A generation is the (auth, hub) pair: hub is the step's output,
+    // and the auth half-step is carried beside it.
+    iterate(e.select(col("src").as("v")).distinct().withColumn("h", lit(1.0)),
+      iters, setup = Seq(e, nodes),
+      // one 2-column broadcast instead of two 1-column ones (r17): the
+      // norms cross-join FIRST (two 1-row frames), so the final plan
+      // builds a single BroadcastExchange sub-job — same two aggregates,
+      // same summands, one fewer broadcast build + driver round trip.
+      // The result is materialized before the loop frees what it reads.
+      finish = Some { r =>
+        val Seq(auth) = r.carried
+        val hub = r.gen
+        val nrm = auth.agg(sqrt(sum(col("a") * col("a"))).as("an"))
+          .crossJoin(hub.agg(sqrt(sum(col("h") * col("h"))).as("hn")))
+        nodes
+          .join(auth, Seq("v"), "left")
+          .join(hub, Seq("v"), "left")
+          .crossJoin(broadcast(nrm))
+          .select(col("v").as("node_id"),
+            (coalesce(col("h"), lit(0.0)) / col("hn")).as("hub"),
+            (coalesce(col("a"), lit(0.0)) / col("an")).as("authority"))
+      }) { r =>
+      // NOTE (r17, measured): skipping the auth checkpoint (lazy auth
+      // half-step, one checkpoint per FULL round) was A/B'd per the r16
+      // verdict and REVERTED: without the checkpoint's MEASURED stats the
+      // hub half-step joins e against an estimate-sized Aggregate
+      // subtree, the vertex frame loses its broadcast, and the round
+      // degrades to an edge-frame shuffle join — q139 ran 0.99× absolute
+      // and ~0.8× normalized against an untouched control at sf0.1
+      // (BENCH_touched_before/after1, 2026-08-19). The per-half-step
+      // checkpoint is what keeps the zero-exchange regime; it stays.
+      val auth = r.carry(
+        e.join(r.gen.select(col("v").as("src"), col("h")), Seq("src"))
           .groupBy(col("dst").as("v")).agg(sum(col("h")).as("a")))
-      if (auth != null) loopUnpersist(auth)
-      auth = aNext
-      val hNext = loopCheckpoint(
-        e.join(auth.select(col("v").as("dst"), col("a")), Seq("dst"))
-          .groupBy(col("src").as("v")).agg(sum(col("a")).as("h")))
-      loopUnpersist(hub)
-      hub = hNext
-    }
-    // one 2-column broadcast instead of two 1-column ones (r17): the
-    // norms cross-join FIRST (two 1-row frames), so the final plan
-    // builds a single BroadcastExchange sub-job — same two aggregates,
-    // same summands, one fewer broadcast build + driver round trip
-    val nrm = auth.agg(sqrt(sum(col("a") * col("a"))).as("an"))
-      .crossJoin(hub.agg(sqrt(sum(col("h") * col("h"))).as("hn")))
-    // materialize the result BEFORE freeing its inputs: the returned
-    // frame joins nodes/auth/hub, and loopUnpersist really drops their
-    // blocks (the pre-r12 Dataset.unpersist here was a no-op that
-    // masked this ordering bug — out was returned lazy over frames
-    // whose blocks were nominally already freed)
-    val out = loopCheckpoint(nodes
-      .join(auth, Seq("v"), "left")
-      .join(hub, Seq("v"), "left")
-      .crossJoin(broadcast(nrm))
-      .select(col("v").as("node_id"),
-        (coalesce(col("h"), lit(0.0)) / col("hn")).as("hub"),
-        (coalesce(col("a"), lit(0.0)) / col("an")).as("authority")))
-    loopUnpersist(e); loopUnpersist(nodes)
-    loopUnpersist(auth); loopUnpersist(hub)
-    out
+      e.join(auth.select(col("v").as("dst"), col("a")), Seq("dst"))
+        .groupBy(col("src").as("v")).agg(sum(col("a")).as("h"))
+    }.out
   }
 }

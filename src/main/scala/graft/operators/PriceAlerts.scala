@@ -112,8 +112,11 @@ object PriceAlerts {
         col("window_start"),
         col("total_sum_per_minute"))
 
-  /** Whole DSL pipeline (eager/update semantics are a streaming concern;
-    * on batch input this is the final answer either way).
+  /** Whole DSL pipeline: join → window → threshold (eager/update
+    * semantics are a streaming concern; on batch input this is the final
+    * answer either way). Both streaming entry points of
+    * [[graft.streaming.PriceAlertsStream]] run this composition; the
+    * processor variant hands it a watermarked stream.
     */
   def dslPipeline(purchases: DataFrame, products: DataFrame,
                   threshold: Double = DslThreshold,

@@ -1,13 +1,16 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Cluster-scale join patterns: co-located bucketed joins (pre-shuffled
-  * storage, zero exchange at query time) and salted joins (hot-key
-  * skew dilution). Both are storage/plan techniques rather than new
-  * operators — surfaced as helpers so pipelines at 100 TB use them
-  * uniformly, and plan-asserted in ScaleOpsSpec.
+/** Cluster-scale join patterns: salted joins (hot-key skew dilution)
+  * and the distributed rank / prefix-sum primitives — plan/storage
+  * techniques rather than new operators, plan-asserted in ScaleOpsSpec.
+  * Co-located bucketed joins (`df.write.bucketBy(n, k).sortBy(k)`: the
+  * shuffle is paid once at write time) and Hive-style partitioned
+  * layouts (`df.write.partitionBy(c)`: static and dynamic partition
+  * pruning at file-listing time) need no wrapper; ScaleOpsSpec asserts
+  * their no-exchange and PartitionFilters/DPP plans on Spark's writers.
   */
 object ScaleOps {
 
@@ -84,16 +87,6 @@ object ScaleOps {
     out
   }
 
-  /** Prepare a bucketed+sorted writer: both fact tables written with the
-    * same bucket count/column join WITHOUT any exchange or sort — the
-    * shuffle is paid once at write time and amortized over every
-    * subsequent join/aggregation on that key (the Spark analogue of a
-    * co-partitioned Kafka Streams topic pair).
-    */
-  def bucketedWriter(df: DataFrame, buckets: Int,
-                     bucketCol: String): DataFrameWriter[Row] =
-    df.write.bucketBy(buckets, bucketCol).sortBy(bucketCol)
-
   /** Inner equi-join with the big side's hot keys diluted over `salt`
     * sub-keys: the big side gets a per-row salt, the small side is
     * replicated `salt` times, and the join key becomes (key, salt) — a
@@ -146,28 +139,6 @@ object ScaleOps {
       explode(sequence(lit(0), lit(salt - 1))))
     saltedBig.join(replicatedSmall, Seq(key, "__salt")).drop("__salt")
   }
-
-  /** Hive-style partitioned layout: one directory per value of
-    * `partCol`. The complement of bucketing — bucketing co-locates a
-    * high-cardinality JOIN key; directory partitioning prunes a
-    * low-cardinality FILTER/date key at file-listing time, before a
-    * single byte is read. At 100 TB the standard layout is
-    * date-partitioned directories with bucketed files inside.
-    *
-    * Two prunings fall out (both plan-asserted in ScaleOpsSpec):
-    *  - static: `WHERE partCol = x` never lists the other directories;
-    *  - dynamic (DPP): joining on `partCol` against a filtered dim
-    *    injects a runtime `dynamicpruning` subquery into the scan's
-    *    PartitionFilters, so the fact side reads only partitions the
-    *    dim side survives — the directory-level cousin of q70's
-    *    row-level bloom filter.
-    *
-    * Keep partition cardinality bounded (dates, types, shards — not
-    * user ids): each value is a directory, and millions of tiny
-    * directories kill the file listing long before the scan.
-    */
-  def partitionedWrite(df: DataFrame, partCol: String, path: String): Unit =
-    df.write.mode("overwrite").partitionBy(partCol).parquet(path)
 
   /** Small-files compaction: rewrite a (typically many-small-files)
     * table into ~`targetFileBytes` outputs, sized from Catalyst's own

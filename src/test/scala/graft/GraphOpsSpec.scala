@@ -88,15 +88,18 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("pagerank: tol early-exit stops before the cap and matches run-to-cap within the bound") {
-    // A⇄B converges at round 1 (symmetric fixpoint): with tol set the
-    // loop must exit immediately instead of burning all 50 rounds,
-    // and ranks must equal the fixed-iteration reference.
+    // relTol thresholds n·pr, so relTol = tol·n on a graph of n known
+    // vertices stops on the absolute max|Δpr| < tol.
+    // A⇄B converges at round 1 (symmetric fixpoint): the loop must
+    // exit immediately instead of burning all 50 rounds, and ranks must
+    // equal the fixed-iteration reference.
     val cyc = edges((1L, 2L), (2L, 1L))
     val t0 = System.nanoTime()
-    val early = GraphOps.pageRank(cyc, iters = 50, tol = 1e-12)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (earlyDf, earlyRounds) = GraphOps.pageRankWithStats(cyc, iters = 50, relTol = 1e-12 * 2)
+    val early = earlyDf.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val earlySec = (System.nanoTime() - t0) / 1e9
     assert(math.abs(early(1L) - 0.5) < 1e-12 && math.abs(early(2L) - 0.5) < 1e-12)
+    assert(earlyRounds == 1, s"A⇄B is converged after one round, took $earlyRounds")
     // 50 full rounds take many seconds of checkpointed joins; exiting
     // at round 1 is the only way to land far under that
     assert(earlySec < 20.0, s"early exit should skip ~49 rounds, took $earlySec s")
@@ -104,10 +107,11 @@ class GraphOpsSpec extends SparkSpec {
     // property: on an asymmetric graph, early-exit ranks are within
     // tol*d/(1-d) (~5.7x tol) of the run-to-the-cap reference
     val g = edges((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (4L, 2L), (5L, 4L))
+    val n = 5.0 // vertices of g
     val tol = 1e-3
     val fixed = GraphOps.pageRank(g, iters = 30)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val conv = GraphOps.pageRank(g, iters = 30, tol = tol)
+    val conv = GraphOps.pageRank(g, iters = 30, relTol = tol * n)
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(conv.keySet == fixed.keySet)
     val bound = tol * 0.85 / 0.15
@@ -116,42 +120,38 @@ class GraphOpsSpec extends SparkSpec {
         s"vertex $v: |${conv(v)} - $p| >= $bound")
     }
     assert(math.abs(conv.values.sum - 1.0) < 1e-9, "mass conserved under early exit")
-    // tol = 0 must preserve the historical fixed-iteration semantics
+    // relTol = 0 must preserve the fixed-iteration semantics
     val ten = GraphOps.pageRank(g).collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val tenAgain = GraphOps.pageRank(g, iters = 10, tol = 0.0).collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val (tenAgainDf, tenRounds) = GraphOps.pageRankWithStats(g, iters = 10, relTol = 0.0)
+    val tenAgain = tenAgainDf.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(ten == tenAgain)
+    assert(tenRounds == 10, s"relTol = 0 must run every round, ran $tenRounds")
   }
 
   test("pagerank: relTol is scale-invariant where absolute tol degenerates") {
     // the r15 scaling-curve finding, pinned as a property: ranks sum
     // to 1, so max|Δpr| shrinks ~1/n on a k-fold disjoint scale-up
-    // and a fixed absolute tol exits EARLIER on the bigger graph,
+    // and a fixed absolute threshold exits EARLIER on the bigger graph,
     // while relTol (thresholding n·pr) keeps the round count.
     val base = Seq((1L, 2L), (2L, 3L), (3L, 1L), (4L, 1L), (4L, 2L), (5L, 4L))
     def kCopies(k: Int) = edges((0 until k).flatMap(i =>
       base.map { case (a, b) => (a + 100L * i, b + 100L * i) }): _*)
+    def rounds(k: Int, relTol: Double) =
+      GraphOps.pageRankWithStats(kCopies(k), iters = 30, relTol = relTol)._2
     val n1 = 5.0 // vertices of one copy
     val tolAbs = 2e-2
-    GraphOps.pageRank(kCopies(1), iters = 30, tol = tolAbs)
-    val roundsAbs1 = GraphOps.lastTolRounds
-    GraphOps.pageRank(kCopies(8), iters = 30, tol = tolAbs)
-    val roundsAbs8 = GraphOps.lastTolRounds
-    assert(roundsAbs8 < roundsAbs1,
+    // an absolute threshold on max|Δpr| is relTol = tolAbs·n on each
+    // graph; on the 1x graph that is the same relTol as below
+    val rounds1 = rounds(1, tolAbs * n1)
+    val roundsAbs8 = rounds(8, tolAbs * n1 * 8)
+    assert(roundsAbs8 < rounds1,
       s"absolute tol should fire earlier on the 8x graph " +
-        s"(got $roundsAbs1 -> $roundsAbs8)")
-    val rel = tolAbs * n1 // same threshold as tolAbs on the 1x graph
-    GraphOps.pageRank(kCopies(1), iters = 30, relTol = rel)
-    val roundsRel1 = GraphOps.lastTolRounds
-    GraphOps.pageRank(kCopies(8), iters = 30, relTol = rel)
-    val roundsRel8 = GraphOps.lastTolRounds
-    assert(roundsRel1 == roundsAbs1,
-      s"relTol = tol*n must reproduce the absolute round count at 1x " +
-        s"($roundsRel1 vs $roundsAbs1)")
-    assert(roundsRel8 == roundsRel1,
+        s"(got $rounds1 -> $roundsAbs8)")
+    val roundsRel8 = rounds(8, tolAbs * n1)
+    assert(roundsRel8 == rounds1,
       s"relTol round count must be invariant under the disjoint " +
-        s"scale-up (got $roundsRel1 -> $roundsRel8)")
+        s"scale-up (got $rounds1 -> $roundsRel8)")
   }
 
   test("triangle count: hand graphs, orientation/duplicate tolerance") {
@@ -239,17 +239,6 @@ class GraphOpsSpec extends SparkSpec {
       graft.operators.GraphOps.coreNumbers(edges, rounds = 1)
     }
     assert(ex.getMessage.contains("did not converge"))
-    // requireConverged=false (tight-budget caller): no loud failure, and
-    // the final round skips the change count (r14) — the fixture needs
-    // >= 3 rounds, so rounds=3 exercises the skip branch; a generous
-    // ceiling under the same flag still lands on the exact fixed point
-    assert(graft.operators.GraphOps
-      .coreNumbers(edges, rounds = 1, requireConverged = false)
-      .count() == 7L)
-    val coreNc = graft.operators.GraphOps
-      .coreNumbers(edges, rounds = 50, requireConverged = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(coreNc == core, "requireConverged=false must not change the fixed point")
   }
 
   test("label propagation: two cliques joined by a bridge split into two communities") {
@@ -289,5 +278,35 @@ class GraphOpsSpec extends SparkSpec {
     val aNorm = out.map(t => t._3 * t._3).sum
     assert(math.abs(hNorm - 1.0) < 1e-9 && math.abs(aNorm - 1.0) < 1e-9,
       s"L2 norms must be 1: $hNorm, $aNorm")
+  }
+
+  test("every loop frees its checkpoints: only the generation the result reads stays persisted") {
+    // each operator materializes setup frames, one generation per round
+    // and round-scoped scratch; after its result is collected, at most
+    // one checkpoint may remain: the one the returned frame reads. (The
+    // ContextCleaner can reap an unreferenced leaked frame after a GC,
+    // so a leak may slip past one run; a loop that frees never fails.)
+    val k4 = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L))
+    val g = edges(k4 ++ Seq((4L, 5L), (5L, 6L), (6L, 7L), (7L, 4L)): _*)
+    val runs = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "connectedComponents" -> (() => GraphOps.connectedComponents(
+        pairs((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)))),
+      "pageRank" -> (() => GraphOps.pageRank(g)),
+      "pageRank relTol" -> (() => GraphOps.pageRank(g, iters = 30, relTol = 1e-3)),
+      "personalizedPageRank" -> (() => GraphOps.personalizedPageRank(g, Seq(1L))),
+      "kCore" -> (() => GraphOps.kCore(g, k = 2, rounds = 4)),
+      "coreNumbers" -> (() => GraphOps.coreNumbers(g)),
+      "labelPropagation" -> (() => GraphOps.labelPropagation(g)),
+      "hits" -> (() => GraphOps.hits(g)),
+      "triangleCount" -> (() => GraphOps.triangleCount(
+        k4.toDF("a", "b"))))
+    val sc = spark.sparkContext
+    runs.foreach { case (name, run) =>
+      val before = sc.getPersistentRDDs.keySet
+      assert(run().collect().nonEmpty, s"$name returned no rows")
+      val gained = sc.getPersistentRDDs.keySet -- before
+      assert(gained.size <= 1,
+        s"$name left ${gained.size} checkpoints persisted: ${gained.toSeq.sorted}")
+    }
   }
 }

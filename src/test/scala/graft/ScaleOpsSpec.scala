@@ -15,8 +15,10 @@ class ScaleOpsSpec extends SparkSpec {
     val facts = (1L to 1000L).map(i => (i % 50, i, i * 2.0))
       .toDF("k", "id", "v")
     val dims = (0L until 50L).map(i => (i, s"name$i")).toDF("k", "name")
-    ScaleOps.bucketedWriter(facts, 8, "k").mode("overwrite").saveAsTable("b_facts")
-    ScaleOps.bucketedWriter(dims, 8, "k").mode("overwrite").saveAsTable("b_dims")
+    // both sides bucketed and sorted on the join key with the same
+    // bucket count: the shuffle is paid once, at write time
+    facts.write.bucketBy(8, "k").sortBy("k").mode("overwrite").saveAsTable("b_facts")
+    dims.write.bucketBy(8, "k").sortBy("k").mode("overwrite").saveAsTable("b_dims")
     // disable broadcast so the join would normally shuffle both sides
     withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("b_facts").join(spark.table("b_dims"), "k")
@@ -33,7 +35,8 @@ class ScaleOpsSpec extends SparkSpec {
     val base = new java.io.File("target/spec-sources/part-events")
       .getAbsolutePath
     val ev = graft.sources.Tables.events(spark, sf001)
-    ScaleOps.partitionedWrite(ev, "event_type", base)
+    // Hive-style layout: one directory per event_type value
+    ev.write.mode("overwrite").partitionBy("event_type").parquet(base)
     val part = spark.read.parquet(base)
 
     // static: a literal filter on the partition column becomes a

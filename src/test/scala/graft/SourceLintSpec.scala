@@ -137,6 +137,16 @@ class SourceLintSpec extends AnyFunSuite {
       Map.empty)
   }
 
+  test("loopUnpersist is confined to the GraphOps loop skeleton and triangleCount") {
+    // every iterative graph operator frees its checkpoints through
+    // GraphOps.iterate; a loop that hand-rolls its own freeing would
+    // add references here. Counts every mention, so a bare
+    // `foreach(loopUnpersist)` counts too.
+    check("loopUnpersist", """\bloopUnpersist\b""".r, Map(
+      "src/main/scala/graft/operators/GraphOps.scala" ->
+        (7, "the definition, iterate's three frees (round end, finish, setup at exit), and triangleCount's three one-shot checkpoints")))
+  }
+
   test("udf( is confined to the streaming image dHash") {
     check("udf(", """(?<![\w.])udf\(""".r, Map(
       "src/main/scala/graft/streaming/StreamingDedup.scala" ->
