@@ -824,21 +824,21 @@ GROUP BY 1
 ORDER BY 1"""
 
   /** Oracle for q61: fixed-iteration PageRank (= GraphOps.pageRank,
-    * damping 0.85) over the customer→supplier purchase graph. The
-    * fixed round count is UNROLLED as a chain of CTEs (pr0..prN) —
-    * recursive CTEs can't aggregate over the recursive reference, and
-    * unrolling keeps each step a plain grouped join, structurally
-    * identical to the engine's per-round plan. All arithmetic is
-    * double; terms are combined in the same shape as the engine
-    * ((1-d)/N + d·(contrib + dang/N)), so residuals are pure
+    * damping `GraphOps.Damping`) over the customer→supplier purchase
+    * graph. The fixed round count (`GraphQueries.PageRankRounds`) is
+    * UNROLLED as a chain of CTEs (pr0..prN) — recursive CTEs can't aggregate over the recursive
+    * reference, and unrolling keeps each step a plain grouped join,
+    * structurally identical to the engine's per-round plan. All
+    * arithmetic is double; terms are combined in the same shape as the
+    * engine ((1-d)/N + d·(contrib + dang/N)), so residuals are pure
     * summation-order noise at ~1e-15 relative.
     */
-  def q61PageRank(iters: Int = 10, damping: Double = 0.85): String = {
+  def q61PageRank: String = {
     // every CTE is MATERIALIZED: each pr step is referenced 3× (dangling
     // mass, contributions, and the next step); inlining would expand the
-    // chain 3^iters-fold and re-open the parquet scans thousands of times
-    val d = damping.toString
-    val steps = (0 until iters).map { i =>
+    // chain 3^rounds-fold and re-open the parquet scans thousands of times
+    val d = graft.operators.GraphOps.Damping.toString
+    val steps = (0 until GraphQueries.PageRankRounds).map { i =>
       s"""dg$i AS MATERIALIZED (
   SELECT coalesce(sum(pr), 0) AS dm FROM pr$i
   WHERE v NOT IN (SELECT src FROM deg)),
@@ -860,7 +860,7 @@ nn AS MATERIALIZED (SELECT count(*)::DOUBLE AS n FROM nodes),
 deg AS MATERIALIZED (SELECT src, count(*)::DOUBLE AS outd FROM e GROUP BY src),
 pr0 AS MATERIALIZED (SELECT v, 1.0 / (SELECT n FROM nn) AS pr FROM nodes),
 $steps
-SELECT v AS node_id, pr AS pagerank FROM pr$iters ORDER BY node_id"""
+SELECT v AS node_id, pr AS pagerank FROM pr${GraphQueries.PageRankRounds} ORDER BY node_id"""
   }
 
   /** Oracle for q136: q49's reach components with a singleton
@@ -900,12 +900,11 @@ ORDER BY doc_id"""
     * step adds (1−d)/|S| + d·dang/|S| only on seeds. Every float op
     * mirrors the engine term for term.
     */
-  def q134PersonalizedPageRank(seeds: Seq[Long], iters: Int = 10,
-                               damping: Double = 0.85): String = {
-    val d = damping.toString
+  def q134PersonalizedPageRank(seeds: Seq[Long]): String = {
+    val d = graft.operators.GraphOps.Damping.toString
     val sl = seeds.mkString(", ")
     val nS = s"${seeds.size}.0"
-    val steps = (0 until iters).map { i =>
+    val steps = (0 until GraphQueries.PageRankRounds).map { i =>
       s"""dg$i AS MATERIALIZED (
   SELECT coalesce(sum(pr), 0) AS dm FROM pr$i
   WHERE v NOT IN (SELECT src FROM deg)),
@@ -930,7 +929,7 @@ pr0 AS MATERIALIZED (
   SELECT v, CASE WHEN v IN ($sl) THEN 1.0 / $nS ELSE 0.0 END AS pr
   FROM nodes),
 $steps
-SELECT v AS node_id, pr AS pagerank FROM pr$iters
+SELECT v AS node_id, pr AS pagerank FROM pr${GraphQueries.PageRankRounds}
 WHERE pr > 0.0
 ORDER BY node_id"""
   }

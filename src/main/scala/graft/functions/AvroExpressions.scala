@@ -54,20 +54,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * case — record/string/int/...) are unaffected.
   */
 object AvroStructConverter {
-  /** `[null, T]` union → (T, nullable); anything else → (s, false).
-    * Multi-branch unions are NOT expressible as a single schema — use
-    * [[branches]]/[[fieldType]] for the general path; this remains the
-    * fast path for the overwhelmingly common nullable-field case.
-    */
-  def unwrap(fs: Schema): (Schema, Boolean) = fs.getType match {
-    case Schema.Type.UNION =>
-      val branches = fs.getTypes
-      require(branches.size == 2 && branches.get(0).getType == Schema.Type.NULL,
-        s"only [null, T] unions supported, got $fs")
-      (branches.get(1), true)
-    case _ => (fs, false)
-  }
-
   /** Union-aware split of a FIELD schema: (non-null branches, had a
     * null branch). Non-union schemas are a single "branch".
     */
@@ -149,24 +135,17 @@ object AvroStructConverter {
 
 class AvroStructConverter(val schemaJson: String, val confluentFraming: Boolean,
                           val schemaId: Int,
-                          val readerSchemaJson: Option[String] = None,
                           val writerSchemasById: Map[Int, String] = Map.empty)
     extends Serializable {
   import AvroStructConverter._
 
-  /** Default writer schema — what the bytes were encoded with (when no
-    * per-record frame-id resolution is configured).
-    */
-  @transient private lazy val writerSchema: Schema =
-    new Schema.Parser().parse(schemaJson)
-  /** Reader schema — possibly a pruned subset of the writer's fields
-    * (Avro schema resolution skips non-reader fields during decode,
-    * which is cheaper than materializing them).
+  /** The declared schema: what the bytes are encoded with unless
+    * `writerSchemasById` names another writer schema per frame, and
+    * always what the decode reads into.
     */
   @transient private lazy val schema: Schema =
-    readerSchemaJson.map(new Schema.Parser().parse(_)).getOrElse(writerSchema)
-  @transient private lazy val reader =
-    new GenericDatumReader[GenericRecord](writerSchema, schema)
+    new Schema.Parser().parse(schemaJson)
+  @transient private lazy val reader = new GenericDatumReader[GenericRecord](schema)
   /** Frame-id → resolving reader cache (writer = registry schema for
     * that id, reader = the declared schema). ConcurrentHashMap because
     * one converter instance is shared across a whole-stage-codegen task.
@@ -177,11 +156,10 @@ class AvroStructConverter(val schemaJson: String, val confluentFraming: Boolean,
   @transient private lazy val decoderFactory = DecoderFactory.get()
   @transient private lazy val encoderFactory = EncoderFactory.get()
 
-  /** The Spark struct type this converter decodes to (reader schema). */
+  /** The Spark struct type this converter decodes to. */
   lazy val structType: StructType = {
     // dataType runs on the driver too, so parse fresh (non-transient path)
-    val parsed = new Schema.Parser().parse(readerSchemaJson.getOrElse(schemaJson))
-    sparkType(parsed).asInstanceOf[StructType]
+    sparkType(new Schema.Parser().parse(schemaJson)).asInstanceOf[StructType]
   }
 
   private val headerLen = if (confluentFraming) 5 else 0
@@ -454,21 +432,21 @@ class AvroStructConverter(val schemaJson: String, val confluentFraming: Boolean,
 /** `from_avro_graft(binary)` — decode Avro binary into a struct.
   * `permissive = true` yields NULL for malformed records instead of
   * failing the task (spark-avro's PERMISSIVE vs FAILFAST modes).
-  * `readerSchemaJson`, when set, is a pruned subset of the writer
-  * schema — installed by the PruneAvroFields optimizer rule when the
-  * query only extracts some fields. `writerSchemasById`, when non-empty
-  * (requires `confluentFraming`), resolves each record's writer schema
-  * from its Confluent frame id — the injectable offline analogue of the
-  * reference's CachedSchemaRegistryClient.
+  * The decode always reads the full declared schema `schemaJson`.
+  * `writerSchemasById`, when non-empty (requires `confluentFraming`),
+  * resolves each record's writer schema from its Confluent frame id —
+  * the injectable offline analogue of the reference's
+  * CachedSchemaRegistryClient — and Avro schema resolution maps it to
+  * `schemaJson`; [[graft.sources.KafkaIO.decodeAvroFrames]] is the
+  * builder that sets it.
   */
 case class FromAvroGraft(child: Expression, schemaJson: String,
                          confluentFraming: Boolean = false,
                          permissive: Boolean = false,
-                         readerSchemaJson: Option[String] = None,
                          writerSchemasById: Map[Int, String] = Map.empty)
     extends UnaryExpression {
   private def mkConv = new AvroStructConverter(schemaJson, confluentFraming, 0,
-    readerSchemaJson, writerSchemasById)
+    writerSchemasById)
   @transient private lazy val conv = mkConv
   // the analyzer and optimizer ask for dataType many times per plan:
   // parse the schema once per expression instance, not once per call

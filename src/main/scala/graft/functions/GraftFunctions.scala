@@ -118,19 +118,4 @@ object GraftFunctions {
   def toAvro(struct: Column, schemaJson: String,
              confluentFraming: Boolean = false): Column =
     call_function("to_avro_graft", struct, lit(schemaJson), lit(confluentFraming))
-  /** Framed decode with per-record writer-schema resolution from the
-    * Confluent frame id — the injectable offline analogue of a
-    * CachedSchemaRegistryClient. `readerSchemaJson` is the schema the
-    * query sees; each record's writer schema is looked up by frame id
-    * and Avro schema resolution maps writer → reader.
-    */
-  def fromAvroResolving(value: Column, readerSchemaJson: String,
-                        writerSchemasById: Map[Int, String],
-                        permissive: Boolean = false): Column = {
-    import org.apache.spark.sql.classic.GraftPlanBridge
-    GraftPlanBridge.column(FromAvroGraft(
-      GraftPlanBridge.expression(value), readerSchemaJson,
-      confluentFraming = true, permissive = permissive,
-      writerSchemasById = writerSchemasById))
-  }
 }

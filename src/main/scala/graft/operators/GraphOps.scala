@@ -40,10 +40,10 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Damping factor of [[pageRank]] and [[personalizedPageRank]] (the
-    * q61/q134 oracles unroll the same constant).
+  /** Damping factor of [[pageRank]] and [[personalizedPageRank]]; the
+    * q61/q134 oracles (OracleHashSql) unroll this same constant.
     */
-  private val Damping = 0.85
+  private[graft] val Damping = 0.85
 
   /** Round cap of [[connectedComponents]]: pointer jumping converges in
     * O(log n) rounds, so the cap only bounds a defect, never a graph.
@@ -107,7 +107,13 @@ object GraphOps {
   /** What [[iterate]] returns: the output frame, the rounds run, and
     * whether `done` ended the loop (rather than the round cap).
     */
-  private final case class Loop(out: DataFrame, rounds: Int, converged: Boolean)
+  private final case class Loop(out: DataFrame, rounds: Int, converged: Boolean) {
+    /** `require(ok, msg)` that first frees [[out]]: a caller that throws
+      * builds no result over the output, so nothing else would free it.
+      */
+    def check(ok: Boolean, msg: => String): Unit =
+      if (!ok) { loopUnpersist(out); require(ok, msg) }
+  }
 
   /** The loop skeleton of every iterative operator in this file.
     * Generation 0 is `init`; each round builds the next generation from
@@ -497,7 +503,7 @@ object GraphOps {
     * exact coreness numbering.
     */
   def kCore(edges: DataFrame, k: Int = 10, rounds: Int = 4): DataFrame = {
-    val core = iterate(edges
+    val loop = iterate(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .filter(col("a") =!= col("b"))
@@ -516,7 +522,8 @@ object GraphOps {
         .join(keep.withColumnRenamed("v", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("v", "b"), Seq("b"), "left_semi")
         .select(col("a"), col("b"))
-    }.out
+    }
+    val core = loop.out
     val deg = core.select(col("a").as("v")).union(core.select(col("b").as("v")))
       .groupBy("v").agg(count(lit(1)).cast("long").as("deg"))
     // a deeper-than-`rounds` cascade would silently return sub-k
@@ -524,7 +531,7 @@ object GraphOps {
     // contract; one cheap aggregate makes the truncation loud. The
     // check rides the checkpointed edge frame, not a recompute.
     val below = deg.filter(col("deg") < k).count()
-    require(below == 0L,
+    loop.check(below == 0L,
       s"kCore(k=$k) did not converge in $rounds rounds: $below vertices " +
         s"below degree $k remain — raise `rounds` (cascade is deeper)")
     deg
@@ -621,7 +628,7 @@ object GraphOps {
       done = (prev, next) => estSumOf(next).compareTo(estSumOf(prev)) == 0) { r =>
       hIndexUpdate(r.gen)
     }
-    require(loop.converged,
+    loop.check(loop.converged,
       s"coreNumbers did not converge in $rounds rounds: estimates still " +
         "moved in the final round — raise `rounds`")
     loop.out.select(col("v").as("node_id"), col("est").cast("long").as("coreness"))

@@ -825,13 +825,6 @@ object Similarity {
     (mean, cov)
   }
 
-  /** Eigensystem view of [[pcaModel]] (kept for symmetry with specs). */
-  def pcaEigen(spark: SparkSession, embeddings: DataFrame,
-               dim: Int = 64): (Array[Double], Array[Array[Double]]) = {
-    val m = pcaModel(spark, embeddings, dim)
-    (m.eigvals, m.eigvecs)
-  }
-
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix. O(d^3)
     * per sweep, a handful of sweeps to converge — driver-local by
     * design (the matrix is d×d, not data-sized). Returns eigenvalues

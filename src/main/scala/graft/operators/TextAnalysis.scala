@@ -383,7 +383,7 @@ object TextAnalysis {
     * Exposed for the structural invariant spec: concatenating a
     * word's final symbols must reproduce the word.
     */
-  def bpeEncodeSymbols(documents: DataFrame, k: Int = 5): DataFrame =
+  private[graft] def bpeEncodeSymbols(documents: DataFrame, k: Int = 5): DataFrame =
     bpeLoop(documents, k)._2
 
   private def bpeLoop(documents: DataFrame,

@@ -9,8 +9,9 @@ import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Dist
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
 /** Custom whole-operator AS-OF join (SURVEY.md §4.2 tier c): logical
-  * node + strategy + physical sort-merge exec, registered via
-  * [[GraftPlanExtensions]].
+  * node + strategy + physical sort-merge exec. [[AsOfJoinPhysical.asof]]
+  * installs the strategy in its session's experimental planner
+  * strategies on first use, so no session extension class is needed.
   *
   * Rationale vs the composition form (operators/AsOfJoin.scala, the
   * union+window trick): the composition is correct and single-shuffle,
@@ -138,18 +139,6 @@ object AsOfJoinStrategy extends org.apache.spark.sql.execution.SparkStrategy {
     case AsOfJoinNode(l, r, lk, rk, lt, rt, tie) =>
       AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt, tie) :: Nil
     case _ => Nil
-  }
-}
-
-/** Registers the strategy:
-  * `spark.sql.extensions=graft.plans.GraftPlanExtensions` or
-  * `.withExtensions(new GraftPlanExtensions)`. Also injects the
-  * PruneAvroFields optimizer rule (serde-boundary schema pruning).
-  */
-class GraftPlanExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => AsOfJoinStrategy)
-    ext.injectOptimizerRule(_ => PruneAvroFields)
   }
 }
 

@@ -15,6 +15,11 @@ import graft.QueryHelpers._
   */
 object GraphQueries {
 
+  /** Rounds of q61's PageRank and q134's personalized PageRank; their
+    * DuckDB mirrors in [[OracleHashSql]] unroll the same count.
+    */
+  private[graft] final val PageRankRounds = 10
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Fixed-iteration PageRank over the customer→supplier purchase
@@ -28,7 +33,7 @@ object GraphQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"),
           (lit(100000L) + col("l_suppkey")).as("dst"))
-      GraphOps.pageRank(edges, iters = 10)
+      GraphOps.pageRank(edges, iters = PageRankRounds)
         .select(col("v").as("node_id"), col("pr").as("pagerank"))
         .orderBy("node_id")
     }),
@@ -67,7 +72,7 @@ object GraphQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"),
           (lit(100000L) + col("l_suppkey")).as("dst"))
-      GraphOps.personalizedPageRank(edges, Seq(1L, 2L, 3L), iters = 10)
+      GraphOps.personalizedPageRank(edges, Seq(1L, 2L, 3L), iters = PageRankRounds)
         .filter(col("pr") > 0.0)
         .select(col("v").as("node_id"), col("pr").as("pagerank"))
         .orderBy("node_id")
@@ -158,7 +163,7 @@ object GraphQueries {
 
   /** DuckDB oracle SQL for every query above (same keys). */
   val oracleSql: Map[String, String] = Map(
-    "q61_pagerank" -> OracleHashSql.q61PageRank(),
+    "q61_pagerank" -> OracleHashSql.q61PageRank,
 
 
     // q77: id-oriented wedge closure — same count as the engine's

@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** JSONL ingestion — the lingua franca of LLM training corpora (one
   * JSON document per line; WebText/C4/RedPajama all ship this way).
@@ -26,20 +26,11 @@ object JsonIO {
     df.write.mode("overwrite").json(path)
 
   /** Read with an explicit schema and malformed policy
-    * (PERMISSIVE | DROPMALFORMED | FAILFAST).
+    * (PERMISSIVE | DROPMALFORMED | FAILFAST). Under PERMISSIVE, a
+    * `_corrupt_record` string field in `schema` (Spark's default
+    * corrupt-record column name) captures each malformed raw line.
     */
   def readJsonl(spark: SparkSession, path: String, schema: StructType,
                 mode: String = "PERMISSIVE"): DataFrame =
     spark.read.schema(schema).option("mode", mode).json(path)
-
-  /** PERMISSIVE read that also surfaces each malformed raw line in
-    * `_corrupt_record` — the observable-failure-rate form.
-    */
-  def readJsonlWithCorrupt(spark: SparkSession, path: String,
-                           schema: StructType): DataFrame =
-    spark.read
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .json(path)
 }

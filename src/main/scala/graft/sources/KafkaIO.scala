@@ -78,7 +78,11 @@ object KafkaIO {
     *    [[CsvIO.readCsvWithCorrupt]].
     *
     * Input: any DataFrame (batch or streaming) with a binary `value`
-    * column; other columns pass through. Caveat shared with every Avro
+    * column; other columns pass through. A non-empty
+    * `writerSchemasById` (frame id → writer schema JSON, the offline
+    * analogue of the reference's CachedSchemaRegistryClient) resolves
+    * each frame's writer schema to `schemaJson`; a frame with an id not
+    * in the map is malformed. Caveat shared with every Avro
     * consumer: the binary body is not self-describing, so a garbage
     * body can occasionally decode "successfully" into nonsense values
     * — the framing checks (magic byte, header length, known schema id)

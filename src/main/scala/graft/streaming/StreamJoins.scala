@@ -38,21 +38,6 @@ object StreamJoins {
                             watermarkDelay: String, within: String): DataFrame =
     joinWithType(left, right, key, tsCol, watermarkDelay, within, "left_outer")
 
-  /** Interval FULL OUTER join — completes the join-type matrix: every
-    * event on EITHER side emits, matched pairs as in [[intervalJoin]],
-    * unmatched rows with nulls on the other side once their watermark
-    * proof lands (the [[intervalJoinLeftOuter]] contract applied
-    * symmetrically). The "correlate if possible, account for
-    * everything" shape — reconciliation streams, two-sided audit
-    * logs. Same bounded two-sided state; null-side emissions are
-    * delayed by (watermark delay + interval) past the event like the
-    * left-outer form.
-    */
-  def intervalJoinFullOuter(left: DataFrame, right: DataFrame,
-                            key: String, tsCol: String,
-                            watermarkDelay: String, within: String): DataFrame =
-    joinWithType(left, right, key, tsCol, watermarkDelay, within, "full_outer")
-
   private def joinWithType(left: DataFrame, right: DataFrame,
                            key: String, tsCol: String, watermarkDelay: String,
                            within: String, joinType: String): DataFrame = {

@@ -59,8 +59,8 @@ class ApproxAndSourcesSpec extends SparkSpec {
       "doc_id LONG, text STRING")
     val path = dir.toAbsolutePath.toString
 
-    val permissive = graft.sources.JsonIO
-      .readJsonlWithCorrupt(spark, path, schema).cache()
+    val permissive = graft.sources.JsonIO.readJsonl(spark, path,
+      schema.add("_corrupt_record", org.apache.spark.sql.types.StringType)).cache()
     assert(permissive.count() == 4)
     val corrupt = permissive.filter(col("_corrupt_record").isNotNull)
       .collect()

@@ -237,43 +237,6 @@ class AvroSpec extends SparkSpec {
       .head.getStruct(0).getLong(0) == 1L)
   }
 
-  test("PruneAvroFields: single-field extraction decodes with a pruned reader schema") {
-    GraftFunctions.register(spark)
-    import graft.plans.PruneAvroFields
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ PruneAvroFields
-    try {
-      val schema = new Schema.Parser().parse(KafkaIO.productAvroSchema)
-      val bytes = (1 to 5).map { i =>
-        Tuple1(avroEncode(schema, r => {
-          r.put("id", i.toLong); r.put("name", s"n$i")
-          r.put("description", "long description " * 20); r.put("price", i * 1.5)
-        }))
-      }
-      // a real (non-LocalRelation) source, else ConvertToLocalRelation
-      // constant-folds the whole projection before the rule can fire
-      val dir = java.nio.file.Files.createTempDirectory("graft_avro_prune").toString
-      bytes.toDF("value").write.mode("overwrite").parquet(dir)
-      val df = spark.read.parquet(dir)
-        .select(GraftFunctions.fromAvro(col("value"), KafkaIO.productAvroSchema).as("p"))
-        .select(col("p.id").as("id"), col("p.price").as("price"))
-      // the optimized plan must carry a pruned reader schema (2 of 4 fields)
-      val pruned = df.queryExecution.optimizedPlan.collect {
-        case plan => plan.expressions.flatMap(_.collect {
-          case f: graft.functions.FromAvroGraft if f.readerSchemaJson.isDefined => f
-        })
-      }.flatten
-      assert(pruned.nonEmpty, "rule must install a reader schema")
-      val reader = new Schema.Parser().parse(pruned.head.readerSchemaJson.get)
-      assert(reader.getFields.size == 2)
-      assert(reader.getFields.get(0).name == "id")
-      assert(reader.getFields.get(1).name == "price")
-      // and values are identical to the unpruned decode
-      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(got == (1 to 5).map(i => (i.toLong, i * 1.5)).toSet)
-    } finally spark.experimental.extraOptimizations = prev
-  }
-
   test("nested records with arrays and maps round-trip and cross-check vs plain avro") {
     GraftFunctions.register(spark)
     val schemaJson =
@@ -402,10 +365,9 @@ class AvroSpec extends SparkSpec {
     val b2 = framed(2, avroEncode(new Schema.Parser().parse(v2), r => {
       r.put("quantity", 5L); r.put("note", "hi"); r.put("id", 20L)
     }))
-    val rows = Seq(Tuple1(b1), Tuple1(b2)).toDF("value")
-      .select(GraftFunctions.fromAvroResolving(col("value"), reader,
-        Map(1 -> v1, 2 -> v2)).as("p"))
-      .select("p.*").collect()
+    val rows = KafkaIO.decodeAvroFrames(Seq(Tuple1(b1), Tuple1(b2)).toDF("value"),
+        reader, "FAILFAST", Map(1 -> v1, 2 -> v2))
+      .select("decoded.*").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rows == Set((10L, 2L), (20L, 5L)),
       "both schema versions must decode through the reader shape")
@@ -414,13 +376,12 @@ class AvroSpec extends SparkSpec {
       r.put("id", 30L); r.put("quantity", 1L)
     }))
     intercept[Exception] {
-      Seq(Tuple1(b3)).toDF("value")
-        .select(GraftFunctions.fromAvroResolving(col("value"), reader,
-          Map(1 -> v1, 2 -> v2)).as("p")).collect()
+      KafkaIO.decodeAvroFrames(Seq(Tuple1(b3)).toDF("value"), reader,
+        "FAILFAST", Map(1 -> v1, 2 -> v2)).select(col("decoded").as("p")).collect()
     }
-    val permissive = Seq(Tuple1(b3)).toDF("value")
-      .select(GraftFunctions.fromAvroResolving(col("value"), reader,
-        Map(1 -> v1, 2 -> v2), permissive = true).as("p")).collect()
+    val permissive = KafkaIO.decodeAvroFrames(Seq(Tuple1(b3)).toDF("value"),
+        reader, "PERMISSIVE", Map(1 -> v1, 2 -> v2))
+      .select(col("decoded").as("p")).collect()
     assert(permissive.length == 1 && permissive.head.isNullAt(0))
   }
 
@@ -446,10 +407,9 @@ class AvroSpec extends SparkSpec {
       r.put("quantity", 3L)
     })))
     val in = MemoryStream[Array[Byte]]
-    val decoded = in.toDF().toDF("value")
-      .select(GraftFunctions.fromAvroResolving(col("value"), v1,
-        Map(1 -> v1, 2 -> v2)).as("p"))
-      .select("p.*")
+    val decoded = KafkaIO.decodeAvroFrames(in.toDF().toDF("value"), v1,
+        "FAILFAST", Map(1 -> v1, 2 -> v2))
+      .select("decoded.*")
     val q = decoded.writeStream.format("memory").queryName("resolve_out")
       .outputMode("append").start()
     try {
@@ -461,52 +421,6 @@ class AvroSpec extends SparkSpec {
     assert(rows == ((1L to 3L).map(i => (i, 2L, 7L)) ++
       (4L to 6L).map(i => (i, 3L, 7L))).toSet,
       "both wire versions must decode through the reader schema in one stream")
-  }
-
-  test("PruneAvroFields prunes NESTED field paths (siblings at every level)") {
-    GraftFunctions.register(spark)
-    import graft.plans.PruneAvroFields
-    val nestedSchema =
-      """{"type":"record","name":"Doc","fields":[
-        |{"name":"id","type":"long"},
-        |{"name":"body","type":"string"},
-        |{"name":"meta","type":{"type":"record","name":"Meta","fields":[
-        |  {"name":"lang","type":"string"},
-        |  {"name":"big","type":"string"},
-        |  {"name":"quality","type":"double"}]}}]}""".stripMargin
-    val prev = spark.experimental.extraOptimizations
-    spark.experimental.extraOptimizations = prev :+ PruneAvroFields
-    try {
-      val schema = new Schema.Parser().parse(nestedSchema)
-      val bytes = (1 to 5).map { i =>
-        Tuple1(avroEncode(schema, r => {
-          r.put("id", i.toLong); r.put("body", "body " * 50)
-          val m = new GenericData.Record(schema.getField("meta").schema())
-          m.put("lang", s"l$i"); m.put("big", "huge " * 50); m.put("quality", i * 0.5)
-          r.put("meta", m)
-        }))
-      }
-      val dir = java.nio.file.Files.createTempDirectory("graft_avro_nested").toString
-      bytes.toDF("value").write.mode("overwrite").parquet(dir)
-      val df = spark.read.parquet(dir)
-        .select(GraftFunctions.fromAvro(col("value"), nestedSchema).as("d"))
-        .select(col("d.id").as("id"), col("d.meta.quality").as("quality"))
-      val pruned = df.queryExecution.optimizedPlan.collect {
-        case plan => plan.expressions.flatMap(_.collect {
-          case f: graft.functions.FromAvroGraft if f.readerSchemaJson.isDefined => f
-        })
-      }.flatten
-      assert(pruned.nonEmpty, "rule must install a reader schema")
-      val rs = new Schema.Parser().parse(pruned.head.readerSchemaJson.get)
-      assert(rs.getFields.size == 2, s"top level must keep id+meta, got $rs")
-      assert(rs.getFields.get(0).name == "id")
-      val metaS = rs.getFields.get(1).schema()
-      assert(metaS.getFields.size == 1 && metaS.getFields.get(0).name == "quality",
-        s"meta must keep only quality, got $metaS")
-      val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
-      assert(got == (1 to 5).map(i => (i.toLong, i * 0.5)).toSet,
-        "pruned decode must produce identical values")
-    } finally spark.experimental.extraOptimizations = prev
   }
 
   test("nullable [null, T] union fields decode/encode null") {
@@ -613,10 +527,10 @@ class AvroSpec extends SparkSpec {
     assert(resolved.get("note") == null, "null default fill (plain avro)")
 
     // the engine decodes BOTH wire versions through the evolved reader
-    val rows = Seq(Tuple1(oldFrame), Tuple1(newFrame)).toDF("value")
-      .select(GraftFunctions.fromAvroResolving(col("value"), v2,
-        Map(1 -> v1, 2 -> v2)).as("p"))
-      .select("p.*").collect()
+    val rows = KafkaIO.decodeAvroFrames(
+        Seq(Tuple1(oldFrame), Tuple1(newFrame)).toDF("value"), v2,
+        "FAILFAST", Map(1 -> v1, 2 -> v2))
+      .select("decoded.*").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getString(2), r.getDouble(3),
         Option(r.getString(4)))).toSet
     assert(rows == Set(

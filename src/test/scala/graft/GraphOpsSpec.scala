@@ -308,5 +308,20 @@ class GraphOpsSpec extends SparkSpec {
       assert(gained.size <= 1,
         s"$name left ${gained.size} checkpoints persisted: ${gained.toSeq.sorted}")
     }
+    // a failed convergence check builds no result, so it must free the
+    // loop's last generation itself: K4 + the pendant chain 4-5-6-7
+    // needs 3 peeling rounds, so rounds = 1 throws
+    val chain = edges(k4 ++ Seq((4L, 5L), (5L, 6L), (6L, 7L)): _*)
+    val failing = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "kCore" -> (() => GraphOps.kCore(chain, k = 2, rounds = 1)),
+      "coreNumbers" -> (() => GraphOps.coreNumbers(chain, rounds = 1)))
+    failing.foreach { case (name, run) =>
+      val before = sc.getPersistentRDDs.keySet
+      val ex = intercept[IllegalArgumentException](run())
+      assert(ex.getMessage.contains("did not converge"), s"$name: ${ex.getMessage}")
+      val gained = sc.getPersistentRDDs.keySet -- before
+      assert(gained.isEmpty,
+        s"$name threw and left ${gained.size} checkpoints persisted: ${gained.toSeq.sorted}")
+    }
   }
 }

@@ -393,33 +393,6 @@ class PriceAlertsStreamingSpec extends SparkSpec {
       s"unmatched left must emit with nulls once provably unmatched: $rows")
   }
 
-  test("stream-stream FULL OUTER interval join: both sides' unmatched rows emit nulls") {
-    val clicks = MemoryStream[Doc]
-    val buys = MemoryStream[Doc]
-    val joined = graft.streaming.StreamJoins.intervalJoinFullOuter(
-      clicks.toDF(), buys.toDF(), key = "doc_id", tsCol = "ts",
-      watermarkDelay = "1 minute", within = "10 MINUTES")
-    val out = runQuery(joined, "append", "ssfoj_out") { q =>
-      clicks.addData(
-        Doc(1L, "click-matched", Timestamp.valueOf("2024-01-01 00:20:00")),
-        Doc(2L, "click-alone", Timestamp.valueOf("2024-01-01 00:20:00")))
-      buys.addData(
-        Doc(1L, "buy", Timestamp.valueOf("2024-01-01 00:15:00")),
-        Doc(3L, "buy-alone", Timestamp.valueOf("2024-01-01 00:16:00")))
-      q.processAllAvailable()
-      clicks.addData(Doc(9L, "wm", Timestamp.valueOf("2024-01-01 02:00:00")))
-      buys.addData(Doc(9L, "wm", Timestamp.valueOf("2024-01-01 02:00:00")))
-      q.processAllAvailable()
-    }
-    val rows = out.collect().map(r =>
-      (Option(r.getAs[String]("text")), Option(r.getAs[String]("r_text")))).toSet
-    assert(rows.contains((Some("click-matched"), Some("buy"))))
-    assert(rows.contains((Some("click-alone"), None)),
-      s"unmatched left must emit: $rows")
-    assert(rows.contains((None, Some("buy-alone"))),
-      s"unmatched right must emit: $rows")
-  }
-
   test("streaming session window: gap merge + watermark close") {
     import org.apache.spark.sql.functions.{col, session_window}
     val in = MemoryStream[Doc]

@@ -310,7 +310,8 @@ class SimilaritySpec extends SparkSpec {
 
   test("q125 cross-check: Jacobi eigensystem is orthonormal with descending eigenvalues") {
     val emb = Tables.embeddings(spark, sf001)
-    val (vals, vecs) = Similarity.pcaEigen(spark, emb, dim = 64)
+    val pca = Similarity.pcaModel(spark, emb, dim = 64)
+    val (vals, vecs) = (pca.eigvals, pca.eigvecs)
     // descending, non-negative (covariance is PSD)
     assert(vals.zip(vals.tail).forall { case (a, b) => a >= b - 1e-9 })
     assert(vals.forall(_ >= -1e-9))
@@ -355,7 +356,7 @@ class SimilaritySpec extends SparkSpec {
   test("q125: fixed-round power basis — unit norm, near-orthogonal, near-optimal captured variance") {
     val emb = Tables.embeddings(spark, sf001)
     val model = Similarity.pcaPowerModel(spark, emb, r = 4)
-    val (jVals, _) = Similarity.pcaEigen(spark, emb, dim = 64)
+    val jVals = Similarity.pcaModel(spark, emb, dim = 64).eigvals
     // unit norm is exact (each round ends in an explicit normalize)
     model.eigvecs.foreach { v =>
       val nrm = math.sqrt(v.map(x => x * x).sum)

@@ -144,7 +144,19 @@ class SourceLintSpec extends AnyFunSuite {
     // `foreach(loopUnpersist)` counts too.
     check("loopUnpersist", """\bloopUnpersist\b""".r, Map(
       "src/main/scala/graft/operators/GraphOps.scala" ->
-        (7, "the definition, iterate's three frees (round end, finish, setup at exit), and triangleCount's three one-shot checkpoints")))
+        (8, "the definition, iterate's three frees (round end, finish, setup at exit), Loop.check's free of a non-converged output before it throws, and triangleCount's three one-shot checkpoints")))
+  }
+
+  test("Spark plan-extension hooks are confined to the as-of join's on-demand strategy") {
+    // an optimizer rule or planner strategy that no session installs is
+    // dead weight that still reads as a feature; one that every session
+    // installs is per-trigger planning work for each streaming query.
+    // The one hook installs its strategy only when a query asks for it.
+    check("plan-extension hook",
+      """injectOptimizerRule|injectPlannerStrategy|extraOptimizations|extraStrategies|extends Rule\[""".r,
+      Map(
+        "src/main/scala/graft/plans/AsOfJoinPlan.scala" ->
+          (2, "AsOfJoinPhysical.ensureStrategy reads and appends extraStrategies: it installs AsOfJoinStrategy on demand, in the session of the query that uses it")))
   }
 
   test("udf( is confined to the streaming image dHash") {
