@@ -1,10 +1,5 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: times every SparkEntry query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line as the final stdout line, and
   * also writes the same JSON to a file (`BENCH.json` in the cwd, or
@@ -25,71 +20,33 @@ import org.apache.spark.sql.SparkSession
   * A query that throws is recorded in an `errors` map (name → message)
   * instead of being silently timed as a no-op (it is not retried on
   * later passes).
+  *
+  * Usage: tools/run.sh graft.Bench [name-prefix...] — prefixes restrict
+  * the battery (dev loop); a full run passes none.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passesRaw = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3")
     val passes = try passesRaw.toInt catch {
       case _: NumberFormatException =>
         sys.error(s"SPARK_GRAFT_BENCH_PASSES must be an integer >= 1, got '$passesRaw'")
     }
     require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(4, "ERROR")
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    // Dev loop: SPARK_GRAFT_ONLY=q121,q61 times just those prefixes
-    // (same contract as Verify). Unset for the driver run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     // benchQueries: production-path twins (e.g. tol-mode PageRank)
     // timed here but excluded from the declared correctness surface
-    val queries = (SparkEntry.queries ++ SparkEntry.benchQueries)
-      .toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    val queries = Harness.select(
+      (SparkEntry.queries ++ SparkEntry.benchQueries).toSeq.sortBy(_._1), args.toSeq)
     val best = scala.collection.mutable.LinkedHashMap[String, Double]()
-    // SPARK_GRAFT_BENCH_STORAGE=1: log residual storage before every
-    // query (r13 verdict #4 — settle whether the q137-class in-battery
-    // penalty is leftover storage the sweep misses, or shared-context
-    // noise). Reads only public APIs: getRDDStorageInfo sees RDD blocks
-    // (a nonzero count here means the post-query sweep is incomplete);
-    // getExecutorMemoryStatus's remaining-storage-memory additionally
-    // moves with BROADCAST blocks, which the RDD view cannot see.
-    val logStorage = sys.env.get("SPARK_GRAFT_BENCH_STORAGE").contains("1")
-    for (p <- 1 to passes; (name, fn) <- queries if !errors.contains(name)) {
-      if (logStorage) {
-        val infos = spark.sparkContext.getRDDStorageInfo
-        val rddMb = infos.map(_.memSize).sum / 1e6
-        val remainMb = spark.sparkContext.getExecutorMemoryStatus
-          .values.map(_._2).sum / 1e6
-        val heapMb = (Runtime.getRuntime.totalMemory() -
-          Runtime.getRuntime.freeMemory()) / 1e6
-        System.err.println(f"[bench-storage] pass=$p $name pre: " +
-          f"rdd_blocks=${infos.length} rdd_mb=$rddMb%.1f " +
-          f"storage_remaining_mb=$remainMb%.1f heap_used_mb=$heapMb%.0f")
-      }
+    for (_ <- 1 to passes; (name, fn) <- queries if !errors.contains(name)) {
       val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
-        case e: Throwable =>
-          // sanitize, TRUNCATE, then escape backslashes LAST: truncating
-          // an already-escaped message can split a '\\' pair and leave an
-          // odd trailing backslash that escapes the closing quote —
-          // invalid JSON in the one artifact the driver parses
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\n\\r\\t]", " ")
-            .filter(c => c >= ' ').take(200)
-            .replace("\\", "\\\\")
+        case e: Throwable => errors(name) = Harness.errorText(e)
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      if (logStorage)
-        System.err.println(f"[bench-storage] pass=$p $name dt=$dt%.2fs")
       best(name) = math.min(best.getOrElse(name, Double.MaxValue), dt)
       // Free the storage blocks the query left behind (OUTSIDE the timed
       // region). Query-level localCheckpoints (the q209/q319/q235 chain
@@ -118,10 +75,8 @@ object Bench {
     val results = queries.collect {
       case (name, _) if !errors.contains(name) => name -> best(name)
     }
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    val qs = Harness.obj(results.map { case (k, v) => k -> v.toString })
+    val errJson = Harness.obj(errors.map { case (k, v) => k -> ("\"" + v + "\"") })
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Round-over-round diagnosis INSIDE the artifact: per-query ratios
     // vs the checked-in QueryCosts snapshot (the prior round's sf0.1
@@ -152,8 +107,6 @@ object Bench {
     val fullLine =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$passes,"queries":$qs,"errors":$errJson,"ratio_vs_prior":$ratioJson,"sf":"$sfDir"}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
-    try Files.write(Paths.get(outPath), (fullLine + "\n").getBytes(StandardCharsets.UTF_8))
-    catch { case _: Throwable => () } // file write is best-effort; stdout is canonical
     // The harness that collects this run keeps only a ~2000-byte tail of
     // stdout; a 150-query map (~5 KB) never fits, so its JSON parse of
     // the final line always failed (BENCH_r05–r07: parsed=null). The
@@ -161,19 +114,13 @@ object Bench {
     // top-slowest per-query timings (the fast tail is uniform ~0.1-0.4 s
     // noise), error count, and a pointer to the full map on disk.
     val topN = 20
-    val top = results.sortBy(-_._2).take(topN)
-      .map { case (k, v) => "\"" + k + "\":" + f3(v) }.mkString("{", ",", "}")
-    val errHead = errors.take(3)
-      .map { case (k, v) =>
-        // head-truncating the ESCAPED value can split a '\\' pair; strip
-        // any trailing backslash run so the closing quote stays a quote
-        "\"" + k + "\":\"" + v.take(60).replaceAll("\\\\+$", "") + "\"" }
-      .mkString("{", ",", "}")
+    val top = Harness.obj(results.sortBy(-_._2).take(topN).map { case (k, v) => k -> f3(v) })
+    // head-truncating the ESCAPED value can split a '\\' pair; strip any
+    // trailing backslash run so the closing quote stays a quote
+    val errHead = Harness.obj(errors.take(3).map { case (k, v) =>
+      k -> ("\"" + v.take(60).replaceAll("\\\\+$", "") + "\"") })
     val line =
       s"""{"metric":"total","value":${f3(total)},"unit":"sec","runs":$passes,"n_queries":${results.size},"queries":$top,"queries_note":"top $topN slowest; per-query MIN across $passes interleaved passes; full map in queries_file","n_errors":${errors.size},"errors":$errHead,"ratio_vs_prior":$ratioJson,"sf":"$sfDir","queries_file":"$outPath"}"""
-    spark.stop()
-    // Print last, after Spark shutdown, so no executor/log lines follow it.
-    System.out.println(line)
-    System.out.flush()
+    Harness.finish(spark, outPath, fullLine, line)
   }
 }

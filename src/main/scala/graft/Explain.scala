@@ -10,6 +10,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * evidence (Exchange count, join strategy) is about. Dev tooling only.
   *
   * Usage: tools/run.sh graft.Explain <dataDir> <query-or-fragment>...
+  * (`local[SPARK_GRAFT_CPUS]`, default 4, like the other mains)
   */
 object Explain {
 
@@ -19,12 +20,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: graft.Explain <dataDir> <query-or-fragment>...")
     val dir = args.head
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = Harness.session(4, "ERROR")
     try {
-      spark.sparkContext.setLogLevel("ERROR")
       for (name <- args.tail) {
         println(s"\n########## $name ##########")
         SparkEntry.queries.get(name).orElse(fragments.get(name)) match {

@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.operators.Similarity
@@ -22,14 +19,7 @@ import graft.sources.Tables
 object Recall {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(4, "ERROR")
     val k = 10
     val emb = Tables.embeddings(spark, sfDir)
     val queries = emb.filter(col("vec_id") < 100)
@@ -72,20 +62,14 @@ object Recall {
       val got = pairs(fn())
       name -> (truth & got).size.toDouble / truth.size
     }
-    val rj = recalls.map { case (n, r) =>
-      "\"" + n + "\":" + f"$r%.4f"
-    }.mkString("{", ",", "}")
+    val rj = Harness.obj(recalls.map { case (n, r) => n -> f"$r%.4f" })
     // self-describing artifact: tiers whose number is a calibration
     // readout, not a retrieval quality claim, say so
     val purpose =
       """{"q177_prefix16":"truncation-calibration (see q177_prefix16_rerank for the usable tier)"}"""
     val line =
       s"""{"metric":"recall_at_$k","truth_pairs":${truth.size},"n_queries":$nQueries,"recalls":$rj,"purpose":$purpose,"sf":"$sfDir"}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_RECALL_OUT", "RECALL.json")
-    try Files.write(Paths.get(outPath), (line + "\n").getBytes(StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
-    spark.stop()
-    System.out.println(line)
-    System.out.flush()
+    Harness.finish(spark, sys.env.getOrElse("SPARK_GRAFT_RECALL_OUT", "RECALL.json"),
+      line, line)
   }
 }

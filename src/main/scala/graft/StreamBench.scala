@@ -1,9 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -32,30 +29,25 @@ import graft.streaming.{PriceAlertsStream, ProcessorAlerts, StreamJoins, Streami
   * offered rate sits above each shape's ceiling so the engine, not the
   * source, is measured.
   *
-  * Usage: tools/run.sh graft.StreamBench [secondsPerShape]
+  * Usage: tools/run.sh graft.StreamBench [secondsPerShape [shape-prefix...]]
+  * — prefixes restrict the battery (dev loop); the artifact run passes
+  * none.
   */
 object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val runSecs = if (args.length > 0) args(0).toInt else 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val spark = Harness.session(4, "ERROR",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       // production RocksDB posture: changelog checkpointing uploads the
       // per-batch delta instead of a full snapshot per commit — the
       // recommended at-scale setting, and it directly relieves the
       // two-store interval-join shape whose per-batch commit cost is
       // snapshot-bound (state grows with the watermark gap)
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
     import spark.implicits._
+    val cpus = spark.sparkContext.defaultParallelism
 
     // rate source cast to the purchase shape: 200 products, qty 1-10
     def purchases(rate: Long): DataFrame =
@@ -330,42 +322,24 @@ object StreamBench {
           .toDF(), "append")
       }))
 
-    // Dev loop: SPARK_GRAFT_STREAM_ONLY=shape1,shape2 measures just those
-    // prefixes (same contract as Bench's SPARK_GRAFT_ONLY). Unset for the
-    // artifact run.
-    val only = sys.env.get("SPARK_GRAFT_STREAM_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
     val results = scala.collection.mutable.LinkedHashMap[String, (Double, Double, Double)]()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    shapes.filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
-      .foreach { case (name, build) =>
+    Harness.select(shapes, args.toSeq.drop(1)).foreach { case (name, build) =>
       try {
         val (df, mode) = build()
         results(name) = measure(df, mode)
       } catch {
-        case e: Throwable =>
-          // sanitize → truncate → escape LAST (see Bench: truncating an
-          // escaped message can split '\\' and break the JSON artifact)
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-            .replaceAll("[\"\\n\\r\\t]", " ")
-            .filter(c => c >= ' ').take(200)
-            .replace("\\", "\\\\")
+        case e: Throwable => errors(name) = Harness.errorText(e)
       }
     }
 
-    val qs = results.map { case (k, (avg, peak, out)) =>
-      f""""$k":{"rows_per_sec":$avg%.0f,"peak":$peak%.0f,"out_rows_per_sec":$out%.0f}"""
-    }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
+    val qs = Harness.obj(results.map { case (k, (avg, peak, out)) =>
+      k -> f"""{"rows_per_sec":$avg%.0f,"peak":$peak%.0f,"out_rows_per_sec":$out%.0f}""" })
+    val errJson = Harness.obj(errors.map { case (k, v) => k -> ("\"" + v + "\"") })
     val total = results.values.map(_._1).sum
     val line =
       s"""{"metric":"stream_rows_per_sec_total","value":${total.round},"unit":"rows/sec","shapes":$qs,"errors":$errJson,"secs_per_shape":$runSecs}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_STREAMBENCH_OUT", "STREAMBENCH.json")
-    try Files.write(Paths.get(outPath), (line + "\n").getBytes(StandardCharsets.UTF_8))
-    catch { case _: Throwable => () } // best-effort; stdout is canonical
-    spark.stop()
-    System.out.println(line)
-    System.out.flush()
+    Harness.finish(spark, sys.env.getOrElse("SPARK_GRAFT_STREAMBENCH_OUT", "STREAMBENCH.json"),
+      line, line)
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -32,16 +31,9 @@ object StreamEquiv {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    val spark: SparkSession = Harness.session(4, "ERROR",
+      "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
@@ -468,18 +460,13 @@ object StreamEquiv {
       record("forward_asof_tolerance", got.size.toLong, got == want)
     }
 
-    val shapes = results.map { case (n, (r, ok)) =>
-      s""""$n":{"rows":$r,"match":$ok}"""
-    }.mkString("{", ",", "}")
+    val shapes = Harness.obj(results.map { case (n, (r, ok)) =>
+      n -> s"""{"rows":$r,"match":$ok}""" })
     val allOk = results.values.forall(_._2)
     val line =
       s"""{"metric":"stream_batch_equivalence","all_match":$allOk,"shapes":$shapes,"sf":"$sfDir"}"""
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_STREAMEQUIV_OUT", "STREAMEQUIV.json")
-    try Files.write(Paths.get(outPath), (line + "\n").getBytes(StandardCharsets.UTF_8))
-    catch { case _: Throwable => () }
-    spark.stop()
-    System.out.println(line)
-    System.out.flush()
+    Harness.finish(spark, sys.env.getOrElse("SPARK_GRAFT_STREAMEQUIV_OUT", "STREAMEQUIV.json"),
+      line, line)
     if (!allOk) sys.exit(1)
   }
 }

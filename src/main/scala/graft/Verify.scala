@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.{Executors, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
@@ -18,61 +17,31 @@ import java.util.concurrent.atomic.AtomicInteger
   *      across the local[N] slots; wall-clock drops ~6× vs sequential.
   *   4. repartition(1) instead of coalesce(1): the final single-file write
   *      no longer collapses the upstream stages to one thread.
+  *
+  * Usage: tools/run.sh graft.Verify <sfDir> <outDir> [name-prefix...] —
+  * prefixes restrict the dump to the queries whose name starts with one
+  * of them (the dev loop); a full run passes none.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.scheduler.mode", "FAIR")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [name-prefix...]")
+    val (sfDir, outDir) = (args(0), args(1))
+    val selected = Harness.select(SparkEntry.queries.toSeq, args.toSeq.drop(2))
+    val spark = Harness.session(math.min(32, Runtime.getRuntime.availableProcessors()),
+      "WARN", "spark.scheduler.mode" -> "FAIR")
     new java.io.File(outDir).mkdirs()
-
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    // Dev loop: SPARK_GRAFT_ONLY=q121,q122 restricts the dump to queries
-    // whose name starts with any listed prefix. Unset for the driver run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-    val selected = only match {
-      case Some(ps) => SparkEntry.queries.filter { case (n, _) =>
-        ps.exists(n.startsWith) }
-      case None => SparkEntry.queries
-    }
-    // SQL scoped to the SELECTED queries (the full map when ONLY is
-    // unset, i.e. every driver run): check_oracle now checks the union
-    // of dumps and declared SQL, so emitting SQL for un-dumped queries
-    // would turn every ONLY-restricted dev run into a wall of NO-OUTPUT.
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val ordered = selected.toSeq.sortBy { case (n, _) =>
+    import Harness.json
+    val sqlJson = oracleSql(selected.map(_._1).toSet, outDir)
+      .map { case (k, v) => s"${json(k)}: ${json(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), sqlJson)
+    val ordered = selected.sortBy { case (n, _) =>
       (QueryCosts.sf01Seconds.getOrElse(n, 1.0), n) }
 
     // 8 concurrent queries fit comfortably in the 8 GiB dev heap; if
     // the driver launches this JVM smaller, scale the pool down rather
     // than risk trading the r8 empty-artifact failure for an OOM one
     val heapGib = Runtime.getRuntime.maxMemory().toDouble / (1L << 30)
-    val defaultWorkers = if (heapGib >= 6.0) 8 else if (heapGib >= 3.0) 4 else 2
-    val workers = sys.env.getOrElse("SPARK_GRAFT_VERIFY_THREADS",
-      defaultWorkers.toString).toInt
+    val workers = if (heapGib >= 6.0) 8 else if (heapGib >= 3.0) 4 else 2
     val pool = Executors.newFixedThreadPool(workers)
     val done = new AtomicInteger(0)
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -118,7 +87,7 @@ object Verify {
     val schemaJson = {
       import scala.jdk.CollectionConverters._
       schemas.asScala.toSeq.sortBy(_._1).map { case (k, cols) =>
-        s"${q(k)}: ${cols.map(q).mkString("[", ",", "]")}"
+        s"${json(k)}: ${cols.map(json).mkString("[", ",", "]")}"
       }.mkString("{", ",", "}")
     }
     Files.writeString(Paths.get(s"$outDir/schemas.json"), schemaJson)
@@ -128,10 +97,24 @@ object Verify {
     // that did land is still a usable artifact for the driver).
     Files.writeString(Paths.get(s"$outDir/_verify_summary.json"),
       s"""{"total": ${ordered.size}, "ok": ${ordered.size - failed.size},""" +
-        s""" "failed": ${failed.map(q).mkString("[", ",", "]")}}""")
+        s""" "failed": ${failed.map(json).mkString("[", ",", "]")}}""")
     System.err.println(s"[verify] SUMMARY: ${ordered.size - failed.size}/" +
       s"${ordered.size} ok" +
       (if (failed.nonEmpty) s", FAILED: ${failed.mkString(", ")}" else ""))
     spark.stop()
+  }
+
+  /** Oracle SQL for the selected queries PLUS every query dump already
+    * present in `outDir`: two prefix runs into the same outDir would
+    * otherwise leave the first run's parquet with no SQL entry, silently
+    * downgrading its check to rows-only, while SQL for queries never
+    * dumped would turn every prefix run into a wall of NO-OUTPUT. The
+    * dump dirs are the source of truth (each is a registry name by
+    * construction).
+    */
+  private[graft] def oracleSql(selected: Set[String], outDir: String): Map[String, String] = {
+    val dumped = Option(new java.io.File(outDir).listFiles()).getOrElse(Array.empty)
+      .filter(_.isDirectory).map(_.getName).toSet
+    SparkEntry.oracleSql.filter { case (k, _) => selected(k) || dumped(k) }
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** Cluster-wide registration of the custom expressions via
   * `--conf spark.sql.extensions=graft.functions.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`), so
+  * a session builder's `withExtensions(new GraftExtensions)`), so
   * SQL users get `cosine_sim`, `minhash_sig`, `simhash64`, ... without
   * per-session registration calls.
   */

@@ -33,37 +33,14 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  = load(s, d, "lineitem")
-  /** `events.ts` has shipped in two physical forms across fixture
-    * generations: INT64 TIMESTAMP(NANOS) (which Spark rejects outright,
-    * [PARQUET_TYPE_ILLEGAL] — read nanos as long via the legacy conf
-    * and truncate to micros, matching DuckDB's epoch_us) and plain
-    * timestamp[us] (read as TIMESTAMP_NTZ — cast to TimestampType,
-    * exact under the session's UTC zone). Both land on the same
-    * microsecond TimestampType column.
-    *
-    * DELIBERATE session-wide side effect: `nanosAsLong` stays set for
-    * the session's lifetime (the scan is lazy — the conf must hold at
-    * ACTION time, so a set-restore scope would break every deferred
-    * plan). Consequence: any OTHER parquet with a TIMESTAMP(NANOS)
-    * column read after this loader yields LongType instead of the
-    * loud PARQUET_TYPE_ILLEGAL. Acceptable here because every fixture
-    * read goes through this object; a general-purpose deployment
-    * should scope event reads to their own session.
+  /** `events.ts` is INT64 TIMESTAMP(MICROS, isAdjustedToUTC=false) in
+    * every fixture (FIXTURES.md §B), which Spark reads as TIMESTAMP_NTZ;
+    * the cast to TimestampType is exact under the session's UTC zone. A
+    * TIMESTAMP(NANOS) file fails loudly with Spark's own
+    * PARQUET_TYPE_ILLEGAL.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = load(s, d, "events")
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        // `ts div 1000`, NOT `ts / 1000`: Spark's `/` on longs is a
-        // DOUBLE division whose round-to-nearest can land one micro
-        // high (and, a hair below a second boundary, one SECOND high
-        // after unix_timestamp) — `div` truncates exactly like epoch_us
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _ =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-    }
-  }
+  def events(s: SparkSession, d: String): DataFrame =
+    load(s, d, "events").withColumn("ts", col("ts").cast("timestamp"))
   def documents(s: SparkSession, d: String): DataFrame = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 

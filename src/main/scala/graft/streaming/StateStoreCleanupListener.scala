@@ -59,7 +59,7 @@ object StateStoreCleanupListener {
     })
 
   /** Deregister (test hermeticity; production sessions keep it). */
-  def uninstall(spark: SparkSession): Unit = {
+  private[graft] def uninstall(spark: SparkSession): Unit = {
     val l = installed.remove(spark)
     if (l != null) spark.streams.removeListener(l)
   }

@@ -33,9 +33,9 @@ object StreamJoins {
     * price of a correct "never matched" proof; state stays bounded the
     * same way as the inner form.
     */
-  def intervalJoinLeftOuter(left: DataFrame, right: DataFrame,
-                            key: String, tsCol: String,
-                            watermarkDelay: String, within: String): DataFrame =
+  private[graft] def intervalJoinLeftOuter(left: DataFrame, right: DataFrame,
+                                          key: String, tsCol: String,
+                                          watermarkDelay: String, within: String): DataFrame =
     joinWithType(left, right, key, tsCol, watermarkDelay, within, "left_outer")
 
   private def joinWithType(left: DataFrame, right: DataFrame,

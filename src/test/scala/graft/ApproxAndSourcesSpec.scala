@@ -11,6 +11,15 @@ import graft.sources.Tables
 class ApproxAndSourcesSpec extends SparkSpec {
   import spark.implicits._
 
+  test("Tables.events reads the micros timestamp as TimestampType without a session-wide conf") {
+    val conf = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(conf)
+    val ev = Tables.events(spark, sf001)
+    assert(ev.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+    assert(ev.filter(col("ts").isNotNull).count() == ev.count())
+    assert(spark.conf.get(conf) == "false", s"$conf was set by the events loader")
+  }
+
   test("approx_count_distinct within 5% of exact on fixture events") {
     val ev = Tables.events(spark, sf001)
     val r = ev.agg(

@@ -18,10 +18,12 @@ import scala.jdk.CollectionConverters._
   *      money, so a DECIMAL output is always an accident of SQL-string
   *      literal typing, never intended.
   *
-  * Regenerate after an INTENDED schema change (Verify records a schema
-  * only after the query's parquet dump SUCCEEDS, and the `failed` check
-  * below refuses a partial run, so the baseline can never bake in an
-  * entry with no verified output behind it):
+  * Regenerate after an INTENDED schema change, from a full Verify run
+  * (no name prefixes: a prefix run's schemas.json holds only the queries
+  * it dumped) into an empty outDir. Verify records a schema only after
+  * the query's parquet dump SUCCEEDS, and the `failed` check below
+  * refuses a partial run, so the baseline can never bake in an entry
+  * with no verified output behind it:
   * {{{
   *   tools/run.sh graft.Verify /root/testdata/sf0.001 /tmp/v
   *   python3 -c "import json,sys; s=json.load(open('/tmp/v/_verify_summary.json')); sys.exit(1 if s['failed'] else 0)"

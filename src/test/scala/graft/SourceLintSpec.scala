@@ -159,6 +159,15 @@ class SourceLintSpec extends AnyFunSuite {
           (2, "AsOfJoinPhysical.ensureStrategy reads and appends extraStrategies: it installs AsOfJoinStrategy on demand, in the session of the query that uses it")))
   }
 
+  test("SparkSession.builder is confined to the Harness session policy") {
+    // every artifact main gets its session from Harness.session (core
+    // count, shuffle partitions, UTC, UI off, log level); a main that
+    // builds its own would fork that policy again
+    check("SparkSession.builder", """SparkSession\.builder""".r, Map(
+      "src/main/scala/graft/Harness.scala" ->
+        (1, "Harness.session: the one session policy of the artifact mains")))
+  }
+
   test("udf( is confined to the streaming image dHash") {
     check("udf(", """(?<![\w.])udf\(""".r, Map(
       "src/main/scala/graft/streaming/StreamingDedup.scala" ->
