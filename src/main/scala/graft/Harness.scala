@@ -6,7 +6,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 
 /** What every artifact main (Bench, Verify, Recall, StreamBench,
-  * StreamEquiv, ScaleUp, Explain) shares: the session policy, the JSON
+  * ScaleUp, Explain) shares: the session policy, the JSON
   * format of the artifacts, name-prefix selection, and the final
   * best-effort artifact write.
   */

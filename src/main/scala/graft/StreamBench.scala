@@ -68,6 +68,8 @@ object StreamBench {
       * deadline — a huge first batch must not zero the measurement),
       * minimum `runSecs`; return (avg, peak) steady-state
       * processedRowsPerSecond with the first third dropped as warmup.
+      * Throws when no steady trigger processed rows: a zero there
+      * measures a run too short for the shape, not the shape.
       */
     def measure(df: DataFrame, outputMode: String): (Double, Double, Double) = {
       val q = df.writeStream
@@ -102,6 +104,9 @@ object StreamBench {
       val steadyP = progress.drop(progress.length / 3)
       val steady = steadyP
         .map(_.processedRowsPerSecond).filter(d => !d.isNaN && d > 0)
+      if (steady.isEmpty)
+        throw new IllegalStateException(s"no steady trigger processed rows: " +
+          s"${progress.length} triggers, ${steadyP.length} after the warm-up third")
       // OUTPUT rows/s: join shapes do more row-work than their input
       // rate shows (match multiplicity), and append-mode aggs emit in
       // BURSTS (a window closes in one trigger, the rest emit zero) —
@@ -117,9 +122,7 @@ object StreamBench {
       val outRate =
         if (outPairs.isEmpty || outPairs.map(_._2).sum == 0) 0.0
         else outPairs.map(_._1).sum.toDouble * 1000.0 / outPairs.map(_._2).sum
-      (if (steady.nonEmpty) steady.sum / steady.length else 0.0,
-        if (steady.nonEmpty) steady.max else 0.0,
-        outRate)
+      (steady.sum / steady.length, steady.max, outRate)
     }
 
     // offered rates sit above each shape's measured ceiling (agg

@@ -25,7 +25,7 @@ object HashFunctions {
     * `when` predicate on a NULL array falls to otherwise's array(),
     * where the null-safe custom expression returns NULL.
     */
-  def wordShinglesHof(tokens: Column, n: Int): Column =
+  private[graft] def wordShinglesHof(tokens: Column, n: Int): Column =
     when(tokens.isNull, lit(null))
       .when(size(tokens) >= n,
         transform(sequence(lit(0), size(tokens) - n),

@@ -125,10 +125,4 @@ object TextFunctions {
     * DuckDB md5() agrees byte-for-byte).
     */
   def fingerprintMd5(text: Column): Column = md5(normalizeText(text))
-
-  /** Rolling-hash fingerprint (Karp-Rabin polynomial over the normalized
-    * text) via the custom codegen expression [[PolyHash64]].
-    */
-  def fingerprintRolling(text: Column): Column =
-    GraftFunctions.polyhash64(normalizeText(text))
 }

@@ -23,7 +23,7 @@ import graft.functions.{GraftFunctions, HashFunctions, TextFunctions}
   * and dropping a degenerate chunk bucket would silently break it —
   * identical-content floods form TRUE duplicate pairs, and the
   * structural fix is the exact/fingerprint pass UPSTREAM, not a
-  * recall hole here (same reasoning as saltedJoin's unique-id salt).
+  * recall hole here.
   */
 object Dedup {
 

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.awt.RenderingHints
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
@@ -523,56 +522,6 @@ object Multimodal {
       }
       .toDF()
       .orderBy("doc_id", "frame_no")
-  }
-
-  /** A resized media payload: PNG-encoded pixels for decoded images,
-    * raw resampled bytes otherwise.
-    */
-  case class ResizedMedia(media_id: Long, kind: String, target_w: Int,
-                          target_h: Int, resized: Array[Byte])
-
-  /** Resize. Decodable images get a REAL bilinear resample
-    * (Graphics2D) re-encoded as PNG; other payloads get a
-    * deterministic nearest-neighbor byte downsample to targetW×targetH
-    * "pixels". mapPartitions batching, schema, and binary-column
-    * plumbing are the production contract (same shape as
-    * [[extractFeatures]]).
-    */
-  def resize(media: Dataset[MediaRecord], targetW: Int,
-             targetH: Int): Dataset[ResizedMedia] = {
-    import media.sparkSession.implicits._
-    media.mapPartitions { it =>
-      it.map { rec =>
-        val bytes = tryDecodeImage(rec.payload) match {
-          case Some(img) =>
-            val scaled = new BufferedImage(targetW, targetH,
-              BufferedImage.TYPE_INT_RGB)
-            val g = scaled.createGraphics()
-            try {
-              g.setRenderingHint(RenderingHints.KEY_INTERPOLATION,
-                RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g.drawImage(img, 0, 0, targetW, targetH, null)
-            } finally g.dispose()
-            val baos = new ByteArrayOutputStream()
-            ImageIO.write(scaled, "png", baos)
-            baos.toByteArray
-          case None =>
-            val n = targetW * targetH
-            val out = new Array[Byte](n)
-            // empty payloads resize to all-zero pixels (no bytes to sample)
-            if (rec.payload.nonEmpty) {
-              val len = rec.payload.length
-              var i = 0
-              while (i < n) {
-                out(i) = rec.payload((i.toLong * len / n).toInt % len)
-                i += 1
-              }
-            }
-            out
-        }
-        ResizedMedia(rec.media_id, rec.kind, targetW, targetH, bytes)
-      }
-    }
   }
 
   /** Per-kind integer statistics over the decoded media — the

@@ -3,13 +3,13 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** Cluster-scale join patterns: salted joins (hot-key skew dilution)
-  * and the distributed rank / prefix-sum primitives — plan/storage
-  * techniques rather than new operators, plan-asserted in ScaleOpsSpec.
-  * Co-located bucketed joins (`df.write.bucketBy(n, k).sortBy(k)`: the
-  * shuffle is paid once at write time) and Hive-style partitioned
-  * layouts (`df.write.partitionBy(c)`: static and dynamic partition
-  * pruning at file-listing time) need no wrapper; ScaleOpsSpec asserts
+/** Cluster-scale primitives: the distributed rank, prefix-sum and
+  * forward-fill family — plan techniques rather than new operators,
+  * plan-asserted in ScaleOpsSpec. Co-located bucketed joins
+  * (`df.write.bucketBy(n, k).sortBy(k)`: the shuffle is paid once at
+  * write time) and Hive-style partitioned layouts
+  * (`df.write.partitionBy(c)`: static and dynamic partition pruning at
+  * file-listing time) need no wrapper; ScaleOpsSpec asserts
   * their no-exchange and PartitionFilters/DPP plans on Spark's writers.
   */
 object ScaleOps {
@@ -86,78 +86,6 @@ object ScaleOps {
       })
     out
   }
-
-  /** Inner equi-join with the big side's hot keys diluted over `salt`
-    * sub-keys: the big side gets a per-row salt, the small side is
-    * replicated `salt` times, and the join key becomes (key, salt) — a
-    * single hot key now lands on `salt` reducers instead of one.
-    * Semantically identical to `big.join(small, key)` (inner) in BOTH
-    * modes (the small side carries every salt value, so a big row
-    * matches the same small rows whatever its salt); use when AQE skew
-    * splitting isn't enough (e.g. one key is most of the input).
-    *
-    * Salt derivation, in order of preference:
-    *   - `uniqueCol = Some(id)` (use whenever the table HAS a unique
-    *     id — doc_id, event_id, offset…): salt from xxhash64 of that
-    *     column alone — fully DETERMINATE map outputs (retry/
-    *     reshuffle-stable) AND spam-proof (content-identical rows
-    *     carry distinct ids, so 100%-duplicate floods under one key
-    *     still fan out over all `salt` reducers). This is the
-    *     production setting; the two below exist for tables with no
-    *     row identity.
-    *   - default: xxhash64 over the row content — determinate, but
-    *     rows identical in EVERY column share a salt, so exact-
-    *     duplicate spam under one key still lands on one reducer (the
-    *     exact/fingerprint dedup pass upstream is the structural fix).
-    *   - `acceptIndeterminateSalt = true`: salt from
-    *     `monotonically_increasing_id()` — duplicates fan out evenly,
-    *     but the salt depends on row order, so the map output is
-    *     INDETERMINATE under stage retry (Spark correctly reruns the
-    *     WHOLE stage for indeterminate outputs — a real cost at
-    *     100 TB; the joined RESULT is unchanged either way). The
-    *     parameter name is the warning label: any determinate
-    *     spam-proof salt needs an ordering over identical rows, which
-    *     is exactly what a unique id column provides — there is no
-    *     third option, so reach for this ONLY when the table truly
-    *     has no row identity, and say so in the calling code.
-    */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-                 salt: Int, acceptIndeterminateSalt: Boolean = false,
-                 uniqueCol: Option[String] = None): DataFrame = {
-    require(salt > 0, "salt must be positive")
-    require(!(acceptIndeterminateSalt && uniqueCol.isDefined),
-      "a table with a unique id never needs the indeterminate salt — drop the flag")
-    val saltExpr = uniqueCol match {
-      case Some(u) => pmod(xxhash64(col(u)), lit(salt)).cast("int")
-      case None if acceptIndeterminateSalt =>
-        pmod(monotonically_increasing_id(), lit(salt)).cast("int")
-      case None =>
-        pmod(xxhash64(big.columns.map(col).toIndexedSeq: _*), lit(salt)).cast("int")
-    }
-    val saltedBig = big.withColumn("__salt", saltExpr)
-    val replicatedSmall = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(salt - 1))))
-    saltedBig.join(replicatedSmall, Seq(key, "__salt")).drop("__salt")
-  }
-
-  /** Small-files compaction: rewrite a (typically many-small-files)
-    * table into ~`targetFileBytes` outputs, sized from Catalyst's own
-    * statistics (`optimizedPlan.stats.sizeInBytes` — file-size sum for
-    * a parquet relation, no extra scan). The chronic 100 TB operational
-    * problem: a streaming sink or over-parallel job leaves thousands
-    * of KB-files per partition and every downstream scan pays
-    * per-file open/footer cost; periodic compaction is the fix.
-    * Round-robin repartition (not coalesce: coalesce would narrow the
-    * write parallelism AND inherit upstream skew).
-    */
-  def compactionPartitions(df: DataFrame, targetFileBytes: Long): Int = {
-    require(targetFileBytes > 0, "targetFileBytes must be positive")
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes // BigInt
-    ((bytes + targetFileBytes - 1) / targetFileBytes).max(BigInt(1)).toInt
-  }
-
-  def compact(df: DataFrame, targetFileBytes: Long): DataFrame =
-    df.repartition(compactionPartitions(df, targetFileBytes))
 
   /** Global dense row-numbering WITHOUT a single-partition window — the
     * reusable primitive the statistics queries reach for instead of
@@ -357,13 +285,12 @@ object ScaleOps {
     * [[distributedRank]]'s zipWithIndex): the offset job and the
     * output job assume they read the SAME shuffled rows. Normally the
     * shuffle files are reused, but if map partitions are RECOMPUTED
-    * (executor loss) over a nondeterminate upstream — sampling,
-    * [[saltedJoin]]'s `acceptIndeterminateSalt` mode, round-robin
+    * (executor loss) over a nondeterminate upstream — sampling, a
+    * `monotonically_increasing_id()` column, round-robin
     * `repartition(n)` — the second pass can see different rows than
     * the offsets were computed from, silently corrupting the seeded
     * sums/carries. For a nondeterminate input, `localCheckpoint` it
-    * first so both passes read the materialized frame (the same rule
-    * saltedJoin documents for its indeterminate mode).
+    * first so both passes read the materialized frame.
     */
   def distributedCumSum(df: DataFrame, orderCols: Seq[Column],
                         valueCol: String, cumCol: String = "cum",
@@ -561,23 +488,5 @@ object ScaleOps {
       }
     }
     df.sparkSession.createDataFrame(rdd, schema)
-  }
-
-  /** Z-order layout: range-partition + sort the table by the Morton
-    * interleave of two integer dimensions, so parquet row-group min/max
-    * statistics prune scans filtered on EITHER dimension (a linear sort
-    * clusters only its leading column; the space-filling curve gives
-    * both columns locality). Write the result with `.write` and
-    * point-lookups/range scans on (x) or (y) skip most row groups —
-    * the single-table analogue of what bucketing does for joins.
-    */
-  def zorderLayout(df: DataFrame, xCol: String, yCol: String,
-                   partitions: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df.withColumn("__z", graft.functions.GraftFunctions.zorder64(
-        col(xCol).cast("long"), col(yCol).cast("long")))
-      .repartitionByRange(partitions, col("__z"))
-      .sortWithinPartitions(col("__z"))
-      .drop("__z")
   }
 }

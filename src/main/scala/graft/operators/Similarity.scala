@@ -114,7 +114,7 @@ object Similarity {
 
   /** IVF probe/rerank against an explicit (cell_id, centroid) table —
     * shared by the oracle-expressible first-N variant ([[ivfTopK]]) and
-    * the k-means variant ([[ivfTopKKmeans]]).
+    * the sampled-k-means variant ([[ivfTopKTrained]]).
     */
   private def ivfWithCentroids(embeddings: DataFrame, queries: DataFrame,
                                k: Int, nProbe: Int,
@@ -149,53 +149,6 @@ object Similarity {
           .orderBy(col("cos").desc, col("neighbor_id").asc)))
       .filter(col("rank") <= k)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
-  }
-
-  /** Deterministic seeded k-means (Lloyd) centroids, expressed as
-    * DataFrame aggregations so it distributes: assignment is a broadcast
-    * cross-join + rank-1 window; the mean is a per-(cell, dim) partial
-    * aggregation. Only the `cells`×`dim` centroid matrix ever reaches
-    * the driver (same footprint as a broadcast). Init is a
-    * hash-stratified sample (smallest xxhash64(seed, vec_id)) —
-    * deterministic and independent of row order.
-    */
-  private[graft] def kmeansCentroids(spark: SparkSession, embeddings: DataFrame,
-                                     cells: Int, iters: Int,
-                                     seed: Long): Seq[(Int, Seq[Float])] = {
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    var cents: Seq[(Int, Seq[Float])] = embeddings
-      .orderBy(xxhash64(lit(seed), col("vec_id")), col("vec_id"))
-      .limit(cells)
-      .select(col("embedding"))
-      .collect()
-      .toSeq
-      .zipWithIndex
-      .map { case (r, i) => (i, r.getSeq[Float](0)) }
-    for (_ <- 0 until iters) {
-      val centDf = cents.map { case (i, v) => (i, v.toArray) }
-        .toDF("cell_id", "centroid")
-      val w = Window.partitionBy(col("vec_id"))
-        .orderBy(col("cdist").desc, col("cell_id").asc)
-      val assigned = embeddings.select(col("vec_id"), col("embedding"))
-        .crossJoin(broadcast(centDf))
-        .select(col("vec_id"), col("embedding"), col("cell_id"),
-          cos(col("embedding"), col("centroid")).as("cdist"))
-        .withColumn("crank", row_number().over(w))
-        .filter(col("crank") === 1)
-      val means = assigned
-        .select(col("cell_id"), posexplode(col("embedding")))
-        .groupBy(col("cell_id"), col("pos"))
-        .agg(avg(col("col").cast("double")).as("m"))
-        .collect()
-        .groupBy(_.getAs[Int]("cell_id"))
-        .view.mapValues(rows =>
-          rows.sortBy(_.getAs[Int]("pos")).map(_.getAs[Double]("m").toFloat).toSeq)
-        .toMap
-      // empty cells keep their previous centroid
-      cents = cents.map { case (i, old) => (i, means.getOrElse(i, old)) }
-    }
-    cents
   }
 
   /** Deterministic k-means (Lloyd) over a BOUNDED sorted sample,
@@ -268,22 +221,6 @@ object Similarity {
     import spark.implicits._
     val cents = sampledKmeansCentroids(spark, embeddings, cells, iters, sampleN)
     val centroids = cents.toDF("cell_id", "centroid")
-    ivfWithCentroids(embeddings, queries, k, nProbe, centroids)
-  }
-
-  /** IVF top-k with k-means-trained centroids — the recall-quality
-    * variant of [[ivfTopK]] (whose first-N-by-id centroids are the
-    * oracle-expressible stand-in). At scale the centroid training is a
-    * one-off job whose output is persisted and reused across queries.
-    */
-  def ivfTopKKmeans(spark: SparkSession, embeddings: DataFrame,
-                    queries: DataFrame, k: Int, cells: Int = 16,
-                    nProbe: Int = 4, iters: Int = 3,
-                    seed: Long = 7L): DataFrame = {
-    import spark.implicits._
-    val cents = kmeansCentroids(spark, embeddings, cells, iters, seed)
-    val centroids = cents.map { case (i, v) => (i, v.toArray) }
-      .toDF("cell_id", "centroid")
     ivfWithCentroids(embeddings, queries, k, nProbe, centroids)
   }
 
@@ -793,8 +730,8 @@ object Similarity {
     * pass (count + per-dim sums + upper-tri Gram) then local cyclic
     * Jacobi — the orthodox route for d ≤ a few hundred.
     */
-  def pcaModel(spark: SparkSession, embeddings: DataFrame,
-               dim: Int = 64): PcaModel = {
+  private[graft] def pcaModel(spark: SparkSession, embeddings: DataFrame,
+                              dim: Int = 64): PcaModel = {
     val (mean, cov) = covarianceMoments(spark, embeddings, dim)
     val (vals, vecs) = jacobiEigen(cov)
     PcaModel(mean, vals, vecs)
@@ -831,7 +768,8 @@ object Similarity {
     * sorted descending with matching unit eigenvectors (sign fixed:
     * largest-|component| positive, for determinism).
     */
-  def jacobiEigen(aIn: Array[Array[Double]]): (Array[Double], Array[Array[Double]]) = {
+  private[graft] def jacobiEigen(
+      aIn: Array[Array[Double]]): (Array[Double], Array[Array[Double]]) = {
     val d = aIn.length
     val a = aIn.map(_.clone())
     val v = Array.tabulate(d, d)((i, j) => if (i == j) 1.0 else 0.0)

@@ -35,17 +35,6 @@ object TextAnalysis {
       TextFunctions.langScore(col("text"), "es").as("score_es"),
       TextFunctions.langPredict(col("text")).as("lang_pred"))
 
-  /** Content fingerprints: md5 (oracle-matchable) + Karp-Rabin rolling
-    * hash (custom codegen expression).
-    */
-  def fingerprints(spark: SparkSession, documents: DataFrame): DataFrame = {
-    GraftFunctions.register(spark)
-    documents.select(
-      col("doc_id"),
-      TextFunctions.fingerprintMd5(col("text")).as("fp_md5"),
-      TextFunctions.fingerprintRolling(col("text")).as("fp_rolling"))
-  }
-
   /** Benchmark decontamination: corpus documents sharing any word
     * n-gram with the benchmark/test set, with the count of distinct
     * overlapping n-grams. The benchmark side is tiny (a test set), so

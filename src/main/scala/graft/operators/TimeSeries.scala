@@ -166,8 +166,8 @@ object TimeSeries {
     * memory-unbounded aggregate. The histogram sketch is bounded by
     * (types × range/width) counters, partial-aggregated map-side and
     * merged by vector add; every estimate is within `width` of the
-    * exact order statistic ([[madAnomalyExact]] is the spec-only
-    * twin that proves it at test SF). All arithmetic — floor(v/w)
+    * exact order statistic (the package-private exact twin,
+    * `madAnomalyExact`, proves it at test SF). All arithmetic — floor(v/w)
     * binning, (bin+1)·w edges, the 3·MAD comparison — is the same
     * IEEE double math in DuckDB, so the oracle matches bit-for-bit.
     *
@@ -198,7 +198,7 @@ object TimeSeries {
     * [[madAnomaly]]); kept as the fixture-scale accuracy baseline
     * the sketch is asserted against (estimates within `width`).
     */
-  def madAnomalyExact(events: DataFrame): DataFrame = {
+  private[graft] def madAnomalyExact(events: DataFrame): DataFrame = {
     val ev = events.filter(col("value").isNotNull)
       .select(col("event_type"), col("value"))
     val med = ev.groupBy("event_type")

@@ -17,8 +17,7 @@ object StatsQueriesA {
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
-    // Document fingerprints (md5, oracle-backed; the rolling-hash twin
-    // is covered by TextAnalysisSpec).
+    // Document fingerprints: md5 over normalized text, oracle-backed.
     "q25_text_fingerprint" -> ((s, dir) => {
       Tables.documents(s, dir)
         .select(col("doc_id"),
@@ -159,8 +158,8 @@ object StatsQueriesA {
 
     // Morton z-order clustering key over (user_id, event-minute): the
     // data-layout primitive behind 2-D scan pruning — sorting by z
-    // gives BOTH dimensions row-group locality (ScaleOps.zorderLayout
-    // is the write path; this query verifies the key itself).
+    // gives BOTH dimensions row-group locality (a range-partition and
+    // sort on it is the write path; this query verifies the key itself).
     "q53_zorder_key" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       Tables.events(s, dir)

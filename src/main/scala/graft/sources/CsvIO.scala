@@ -1,12 +1,12 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** CSV ingestion — the interchange format corpora arrive in before
   * they become parquet. Same contract as [[JsonIO]]: explicit schema
-  * (inference is an extra full pass), deliberate malformed-record
-  * policy, observable failure rate.
+  * (inference is an extra full pass) and a deliberate malformed-record
+  * policy.
   *
   * CSV-specific traps the options below pin down:
   *  - Spark's default escape is backslash, not RFC 4180's doubled
@@ -37,18 +37,5 @@ object CsvIO {
       .option("escape", "\"")
       .option("multiLine", multiLine.toString)
       .option("mode", mode)
-      .csv(path)
-
-  /** PERMISSIVE read that also surfaces each malformed raw line in
-    * `_corrupt_record` — the observable-failure-rate form.
-    */
-  def readCsvWithCorrupt(spark: SparkSession, path: String,
-                         schema: StructType): DataFrame =
-    spark.read
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("header", "true")
-      .option("escape", "\"")
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
       .csv(path)
 }

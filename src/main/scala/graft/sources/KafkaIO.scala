@@ -74,8 +74,8 @@ object KafkaIO {
     *  - DROPMALFORMED: malformed frames are silently dropped.
     *  - PERMISSIVE: malformed frames yield a NULL `decoded` struct and
     *    the raw frame bytes in `_corrupt_record` (NULL for good rows)
-    *    — the observable-failure-rate form, same shape as
-    *    [[CsvIO.readCsvWithCorrupt]].
+    *    — the observable-failure-rate form, the same shape as Spark's
+    *    own `columnNameOfCorruptRecord` for text sources.
     *
     * Input: any DataFrame (batch or streaming) with a binary `value`
     * column; other columns pass through. A non-empty

@@ -64,7 +64,7 @@ object FunnelStream {
   }
 
   /** events(user_id, event_type, ts) -> stream of stage advances. */
-  def advances(events: DataFrame, stages: Seq[String]): Dataset[Advance] = {
+  private[graft] def advances(events: DataFrame, stages: Seq[String]): Dataset[Advance] = {
     val spark = events.sparkSession
     import spark.implicits._
     events.select(col("user_id").cast("long").as("user_id"),

@@ -25,7 +25,7 @@ import org.apache.spark.sql.DataFrame
   * EOS config), rebuilt on a plain filesystem.
   *
   * At scale, per-epoch directories are also the natural compaction
-  * unit: ScaleOps.compact can fold cold epochs into larger files
+  * unit: a periodic rewrite can fold cold epochs into larger files
   * without touching the live one.
   */
 object IdempotentSink {
@@ -52,8 +52,10 @@ object IdempotentSink {
     }
   }
 
-  /** Read back the committed union (directories with a marker only). */
-  def readCommitted(spark: org.apache.spark.sql.SparkSession,
+  /** Read back the committed union (directories with a marker only):
+    * the reader half of the sink protocol.
+    */
+  private[graft] def readCommitted(spark: org.apache.spark.sql.SparkSession,
                     out: String): DataFrame = {
     val root = new Path(out)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -66,7 +66,8 @@ object PriceAlertsStream {
     * last-write-wins per key. Update-mode output is the current
     * snapshot's changed rows — the KTable semantics.
     */
-  def latestPerKeyUpdate(changelog: DataFrame, keyCol: String, tsCol: String): DataFrame =
+  private[graft] def latestPerKeyUpdate(changelog: DataFrame, keyCol: String,
+                                        tsCol: String): DataFrame =
     changelog
       .groupBy(col(keyCol))
       // equal timestamps tie-break on the full row (lexicographic

@@ -31,7 +31,7 @@ import org.apache.spark.sql.streaming.ValueState
   * way). Inner semantics: unmatched purchases emit nothing, mirroring
   * q180's default. Alarm-for-alarm equality with the batch operator —
   * including kill/resume under RocksDB — is spec'd
-  * (StreamingAsofSpec) and shipped as STREAMEQUIV shape 9.
+  * (StreamingAsofSpec).
   */
 object StreamingAsof {
 

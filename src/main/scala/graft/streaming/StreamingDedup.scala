@@ -35,33 +35,15 @@ object StreamingDedup {
       docStream.withColumn("fp", TextFunctions.fingerprintMd5(col("text"))),
       tsCol, delay, "fp")
 
-  /** Near-dup streaming dedup on the 64-bit simhash: documents whose
-    * token-level simhash collides exactly (hamming 0 — reorderings,
-    * token-multiplicity noise) are dropped within the watermark
-    * horizon. State keys on one long per doc. The full hamming≤3
-    * neighborhood needs the batch pass (Dedup.simhashPairs) — a
-    * streaming k-NN over sliding state is deliberately out of scope;
-    * this is the standard cheap ingest-time guard in front of it.
-    */
-  def bySimhash(docStream: DataFrame, tsCol: String, delay: String): DataFrame = {
-    GraftFunctions.register(docStream.sparkSession)
-    exact(
-      docStream.withColumn("sh",
-        GraftFunctions.simhash64(TextFunctions.wsTokens(col("text")))),
-      tsCol, delay, "sh")
-  }
-
   /** Ingest-time IMAGE near-dup guard: decode each binary `payload`,
     * drop records whose decoded-domain dHash
     * ([[graft.operators.Multimodal.dHash64]]) collides exactly within
-    * the watermark horizon — the image sibling of [[bySimhash]] (state
-    * keys on one long per image). Non-decodable payloads pass through
-    * untouched (a corrupt image must not dedup against every other
-    * corrupt image via a shared null key). The full hamming ≤ k image
-    * neighborhood is the batch pass (q117,
-    * `Multimodal.perceptualNearDupPairs`) — same division of labor as
-    * [[bySimhash]] vs the batch q18. The decode sits in a Scala UDF:
-    * this is the sanctioned codec seam (same rationale as the batch
+    * the watermark horizon (state keys on one long per image).
+    * Non-decodable payloads pass through untouched (a corrupt image
+    * must not dedup against every other corrupt image via a shared
+    * null key). The full hamming ≤ k image neighborhood is the batch
+    * pass (q117, `Multimodal.perceptualNearDupPairs`). The decode sits
+    * in a Scala UDF: this is the sanctioned codec seam (same rationale as the batch
     * side's mapPartitions — no expression can wrap ImageIO), and the
     * hash is one long per row on the wire.
     */

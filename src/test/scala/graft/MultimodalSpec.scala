@@ -31,18 +31,6 @@ class MultimodalSpec extends SparkSpec {
     assert(frames.map(_.media_id).toSet.subsetOf(videoIds))
   }
 
-  test("resize: fixed-size output, deterministic, plumbing stays distributed") {
-    val media = Multimodal.syntheticMedia(spark,
-      Tables.documents(spark, sf001).limit(20))
-    val out = Multimodal.resize(media, 8, 4).collect()
-    assert(out.length == 20)
-    assert(out.forall(_.resized.length == 32), "every payload resized to 8x4")
-    val again = Multimodal.resize(media, 8, 4).collect()
-    assert(out.map(r => (r.media_id, r.resized.toSeq)).sortBy(_._1).toSeq ==
-      again.map(r => (r.media_id, r.resized.toSeq)).sortBy(_._1).toSeq,
-      "fallback resampler is deterministic")
-  }
-
   // ---- real ImageIO codec -------------------------------------------------
 
   import java.awt.image.BufferedImage
@@ -220,20 +208,6 @@ class MultimodalSpec extends SparkSpec {
       (2L, 0L, 64L, 64L * 'x'.toLong),
       (2L, 2L, 22L, 22L * 'z'.toLong)),
       s"got ${out.toSeq}")
-  }
-
-  test("golden image: real resize re-encodes a decodable PNG at target dimensions") {
-    import spark.implicits._
-    val rgb = (10 << 16) | (20 << 8) | 30
-    val png = solidImage(8, 8, rgb, "png")
-    val media = Seq(
-      Multimodal.MediaRecord(1L, "image", png, png.length.toLong)).toDS()
-    val out = Multimodal.resize(media, 4, 2).collect().head
-    val back = ImageIO.read(new java.io.ByteArrayInputStream(out.resized))
-    assert(back != null, "resized payload must be a decodable PNG")
-    assert(back.getWidth == 4 && back.getHeight == 2)
-    // bilinear resample of a solid color is the same solid color
-    assert((back.getRGB(0, 0) & 0xffffff) == rgb)
   }
 
   test("image dedup survivors (q132 shape): exactly one survivor per cluster, largest payload wins") {

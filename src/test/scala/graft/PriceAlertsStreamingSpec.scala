@@ -490,20 +490,27 @@ class PriceAlertsStreamingSpec extends SparkSpec {
   }
 
   test("streaming simhash dedup: token-reordered near-dup dropped, distinct kept") {
-    val in = MemoryStream[Doc]
-    val deduped = graft.streaming.StreamingDedup.bySimhash(
-      in.toDF(), "ts", "10 minutes")
-    val out = runQuery(deduped, "append", "simdedup_out") { q =>
-      in.addData(
-        Doc(1L, "the quick brown fox jumps high", Timestamp.valueOf("2024-01-01 00:00:01")),
-        // same token multiset, different order -> identical simhash
-        Doc(2L, "jumps high the quick brown fox", Timestamp.valueOf("2024-01-01 00:00:02")),
-        Doc(3L, "completely unrelated content here", Timestamp.valueOf("2024-01-01 00:00:03")))
-      q.processAllAvailable()
+    withRocksDb {
+      val in = MemoryStream[Doc]
+      // hamming 0: only an exact simhash collision counts as a duplicate
+      val deduped = graft.streaming.StreamingDedup.bySimhashNearDup(
+        in.toDF(), "ts", "10 minutes", maxHamming = 0)
+      val out = runQuery(deduped, "append", "simdedup_out") { q =>
+        in.addData(
+          Doc(1L, "the quick brown fox jumps high", Timestamp.valueOf("2024-01-01 00:00:01")),
+          // same token multiset, different order -> identical simhash
+          Doc(2L, "jumps high the quick brown fox", Timestamp.valueOf("2024-01-01 00:00:02")),
+          Doc(3L, "completely unrelated content here", Timestamp.valueOf("2024-01-01 00:00:03")))
+        q.processAllAvailable()
+        // move the watermark past the reconciliation window so the
+        // per-doc verdicts emit
+        in.addData(Doc(4L, "watermark mover row arriving much later",
+          Timestamp.valueOf("2024-01-01 00:30:00")))
+        q.processAllAvailable()
+      }
+      val ids = out.collect().map(_.getAs[Long]("doc_id")).toSet
+      assert(ids == Set(1L, 3L), s"reordered near-dup must be dropped, got $ids")
     }
-    val ids = out.collect().map(_.getAs[Long]("doc_id")).toSet
-    assert(ids.size == 2, s"reordered near-dup must be dropped, got $ids")
-    assert(ids.contains(3L))
   }
 
   case class Media(doc_id: Long, payload: Array[Byte], ts: Timestamp)
@@ -577,7 +584,7 @@ class PriceAlertsStreamingSpec extends SparkSpec {
   private def testNearDup(): Unit = {
     graft.functions.GraftFunctions.register(spark)
     // find a variant whose simhash is NEAR (hamming 1..3) but not equal —
-    // the case the exact-collision guard (bySimhash) cannot catch
+    // the case an exact-collision (hamming 0) guard cannot catch
     val base = "the quick brown fox jumps over the lazy dog while birds sing in the morning sun"
     val subs = Seq("sings", "evening", "bright", "red", "grey", "walks", "cold",
       "warm", "runs", "barks", "noon", "night", "field", "creek", "stone")

@@ -68,104 +68,6 @@ class ScaleOpsSpec extends SparkSpec {
       ev.filter(col("event_type").isin("click", "purchase")).count())
   }
 
-  test("compaction: many small files collapse to the stats-sized count") {
-    val base = new java.io.File("target/spec-sources/compact-in")
-      .getAbsolutePath
-    val out = new java.io.File("target/spec-sources/compact-out")
-      .getAbsolutePath
-    // force a pathological layout: ~40 tiny files
-    graft.sources.Tables.events(spark, sf001)
-      .repartition(40).write.mode("overwrite").parquet(base)
-    val small = spark.read.parquet(base)
-    def partFiles(p: String) = new java.io.File(p)
-      .listFiles().count(_.getName.endsWith(".parquet"))
-    assert(partFiles(base) == 40)
-    val n = ScaleOps.compactionPartitions(small, 8L * 1024 * 1024)
-    assert(n >= 1 && n < 40, s"expected a real reduction, got $n")
-    ScaleOps.compact(small, 8L * 1024 * 1024)
-      .write.mode("overwrite").parquet(out)
-    assert(partFiles(out) == n)
-    // content unchanged
-    assert(spark.read.parquet(out).count() == small.count())
-  }
-
-  test("salted join equals the plain join on skewed data") {
-    // 90% of the big side is one hot key
-    val big = ((1L to 900L).map(i => (7L, i)) ++ (1L to 100L).map(i => (i % 20, 1000 + i)))
-      .toDF("k", "payload")
-    val small = (0L until 25L).map(i => (i, s"dim$i")).toDF("k", "attr")
-    val plain = big.join(small, Seq("k"))
-      .select("k", "payload", "attr").collect().map(_.toString).sorted
-    val salted = ScaleOps.saltedJoin(big, small, "k", salt = 8)
-      .select("k", "payload", "attr").collect().map(_.toString).sorted
-    assert(salted.toSeq == plain.toSeq)
-    // and the hot key is actually spread over several salt values
-    val saltSpread = big.withColumn("__salt",
-        pmod(xxhash64(big.columns.map(col).toIndexedSeq: _*), lit(8)).cast("int"))
-      .filter(col("k") === 7L)
-      .select(countDistinct(col("__salt"))).head.getLong(0)
-    assert(saltSpread >= 4, s"hot key only spread over $saltSpread salt values")
-  }
-
-  test("indeterminate-salt opt-in spreads 100% exact-duplicate rows; both modes join-equal") {
-    // all 500 big rows are IDENTICAL in every column: the content-hash
-    // salt necessarily co-locates them (one reducer); the explicit
-    // acceptIndeterminateSalt opt-in must still fan them out
-    val big = (1 to 500).map(_ => (7L, "same")).toDF("k", "payload")
-    val small = (0L until 10L).map(i => (i, s"dim$i")).toDF("k", "attr")
-    val plain = big.join(small, Seq("k"))
-      .select("k", "payload", "attr").collect().map(_.toString).sorted
-    for (optIn <- Seq(false, true)) {
-      val salted = ScaleOps.saltedJoin(big, small, "k", salt = 8,
-          acceptIndeterminateSalt = optIn)
-        .select("k", "payload", "attr").collect().map(_.toString).sorted
-      assert(salted.toSeq == plain.toSeq,
-        s"acceptIndeterminateSalt=$optIn must preserve results")
-    }
-    val spread = big.withColumn("__salt",
-        pmod(monotonically_increasing_id(), lit(8)).cast("int"))
-      .select(countDistinct(col("__salt"))).head.getLong(0)
-    assert(spread >= 4, s"duplicate rows only spread over $spread salt values")
-    val contentSpread = big.withColumn("__salt",
-        pmod(xxhash64(big.columns.map(col).toIndexedSeq: _*), lit(8)).cast("int"))
-      .select(countDistinct(col("__salt"))).head.getLong(0)
-    assert(contentSpread == 1L, "content salt co-locates identical rows (the documented trade)")
-    // a table WITH a unique id must not be allowed to pick the
-    // indeterminate salt — the flag is for identity-free tables only
-    val withId = (1L to 10L).map(i => (i, 7L)).toDF("row_id", "k")
-    intercept[IllegalArgumentException] {
-      ScaleOps.saltedJoin(withId, small, "k", salt = 8,
-        acceptIndeterminateSalt = true, uniqueCol = Some("row_id"))
-    }
-  }
-
-  test("uniqueCol salting is determinate AND spreads content-duplicate rows") {
-    // 500 rows identical in every CONTENT column but carrying a unique
-    // id — the production shape. uniqueCol salt must fan them out
-    // (spam-proof) while staying a pure function of the id column
-    // (determinate map outputs — no monotonically_increasing_id).
-    val big = (1L to 500L).map(i => (i, 7L, "same")).toDF("row_id", "k", "payload")
-    val small = (0L until 10L).map(i => (i, s"dim$i")).toDF("k", "attr")
-    val plain = big.join(small, Seq("k"))
-      .select("k", "row_id", "attr").collect().map(_.toString).sorted
-    val salted = ScaleOps.saltedJoin(big, small, "k", salt = 8,
-        uniqueCol = Some("row_id"))
-      .select("k", "row_id", "attr").collect().map(_.toString).sorted
-    assert(salted.toSeq == plain.toSeq)
-    val spread = big.withColumn("__salt",
-        pmod(xxhash64(col("row_id")), lit(8)).cast("int"))
-      .select(countDistinct(col("__salt"))).head.getLong(0)
-    assert(spread >= 4, s"unique-id salt only spread over $spread values")
-    // determinate: recomputing the salted frame yields identical salts
-    // per row (a pure column function — no order dependence)
-    val s1 = big.withColumn("__salt", pmod(xxhash64(col("row_id")), lit(8)))
-      .select("row_id", "__salt").collect().map(_.toString).sorted.toSeq
-    val s2 = big.repartition(7).withColumn("__salt",
-        pmod(xxhash64(col("row_id")), lit(8)))
-      .select("row_id", "__salt").collect().map(_.toString).sorted.toSeq
-    assert(s1 == s2, "salt assignment survives an arbitrary reshuffle")
-  }
-
   test("distributedRank equals the single-partition global row_number") {
     import org.apache.spark.sql.expressions.Window
     val o = graft.sources.Tables.orders(spark, sf001)
@@ -473,20 +375,18 @@ class ScaleOpsSpec extends SparkSpec {
     graft.functions.GraftFunctions.register(spark)
     val df = (for (x <- 0L until 64L; y <- 0L until 64L) yield (x, y))
       .toDF("x", "y")
-    val laid = ScaleOps.zorderLayout(df, "x", "y", partitions = 8)
+      .withColumn("z", graft.functions.GraftFunctions.zorder64(col("x"), col("y")))
+    val laid = df.repartitionByRange(8, col("z")).sortWithinPartitions("z")
     val plan = laid.queryExecution.executedPlan.toString
     assert(plan.contains("rangepartitioning"),
       s"zorder layout must range-partition:\n$plan")
     assert(laid.count() == 64L * 64L)
-    // the row-group property: every ALIGNED chunk of 512 consecutive z
-    // values is an exact quadtree block — bounding box <= 32x16 in
-    // (x, y), so min/max stats prune on EITHER dimension. (A linear
-    // sort on x leaves y's chunk spread at the full 64. Spark's range
-    // sampler may split chunks off-alignment, which widens at most the
-    // straddling partitions — the aligned-chunk bound is what a
-    // boundary-aligned writer gives every row group.)
+    // the layout property q53's key exists for: every ALIGNED chunk of
+    // 512 consecutive z values is an exact quadtree block, its bounding
+    // box <= 32x16 in (x, y), so a file sorted on z keeps row-group
+    // min/max stats tight on EITHER dimension (a linear sort on x
+    // leaves y's chunk spread at the full 64)
     val spreads = df
-      .withColumn("z", graft.functions.GraftFunctions.zorder64(col("x"), col("y")))
       .withColumn("chunk", expr("z div 512"))
       .groupBy("chunk")
       .agg((max(col("x")) - min(col("x"))).as("sx"),

@@ -87,28 +87,6 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.4, s"IVF recall too low: $recall")
   }
 
-  test("k-means IVF beats first-N centroids at equal probe cost; >= 80% at nProbe=8") {
-    val emb = Tables.embeddings(spark, sf001)
-    // queries deliberately OUTSIDE vec_id < 16: the first-N-centroid
-    // variant is rigged in favor of queries that coincide with
-    // centroids (a query's own cell collects its neighbors).
-    val queries = emb.filter(col("vec_id") >= 100 && col("vec_id") < 110)
-    val exact = Similarity.bruteForceTopK(spark, emb, queries, 10).collect()
-      .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-    def recall(df: org.apache.spark.sql.DataFrame): Double = {
-      val got = df.collect()
-        .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("neighbor_id"))).toSet
-      (exact & got).size.toDouble / exact.size
-    }
-    val km4 = recall(Similarity.ivfTopKKmeans(spark, emb, queries, 10, nProbe = 4))
-    val fn4 = recall(Similarity.ivfTopK(spark, emb, queries, 10, nProbe = 4))
-    assert(km4 >= 0.55, s"k-means IVF recall too low at nProbe=4: $km4")
-    assert(km4 >= fn4 + 0.15,
-      s"k-means centroids must clearly beat first-N at equal probe cost: $km4 vs $fn4")
-    val km8 = recall(Similarity.ivfTopKKmeans(spark, emb, queries, 10, nProbe = 8))
-    assert(km8 >= 0.8, s"k-means IVF recall too low at nProbe=8: $km8")
-  }
-
   test("sampled-k-means IVF (q44): deterministic training, recall >= first-N variant") {
     val emb = Tables.embeddings(spark, sf001)
     val c1 = Similarity.sampledKmeansCentroids(spark, emb, 16, 3, 256)

@@ -23,8 +23,10 @@ class SourceLintSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
 
-  private def sources: Seq[(String, String)] = {
-    val stream = Files.walk(root)
+  private def sources: Seq[(String, String)] = scalaFiles(root)
+
+  private def scalaFiles(dir: Path): Seq[(String, String)] = {
+    val stream = Files.walk(dir)
     try {
       stream.iterator().asScala
         .filter(p => p.toString.endsWith(".scala") && Files.isRegularFile(p))
@@ -59,14 +61,12 @@ class SourceLintSpec extends AnyFunSuite {
     check("collect()", """\.collect\(\)""".r, Map(
       "src/main/scala/graft/Recall.scala" ->
         (1, "artifact runner: 100-query recall readout, not a query plan"),
-      "src/main/scala/graft/StreamEquiv.scala" ->
-        (20, "artifact runner: batch-vs-stream row comparisons on fixture data"),
       "src/main/scala/graft/StreamBench.scala" ->
         (1, "artifact runner: 64 synthetic PNG payloads for the image-dedup shape, driver-built fixture"),
       "src/main/scala/graft/operators/ScaleOps.scala" ->
         (1, "distributedCumSum per-partition (count,total) offsets: numPartitions pairs. The grouped primitives collect through collectOffsetsGuarded (runJob with an incremental MaxGroupsTotal abort), not collect()"),
       "src/main/scala/graft/operators/Similarity.scala" ->
-        (6, "k-means/PQ/coreset trainers: <= sampleN rows or 1 row per round, documented"),
+        (4, "sampled k-means/PQ/coreset trainers: <= sampleN rows or 1 row per round, documented"),
       "src/main/scala/graft/operators/Sketches.scala" ->
         (1, "bloom filter words: mBits/64 longs, size fixed by the filter parameter")))
   }
@@ -93,7 +93,7 @@ class SourceLintSpec extends AnyFunSuite {
   test("mapPartitions* is confined to codec seams and the cumsum offset pass") {
     check("mapPartitions", """\.mapPartitions""".r, Map(
       "src/main/scala/graft/operators/Multimodal.scala" ->
-        (6, "ImageIO/AudioSystem/video codecs: no Catalyst expression can wrap them"),
+        (5, "ImageIO/AudioSystem/video codecs: no Catalyst expression can wrap them"),
       "src/main/scala/graft/operators/ScaleOps.scala" ->
         (8, "distributedCumSum + groupedRank + groupedCumSum + groupedFill: per-partition (per-group) state + offset-seeded second pass over reused shuffle files"),
       "src/main/scala/graft/sources/AvroFileIO.scala" ->
@@ -112,8 +112,6 @@ class SourceLintSpec extends AnyFunSuite {
     // degree. q142's converting-user delta array — the one data-sized
     // site — was rewritten onto distributedRank + rank-pick in r11.
     check("collect_list/set", """\bcollect_(list|set)\(""".r, Map(
-      "src/main/scala/graft/StreamEquiv.scala" ->
-        (1, "artifact runner: per-window sorted values on fixture data"),
       "src/main/scala/graft/operators/Relational.scala" ->
         (2, "session event paths (session-bounded); Kaplan-Meier curve cells (distinct day-grain durations)"),
       "src/main/scala/graft/operators/TextAnalysis.scala" ->
@@ -168,6 +166,40 @@ class SourceLintSpec extends AnyFunSuite {
         (1, "Harness.session: the one session policy of the artifact mains")))
   }
 
+  test("every public def in src/main has a caller in src/main or perfbench/src") {
+    // a def that only its spec calls is API nothing uses: delete it
+    // with its spec, or narrow it to private[graft] when the spec pins
+    // a baseline the engine is compared against
+    val uncalled = PublicSurface.uncalled(sources,
+      scalaFiles(Paths.get("perfbench/src")).map(_._2), PublicSurface.Allowed)
+    assert(uncalled.isEmpty,
+      s"public defs with no caller outside their own declaration:\n  " +
+        uncalled.mkString("\n  "))
+  }
+
+  test("the public-surface rule flags a spec-only def, not a private[graft] or allow-listed one") {
+    val planted = Seq(
+      "src/main/scala/graft/Planted.scala" ->
+        """object Planted {
+          |  def specOnly(x: Int): Int = x + 1
+          |  private[graft] def baseline(x: Int): Int = x
+          |  def used(x: Int): Int = x * 2
+          |  def entry(x: Int): Int = used(x)
+          |  // onlyInComment is named here, in a comment, and nowhere else
+          |  def onlyInComment(): Int = 0
+          |  /* def commentedOut(): Int = 0 */
+          |  def afterString(): Int = 1
+          |  def fromBench(): Int = 2
+          |}""".stripMargin,
+      "src/main/scala/graft/Caller.scala" ->
+        """object Caller { val url = "file://x"; val y = Planted.afterString() }""")
+    val flagged = PublicSurface.uncalled(planted,
+      Seq("object Main { Planted.fromBench() }"), Set("Planted.entry"))
+    assert(flagged == Seq(
+      "src/main/scala/graft/Planted.scala: specOnly",
+      "src/main/scala/graft/Planted.scala: onlyInComment"))
+  }
+
   test("udf( is confined to the streaming image dHash") {
     check("udf(", """(?<![\w.])udf\(""".r, Map(
       "src/main/scala/graft/streaming/StreamingDedup.scala" ->
@@ -177,5 +209,88 @@ class SourceLintSpec extends AnyFunSuite {
           "per-row-unique PNG for the image_dhash_dedup emission " +
           "witness (ImageIO encode is a codec seam like the decode " +
           "UDF it feeds; never on a 100 TB query path)")))
+  }
+}
+
+/** The public-surface rule: every `def` in `src/main`, declared at the
+  * start of a line, that is neither `private`, `protected` nor
+  * `override` must have its name occur, with comments stripped,
+  * somewhere other than its own declaration: in `src/main` or in the
+  * benchmark's sources. A spec is not a caller. The match is by name,
+  * so the rule errs towards passing: a name that is also a local, a
+  * string or another declaration (the mains, overloads) passes.
+  */
+object PublicSurface {
+
+  /** `<file base name>.<def>`: called from outside the repository. */
+  val Allowed: Set[String] = Set(
+    "SparkEntry.entry",                  // the flagship query's external entry point
+    "KafkaIO.productsSnapshot",          // the Kafka production path; no broker to run it
+    "StateStoreCleanupListener.install") // a deployment registers it on its own SparkSession
+
+  private val Decl = ("""(?m)^[ \t]*((?:(?:private|protected)(?:\[\w+\])?\s+|""" +
+    """override\s+|final\s+|implicit\s+|lazy\s+|@\w+(?:\([^)\n]*\))?\s+)*)""" +
+    """def\s+([A-Za-z_]\w*)""").r
+
+  /** `file: def` for each public def of `main` (path → source) whose
+    * name occurs nowhere in `main` or `others` but at its declaration,
+    * in declaration order.
+    */
+  def uncalled(main: Seq[(String, String)], others: Seq[String],
+               allowed: Set[String]): Seq[String] = {
+    val code = main.map { case (f, src) => (f, stripComments(src)) }
+    val uses = (code.map(_._2) ++ others.map(stripComments))
+      .flatMap(Word.findAllIn(_)).groupMapReduce(identity)(_ => 1)(_ + _)
+    code.flatMap { case (f, text) =>
+      val obj = f.split('/').last.stripSuffix(".scala")
+      Decl.findAllMatchIn(text).collect {
+        case m if !Seq("private", "protected", "override").exists(m.group(1).contains) &&
+            !allowed(s"$obj.${m.group(2)}") && uses(m.group(2)) <= 1 =>
+          s"$f: ${m.group(2)}"
+      }
+    }
+  }
+
+  private val Word = """\w+""".r
+
+  /** `src` with line and (nested) block comments removed; string and
+    * character literals are kept whole, so a `//` inside a string is
+    * not taken for a comment. Newlines inside block comments are kept.
+    */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder(src.length)
+    val n = src.length
+    var i = 0
+    def at(s: String) = src.startsWith(s, i)
+    def keep(end: Int): Unit = { out ++= src.substring(i, end); i = end }
+    while (i < n) {
+      if (at("//")) {
+        while (i < n && src(i) != '\n') i += 1
+      } else if (at("/*")) {
+        var depth = 1
+        i += 2
+        while (i < n && depth > 0) {
+          if (at("/*")) { depth += 1; i += 2 }
+          else if (at("*/")) { depth -= 1; i += 2 }
+          else { if (src(i) == '\n') out += '\n'; i += 1 }
+        }
+      } else if (at("\"\"\"")) {
+        val close = src.indexOf("\"\"\"", i + 3)
+        var end = if (close < 0) n else close + 3
+        while (end < n && src(end) == '"') end += 1
+        keep(end)
+      } else if (src(i) == '"') {
+        var j = i + 1
+        while (j < n && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
+        keep(math.min(j + 1, n))
+      } else if (src(i) == '\'' && i + 2 < n && (src(i + 1) == '\\' || src(i + 2) == '\'')) {
+        val close = src.indexOf('\'', i + (if (src(i + 1) == '\\') 3 else 2))
+        keep(if (close < 0) n else close + 1)
+      } else {
+        out += src(i)
+        i += 1
+      }
+    }
+    out.toString
   }
 }

@@ -88,15 +88,6 @@ class TextFunctionsSpec extends SparkSpec {
     samples.foreach { case (text, lang) => assert(got(text) == lang, s"for: $text") }
   }
 
-  test("rolling-hash fingerprint: deterministic, normalization-invariant") {
-    GraftFunctions.register(spark)
-    val df = Seq("Hello  World", "hello world", "other").toDF("text")
-    val fps = df.select(TextFunctions.fingerprintRolling(col("text")))
-      .collect().map(_.getLong(0))
-    assert(fps(0) == fps(1), "normalized variants share a fingerprint")
-    assert(fps(0) != fps(2))
-  }
-
   test("polyhash64 matches a reference implementation") {
     GraftFunctions.register(spark)
     val s = "abc"
