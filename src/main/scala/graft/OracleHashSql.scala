@@ -17,6 +17,8 @@ package graft
   */
 object OracleHashSql {
 
+  import graft.operators.{Dedup, Multimodal, Relational, Similarity, Sketches, TextAnalysis}
+
   private val TWO64 = "18446744073709551616::HUGEINT"
   private val TWO32 = "4294967296::HUGEINT"
   private val OFF = "14695981039346656037::HUGEINT" // FNV-1a offset basis
@@ -25,12 +27,12 @@ object OracleHashSql {
   private val M1 = "13787848793156543929" // 0xbf58476d1ce4e5b9
   private val M2 = "10723151780598845931" // 0x94d049bb133111eb
 
-  /** (j·GOLD) mod 2^64 for j in 0..63, precomputed — the minhash `mixed`
-    * CTE evaluates this per (shingle × j) row, so an array lookup beats
-    * a per-row 64-bit multiply emulation.
+  /** (j·GOLD) mod 2^64 for j < `Dedup.MinhashK`, precomputed — the
+    * minhash `mixed` CTE evaluates this per (shingle × j) row, so an
+    * array lookup beats a per-row 64-bit multiply emulation.
     */
   private val goldJ64 =
-    (0 until 64).map(j => java.math.BigInteger.valueOf(j.toLong)
+    (0 until Dedup.MinhashK).map(j => java.math.BigInteger.valueOf(j.toLong)
         .multiply(new java.math.BigInteger("11400714819323198485"))
         .mod(java.math.BigInteger.TWO.pow(64)))
       .mkString("[", ",", "]::HUGEINT[]")
@@ -92,14 +94,16 @@ object OracleHashSql {
     (0 until 32).map(k => java.math.BigInteger.valueOf(4L).pow(k))
       .mkString("[", ",", "]::HUGEINT[]")
 
-  /** Shared CTE chain: documents -> word-3-gram shingles -> 64-component
-    * minhash signature (signed, = HashImpl.minhashSig) -> 16 band-hash
-    * buckets (= HashImpl.bandHash) -> skew-bounded bucket self-join ->
+  /** Shared CTE chain: documents -> word-3-gram shingles -> `MinhashK`-
+    * component minhash signature (signed, = HashImpl.minhashSig) ->
+    * `MinhashBands` band-hash buckets (= HashImpl.bandHash) -> skew-bounded bucket self-join ->
     * candidate pairs with signature-overlap estimate `e`.
-    * Mirrors Dedup.minhashLshPairs(shingleSize=3, k=64, bands=16,
-    * maxBucketSize=1000) exactly.
+    * Mirrors Dedup.minhashLshPairs (word 3-grams, `Dedup.MinhashK`,
+    * `Dedup.MinhashBands`, `Dedup.MaxBucketSize`) exactly.
     */
-  private def minhashCtes: String =
+  private def minhashCtes: String = {
+    val (k, bands, maxBucket) = (Dedup.MinhashK, Dedup.MinhashBands, Dedup.MaxBucketSize)
+    val rows = k / bands
     s"""
 toks AS MATERIALIZED (
   SELECT doc_id, list_filter(string_split(lower(text),' '), x -> length(x) > 0) AS t
@@ -113,7 +117,7 @@ shb AS MATERIALIZED (
   FROM (SELECT DISTINCT s FROM sh)),
 mixed AS MATERIALIZED (
   SELECT s, j, ${toS("hmix")} AS hv FROM (${mixSubq(
-      "SELECT s, b, j FROM shb, (SELECT unnest(range(64)) AS j)",
+      s"SELECT s, b, j FROM shb, (SELECT unnest(range($k)) AS j)",
       xor64("b", s"($goldJ64)[j + 1]"))})),
 sig AS MATERIALIZED (
   SELECT doc_id, list(m ORDER BY j) AS sig FROM (
@@ -124,15 +128,15 @@ sig AS MATERIALIZED (
 bandfold AS MATERIALIZED (
   SELECT doc_id, band, ${fnvFold(
       xor64(OFF, mulMod("band::HUGEINT", GOLD)),
-      s"list_transform(range(0,32), k -> (${toU("sig[band*4 + (k//8) + 1]")} // ($pow256)[(k%8)+1]) % 256::HUGEINT)")} AS fold
-  FROM sig, (SELECT unnest(range(16)) AS band)),
+      s"list_transform(range(0,${rows * 8}), k -> (${toU(s"sig[band*$rows + (k//8) + 1]")} // ($pow256)[(k%8)+1]) % 256::HUGEINT)")} AS fold
+  FROM sig, (SELECT unnest(range($bands)) AS band)),
 buckets AS MATERIALIZED (
   SELECT doc_id, band, ${toS("fold")} AS bucket FROM bandfold),
 bounded AS MATERIALIZED (
   SELECT doc_id, band, bucket FROM (
     SELECT doc_id, band, bucket, count(*) OVER (PARTITION BY band, bucket) AS n
     FROM buckets)
-  WHERE n <= 1000),
+  WHERE n <= $maxBucket),
 firstshared AS MATERIALIZED (
   SELECT l.doc_id AS doc_a, r.doc_id AS doc_b, min(l.band) AS fb
   FROM buckets l JOIN buckets r
@@ -146,10 +150,11 @@ cand AS MATERIALIZED (
     ON fs.doc_a = l.doc_id AND fs.doc_b = r.doc_id AND fs.fb = l.band),
 est AS MATERIALIZED (
   SELECT doc_a, doc_b,
-         len(list_filter(list_zip(sa.sig, sb.sig), p -> p[1] = p[2]))::DOUBLE / 64.0 AS e
+         len(list_filter(list_zip(sa.sig, sb.sig), p -> p[1] = p[2]))::DOUBLE / ${k.toDouble} AS e
   FROM cand
   JOIN sig sa ON sa.doc_id = doc_a
   JOIN sig sb ON sb.doc_id = doc_b)"""
+  }
 
   /** Oracle for q17: MinHash+LSH candidate pairs, est >= 0.5. */
   def q17MinhashLsh: String =
@@ -166,7 +171,7 @@ ORDER BY 1, 2"""
     * estimate cut. Per jaccard decade band: true pairs, caught pairs,
     * recall — the measured LSH S-curve.
     */
-  def q182LshCalibration(truthThreshold: Double = 0.3): String =
+  def q182LshCalibration(truthThreshold: Double): String =
     s"""WITH $minhashCtes,
 sh3 AS (
   SELECT doc_id, list_sort(list_distinct(list_transform(range(1, len(t)-1),
@@ -334,8 +339,8 @@ ORDER BY 1, 2"""
   private def dlit(d: Double): String = java.lang.Double.toString(d)
 
   /** Oracle for q21: multi-table random-hyperplane LSH ANN top-k
-    * (= Similarity.annTopK defaults: 6 planes, 8 tables, 3 probes,
-    * k=10, queries vec_id < 5). The exact Gaussian plane constants are
+    * (= Similarity.annTopK over `planeSets`, `Similarity.AnnProbes`
+    * probes, queries vec_id < 5). The exact Gaussian plane constants are
     * embedded as SQL literals; the dot product is folded sequentially
     * (list_reduce) in the same element order as HashImpl.lshBuckets so
     * the sign decisions are IEEE-identical.
@@ -352,11 +357,13 @@ ORDER BY 1, 2"""
     * same element order and IEEE ops as HashImpl.lshBuckets.
     */
   private val planeDot = "list_reduce(list_prepend(0.0::DOUBLE, " +
-    "list_transform(range(1,65), i -> e.embedding[i]::DOUBLE * p.w[i])), (a,b) -> a+b)"
+    s"list_transform(range(1,${Similarity.Dim + 1}), i -> e.embedding[i]::DOUBLE * p.w[i])), (a,b) -> a+b)"
 
-  def q21AnnLsh(planeSets: Seq[Seq[Seq[Double]]]): String = {
+  def q21AnnLsh(planeSets: Seq[Seq[Seq[Double]]], k: Int): String = {
     val planeRows = planeValues(planeSets)
     val dot = planeDot
+    val powList = (0 until planeSets.head.length).map(p => 1L << p).mkString("[", ",", "]")
+    val flips = (0L +: (0 until Similarity.AnnProbes).map(i => 1L << i)).mkString("[", ",", "]")
     s"""WITH planes(tbl, pl, w) AS (VALUES
   $planeRows),
 dots AS (
@@ -364,11 +371,11 @@ dots AS (
   FROM embeddings e, planes p),
 bucks AS (
   SELECT vec_id, tbl,
-         sum(CASE WHEN dot >= 0 THEN ([1,2,4,8,16,32])[pl+1] ELSE 0 END)::BIGINT AS bucket
+         sum(CASE WHEN dot >= 0 THEN ($powList)[pl+1] ELSE 0 END)::BIGINT AS bucket
   FROM dots GROUP BY 1, 2),
 qprobe AS (
   SELECT vec_id AS query_id, tbl, xor(bucket, f.f) AS bucket
-  FROM bucks, (SELECT unnest([0,1,2,4]) AS f) f
+  FROM bucks, (SELECT unnest($flips) AS f) f
   WHERE vec_id < 5),
 cand AS (
   SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
@@ -388,19 +395,19 @@ ranked AS (
   FROM scored)
 SELECT query_id, rank::BIGINT AS rank, neighbor_id,
        floor(cos * 10000 + 0.5) / 10000 AS cos
-FROM ranked WHERE rank <= 10
+FROM ranked WHERE rank <= $k
 ORDER BY 1, 2"""
   }
 
   /** Oracle for q29: IVF ANN top-k with the deterministic
-    * first-16-by-id centroids (= Similarity.ivfTopK defaults: 16 cells,
-    * nProbe 4, k 10, queries vec_id < 5) — the whole pipeline is
-    * relational, so DuckDB reproduces it exactly.
+    * first-`IvfCells`-by-id centroids (= Similarity.ivfTopK: `IvfCells`
+    * cells, `IvfProbes` probed, queries vec_id < 5) — the whole pipeline
+    * is relational, so DuckDB reproduces it exactly.
     */
-  def q29Ivf: String =
+  def q29Ivf(k: Int): String =
     s"""WITH cent AS (
   SELECT vec_id AS cell_id, embedding AS centroid
-  FROM embeddings ORDER BY vec_id LIMIT 16),
+  FROM embeddings ORDER BY vec_id LIMIT ${Similarity.IvfCells}),
 cassign AS (
   SELECT neighbor_id, cv, cell_id FROM (
     SELECT e.vec_id AS neighbor_id, e.embedding AS cv, ct.cell_id,
@@ -418,7 +425,7 @@ qassign AS (
                                              CAST(ct.centroid AS DOUBLE[])) DESC,
                       ct.cell_id ASC) AS crank
     FROM embeddings e, cent ct WHERE e.vec_id < 5)
-  WHERE crank <= 4),
+  WHERE crank <= ${Similarity.IvfProbes}),
 scored AS (
   SELECT DISTINCT q.query_id, a.neighbor_id,
          list_cosine_similarity(CAST(q.qv AS DOUBLE[]),
@@ -432,7 +439,7 @@ ranked AS (
   FROM scored)
 SELECT query_id, rank::BIGINT AS rank, neighbor_id,
        floor(cos * 10000 + 0.5) / 10000 AS cos
-FROM ranked WHERE rank <= 10
+FROM ranked WHERE rank <= $k
 ORDER BY 1, 2"""
 
   /** Oracle for q44: IVF ANN top-k with deterministic sampled-k-means
@@ -449,8 +456,8 @@ ORDER BY 1, 2"""
     * through `cent$iters` (see [[q44IvfKmeans]] for the arithmetic
     * contract with the driver-side trainer).
     */
-  private def kmeansCentroidCtes(cells: Int, iters: Int, sampleN: Int,
-                                 dim: Int): String = {
+  private def kmeansCentroidCtes(cells: Int): String = {
+    val (iters, sampleN, dim) = (Similarity.KmeansIters, Similarity.SampleN, Similarity.Dim)
     val stride = sampleN / cells
     val iterCtes = (1 to iters).map { t =>
       s"""assign$t AS (
@@ -482,9 +489,10 @@ cent0 AS (
 $iterCtes"""
   }
 
-  def q44IvfKmeans(cells: Int = 16, iters: Int = 3, sampleN: Int = 256,
-                   nProbe: Int = 4, k: Int = 10, dim: Int = 64): String = {
-    s"""WITH ${kmeansCentroidCtes(cells, iters, sampleN, dim)},
+  def q44IvfKmeans(k: Int): String = {
+    val (cells, iters, sampleN, nProbe, dim) = (Similarity.IvfCells,
+      Similarity.KmeansIters, Similarity.SampleN, Similarity.IvfProbes, Similarity.Dim)
+    s"""WITH ${kmeansCentroidCtes(cells)},
 cassign AS (
   SELECT neighbor_id, cv, cell_id FROM (
     SELECT e.vec_id AS neighbor_id, e.embedding AS cv, ct.cell_id,
@@ -521,16 +529,14 @@ ORDER BY 1, 2"""
   }
 
   /** Oracle for q64: SemDeDup semantic dedup (= Dedup.semanticDedup
-    * defaults). Same centroid chain as q44; each vector is assigned to
-    * its nearest cell (ties → lowest cell), cells over `maxCellSize`
+    * constants). Same centroid chain as q44; each vector is assigned to
+    * its nearest cell (ties → lowest cell), cells over `Dedup.SemDedupMaxCell`
     * are excluded (guard mirrored from the engine), and a vector is
     * dropped iff a lower-id vector in the SAME cell has cosine ≥
-    * `threshold`.
+    * `Dedup.SemDedupThreshold`.
     */
-  def q64SemanticDedup(cells: Int = 16, iters: Int = 3, sampleN: Int = 256,
-                       dim: Int = 64, threshold: Double = 0.3,
-                       maxCellSize: Int = 1000): String =
-    s"""WITH ${kmeansCentroidCtes(cells, iters, sampleN, dim)},
+  def q64SemanticDedup: String =
+    s"""WITH ${kmeansCentroidCtes(Dedup.SemDedupCells)},
 cassign AS MATERIALIZED (
   SELECT vec_id, emb0, cell_id FROM (
     SELECT e.vec_id, e.embedding AS emb0, ct.cell_id,
@@ -538,28 +544,28 @@ cassign AS MATERIALIZED (
              ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
                                              ct.centroid) DESC,
                       ct.cell_id ASC) AS crank
-    FROM embeddings e, cent$iters ct)
+    FROM embeddings e, cent${Similarity.KmeansIters} ct)
   WHERE crank = 1),
 bounded AS MATERIALIZED (
   SELECT * FROM (
     SELECT vec_id, emb0, cell_id,
            count(*) OVER (PARTITION BY cell_id) AS cell_n
     FROM cassign)
-  WHERE cell_n <= $maxCellSize),
+  WHERE cell_n <= ${Dedup.SemDedupMaxCell}),
 dropped AS (
   SELECT DISTINCT b.vec_id
   FROM bounded a JOIN bounded b
     ON a.cell_id = b.cell_id AND a.vec_id < b.vec_id
   WHERE list_cosine_similarity(CAST(a.emb0 AS DOUBLE[]),
-                               CAST(b.emb0 AS DOUBLE[])) >= $threshold)
+                               CAST(b.emb0 AS DOUBLE[])) >= ${Dedup.SemDedupThreshold})
 SELECT s.vec_id, s.cell_id, s.cell_n::BIGINT AS cell_n
 FROM bounded s LEFT JOIN dropped d ON s.vec_id = d.vec_id
 WHERE d.vec_id IS NULL
 ORDER BY s.vec_id"""
 
   /** Oracle for q37: LSH-blocked embedding near-dup pairs
-    * (= Dedup.lshBlockedCosinePairs defaults: 3 planes, 12 tables,
-    * maxBucketSize 1000, cos >= 0.3). Plane constants embedded as
+    * (= Dedup.lshBlockedCosinePairs over `planeSets`,
+    * `Dedup.MaxBucketSize`, `Dedup.LshCosineThreshold`). Plane constants embedded as
     * literals; candidate generation mirrored exactly, rerank is the
     * same list_cosine_similarity pattern as q19/q20.
     */
@@ -579,7 +585,7 @@ bounded AS (
   SELECT vec_id, tbl, bucket FROM (
     SELECT vec_id, tbl, bucket, count(*) OVER (PARTITION BY tbl, bucket) AS n
     FROM bucks)
-  WHERE n <= 1000),
+  WHERE n <= ${Dedup.MaxBucketSize}),
 firstshared AS (
   SELECT l.vec_id AS va, r.vec_id AS vb, min(l.tbl) AS ft
   FROM bucks l JOIN bucks r
@@ -600,7 +606,7 @@ scored AS (
   JOIN embeddings eb ON eb.vec_id = vec_b)
 SELECT vec_a, vec_b, floor(c * 10000 + 0.5) / 10000 AS cos
 FROM scored
-WHERE c >= 0.3
+WHERE c >= ${Dedup.LshCosineThreshold}
 ORDER BY 1, 2"""
   }
 
@@ -685,7 +691,8 @@ ORDER BY cluster_id"""
     * sequential textbook scan in WinnowingSpec, and the k-gram hash is
     * the same direct polynomial fold q54's oracle uses.
     */
-  def q176Winnow(k: Int = 8, w: Int = 4): String = {
+  def q176Winnow: String = {
+    val (k, w) = (TextAnalysis.WinnowK, TextAnalysis.WinnowW)
     val lagCols = (1 until w).map(i => s"lag(hv, $i) OVER win AS l$i")
     val leadCols = (1 until w).map(i => s"lead(hv, $i) OVER win AS r$i")
     // nested-CASE chain length: stops at the first failing (or null)
@@ -773,30 +780,29 @@ FROM z
 ORDER BY 4, 1, 2, 3"""
 
   /** Oracle for q52: count-min-sketch heavy hitters
-    * (= Sketches.cmsHeavyHitters defaults: depth 4, width 1024, top
-    * 50). The per-row hash is HashImpl.fnv1a64Seeded — FNV fold from a
+    * (= Sketches.cmsHeavyHitters: CmsDepth rows, CmsWidth cells, top
+    * CmsTopK). The per-row hash is HashImpl.fnv1a64Seeded — FNV fold from a
     * seed-mixed basis, then the splitmix avalanche — mirrored with the
     * same fnvFold/mixSubq building blocks the minhash oracle uses; the
     * counters and the min-across-rows estimate are plain integer
     * relational algebra, so the sketch itself is verified exactly.
     */
-  def q52CmsHeavyHitters(depth: Int = 4, width: Int = 1024,
-                         k: Int = 50): String =
+  def q52CmsHeavyHitters: String =
     s"""WITH toks AS (
   SELECT unnest(list_filter(string_split(lower(text),' '), x -> length(x) > 0)) AS token
   FROM documents),
 occ AS (
   SELECT token, count(*)::BIGINT AS cnt FROM toks GROUP BY 1),
 seeded AS (
-  SELECT token, r, (hmix % $width)::BIGINT AS cell FROM (${mixSubq(
-        s"SELECT token, r FROM (SELECT DISTINCT token FROM toks), (SELECT unnest(range($depth)) AS r)",
+  SELECT token, r, (hmix % ${Sketches.CmsWidth})::BIGINT AS cell FROM (${mixSubq(
+        s"SELECT token, r FROM (SELECT DISTINCT token FROM toks), (SELECT unnest(range(${Sketches.CmsDepth})) AS r)",
         fnvFold(xor64(OFF, mulMod("r::HUGEINT", GOLD)), strBytes("token")))})),
 counters AS (
   SELECT s.r, s.cell, count(*)::BIGINT AS c
   FROM toks t JOIN seeded s USING (token)
   GROUP BY 1, 2),
 top AS (
-  SELECT token, cnt FROM occ ORDER BY cnt DESC, token ASC LIMIT $k)
+  SELECT token, cnt FROM occ ORDER BY cnt DESC, token ASC LIMIT ${Sketches.CmsTopK})
 SELECT top.token, top.cnt, min(co.c)::BIGINT AS est_cms
 FROM top
 JOIN seeded se USING (token)
@@ -945,9 +951,9 @@ ORDER BY node_id"""
     * embeds (Sketches.hllNumerator), rounded at 4 decimals to absorb
     * the HUGEINT->DOUBLE cast.
     */
-  def q69HllDistinct(p: Int = 8): String = {
-    val m = 1 << p
-    val suffix = 64 - p
+  def q69HllDistinct: String = {
+    val m = 1 << Sketches.HllP
+    val suffix = 64 - Sketches.HllP
     val powSuffix = java.math.BigInteger.valueOf(2L).pow(suffix)
     // rho ladder: w = 0 -> suffix+1, else position of first 1-bit
     val ladder = (1 to suffix).map { r =>
@@ -975,7 +981,7 @@ ex AS (
   SELECT l_returnflag AS grp, count(DISTINCT l_orderkey)::BIGINT AS n_exact
   FROM lineitem GROUP BY 1)
 SELECT grp, n_exact, nz,
-       floor((${dlit(graft.operators.Sketches.hllNumerator(p))} /
+       floor((${dlit(Sketches.hllNumerator(Sketches.HllP))} /
          (sp + ($m - nz)::HUGEINT * 9223372036854775808::HUGEINT)::DOUBLE)
          * 10000 + 0.5) / 10000 AS hll_est
 FROM ex JOIN per USING (grp)
@@ -986,9 +992,9 @@ ORDER BY grp"""
     * — registers max-merged per bucket, both levels estimated from
     * registers alone (mirroring Sketches.hllDistinctRollup).
     */
-  def q135HllUnionRollup(p: Int = 8): String = {
-    val m = 1 << p
-    val suffix = 64 - p
+  def q135HllUnionRollup: String = {
+    val m = 1 << Sketches.HllP
+    val suffix = 64 - Sketches.HllP
     val powSuffix = java.math.BigInteger.valueOf(2L).pow(suffix)
     val ladder = (1 to suffix).map { r =>
       s"WHEN w >= ${java.math.BigInteger.valueOf(2L).pow(suffix - r)}::HUGEINT THEN $r"
@@ -1021,7 +1027,7 @@ ex AS (
   UNION ALL
   SELECT 'ALL', count(DISTINCT l_orderkey)::BIGINT FROM lineitem)
 SELECT grp, n_exact, nz,
-       floor((${dlit(graft.operators.Sketches.hllNumerator(p))} /
+       floor((${dlit(Sketches.hllNumerator(Sketches.HllP))} /
          (sp + ($m - nz)::HUGEINT * 9223372036854775808::HUGEINT)::DOUBLE)
          * 10000 + 0.5) / 10000 AS hll_est
 FROM ex JOIN per USING (grp)
@@ -1072,7 +1078,8 @@ seqs1 AS (SELECT w, t, freq FROM words),
 $rounds"""
   }
 
-  def q76BpeMerges(k: Int = 5): String = {
+  def q76BpeMerges: String = {
+    val k = TextAnalysis.BpeK
     val out = (1 to k)
       .map(i => s"SELECT $i::BIGINT AS round, l, r, cnt FROM top$i")
       .mkString("\nUNION ALL\n")
@@ -1085,9 +1092,9 @@ ORDER BY round"""
     * stats from the final symbol table joined to (source, word)
     * frequencies.
     */
-  def q80BpeEncode(k: Int = 5): String =
-    s"""${bpeCtes(k, withFinalSeqs = true)},
-sf AS (SELECT w, len(t)::BIGINT AS n_tok FROM seqs${k + 1}),
+  def q80BpeEncode: String =
+    s"""${bpeCtes(TextAnalysis.BpeK, withFinalSeqs = true)},
+sf AS (SELECT w, len(t)::BIGINT AS n_tok FROM seqs${TextAnalysis.BpeK + 1}),
 src AS (
   SELECT source, w, COUNT(*)::BIGINT AS freq FROM (
     SELECT source, unnest(string_split(text, ' ')) AS w FROM documents)
@@ -1105,7 +1112,7 @@ GROUP BY source ORDER BY source"""
     * estimator's "space below h" is therefore h/2^64 + 0.5, with 2^64
     * a power of two so every double step is the identical IEEE op.
     */
-  def q95KmvOverlap(k: Int = 64): String =
+  def q95KmvOverlap: String =
     s"""WITH toks AS (
   SELECT DISTINCT source, unnest(list_filter(string_split(lower(text),' '),
                                  x -> length(x) > 0)) AS token
@@ -1120,7 +1127,7 @@ sk AS (
     SELECT source, hv,
            row_number() OVER (PARTITION BY source ORDER BY hv) AS rk
     FROM shash)
-  WHERE rk <= $k),
+  WHERE rk <= ${Sketches.KmvK}),
 prs AS (
   SELECT a.source AS source_a, b.source AS source_b
   FROM (SELECT DISTINCT source FROM sk) a
@@ -1137,7 +1144,7 @@ est AS (
   SELECT source_a, source_b, count(*)::BIGINT AS kk,
          SUM(CASE WHEN n_sk = 2 THEN 1 ELSE 0 END)::BIGINT AS n_shared,
          MAX(hv) AS kth
-  FROM ranked WHERE rk <= $k GROUP BY 1, 2),
+  FROM ranked WHERE rk <= ${Sketches.KmvK} GROUP BY 1, 2),
 sizes AS (SELECT source, count(*)::BIGINT AS nt FROM toks GROUP BY 1),
 inter AS (
   SELECT a.source AS source_a, b.source AS source_b,
@@ -1164,13 +1171,13 @@ ORDER BY 1, 2"""
     * 2^64). The sum is exact BIGINT, so token order is irrelevant and
     * the oracle can sum over a grouped token-weight map.
     */
-  def q96QualityClassifier(buckets: Int = 4096): String =
+  def q96QualityClassifier: String =
     s"""WITH toks AS (
   SELECT doc_id, unnest(list_filter(string_split(lower(text),' '),
                                     x -> length(x) > 0)) AS token
   FROM documents),
 tokb AS (
-  SELECT token, (hmix % $buckets)::BIGINT AS bucket FROM (${mixSubq(
+  SELECT token, (hmix % ${TextAnalysis.FeatureBuckets})::BIGINT AS bucket FROM (${mixSubq(
         "SELECT DISTINCT token FROM toks",
         fnvFold(xor64(OFF, mulMod("1::HUGEINT", GOLD)), strBytes("token")))})),
 bw AS (
@@ -1198,7 +1205,7 @@ ORDER BY doc_id"""
     * 2^64, so the HUGEINT residue must be folded back through the
     * signed view first, unlike q96's power-of-two buckets).
     */
-  def q97ContrastivePairs(slots: Int = 4): String =
+  def q97ContrastivePairs(slots: Int): String =
     s"""WITH n AS (SELECT count(*)::BIGINT AS n_docs FROM documents),
 anch AS (
   SELECT doc_id, source, unnest(range($slots)) AS slot FROM documents),
@@ -1224,16 +1231,16 @@ ORDER BY 1, 2"""
     * rollup. The novelty double is a single integer÷integer IEEE op —
     * bit-identical across engines.
     */
-  def q103ShingleNovelty(n: Int = 3): String =
+  def q103ShingleNovelty: String =
     s"""WITH toks AS (
   SELECT doc_id, list_filter(string_split(lower(text),' '), x -> length(x) > 0) AS t
   FROM documents),
 sh AS (
   SELECT DISTINCT doc_id, ${toS(polyFold(strBytes("s")))} AS sh
   FROM (
-    SELECT doc_id, unnest(list_transform(range(1, len(t)-${n - 2}),
-           i -> array_to_string(t[i:i+${n - 1}], ' '))) AS s
-    FROM toks WHERE len(t) >= $n)),
+    SELECT doc_id, unnest(list_transform(range(1, len(t)-${TextAnalysis.NoveltyN - 2}),
+           i -> array_to_string(t[i:i+${TextAnalysis.NoveltyN - 1}], ' '))) AS s
+    FROM toks WHERE len(t) >= ${TextAnalysis.NoveltyN})),
 f AS (
   SELECT doc_id, min(doc_id) OVER (PARTITION BY sh) AS first_doc FROM sh)
 SELECT doc_id, count(*)::BIGINT AS n_shingles,
@@ -1308,24 +1315,24 @@ hashes AS MATERIALIZED (
   SELECT doc_id, ${pack(dhBit)} AS dh, ${pack(ahBit)} AS ah FROM cells)"""
   }
 
-  def q117ImageNearDup(maxHamming: Int = 3): String =
+  def q117ImageNearDup: String =
     s"""WITH ${imageHashCtes()}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
        bit_count(xor(a.dh, b.dh))::BIGINT AS dhash_dist,
        bit_count(xor(a.ah, b.ah))::BIGINT AS ahash_dist
 FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.dh, b.dh)) <= $maxHamming
+WHERE bit_count(xor(a.dh, b.dh)) <= ${Multimodal.ImageMaxHamming}
 ORDER BY 1, 2"""
 
   /** Oracle for q132: q117's pairs → transitive-closure components
     * (the q49 reach pattern) → keep-largest-payload survivor flag.
     */
-  def q132ImageDedupSurvivors(maxHamming: Int = 3): String =
+  def q132ImageDedupSurvivors: String =
     s"""WITH RECURSIVE ${imageHashCtes()},
 p AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM hashes a JOIN hashes b ON a.doc_id < b.doc_id
-  WHERE bit_count(xor(a.dh, b.dh)) <= $maxHamming),
+  WHERE bit_count(xor(a.dh, b.dh)) <= ${Multimodal.ImageMaxHamming}),
 e AS (
   SELECT doc_a AS src, doc_b AS dst FROM p
   UNION ALL
@@ -1354,9 +1361,9 @@ ORDER BY 1, 2"""
     * dot-product LUTs, ADC as an in-order fold over subspaces, ADC
     * top-`topC` by (adc DESC, id ASC), exact-cosine rerank top-`k`.
     */
-  def q129PqAdc(m: Int = 8, ks: Int = 16, iters: Int = 2,
-                sampleN: Int = 256, topC: Int = 100, k: Int = 10,
-                dim: Int = 64): String = {
+  def q129PqAdc(k: Int): String = {
+    val (m, ks, iters, sampleN, topC, dim) = (Similarity.PqM, Similarity.PqKs,
+      Similarity.PqIters, Similarity.SampleN, Similarity.PqTopC, Similarity.Dim)
     val ds = dim / m
     val stride = sampleN / ks
     def l2(sv: String, cent: String): String =
@@ -1446,7 +1453,7 @@ ORDER BY 1, 2"""
     * set, keep vertices with deg ≥ k, keep edges with both endpoints
     * kept. Pure integer arithmetic.
     */
-  def q130KCore(k: Int = 10, rounds: Int = 4): String = {
+  def q130KCore(k: Int, rounds: Int): String = {
     val roundCtes = (1 to rounds).map { t =>
       s"""kp$t AS MATERIALIZED (
   SELECT v FROM (
@@ -1483,7 +1490,7 @@ ORDER BY 1"""
     * ranked est-desc. Pure integer arithmetic — bit-exact by
     * construction.
     */
-  def q137CoreNumbers(rounds: Int = 8): String = {
+  def q137CoreNumbers(rounds: Int): String = {
     val roundCtes = (1 to rounds).map { t =>
       s"""est$t AS MATERIALIZED (
   SELECT v, max(least(rn, est)) AS est FROM (
@@ -1515,7 +1522,7 @@ ORDER BY 1"""
     * takes the most frequent neighbor label, ties to the smallest
     * label. Pure integer arithmetic — bit-exact by construction.
     */
-  def q138LabelPropagation(rounds: Int = 5): String = {
+  def q138LabelPropagation(rounds: Int): String = {
     val roundCtes = (1 to rounds).map { t =>
       s"""lab$t AS MATERIALIZED (
   SELECT v, label FROM (
@@ -1549,7 +1556,7 @@ ORDER BY 1"""
     * engine exactly — the q61 float precedent (aggregate-sum noise
     * ~1e-15, r4-rounded output).
     */
-  def q139Hits(iters: Int = 10): String = {
+  def q139Hits(iters: Int): String = {
     val roundCtes = (1 to iters).map { t =>
       s"""a$t AS MATERIALIZED (
   SELECT e.dst AS v, sum(h.h) AS a
@@ -1593,14 +1600,14 @@ ORDER BY 1"""
     * doc_id string (q97 machinery), signed pmod shards, HUGEINT
     * fingerprint sums.
     */
-  def q157ShardManifest(nShards: Int = 16): String =
+  def q157ShardManifest: String =
     s"""WITH h AS (
   SELECT doc_id, n_chars, text, ${toS("hmix")} AS hv FROM (${mixSubq(
         "SELECT doc_id, n_chars, text FROM documents",
         fnvFold(xor64(OFF, mulMod("7::HUGEINT", GOLD)),
           strBytes("doc_id::VARCHAR")))})),
 s AS (
-  SELECT (((hv % $nShards) + $nShards) % $nShards)::BIGINT AS shard_id,
+  SELECT (((hv % ${TextAnalysis.Shards}) + ${TextAnalysis.Shards}) % ${TextAnalysis.Shards})::BIGINT AS shard_id,
          doc_id, n_chars,
          ('0x' || substring(md5(text), 1, 15))::BIGINT AS fp
   FROM h),
@@ -1619,14 +1626,14 @@ FROM g, t ORDER BY shard_id"""
   /** Oracle for q169: erasure-cascade audit. Seed-13 hash cohort,
     * the same FK cascade, HUGEINT key-sum fingerprints.
     */
-  def q169ErasureAudit(modulus: Int = 37): String =
+  def q169ErasureAudit: String =
     s"""WITH cohort AS MATERIALIZED (
   SELECT c_custkey FROM (
     SELECT c_custkey, ${toS("hmix")} AS hv FROM (${mixSubq(
         "SELECT c_custkey FROM customer",
         fnvFold(xor64(OFF, mulMod("13::HUGEINT", GOLD)),
           strBytes("c_custkey::VARCHAR")))}))
-  WHERE ((hv % $modulus) + $modulus) % $modulus = 0),
+  WHERE ((hv % ${Relational.ErasureModulus}) + ${Relational.ErasureModulus}) % ${Relational.ErasureModulus} = 0),
 ords AS MATERIALIZED (
   SELECT o_orderkey, o_custkey FROM orders
   JOIN cohort ON o_custkey = c_custkey),
@@ -1654,12 +1661,12 @@ ORDER BY table_name"""
     * machinery), cent-integer HUGEINT moments, the identical five-op
     * IEEE adjustment formula.
     */
-  def q167AbCuped(splitTs: String = "2024-01-16 00:00:00"): String =
+  def q167AbCuped: String =
     s"""WITH u AS MATERIALIZED (
   SELECT user_id,
-         sum(CASE WHEN ts < TIMESTAMP '$splitTs'
+         sum(CASE WHEN ts < TIMESTAMP '${Relational.CupedSplitTs}'
                   THEN floor(value * 100 + 0.5)::BIGINT ELSE 0 END) AS x_c,
-         sum(CASE WHEN ts >= TIMESTAMP '$splitTs'
+         sum(CASE WHEN ts >= TIMESTAMP '${Relational.CupedSplitTs}'
                   THEN floor(value * 100 + 0.5)::BIGINT ELSE 0 END) AS y_c
   FROM events WHERE value IS NOT NULL GROUP BY 1),
 a AS (
@@ -1733,7 +1740,8 @@ FROM f ORDER BY user_id"""
     * over the capped per-query candidate pool (q156 technique,
     * per-query). λ=1/2 exact binary.
     */
-  def q158Mmr(k: Int = 5, cand: Int = 20, nQueries: Int = 5): String = {
+  def q158Mmr(nQueries: Int): String = {
+    val (k, cand) = (Similarity.MmrK, Similarity.MmrCand)
     val rounds = (2 to k).map { r =>
       s"""m$r AS (
   SELECT c.query_id, c.cid,
@@ -1778,7 +1786,8 @@ FROM sel$k ORDER BY query_id, rank"""
     * Rounds are unrolled (the q44/q129 trainer technique): each adds
     * the argmin-over-max-cosine vector with id tiebreak.
     */
-  def q156KCenter(k: Int = 8): String = {
+  def q156KCenter: String = {
+    val k = Similarity.KCenterK
     val rounds = (2 to k).map { r =>
       s"""m$r AS MATERIALIZED (
   SELECT x.vec_id, max(list_cosine_similarity(x.e, s.e)) AS mc
@@ -1811,15 +1820,14 @@ FROM r WHERE rn = 1 ORDER BY vec_id"""
     * hashing as q96; per-bucket weights are HUGEINT-exact quantized
     * target/raw ratios, per-source quota by window rank.
     */
-  def q152Dsir(buckets: Int = 4096, targetLang: String = "en",
-               keepDen: Int = 4): String =
+  def q152Dsir: String =
     s"""WITH toks AS MATERIALIZED (
   SELECT doc_id, source, lang,
          unnest(list_filter(string_split(lower(text),' '),
                             x -> length(x) > 0)) AS token
   FROM documents),
 tokb AS (
-  SELECT token, (hmix % $buckets)::BIGINT AS bucket FROM (${mixSubq(
+  SELECT token, (hmix % ${TextAnalysis.FeatureBuckets})::BIGINT AS bucket FROM (${mixSubq(
         "SELECT DISTINCT token FROM toks",
         fnvFold(xor64(OFF, mulMod("1::HUGEINT", GOLD)), strBytes("token")))})),
 tb AS MATERIALIZED (
@@ -1827,14 +1835,14 @@ tb AS MATERIALIZED (
   FROM toks t JOIN tokb b USING (token)),
 cr AS (SELECT bucket, count(*)::HUGEINT AS cnt_r FROM tb GROUP BY 1),
 ct AS (SELECT bucket, count(*)::HUGEINT AS cnt_t FROM tb
-       WHERE lang = '$targetLang' GROUP BY 1),
+       WHERE lang = '${TextAnalysis.DsirTargetLang}' GROUP BY 1),
 tr AS (SELECT sum(cnt_r)::HUGEINT AS big_r FROM cr),
 tt AS (SELECT sum(cnt_t)::HUGEINT AS big_t FROM ct),
 w AS (
   SELECT cr.bucket,
          (((COALESCE(ct.cnt_t, 0::HUGEINT) + 1)
-             * (tr.big_r + $buckets) * 65536)
-          // ((cr.cnt_r + 1) * (tt.big_t + $buckets)))::BIGINT AS w
+             * (tr.big_r + ${TextAnalysis.FeatureBuckets}) * 65536)
+          // ((cr.cnt_r + 1) * (tt.big_t + ${TextAnalysis.FeatureBuckets})))::BIGINT AS w
   FROM cr LEFT JOIN ct USING (bucket), tr, tt),
 sc AS (
   SELECT tb.doc_id, tb.source, count(*)::BIGINT AS n_tokens,
@@ -1846,10 +1854,11 @@ r AS (
   FROM sc)
 SELECT doc_id, source, n_tokens, score, norm,
        (row_number() OVER (PARTITION BY source ORDER BY norm DESC, doc_id)
-          * $keepDen <= count(*) OVER (PARTITION BY source)) AS kept
+          * ${TextAnalysis.DsirKeepDen} <= count(*) OVER (PARTITION BY source)) AS kept
 FROM r ORDER BY doc_id"""
 
-  def q125PcaPower(r: Int = 4, iters: Int = 60, dim: Int = 64): String = {
+  def q125PcaPower(r: Int): String = {
+    val (iters, dim) = (Similarity.PcaPowerIters, Similarity.Dim)
     def fold(listExpr: String): String =
       s"list_reduce(list_prepend(0.0::DOUBLE, $listExpr), (acc, el) -> acc + el)"
     def matvec(mRef: String, vRef: String): String =

@@ -71,19 +71,26 @@ object GraftFunctions {
   def simhash64(tokens: Column): Column = call_function("simhash64", tokens)
   def hash64Seeded(seed: Column, s: Column): Column = call_function("hash64_seeded", seed, s)
   def cosineSim(a: Column, b: Column): Column = call_function("cosine_sim", a, b)
+  /** k-component minhash signature: one O(|shingles|·k) loop. */
   def minhashSig(shingles: Column, k: Int): Column =
     call_function("minhash_sig", shingles, lit(k))
+  /** LSH band keys, one long per rowsPerBand-slice of the signature. */
   def bandHash(sig: Column, bands: Int, rowsPerBand: Int): Column =
     call_function("band_hash", sig, lit(bands), lit(rowsPerBand))
+  /** Estimated jaccard: the fraction of equal signature components. */
   def minhashEst(a: Column, b: Column): Column = call_function("minhash_est", a, b)
   def firstSharedBand(a: Column, b: Column, bands: Int, rowsPerBand: Int): Column =
     call_function("first_shared_band", a, b, lit(bands), lit(rowsPerBand))
+  /** Word n-grams of a token array: empty below n tokens, NULL for NULL
+    * (= [[HashFunctions.wordShinglesHof]] without its lambda frames).
+    */
   def wordShingles(tokens: Column, n: Int): Column =
     call_function("word_shingles", tokens, lit(n))
   def firstSharedIndex(a: Column, b: Column): Column =
     call_function("first_shared_index", a, b)
   def firstSharedProbe(qb: Column, cb: Column, probes: Int): Column =
     call_function("first_shared_probe", qb, cb, lit(probes))
+  /** Exact jaccard of two sorted, distinct arrays: one linear merge. */
   def jaccardSorted(a: Column, b: Column): Column =
     call_function("jaccard_sorted", a, b)
   /** Morton z-order clustering key from two long dimensions (low 32

@@ -27,6 +27,21 @@ import graft.functions.{GraftFunctions, HashFunctions, TextFunctions}
   */
 object Dedup {
 
+  private[graft] val MaxBucketSize = 1000     // LSH bucket cap of boundedByCount (q17, q37 oracles too)
+  private[graft] val LshCosineThreshold = 0.3 // lshBlockedCosinePairs' default cosine cut (q37)
+  private[graft] val SemDedupThreshold = 0.3  // semanticDedup's default cosine cut (q64) ...
+  private[graft] val SemDedupCells = 16       // ... over SemDedupCells k-means cells,
+  private[graft] val SemDedupMaxCell = 1000   // ... a cell past this size skipped whole
+  private[graft] val MinhashK = 64            // minhashLshPairs' signature length ...
+  private[graft] val MinhashBands = 16        // ... in MinhashBands bands
+  private val CandidateEst = 0.2              // MinHash cut ahead of the exact reranks
+
+  /** lshBlockedCosinePairs' (and q37's oracle's) hyperplanes, tuned to
+    * the fixture's cos ≥ 0.3 regime; near-dup at cos ≥ 0.9 wants ≈8 planes.
+    */
+  private[graft] val cosinePlaneSets: Seq[Seq[Seq[Double]]] =
+    (0 until 12).map(t => Similarity.hyperplanes(3, Similarity.Dim, 137L + t))
+
   /** Skew guard shared by the probabilistic block/bucket/cell dedup
     * variants: keep rows whose `keys` population is ≤ `max`, via a
     * count WINDOW rather than a groupBy+anti-join — the downstream
@@ -121,7 +136,7 @@ object Dedup {
         least(col("a.n"), col("b.n")).cast("double") >=
           greatest(col("a.n"), col("b.n")) * threshold - eps)
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        HashFunctions.jaccardPresorted(col("a.toks"), col("b.toks")).as("jaccard"))
+        GraftFunctions.jaccardSorted(col("a.toks"), col("b.toks")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -130,17 +145,16 @@ object Dedup {
     * are ever paired, so the shuffle key is the bucket, not the pair.
     */
   def minhashLshPairs(spark: SparkSession, documents: DataFrame,
-                      shingleSize: Int = 3, k: Int = 64, bands: Int = 16,
                       estimateThreshold: Double = 0.5,
-                      maxBucketSize: Int = 1000): DataFrame = {
+                      maxBucketSize: Int = MaxBucketSize): DataFrame = {
     GraftFunctions.register(spark) // before the eager select analysis
     minhashLshPairsFromShingles(spark,
       documents
         .select(col("doc_id"),
-          HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), shingleSize)
+          GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3)
             .as("shingles"))
         .filter(size(col("shingles")) > 0),
-      k, bands, estimateThreshold, maxBucketSize)
+      estimateThreshold, maxBucketSize)
   }
 
   /** [[minhashLshPairs]] over a PRECOMPUTED (doc_id, shingles) frame —
@@ -162,11 +176,10 @@ object Dedup {
     * guarantees (r16 ADVICE).
     */
   def minhashLshPairsFromShingles(spark: SparkSession, shingled: DataFrame,
-                                  k: Int = 64, bands: Int = 16,
                                   estimateThreshold: Double = 0.5,
-                                  maxBucketSize: Int = 1000): DataFrame = {
+                                  maxBucketSize: Int = MaxBucketSize): DataFrame = {
     GraftFunctions.register(spark)
-    val rowsPerBand = k / bands
+    val rowsPerBand = MinhashK / MinhashBands
     // sigs feeds BOTH bucket self-join sides: materialize the
     // shingle→minhash computation once (r17, guide §5). The signature
     // is the family's hot loop — O(|shingles|·k) per doc — and the
@@ -176,12 +189,12 @@ object Dedup {
     // recomputed per side from materialized sigs instead.
     val sigs = shingled
       .select(col("doc_id"),
-        HashFunctions.minhashSignature(col("shingles"), k).as("sig"))
+        GraftFunctions.minhashSig(col("shingles"), MinhashK).as("sig"))
       .localCheckpoint(true)
 
     val buckets = sigs
       .select(col("doc_id"), col("sig"),
-        posexplode(HashFunctions.bandHashes(col("sig"), bands, rowsPerBand)))
+        posexplode(GraftFunctions.bandHash(col("sig"), MinhashBands, rowsPerBand)))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
 
     // Bound degenerate buckets before the self-join ([[boundedByCount]]
@@ -201,9 +214,9 @@ object Dedup {
         col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
           col("l.doc_id") < col("r.doc_id"))
       .filter(col("l.band") ===
-        GraftFunctions.firstSharedBand(col("l.sig"), col("r.sig"), bands, rowsPerBand))
+        GraftFunctions.firstSharedBand(col("l.sig"), col("r.sig"), MinhashBands, rowsPerBand))
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
-        HashFunctions.minhashJaccardEstimate(col("l.sig"), col("r.sig")).as("est_jaccard"))
+        GraftFunctions.minhashEst(col("l.sig"), col("r.sig")).as("est_jaccard"))
       .filter(col("est_jaccard") >= estimateThreshold)
   }
 
@@ -228,11 +241,9 @@ object Dedup {
     * partitions by size band or uses ordered minhash. Declared limit,
     * same family as q16's fixture blocking.
     */
-  def lshContainmentPairs(spark: SparkSession, documents: DataFrame,
-                          candidateEst: Double = 0.2,
-                          num: Int = 7, den: Int = 10): DataFrame = {
+  def lshContainmentPairs(spark: SparkSession, documents: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
-    val cands = minhashLshPairs(spark, documents, estimateThreshold = candidateEst)
+    val cands = minhashLshPairs(spark, documents, estimateThreshold = CandidateEst)
       .select(col("doc_a"), col("doc_b"))
     val toks = documents.select(col("doc_id"),
       array_sort(array_distinct(split(col("text"), " "))).as("toks"))
@@ -242,20 +253,19 @@ object Dedup {
           .cast("long").as("n_inter"),
         least(size(col("toks_a")), size(col("toks_b")))
           .cast("long").as("n_min"))
-      .filter(col("n_inter") * lit(den.toLong) >= col("n_min") * lit(num.toLong))
+      .filter(col("n_inter") * lit(10L) >= col("n_min") * lit(7L))
   }
 
   def lshBlockedJaccardPairs(spark: SparkSession, documents: DataFrame,
-                             candidateEst: Double = 0.2,
                              threshold: Double = 0.5): DataFrame = {
     GraftFunctions.register(spark)
-    val cands = minhashLshPairs(spark, documents, estimateThreshold = candidateEst)
+    val cands = minhashLshPairs(spark, documents, estimateThreshold = CandidateEst)
       .select(col("doc_a"), col("doc_b"))
     val toks = documents.select(col("doc_id"),
       array_sort(array_distinct(split(col("text"), " "))).as("toks"))
     joinPairSides(cands, toks, "toks")
       .select(col("doc_a"), col("doc_b"),
-        HashFunctions.jaccardPresorted(col("toks_a"), col("toks_b")).as("jaccard"))
+        GraftFunctions.jaccardSorted(col("toks_a"), col("toks_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -292,13 +302,12 @@ object Dedup {
     * computes plain all-pairs-sharing-a-shingle jaccard, so the hash
     * match certifies that prefix filtering is result-preserving.
     */
-  def prefixFilterJaccardPairs(documents: DataFrame, threshold: Double = 0.5,
-                               shingleSize: Int = 3): DataFrame =
+  def prefixFilterJaccardPairs(documents: DataFrame, threshold: Double = 0.5): DataFrame =
     // the shingle-set frame is referenced four times (df aggregation,
     // prefix build, both rerank sides); checkpoint the one expensive
     // pass (tokenize→shingle→sort→distinct) instead of recomputing it
     prefixFilterJaccardPairsFromSets(
-      shingleSets(documents, shingleSize).localCheckpoint(true), threshold)
+      shingleSets(documents).localCheckpoint(true), threshold)
 
   /** The shared sorted-distinct shingle-set frame — (doc_id, sh, n) —
     * [[prefixFilterJaccardPairs]] builds; exposed so a caller running
@@ -314,7 +323,7 @@ object Dedup {
       .filter(size(col("t")) >= shingleSize)
       .select(col("doc_id"),
         array_sort(array_distinct(
-          HashFunctions.wordShingles(col("t"), shingleSize))).as("sh"))
+          GraftFunctions.wordShingles(col("t"), shingleSize))).as("sh"))
       .withColumn("n", size(col("sh")))
   }
 
@@ -353,7 +362,7 @@ object Dedup {
       .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
-        HashFunctions.jaccardPresorted(col("sh_a"), col("sh_b")).as("jaccard"))
+        GraftFunctions.jaccardSorted(col("sh_a"), col("sh_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -399,16 +408,12 @@ object Dedup {
     * scale form of [[ngramJaccardPairs]]: random-hyperplane LSH buckets
     * propose candidate pairs (shuffle key = bucket, never the pair
     * space), then the exact cosine reranks them. Precision is exact;
-    * recall is the hyperplane S-curve — tune `planes` down / `tables`
-    * up for lower thresholds (defaults target the fixture's cos≥0.3
-    * regime; production near-dup at cos≥0.9 wants planes≈8).
+    * recall is the hyperplane S-curve of [[cosinePlaneSets]].
     */
   def lshBlockedCosinePairs(spark: SparkSession, embeddings: DataFrame,
-                            threshold: Double = 0.3, planes: Int = 3,
-                            tables: Int = 12, seed: Long = 137L,
-                            maxBucketSize: Int = 1000): DataFrame = {
+                            threshold: Double = LshCosineThreshold): DataFrame = {
     GraftFunctions.register(spark)
-    val planeSets = Similarity.defaultPlaneSets(planes, tables, 64, seed)
+    val planeSets = cosinePlaneSets
     // the fused bucket computation (tables × planes dot products per
     // vector) feeds BOTH self-join sides: materialize it once (r17,
     // guide §5 — the same seam as minhashLshPairsFromShingles' sigs);
@@ -421,7 +426,7 @@ object Dedup {
       .select(col("vec_id"), col("bks"), posexplode(col("bks")))
       .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
     // window guard — same ReusedExchange rationale as minhashLshPairs
-    val bounded = boundedByCount(buckets, Seq("tbl", "bucket"), maxBucketSize)
+    val bounded = boundedByCount(buckets, Seq("tbl", "bucket"), MaxBucketSize)
     val l = bounded.as("l")
     val r = bounded.as("r")
     // single-emission: each pair only from its first shared table (the
@@ -450,7 +455,7 @@ object Dedup {
     * cosine ≥ `threshold`. Pairwise comparison never leaves a
     * cluster: the all-pairs cost is Σ|cell|², controlled by the cell
     * count (production picks cells ≈ N/targetCellSize; a
-    * `maxCellSize` guard — MIRRORED in the oracle — excludes
+    * `SemDedupMaxCell` guard — MIRRORED in the oracle — excludes
     * degenerate cells outright, the q17/q36/q37 bounded-block
     * contract). Returns the surviving vectors with their cluster and
     * its pre-dedup population.
@@ -462,13 +467,11 @@ object Dedup {
     * reuses for mixture balancing.
     */
   def semanticDedup(spark: SparkSession, embeddings: DataFrame,
-                    threshold: Double = 0.3, cells: Int = 16,
-                    iters: Int = 3, sampleN: Int = 256,
-                    maxCellSize: Int = 1000): DataFrame = {
+                    threshold: Double = SemDedupThreshold): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
-    val centroids = Similarity
-      .sampledKmeansCentroids(spark, embeddings, cells, iters, sampleN)
+    val centroids = Similarity.sampledKmeansCentroids(spark, embeddings,
+        SemDedupCells, Similarity.KmeansIters, Similarity.SampleN)
       .toDF("cell_id", "centroid")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id"))
@@ -484,7 +487,7 @@ object Dedup {
     // left_anti below — without it the centroid crossJoin + nearest-
     // centroid window re-execute for the anti-join's left leg (the
     // same multi-reference seam prefixFilterJaccardPairs checkpoints)
-    val bounded = boundedByCount(assigned, Seq("cell_id"), maxCellSize,
+    val bounded = boundedByCount(assigned, Seq("cell_id"), SemDedupMaxCell,
         keepCountAs = Some("cell_n"))
       .localCheckpoint(true)
     val a = bounded.as("a")
@@ -508,10 +511,9 @@ object Dedup {
     * the candidate set is LSH-bounded, so the quadratic cost applies
     * only to pairs already known to share shingle structure.
     */
-  def lshEditDistancePairs(spark: SparkSession, documents: DataFrame,
-                           candidateEst: Double = 0.2): DataFrame = {
+  def lshEditDistancePairs(spark: SparkSession, documents: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
-    val cands = minhashLshPairs(spark, documents, estimateThreshold = candidateEst)
+    val cands = minhashLshPairs(spark, documents, estimateThreshold = CandidateEst)
       .select(col("doc_a"), col("doc_b"))
     val txt = documents.select(col("doc_id"), col("text"))
     joinPairSides(cands, txt, "text")
@@ -526,7 +528,7 @@ object Dedup {
   /** Cross-document chunk-level dedup via content-defined chunking:
     * each document is split at rolling-hash boundaries
     * ([[graft.functions.HashImpl.cdcChunks]]), and chunks appearing in
-    * ≥ `minDocs` distinct documents are reported — the storage-dedup /
+    * ≥ 2 distinct documents are reported — the storage-dedup /
     * delta-encoding primitive (near-dup documents share most of their
     * chunks even when no exact n-gram alignment exists, because the
     * boundaries follow content and re-synchronize after an edit).
@@ -537,17 +539,15 @@ object Dedup {
     * exchange in production (group by the digest); it is grouped here
     * so the oracle can verify digests directly.
     */
-  def cdcChunkDedup(spark: SparkSession, documents: DataFrame,
-                    window: Int = 16, mask: Int = 63,
-                    minDocs: Int = 2): DataFrame = {
+  def cdcChunkDedup(spark: SparkSession, documents: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     documents
       .select(col("doc_id"),
-        explode(GraftFunctions.cdcChunks(col("text"), window, mask)).as("chunk"))
+        explode(GraftFunctions.cdcChunks(col("text"), 16, 63)).as("chunk"))
       .groupBy(md5(col("chunk")).as("chunk_md5"))
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_occ"))
-      .filter(col("n_docs") >= minDocs)
+      .filter(col("n_docs") >= 2)
   }
 
   /** Embedding-cosine near-dup pairs, blocked by `label` (the ANN-free

@@ -502,7 +502,7 @@ object GraphOps {
     * parallelizes trivially — no per-vertex ordering is needed, unlike
     * exact coreness numbering.
     */
-  def kCore(edges: DataFrame, k: Int = 10, rounds: Int = 4): DataFrame = {
+  def kCore(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     val loop = iterate(edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -575,7 +575,7 @@ object GraphOps {
     * whole edge-scale updates — `rounds` is a ceiling, not a count),
     * and truncation fails loudly — same contract as [[kCore]].
     */
-  def coreNumbers(edges: DataFrame, rounds: Int = 8): DataFrame = {
+  def coreNumbers(edges: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, "coreNumbers needs at least one round")
     val e = edges
       .select(least(col("src"), col("dst")).as("a"),
@@ -654,7 +654,7 @@ object GraphOps {
     * struct-max encodes the count-desc/label-asc tie rule), and both
     * key on v; lineage truncated per round like every GraphOps loop.
     */
-  def labelPropagation(edges: DataFrame, rounds: Int = 5): DataFrame = {
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = {
     val e = edges
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -704,7 +704,7 @@ object GraphOps {
     * follow the q61 precedent: aggregate-sum noise ~1e-15, declared
     * query rounds to r4.
     */
-  def hits(edges: DataFrame, iters: Int = 10): DataFrame = {
+  def hits(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, "hits needs at least one iteration")
     val e = loopCheckpoint(edges.select(col("src"), col("dst")).distinct())
     // NOTE (r13, measured): the q137 one-time-partitioning trick does

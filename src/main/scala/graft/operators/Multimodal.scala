@@ -30,6 +30,8 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
+  private[graft] val ImageMaxHamming = 3 // perceptualNearDupPairs' default cut (q117, q132)
+
   /** A media file: opaque payload + typed metadata. */
   case class MediaRecord(media_id: Long, kind: String, payload: Array[Byte],
                          n_bytes: Long)
@@ -336,7 +338,7 @@ object Multimodal {
     * no distinct() exchange.
     */
   def perceptualNearDupPairs(spark: SparkSession, documents: DataFrame,
-                             maxHamming: Int = 3): DataFrame = {
+                             maxHamming: Int = ImageMaxHamming): DataFrame = {
     import graft.functions.HashFunctions
     require(maxHamming <= 3,
       "perceptualNearDupPairs: the 4x16-bit chunk bucketing is complete " +

@@ -15,6 +15,9 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
+  private[graft] val ErasureModulus = 37                   // erasureAudit cohort: hash ≡ 0 (q169)
+  private[graft] val CupedSplitTs = "2024-01-16 00:00:00"  // abCuped's default split (q167)
+
   /** Multi-aggregate pricing summary (TPC-H Q1 shape): sum/avg/count per
     * (returnflag, linestatus). One shuffle, map-side partials.
     */
@@ -283,7 +286,7 @@ object Relational {
   }
 
   /** Top user journeys: sessionize (30-min gap), take each session's
-    * first `maxLen` event types in time order, and count journeys —
+    * first 5 event types in time order, and count journeys —
     * the path-mining staple. Session assignment is the gaps-and-
     * islands cumulative sum; the path is an ORDER-DETERMINISTIC
     * array built by sorting (ts, event_id) structs inside the session
@@ -292,10 +295,9 @@ object Relational {
     *
     * Scale: sessions are user-bounded; the heavy operation is one
     * window pass per user (same layout as q27/q28) and a path groupBy
-    * whose key space is bounded by |event_types|^maxLen.
+    * whose key space is bounded by |event_types|^5.
     */
-  def topJourneys(events: DataFrame, gapMinutes: Int = 30,
-                  maxLen: Int = 5, k: Int = 20): DataFrame = {
+  def topJourneys(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
@@ -305,7 +307,7 @@ object Relational {
         when(lag(col("ts"), 1).over(byUser).isNull ||
           unix_timestamp(col("ts")) -
             unix_timestamp(lag(col("ts"), 1).over(byUser)) >
-            gapMinutes * 60L, 1L).otherwise(0L))
+            30 * 60L, 1L).otherwise(0L))
       .withColumn("sess", sum(col("brk")).over(
         byUser.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
     val paths = marked
@@ -314,10 +316,10 @@ object Relational {
         col("event_type"))).as("evs"))
       .select(concat_ws(">",
         slice(expr("transform(array_sort(evs), e -> e.event_type)"),
-          1, maxLen)).as("path"))
+          1, 5)).as("path"))
     paths.groupBy("path").agg(count(lit(1)).as("n_sessions"))
       .orderBy(col("n_sessions").desc, col("path").asc)
-      .limit(k)
+      .limit(20)
   }
 
   def mergeApply(base: DataFrame, changes: DataFrame,
@@ -524,8 +526,7 @@ object Relational {
     * keyed on the basket id so pairs never leave their partition
     * until the (a,b) support aggregate.
     */
-  def marketBasketPairs(lineitem: DataFrame, minSupport: Long = 3,
-                        topK: Int = 50): DataFrame = {
+  def marketBasketPairs(lineitem: DataFrame): DataFrame = {
     // (oid, part) basket items feed FIVE consumers (pair self-join ×2,
     // part frequency ×2 via aliased projections, order count); without
     // materialization each re-derives the scan+distinct — the r16 plan
@@ -541,7 +542,7 @@ object Relational {
         col("a.oid") === col("b.oid") && col("a.part") < col("b.part"))
       .groupBy(col("a.part").as("part_a"), col("b.part").as("part_b"))
       .agg(count(lit(1)).as("support"))
-      .filter(col("support") >= minSupport)
+      .filter(col("support") >= 3L)
     val scored = pairs
       .join(freq.select(col("part").as("part_a"), col("cnt").as("cnt_a")),
         "part_a")
@@ -559,7 +560,7 @@ object Relational {
     // the trivial window
     scored.orderBy(col("support").desc, col("part_a").asc,
         col("part_b").asc)
-      .limit(topK)
+      .limit(50)
       .withColumn("rank", row_number().over(w).cast("long"))
       .select(col("rank"), col("part_a"), col("part_b"), col("support"),
         col("cnt_a"), col("cnt_b"),
@@ -582,12 +583,12 @@ object Relational {
     * writes.
     */
   def erasureAudit(customer: DataFrame, orders: DataFrame,
-                   lineitem: DataFrame, modulus: Int = 37): DataFrame = {
+                   lineitem: DataFrame): DataFrame = {
     val spark = customer.sparkSession
     graft.functions.GraftFunctions.register(spark)
     val cohort = customer.filter(
       pmod(graft.functions.GraftFunctions.hash64Seeded(lit(13L),
-        col("c_custkey").cast("string")), lit(modulus.toLong)) === 0L)
+        col("c_custkey").cast("string")), lit(ErasureModulus.toLong)) === 0L)
       .select(col("c_custkey"))
     val ords = orders.join(cohort, col("o_custkey") === col("c_custkey"))
       .select(col("o_orderkey"), col("o_custkey"))
@@ -627,7 +628,7 @@ object Relational {
     * KB-scale moment aggregate, one broadcast back. The experiment
     * readout is a 2-row frame.
     */
-  def abCuped(events: DataFrame, splitTs: String = "2024-01-16 00:00:00")
+  def abCuped(events: DataFrame, splitTs: String = CupedSplitTs)
       : DataFrame = {
     val spark = events.sparkSession
     graft.functions.GraftFunctions.register(spark)
@@ -699,11 +700,10 @@ object Relational {
     * curve fold touches one bounded list. Nothing scans history
     * twice.
     */
-  def kaplanMeier(events: DataFrame, startType: String = "view",
-                  eventType: String = "purchase"): DataFrame = {
-    val v = events.filter(col("event_type") === startType)
+  def kaplanMeier(events: DataFrame): DataFrame = {
+    val v = events.filter(col("event_type") === "view")
       .groupBy(col("user_id")).agg(min(col("ts")).as("t0"))
-    val p = events.filter(col("event_type") === eventType).as("e")
+    val p = events.filter(col("event_type") === "purchase").as("e")
       .join(v.as("v"), col("e.user_id") === col("v.user_id"))
       .filter(col("e.ts") > col("t0"))
       .groupBy(col("e.user_id").as("user_id"))
@@ -746,7 +746,7 @@ object Relational {
     * batch-boundary form of q28's session windows, and the IVM
     * pattern (q105) applied to gaps-and-islands: sessionize each
     * ingest chunk INDEPENDENTLY, carry the per-user sessions still
-    * open at the boundary (s_end within `gapMin` of the split), and
+    * open at the boundary (s_end within the 30-minute gap of the split), and
     * stitch: a chunk-B first session merges into the carried session
     * iff its first event falls within the gap of the carried end —
     * closed-A sessions can never merge because closure already
@@ -759,9 +759,8 @@ object Relational {
     * bounded chunk per run plus an O(users) carry frame, instead of
     * re-sorting all history; each chunk's windows partition by user.
     */
-  def incrementalSessions(events: DataFrame, splitTs: String,
-                          gapMin: Int = 30): DataFrame = {
-    val gapUs = gapMin * 60000000L
+  def incrementalSessions(events: DataFrame, splitTs: String): DataFrame = {
+    val gapUs = 30 * 60000000L
     def sessionize(df: DataFrame): DataFrame = {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts"), col("event_id"))
@@ -825,16 +824,15 @@ object Relational {
     * side of the PII family (q38/q90/q144 find identifiers; this
     * finds RE-identification risk): group individuals by their
     * quasi-identifier tuple (nation, market segment, balance band)
-    * and flag groups smaller than k (re-identifiable, Sweeney 2002)
-    * or with fewer than l distinct sensitive values (attribute
+    * and flag groups smaller than k = 5 (re-identifiable, Sweeney 2002)
+    * or with fewer than l = 2 distinct sensitive values (attribute
     * disclosure, Machanavajjhala 2007 — here the binary "in debt"
     * flag: an l=1 group tells you every member's status).
     *
     * Scale: one groupBy on the QI tuple (map-side combined), one
     * distinct-count; the report is |QI-space| rows. No joins.
     */
-  def kAnonymityAudit(customer: DataFrame, orders: DataFrame,
-                      k: Int = 5, l: Int = 2): DataFrame = {
+  def kAnonymityAudit(customer: DataFrame, orders: DataFrame): DataFrame = {
     // sensitive value per individual: FIRST order's priority —
     // independent of the QI tuple (a sensitive attribute the QI can
     // derive is l=1 by construction and audits nothing)
@@ -857,8 +855,8 @@ object Relational {
         countDistinct(col("sensitive")).as("l_distinct"))
       .select(col("nation"), col("segment"), col("bal_bucket"), col("n"),
         col("l_distinct"),
-        (col("n") < k).as("at_risk_k"),
-        (col("l_distinct") < l).as("at_risk_l"))
+        (col("n") < 5).as("at_risk_k"),
+        (col("l_distinct") < 2).as("at_risk_l"))
   }
 
   /** Peak concurrency per day (q154) — the classic interval sweep
@@ -919,15 +917,14 @@ object Relational {
         col("carry_in"), col("n_starts"), col("n_ends"), col("peak"))
   }
 
-  def touchAttribution(events: DataFrame,
-                       lookback: String = "1 hour"): DataFrame = {
+  def touchAttribution(events: DataFrame): DataFrame = {
     val touches = events.filter(col("event_type").isin("click", "view"))
       .select(col("user_id"), col("ts").as("t_ts"),
         col("event_id").as("t_id"), col("event_type").as("t_type"))
     val purchases = events.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts").as("p_ts"),
         col("event_id").as("p_id"), col("value"))
-    val cond = col("t_ts") >= col("p_ts") - expr(s"INTERVAL $lookback") &&
+    val cond = col("t_ts") >= col("p_ts") - expr("INTERVAL 1 hour") &&
       col("t_ts") < col("p_ts")
     val matched = purchases.join(touches, Seq("user_id"))
       .filter(cond)

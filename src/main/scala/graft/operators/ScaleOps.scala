@@ -347,7 +347,7 @@ object ScaleOps {
     * [[MaxGroupsPerPartition]] and [[MaxGroupsTotal]]) and scanned
     * into exclusive offsets;
     * (2) a per-partition running state seeded with each group's
-    * offset. Returns rank-in-group (`rankCol`) and the inclusive
+    * offset. Returns rank-in-group (`rk`) and the inclusive
     * per-group running sum (`cumCol`), both LongType.
     *
     * `groupCols` must be a BOUNDED key set; `orderCols` must make
@@ -356,11 +356,11 @@ object ScaleOps {
     */
   def groupedCumSum(df: DataFrame, groupCols: Seq[String],
                     orderCols: Seq[Column], valueCol: String,
-                    cumCol: String = "cum", rankCol: String = "rk",
+                    cumCol: String = "cum",
                     partitions: Int = 0): DataFrame = {
     require(groupCols.nonEmpty, "groupedCumSum needs a group column")
-    require(!df.columns.contains(cumCol) && !df.columns.contains(rankCol),
-      s"groupedCumSum: output column $cumCol/$rankCol already exists")
+    require(!df.columns.contains(cumCol) && !df.columns.contains("rk"),
+      s"groupedCumSum: output column $cumCol/rk already exists")
     val n = if (partitions > 0) partitions
             else df.sparkSession.sessionState.conf.numShufflePartitions
     val ordered = groupCols.map(col(_).asc) ++ orderCols
@@ -395,7 +395,7 @@ object ScaleOps {
     val offB = df.sparkSession.sparkContext.broadcast(offsets)
     val schema = org.apache.spark.sql.types.StructType(
       ranged.schema.fields :+
-        org.apache.spark.sql.types.StructField(rankCol,
+        org.apache.spark.sql.types.StructField("rk",
           org.apache.spark.sql.types.LongType, nullable = false) :+
         org.apache.spark.sql.types.StructField(cumCol,
           org.apache.spark.sql.types.LongType, nullable = false))

@@ -24,6 +24,22 @@ import graft.functions.GraftFunctions
   */
 object Similarity {
 
+  // Fixed parameters of the operators below; the DuckDB oracles
+  // (OracleHashSql) read the same values.
+  private[graft] val Dim = 64         // embedding width of the fixture corpus
+  private[graft] val IvfCells = 16    // IVF cells of ivfTopK, ivfTopKTrained, ivfPqTopK
+  private[graft] val IvfProbes = 4    // IVF cells probed per query
+  private[graft] val SampleN = 256    // vectors the driver-side trainers fit (first by id)
+  private[graft] val KmeansIters = 3  // Lloyd rounds of q44's and q64's centroids
+  private[graft] val PqM = 8          // PQ subspaces (q129, ivfPqTopK) ...
+  private[graft] val PqKs = 16        // ... of PqKs centroids each,
+  private[graft] val PqIters = 2      // ... trained in PqIters Lloyd rounds (ivfPqTopK's cells too);
+  private[graft] val PqTopC = 100     // ADC candidates reranked by exact cosine
+  private[graft] val MmrK = 5         // mmrRerank's default depth ...
+  private[graft] val MmrCand = 20     // ... and candidate pool
+  private[graft] val KCenterK = 8     // kCenterCoreset's default coreset size
+  private[graft] val AnnProbes = 3    // annTopK's single-bit-flip probes per table
+
   private def cos(a: Column, b: Column): Column = GraftFunctions.cosineSim(a, b)
 
   /** Exact top-k neighbors for each query vector (self excluded). */
@@ -53,11 +69,11 @@ object Similarity {
     * and the only shuffle is the candidate→corpus join on neighbor_id.
     */
   def prefixRerankTopK(spark: SparkSession, embeddings: DataFrame,
-                       queries: DataFrame, k: Int, prefixDim: Int = 16,
+                       queries: DataFrame, k: Int,
                        shortlist: Int = 50): DataFrame = {
     GraftFunctions.register(spark)
     def cut(df: DataFrame): DataFrame =
-      df.withColumn("embedding", slice(col("embedding"), 1, prefixDim))
+      df.withColumn("embedding", slice(col("embedding"), 1, 16))
     val cand = bruteForceTopK(spark, cut(embeddings), cut(queries), shortlist)
       .select(col("query_id"), col("neighbor_id"))
     val q = queries.select(col("vec_id").as("query_id"),
@@ -97,19 +113,19 @@ object Similarity {
   }
 
   /** IVF (inverted-file) ANN top-k: partition the corpus into cells
-    * around deterministic centroids (the first `cells` vectors by id —
-    * a seedless stand-in for k-means centroids; at scale you'd train
-    * centroids once and persist them), probe each query's `nProbe`
+    * around deterministic centroids (the first `IvfCells` vectors by id
+    * — a seedless stand-in for k-means centroids; at scale you'd train
+    * centroids once and persist them), probe each query's `IvfProbes`
     * nearest cells, exact-rerank candidates. The corpus assignment is a
     * one-off linear pass reusable across queries; query cost scales
     * with probed-cell population, not corpus size.
     */
   def ivfTopK(spark: SparkSession, embeddings: DataFrame, queries: DataFrame,
-              k: Int, cells: Int = 16, nProbe: Int = 4): DataFrame = {
+              k: Int): DataFrame = {
     GraftFunctions.register(spark)
-    val centroids = embeddings.orderBy(col("vec_id")).limit(cells)
+    val centroids = embeddings.orderBy(col("vec_id")).limit(IvfCells)
       .select(col("vec_id").as("cell_id"), col("embedding").as("centroid"))
-    ivfWithCentroids(embeddings, queries, k, nProbe, centroids)
+    ivfWithCentroids(embeddings, queries, k, IvfProbes, centroids)
   }
 
   /** IVF probe/rerank against an explicit (cell_id, centroid) table —
@@ -214,36 +230,32 @@ object Similarity {
     * of first-N-by-id.
     */
   def ivfTopKTrained(spark: SparkSession, embeddings: DataFrame,
-                     queries: DataFrame, k: Int, cells: Int = 16,
-                     nProbe: Int = 4, iters: Int = 3,
-                     sampleN: Int = 256): DataFrame = {
+                     queries: DataFrame, k: Int): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
-    val cents = sampledKmeansCentroids(spark, embeddings, cells, iters, sampleN)
+    val cents = sampledKmeansCentroids(spark, embeddings, IvfCells, KmeansIters, SampleN)
     val centroids = cents.toDF("cell_id", "centroid")
-    ivfWithCentroids(embeddings, queries, k, nProbe, centroids)
+    ivfWithCentroids(embeddings, queries, k, IvfProbes, centroids)
   }
 
-  /** ANN top-k via multi-table random-hyperplane LSH: `tables`
-    * independent plane sets, each mapping a vector to a `planes`-bit
-    * bucket; a query compares only against vectors sharing a bucket in
-    * ANY table (plus `probes` single-bit-flip neighbor buckets per
+  /** annTopK's plane sets — shared with q21's oracle so both sides
+    * hash identical constants.
+    */
+  private[graft] val annPlaneSets: Seq[Seq[Seq[Double]]] =
+    (0 until 8).map(t => hyperplanes(6, Dim, 42L + t))
+
+  /** ANN top-k via multi-table random-hyperplane LSH ([[annPlaneSets]]:
+    * 8 independent plane sets, each mapping a vector to a 6-bit bucket);
+    * a query compares only against vectors sharing a bucket in ANY
+    * table (plus `AnnProbes` single-bit-flip neighbor buckets per
     * table), exact-reranked. Recall grows as 1-(1-p^planes)^tables —
-    * tune tables for recall, planes for candidate-set size. Returns the
+    * tables buy recall, planes shrink the candidate set. Returns the
     * same shape as bruteForceTopK.
     */
-  /** The exact plane sets annTopK uses for its default parameters —
-    * shared with the oracle so both sides hash identical constants.
-    */
-  private[graft] def defaultPlaneSets(planes: Int = 6, tables: Int = 8,
-                                      dim: Int = 64, seed: Long = 42L): Seq[Seq[Seq[Double]]] =
-    (0 until tables).map(t => hyperplanes(planes, dim, seed + t))
-
   def annTopK(spark: SparkSession, embeddings: DataFrame, queries: DataFrame,
-              k: Int, planes: Int = 6, tables: Int = 8, probes: Int = 3,
-              dim: Int = 64, seed: Long = 42L): DataFrame = {
+              k: Int): DataFrame = {
     GraftFunctions.register(spark)
-    val planeSets = defaultPlaneSets(planes, tables, dim, seed)
+    val planeSets = annPlaneSets
     // corpus: one fused pass computes every table's bucket (custom
     // codegen expression); the full bucket array rides along so the
     // single-emission filter below can recheck collisions per-row
@@ -254,7 +266,7 @@ object Similarity {
       .withColumnsRenamed(Map("pos" -> "tbl", "col" -> "bucket"))
     // queries: own bucket + single-bit-flip probe buckets per table;
     // posexplode keeps the probe index for the canonical-first filter
-    val probeFlips = array((lit(0L) +: (0 until probes).map(i => lit(1L << i))): _*)
+    val probeFlips = array((lit(0L) +: (0 until AnnProbes).map(i => lit(1L << i))): _*)
     val q = queries
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         lshBucketsFused(col("embedding"), planeSets).as("qbs"))
@@ -270,8 +282,8 @@ object Similarity {
     // Same contract as Dedup.lshBlockedCosinePairs / minhashLshPairs.
     q.join(corpus, Seq("tbl", "bucket"))
       .filter(col("query_id") =!= col("neighbor_id") &&
-        GraftFunctions.firstSharedProbe(col("qbs"), col("cb"), probes) ===
-          col("tbl") * (probes + 1) + col("probe"))
+        GraftFunctions.firstSharedProbe(col("qbs"), col("cb"), AnnProbes) ===
+          col("tbl") * (AnnProbes + 1) + col("probe"))
       .select(col("query_id"), col("neighbor_id"), cos(col("qv"), col("cv")).as("cos"))
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("query_id"))
@@ -411,7 +423,7 @@ object Similarity {
     * is k vectors by construction.
     */
   def kCenterCoreset(spark: SparkSession, embeddings: DataFrame,
-                     k: Int = 8): DataFrame = {
+                     k: Int = KCenterK): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
     // x feeds every greedy round's scan AND the final assignment pass —
@@ -481,8 +493,8 @@ object Similarity {
     * by the relevance scan.
     */
   def mmrRerank(spark: SparkSession, embeddings: DataFrame,
-                queries: DataFrame, k: Int = 5, cand: Int = 20,
-                lambda: Double = 0.5): DataFrame = {
+                queries: DataFrame, k: Int = MmrK,
+                cand: Int = MmrCand): DataFrame = {
     GraftFunctions.register(spark)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qv"))
@@ -513,7 +525,7 @@ object Similarity {
         .agg(first(col("cv")).as("cv"), first(col("rel")).as("rel"),
           max(col("sim")).as("max_sim"))
         .withColumn("mmr",
-          lit(lambda) * col("rel") - lit(1 - lambda) * col("max_sim"))
+          lit(0.5) * col("rel") - lit(0.5) * col("max_sim"))
         .withColumn("rn", row_number().over(wMmr))
         .filter(col("rn") === 1)
         .select(col("query_id"), col("cid"), col("cv"), col("rel"),
@@ -573,8 +585,8 @@ object Similarity {
         col("neighbor_id"), col("hamming"), col("cos"))
   }
 
-  def randomProjection(embeddings: DataFrame, k: Int = 16, d: Int = 64): DataFrame = {
-    val signs = projSigns(k, d)
+  def randomProjection(embeddings: DataFrame, k: Int = 16): DataFrame = {
+    val signs = projSigns(k, Dim)
     val q = GraftFunctions.quantizeI8(col("embedding"))
     val comps = signs.zipWithIndex.map { case (sj, j) =>
       val sLit = array(sj.map(v => lit(v.toLong)): _*)
@@ -639,9 +651,8 @@ object Similarity {
     * top-r principal directions (centered).
     */
   def pcaProject(spark: SparkSession, embeddings: DataFrame,
-                 r: Int = 4, dim: Int = 64,
-                 iters: Int = PcaPowerIters): DataFrame = {
-    val model = pcaPowerModel(spark, embeddings, r, dim, iters)
+                 r: Int = 4): DataFrame = {
+    val model = pcaPowerModel(spark, embeddings, r)
     val comps = model.eigvecs.take(r).zipWithIndex.map { case (v, j) =>
       val vLit = array(v.toIndexedSeq.map(x => lit(x)): _*)
       val mLit = array(model.mean.toIndexedSeq.map(x => lit(x)): _*)
@@ -719,10 +730,9 @@ object Similarity {
   /** [[pcaModel]]'s covariance + mean, eigen-solved by [[powerBasis]]
     * instead of Jacobi — the hash-certifiable variant q125 declares.
     */
-  def pcaPowerModel(spark: SparkSession, embeddings: DataFrame, r: Int,
-                    dim: Int = 64, iters: Int = PcaPowerIters): PcaModel = {
-    val (mean, cov) = covarianceMoments(spark, embeddings, dim)
-    val (vals, vecs) = powerBasis(cov, r, iters)
+  def pcaPowerModel(spark: SparkSession, embeddings: DataFrame, r: Int): PcaModel = {
+    val (mean, cov) = covarianceMoments(spark, embeddings, Dim)
+    val (vals, vecs) = powerBasis(cov, r, PcaPowerIters)
     PcaModel(mean, vals, vecs)
   }
 
@@ -731,7 +741,7 @@ object Similarity {
     * Jacobi — the orthodox route for d ≤ a few hundred.
     */
   private[graft] def pcaModel(spark: SparkSession, embeddings: DataFrame,
-                              dim: Int = 64): PcaModel = {
+                              dim: Int = Dim): PcaModel = {
     val (mean, cov) = covarianceMoments(spark, embeddings, dim)
     val (vals, vecs) = jacobiEigen(cov)
     PcaModel(mean, vals, vecs)
@@ -890,7 +900,7 @@ object Similarity {
     * (argmin-L2 per subspace against its codebook), and a query scores
     * a vector by summing m lookup-table entries (asymmetric distance
     * computation: LUT[j][code_j] = ⟨q_j, c_{j,code_j}⟩) instead of a
-    * dim-wide float op. Top-`topC` ADC candidates per query are then
+    * dim-wide float op. Top-`PqTopC` ADC candidates per query are then
     * reranked by EXACT cosine; precision of the final top-k is exact
     * given the candidates, recall is the PQ approximation (spec-bounded
     * against brute force).
@@ -932,12 +942,10 @@ object Similarity {
         })))
 
   def pqAdcTopK(spark: SparkSession, embeddings: DataFrame,
-                queries: DataFrame, k: Int = 10, m: Int = 8, ks: Int = 16,
-                iters: Int = 2, sampleN: Int = 256, topC: Int = 100,
-                dim: Int = 64): DataFrame = {
+                queries: DataFrame, k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)
-    val ds = dim / m
-    val cb = sampledPqCodebooks(spark, embeddings, m, ks, iters, sampleN, dim)
+    val (m, ks, ds) = (PqM, PqKs, Dim / PqM)
+    val cb = sampledPqCodebooks(spark, embeddings, m, ks, PqIters, SampleN, Dim)
     val cbLit = typedlit(cb)
     // squared-L2 distances of every subvector to every centroid of its
     // subspace: m × ks doubles per row, one codegen pass
@@ -961,7 +969,7 @@ object Similarity {
     val cands = scored
       .withColumn("crank", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("adc").desc, col("neighbor_id").asc)))
-      .filter(col("crank") <= topC)
+      .filter(col("crank") <= PqTopC)
     cands
       .select(col("query_id"), col("neighbor_id"), cos(col("qv"), col("cv")).as("cos"))
       .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
@@ -977,21 +985,18 @@ object Similarity {
     * Cells come from [[sampledKmeansCentroids]] (cosine), codes/LUT
     * from [[sampledPqCodebooks]] (L2) — both driver-trained over
     * bounded samples, both broadcast as literals/small frames. Exact
-    * cosine reranks the ADC top-`topC`. Recall vs brute force is
+    * cosine reranks the ADC top-`PqTopC`. Recall vs brute force is
     * spec-bounded (SimilaritySpec); the oracle-gated core is
     * [[pqAdcTopK]] (q129), which is this minus the cell restriction.
     */
   def ivfPqTopK(spark: SparkSession, embeddings: DataFrame,
-                queries: DataFrame, k: Int = 10, cells: Int = 16,
-                nProbe: Int = 4, m: Int = 8, ks: Int = 16,
-                iters: Int = 2, sampleN: Int = 256, topC: Int = 100,
-                dim: Int = 64): DataFrame = {
+                queries: DataFrame, k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
-    val ds = dim / m
-    val cb = sampledPqCodebooks(spark, embeddings, m, ks, iters, sampleN, dim)
+    val (m, ks, ds) = (PqM, PqKs, Dim / PqM)
+    val cb = sampledPqCodebooks(spark, embeddings, m, ks, PqIters, SampleN, Dim)
     val cbLit = typedlit(cb)
-    val cents = sampledKmeansCentroids(spark, embeddings, cells, iters, sampleN)
+    val cents = sampledKmeansCentroids(spark, embeddings, IvfCells, PqIters, SampleN)
     val centroids = broadcast(cents.toDF("cell_id", "centroid"))
     val wc = Window.partitionBy(col("vec_id"))
       .orderBy(col("cdist").desc, col("cell_id").asc)
@@ -1011,7 +1016,7 @@ object Similarity {
       .select(col("vec_id"), col("embedding"), col("cell_id"),
         cos(col("embedding"), col("centroid")).as("cdist"))
       .withColumn("crank", row_number().over(wc))
-      .filter(col("crank") <= nProbe)
+      .filter(col("crank") <= IvfProbes)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
         col("cell_id"), pqLut(cbLit, col("embedding"), m, ks, ds).as("lut"))
     val scored = codes.join(broadcast(q), Seq("cell_id"))
@@ -1022,7 +1027,7 @@ object Similarity {
     scored
       .withColumn("arank", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("adc").desc, col("neighbor_id").asc)))
-      .filter(col("arank") <= topC)
+      .filter(col("arank") <= PqTopC)
       .select(col("query_id"), col("neighbor_id"), cos(col("qv"), col("cv")).as("cos"))
       .withColumn("rank", row_number().over(Window.partitionBy(col("query_id"))
         .orderBy(col("cos").desc, col("neighbor_id").asc)))

@@ -15,8 +15,20 @@ import graft.functions.{GraftFunctions, TextFunctions}
   */
 object Sketches {
 
+  // Sketch sizes; the DuckDB oracles and the streaming twins
+  // (StreamingHeavyHitters) read the same values.
+  private[graft] val CmsDepth = 4               // q52's count-min rows ...
+  private[graft] val CmsWidth = 1024            // ... of CmsWidth counters,
+  private[graft] val CmsTopK = 50               // ... reported on the exact top tokens
+  private[graft] val HllP = 8                   // 2^HllP HLL registers (q69, q135)
+  private[graft] val RollupLabel = "ALL"        // q135's union-level group label
+  private[graft] val KmvK = 64                  // KMV hashes kept per source (q95)
+  private[graft] val SpaceSavingCapacity = 64   // SpaceSaving counters per group (q126)
+  private[graft] val SpaceSavingTopK = 5        // SpaceSaving tokens reported per group
+  private[graft] val MrlK = 64                  // MRL quantile-sketch buffer (q128)
+
   /** Count-min sketch over the corpus token stream, reported on the
-    * exact top-`k` tokens so the estimate sits next to its ground
+    * exact top-`CmsTopK` tokens so the estimate sits next to its ground
     * truth: (token, exact count, CMS estimate). The estimate
     * upper-bounds the truth (one-sided error); with width 1024 and
     * depth 4 the expected overcount is ≤ e·N/width per row, and the
@@ -29,17 +41,15 @@ object Sketches {
     * here only to verify the sketch; production keeps the sketch and
     * drops the exact pass).
     */
-  def cmsHeavyHitters(spark: SparkSession, documents: DataFrame,
-                      depth: Int = 4, width: Int = 1024,
-                      k: Int = 50): DataFrame = {
+  def cmsHeavyHitters(spark: SparkSession, documents: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     val toks = documents
       .select(explode(TextFunctions.wsTokens(col("text"))).as("token"))
-    val rows = spark.range(depth).select(col("id").as("r"))
+    val rows = spark.range(CmsDepth).select(col("id").as("r"))
     def cell(token: org.apache.spark.sql.Column) =
-      pmod(GraftFunctions.hash64Seeded(col("r"), token), lit(width.toLong))
+      pmod(GraftFunctions.hash64Seeded(col("r"), token), lit(CmsWidth.toLong))
 
-    // depth copies of the token stream -> (row, cell) counters; the
+    // CmsDepth copies of the token stream -> (row, cell) counters; the
     // groupBy's map-side combine is the per-partition sketch build
     val counters = toks.crossJoin(broadcast(rows))
       .select(col("r"), cell(col("token")).as("cell"))
@@ -47,7 +57,7 @@ object Sketches {
       .agg(count(lit(1)).as("c"))
 
     val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("cnt"))
-    val top = exact.orderBy(col("cnt").desc, col("token").asc).limit(k)
+    val top = exact.orderBy(col("cnt").desc, col("token").asc).limit(CmsTopK)
 
     top.crossJoin(broadcast(rows))
       .select(col("token"), col("cnt"), col("r"),
@@ -133,7 +143,7 @@ object Sketches {
   }
 
   def hllDistinct(df: DataFrame, keyCol: String, groupCol: String,
-                  p: Int = 8): DataFrame = {
+                  p: Int = HllP): DataFrame = {
     require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
     val est = hllEstimates(hllRegisters(df, keyCol, col(groupCol), p), p)
     val exact = df.groupBy(col(groupCol).as("grp"))
@@ -144,40 +154,36 @@ object Sketches {
   }
 
   /** HLL rollup FROM SKETCHES (q135): the per-group registers are
-    * max-merged per bucket into a `rollupLabel` union sketch, and
+    * max-merged per bucket into a `RollupLabel` union sketch, and
     * both levels are estimated from registers alone — the raw keys
     * are touched exactly once (the register frame is checkpointed:
-    * groups × 2^p rows, KBs). This is the property that makes HLL the
+    * groups × 2^HllP rows, KBs). This is the property that makes HLL the
     * production distinct-counter: pre-aggregated per-partition (per
     * day, per source) sketches re-roll to any coarser grain without
     * revisiting data, and the merged estimate is BIT-IDENTICAL to the
     * sketch built directly on the union (max-merge is exactly what
     * the direct build computes). Exact counts ride along per level
-    * for the oracle. `rollupLabel` must not collide with a real group
-    * value (groups are compared as strings for the shared label
-    * column) — pick a sentinel outside the domain.
+    * for the oracle. `RollupLabel` must not collide with a real group value
+    * (groups are compared as strings for the shared label column).
     */
-  def hllDistinctRollup(df: DataFrame, keyCol: String, groupCol: String,
-                        p: Int = 8, rollupLabel: String = "ALL"): DataFrame = {
-    require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
+  def hllDistinctRollup(df: DataFrame, keyCol: String, groupCol: String): DataFrame = {
     // tiny frame (groups × occupied buckets); checkpointing it keeps
     // the full-table register build single-pass even though the union
     // below references it twice
-    val regs = hllRegisters(df, keyCol, col(groupCol).cast("string"), p)
+    val regs = hllRegisters(df, keyCol, col(groupCol).cast("string"), HllP)
       .localCheckpoint(true)
     // a real group equal to the sentinel would fan out the exact/est
     // join and silently corrupt the rollup — fail loudly instead; the
     // scan is over the tiny checkpointed register frame, not the data
-    require(regs.filter(col("grp") === lit(rollupLabel)).isEmpty,
-      s"rollupLabel '$rollupLabel' collides with a real value of " +
-        s"$groupCol — pick a sentinel outside the group domain")
+    require(regs.filter(col("grp") === lit(RollupLabel)).isEmpty,
+      s"rollup label '$RollupLabel' collides with a real value of $groupCol")
     val merged = regs.groupBy(col("bucket")).agg(max(col("r")).as("r"))
-      .select(lit(rollupLabel).as("grp"), col("bucket"), col("r"))
-    val est = hllEstimates(regs.unionByName(merged), p)
+      .select(lit(RollupLabel).as("grp"), col("bucket"), col("r"))
+    val est = hllEstimates(regs.unionByName(merged), HllP)
     val exact = df.groupBy(col(groupCol).cast("string").as("grp"))
       .agg(countDistinct(col(keyCol)).as("n_exact"))
       .unionByName(df.agg(countDistinct(col(keyCol)).as("n_exact"))
-        .select(lit(rollupLabel).as("grp"), col("n_exact")))
+        .select(lit(RollupLabel).as("grp"), col("n_exact")))
     exact.join(est, Seq("grp"))
       .select(col("grp"), col("n_exact"), col("nz"),
         (floor(col("hll_raw") * 10000 + lit(0.5)) / 10000).as("hll_est"))
@@ -279,8 +285,7 @@ object Sketches {
     * the oracle matches bit-for-bit.
     */
   def histogramQuantiles(df: DataFrame, valueCol: String, groupCol: String,
-                         width: Double = 1000.0,
-                         qs: Seq[Double] = Seq(0.25, 0.5, 0.75, 0.95)): DataFrame = {
+                         width: Double = 1000.0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bins = df
       .groupBy(col(groupCol).as("grp"),
@@ -292,7 +297,7 @@ object Sketches {
     val c = bins
       .withColumn("cum", sum(col("cnt")).over(wCum))
       .withColumn("n", sum(col("cnt")).over(wAll))
-    val picks = qs.map { q =>
+    val picks = Seq(0.25, 0.5, 0.75, 0.95).map { q =>
       min(when(col("cum") >= ceil(lit(q) * col("n")),
         (col("bin") + lit(1)) * lit(width))).as(s"p${(q * 100).round}")
     }
@@ -320,7 +325,7 @@ object Sketches {
     * q52's CMS-vs-exact layout.
     */
   def kmvSourceOverlap(spark: SparkSession, documents: DataFrame,
-                       k: Int = 64): DataFrame = {
+                       k: Int = KmvK): DataFrame = {
     GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val toks = documents
@@ -400,7 +405,7 @@ object Sketches {
   /** Per-customer order-value quantiles via the MRL mergeable quantile
     * sketch (q128) — the "per-entity percentile profile" one-pass
     * report. The typed Aggregator partial-aggregates each task's slice
-    * into an O(k·log(n/k)) sketch BEFORE the exchange, so the shuffle
+    * into an O(k·log(n/k)) sketch (k = MrlK) BEFORE the exchange, so the shuffle
     * carries sketches, never the value multiset — the quantile sibling
     * of q126's SpaceSaving and q63's fixed-width histogram (which
     * needs a known value range; MRL doesn't). Per-customer groups are
@@ -410,10 +415,9 @@ object Sketches {
     * `quantile_disc` index rule bit-for-bit; the approximate regime's
     * rank-error bound is property-tested in SketchesSpec.
     */
-  def mrlQuantilesPerCustomer(spark: SparkSession, orders: DataFrame,
-                              k: Int = 64): DataFrame = {
+  def mrlQuantilesPerCustomer(spark: SparkSession, orders: DataFrame): DataFrame = {
     val probs = Seq(0.25, 0.5, 0.75, 0.95)
-    val mrl = udaf(new graft.functions.Aggregators.MrlQuantiles(k, probs))
+    val mrl = udaf(new graft.functions.Aggregators.MrlQuantiles(MrlK, probs))
     orders
       .select(col("o_custkey"), col("o_totalprice").cast("double").as("v"))
       .groupBy("o_custkey")
@@ -426,16 +430,15 @@ object Sketches {
       .orderBy("o_custkey")
   }
 
-  def spaceSavingTopTokens(spark: SparkSession, documents: DataFrame,
-                           capacity: Int = 64, k: Int = 5): DataFrame = {
-    val ss = udaf(new graft.functions.Aggregators.SpaceSavingTopK(capacity))
+  def spaceSavingTopTokens(spark: SparkSession, documents: DataFrame): DataFrame = {
+    val ss = udaf(new graft.functions.Aggregators.SpaceSavingTopK(SpaceSavingCapacity))
     documents
       .select(col("source"),
         explode(split(lower(col("text")), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy("source").agg(ss(col("tok")).as("top"))
       .select(col("source"), posexplode(col("top")))
-      .filter(col("pos") < k)
+      .filter(col("pos") < SpaceSavingTopK)
       .select(col("source"), (col("pos") + 1).cast("long").as("rank"),
         col("col.token").as("token"), col("col.cnt").as("cnt"),
         col("col.err").as("err"))

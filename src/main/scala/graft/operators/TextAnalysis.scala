@@ -12,6 +12,21 @@ import graft.functions.{GraftFunctions, HashFunctions, TextFunctions}
   */
 object TextAnalysis {
 
+  // Fixed parameters of the operators below; the DuckDB oracles
+  // (OracleHashSql) read the same values.
+  private[graft] val BpeK = 5                // BPE merges learned (q76, q80)
+  private[graft] val FeatureBuckets = 4096   // hashed unigram slots (q96, q152): a power
+                                             // of two, residue-stable (2^64 ≡ 0 mod 2^k)
+  private[graft] val NoveltyN = 3            // shingleNovelty's shingle length (q103)
+  private[graft] val Shards = 16             // shardManifest's output shards (q157)
+  private[graft] val DsirTargetLang = "en"   // dsirSelect's target language ...
+  private[graft] val DsirKeepDen = 4         // ... and kept share 1/DsirKeepDen per source
+  private[graft] val WinnowK = 8             // winnowFingerprints' default k-gram ...
+  private[graft] val WinnowW = 4             // ... and window (q176)
+  private val SegmentTokens = 8              // segmentDedupRebuild's segment length
+  private val Bm25K1 = 1.2                   // BM25 tf saturation (length norm b = 0.75)
+  private val RrfDepth = 20                  // hybridRrf's per-ranking depth before fusion
+
   /** Quality metrics per document: char/token/punct counts and the
     * composite quality score (TextFunctions.qualityScore).
     */
@@ -46,7 +61,7 @@ object TextAnalysis {
                     n: Int = 8): DataFrame = {
     GraftFunctions.register(documents.sparkSession)
     def grams(df: DataFrame) = df.select(col("doc_id"),
-      explode(HashFunctions.wordShingles(
+      explode(GraftFunctions.wordShingles(
         TextFunctions.wsTokens(col("text")), n)).as("g"))
     val benchGrams = grams(benchmark).select(col("g")).distinct()
     grams(documents)
@@ -130,7 +145,7 @@ object TextAnalysis {
                         minDocs: Int = 2): DataFrame = {
     GraftFunctions.register(documents.sparkSession)
     documents
-      .select(explode(array_distinct(HashFunctions.wordShingles(
+      .select(explode(array_distinct(GraftFunctions.wordShingles(
         TextFunctions.wsTokens(col("text")), n))).as("g"))
       .groupBy(col("g"))
       .agg(count(lit(1)).as("n_docs"))
@@ -202,9 +217,10 @@ object TextAnalysis {
   }
 
   /** Segment-level corpus dedup WITH document reconstruction (the
-    * C4/RefinedWeb "line dedup" step, on `k`-token segments since the
-    * synthetic corpus has no newlines): split each document into
-    * non-overlapping k-token segments, keep only the globally FIRST
+    * C4/RefinedWeb "line dedup" step, on k-token segments, k =
+    * SegmentTokens, since the synthetic corpus has no newlines): split
+    * each document into non-overlapping k-token segments, keep only the
+    * globally FIRST
     * occurrence of each distinct segment text — first = minimum
     * (doc_id, position), packed into one long so the arg-min is a
     * plain `min` — and reassemble every document from its surviving
@@ -222,9 +238,9 @@ object TextAnalysis {
     * The packed occurrence key needs idx < 4096 — documents longer
     * than 4096·k tokens should pack (doc_id, shard) first.
     */
-  def segmentDedupRebuild(documents: DataFrame, k: Int = 8): DataFrame = {
+  def segmentDedupRebuild(documents: DataFrame): DataFrame = {
     val toks = TextFunctions.wsTokens(col("text"))
-    val nSeg = ((size(toks) + lit(k - 1)) / lit(k)).cast("int")
+    val nSeg = ((size(toks) + lit(SegmentTokens - 1)) / lit(SegmentTokens)).cast("int")
     // nSeg = 0 (empty/whitespace-only doc): sequence(0, -1) DESCENDS
     // ([0, -1] — the same hazard bpeLoop/bigramLogProb/retrievalEval
     // guard), which would emit two phantom ''-segments; such docs must
@@ -232,7 +248,8 @@ object TextAnalysis {
     val segs = documents.select(col("doc_id"),
       posexplode(when(nSeg > 0,
         transform(sequence(lit(0), nSeg - lit(1)),
-          j => array_join(slice(toks, j * lit(k) + lit(1), lit(k)), " ")))
+          j => array_join(
+            slice(toks, j * lit(SegmentTokens) + lit(1), lit(SegmentTokens)), " ")))
         .otherwise(array()))
         .as(Seq("idx", "seg")))
     // keyed feeds the firsts aggregate, the kept join, AND the totals
@@ -306,7 +323,7 @@ object TextAnalysis {
     *
     * Returns one row per round: (round, l, r, cnt).
     */
-  def bpeMerges(documents: DataFrame, k: Int = 5): DataFrame =
+  def bpeMerges(documents: DataFrame, k: Int = BpeK): DataFrame =
     bpeLoop(documents, k)._1
 
   /** [[bpeMerges]]' rules APPLIED back to the corpus: per-source token
@@ -316,8 +333,8 @@ object TextAnalysis {
     * (source, word) frequency frame, so the corpus text is again read
     * only once.
     */
-  def bpeEncode(documents: DataFrame, k: Int = 5): DataFrame = {
-    val encoded = bpeLoop(documents, k)._2 // (w, t, freq) — vocab-sized
+  def bpeEncode(documents: DataFrame): DataFrame = {
+    val encoded = bpeLoop(documents, BpeK)._2 // (w, t, freq) — vocab-sized
     val bySource = documents
       .select(col("source"),
         explode(TextFunctions.wsTokensCased(col("text"))).as("w"))
@@ -372,7 +389,7 @@ object TextAnalysis {
     * Exposed for the structural invariant spec: concatenating a
     * word's final symbols must reproduce the word.
     */
-  private[graft] def bpeEncodeSymbols(documents: DataFrame, k: Int = 5): DataFrame =
+  private[graft] def bpeEncodeSymbols(documents: DataFrame, k: Int = BpeK): DataFrame =
     bpeLoop(documents, k)._2
 
   private def bpeLoop(documents: DataFrame,
@@ -477,19 +494,18 @@ object TextAnalysis {
       .limit(n)
   }
 
-  /** Token co-occurrence PMI over the top-`v` vocabulary: for token
-    * pairs (t1 < t2) both drawn from the `v` highest-document-frequency
+  /** Token co-occurrence PMI over the top-50 vocabulary: for token
+    * pairs (t1 < t2) both drawn from the 50 highest-document-frequency
     * tokens, pmi = ln(D·c_xy / (c_x·c_y)) with c_* document
-    * frequencies and D the corpus size. Reported for the `k` most
+    * frequencies and D the corpus size. Reported for the 100 most
     * frequent co-occurring pairs.
     *
-    * Scale shape: the vocabulary is a broadcast ≤v rows, so the
+    * Scale shape: the vocabulary is a broadcast ≤50 rows, so the
     * within-doc self-join is bounded at v²/2 pairs per document —
     * never a corpus cross product; the (doc, token) distinct and the
     * pair count are the only shuffles, both map-side combined.
     */
-  def pmiCooccurrence(documents: DataFrame, v: Int = 50,
-                      k: Int = 100): DataFrame = {
+  def pmiCooccurrence(documents: DataFrame): DataFrame = {
     // (doc, token) presence pairs feed the df count AND both sides of
     // the co-occurrence self-join — materialize the explode+distinct
     // once instead of three times (r16)
@@ -499,7 +515,7 @@ object TextAnalysis {
       .distinct()
       .localCheckpoint(true)
     val docFreq = toks.groupBy("token").agg(count(lit(1)).as("df"))
-    val vocab = docFreq.orderBy(col("df").desc, col("token").asc).limit(v)
+    val vocab = docFreq.orderBy(col("df").desc, col("token").asc).limit(50)
     val vt = toks.join(broadcast(vocab), "token")
     val nDocs = documents.agg(
       count(lit(1)).cast("double").as("n_docs"))
@@ -516,12 +532,12 @@ object TextAnalysis {
         log(col("n_docs") * col("c_xy").cast("double") /
           (col("c_x") * col("c_y"))).as("pmi"))
       .orderBy(col("c_xy").desc, col("t1").asc, col("t2").asc)
-      .limit(k)
+      .limit(100)
   }
 
   def repetition(documents: DataFrame, n: Int = 3): DataFrame = {
     GraftFunctions.register(documents.sparkSession)
-    val grams = HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), n)
+    val grams = GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), n)
     documents.select(
       col("doc_id"),
       size(grams).cast("long").as("n_grams"),
@@ -532,7 +548,7 @@ object TextAnalysis {
 
   /** Hashed-feature linear quality classifier (the fastText-style
     * shape used for corpus filtering): each token hashes into one of
-    * `buckets` feature slots, each slot carries a fixed integer weight
+    * `FeatureBuckets` feature slots, each slot carries a fixed integer weight
     * in [-128, 127] (here derived deterministically from the slot id —
     * in production the trained weight table, broadcast), and a
     * document's score is the sum of its tokens' weights. Exact integer
@@ -542,17 +558,14 @@ object TextAnalysis {
     * bucket → weight chain and the sum run inside one `aggregate` HOF
     * over the token array, so the whole classifier is a zero-shuffle
     * per-row projection at scan speed (the same posture as
-    * qualityMetrics). `buckets` is a power of two so the bucket id is
-    * stable under any residue convention (2^64 ≡ 0 mod 2^k); the
-    * weight range 256 divides 2^64 for the same reason.
+    * qualityMetrics). The weight range 256 divides 2^64, so it is as
+    * residue-stable as the power-of-two bucket count.
     */
-  def qualityClassifier(spark: SparkSession, documents: DataFrame,
-                        buckets: Int = 4096): DataFrame = {
+  def qualityClassifier(spark: SparkSession, documents: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
-    require((buckets & (buckets - 1)) == 0, "buckets must be a power of two")
     def weight(t: org.apache.spark.sql.Column) = {
       val bucket = pmod(GraftFunctions.hash64Seeded(lit(1L), t),
-        lit(buckets.toLong))
+        lit(FeatureBuckets.toLong))
       pmod(GraftFunctions.hash64Seeded(lit(2L),
         concat(lit("w"), bucket.cast("string"))), lit(256L)) - lit(128L)
     }
@@ -588,8 +601,7 @@ object TextAnalysis {
     * 100 TB this is one scan at projection speed + a posting-sized
     * shuffle keyed on (query_id, doc_id).
     */
-  def bm25(documents: DataFrame, queries: Seq[(Long, Seq[String])],
-           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+  def bm25(documents: DataFrame, queries: Seq[(Long, Seq[String])]): DataFrame = {
     val spark = documents.sparkSession
     import spark.implicits._
     val terms = queries.flatMap { case (qid, ts) => ts.map(t => (qid, t)) }
@@ -620,8 +632,8 @@ object TextAnalysis {
     val idf = log((col("n_docs") - col("df") + lit(0.5)) /
       (col("df") + lit(0.5)) + lit(1.0))
     val avgdl = col("sum_dl").cast("double") / col("n_docs")
-    val w = idf * (col("tf") * (lit(k1) + lit(1.0))) /
-      (col("tf") + lit(k1) * (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl))
+    val w = idf * (col("tf") * (lit(Bm25K1) + lit(1.0))) /
+      (col("tf") + lit(Bm25K1) * (lit(1.0) - lit(0.75) + lit(0.75) * col("dl") / avgdl))
     cand.join(broadcast(dfT), "term")
       .crossJoin(broadcast(stats))
       .withColumn("w", w)
@@ -738,12 +750,12 @@ object TextAnalysis {
     * exact form; the sketch form at extreme scale is a bloom/KMV
     * admission filter (q70/q95) with the same output contract.
     */
-  def shingleNovelty(documents: DataFrame, n: Int = 3): DataFrame = {
+  def shingleNovelty(documents: DataFrame): DataFrame = {
     GraftFunctions.register(documents.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val sh = documents.select(col("doc_id"),
       explode(array_distinct(transform(
-        HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), n),
+        GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), NoveltyN),
         s => GraftFunctions.polyhash64(s)))).as("sh"))
     sh.withColumn("first_doc",
         min(col("doc_id")).over(Window.partitionBy(col("sh"))))
@@ -858,8 +870,8 @@ object TextAnalysis {
   }
 
   /** Deterministic word-dropout augmentation: drop every token whose
-    * md5(doc_id:position:token) 52-bit residue falls below `rate10`
-    * tenths — the reproducible text-augmentation primitive (train-time
+    * md5(doc_id:position:token) 52-bit residue falls in the lowest
+    * tenth — the reproducible text-augmentation primitive (train-time
     * noise that is a pure function of content + position, so re-runs,
     * retries, and engine swaps regenerate the identical corpus; an RNG
     * here would make every epoch's data lineage unreproducible).
@@ -869,8 +881,7 @@ object TextAnalysis {
     * re-agg round trip. Spark lambda indices are 0-based, DuckDB's are
     * 1-based — the hashed position is the 1-based ordinal on both.
     */
-  def wordDropout(documents: DataFrame, rate10: Int = 1): DataFrame = {
-    require(rate10 >= 0 && rate10 <= 10, "rate10 in [0,10]")
+  def wordDropout(documents: DataFrame): DataFrame = {
     val toks = TextFunctions.wsTokens(col("text"))
     documents
       .select(col("doc_id"), toks.as("toks"))
@@ -880,7 +891,7 @@ object TextAnalysis {
         conv(substring(md5(concat_ws(":",
             col("doc_id").cast("string"),
             (i + lit(1)).cast("string"), x)), 1, 13), 16, 10)
-          .cast("long") % 10L >= rate10.toLong))
+          .cast("long") % 10L >= 1L))
       .select(col("doc_id"), col("n_orig"),
         size(col("kept")).cast("long").as("n_kept"),
         array_join(col("kept"), " ").as("aug_text"),
@@ -1042,7 +1053,7 @@ object TextAnalysis {
       .select(col("doc_id"), TextFunctions.wsTokens(col("text")).as("t"))
       .filter(size(col("t")) >= n)
       .select(col("doc_id"),
-        posexplode(HashFunctions.wordShingles(col("t"), n)).as(Seq("pos", "s")))
+        posexplode(GraftFunctions.wordShingles(col("t"), n)).as(Seq("pos", "s")))
     val dup = sh
       .withColumn("occ", count(lit(1)).over(Window.partitionBy(col("s"))))
       .filter(col("occ") >= 2)
@@ -1154,21 +1165,19 @@ object TextAnalysis {
 
   /** Blocklist filtering (q145) — the C4-style wordlist gate: count
     * blocklisted token occurrences per document and keep documents
-    * whose hit share stays under `pctThreshold` percent (the
+    * whose hit share stays under 3 percent (the
     * comparison is pure integer arithmetic — n_hits·100 < n_tokens·pct
     * — so the keep decision is boundary-exact on any engine). The
     * list rides as an expression literal: scan-speed, no join.
     */
-  def blocklistFilter(documents: DataFrame,
-                      blocklist: Seq[String] = Seq("slow", "error", "crash"),
-                      pctThreshold: Int = 3): DataFrame = {
+  def blocklistFilter(documents: DataFrame): DataFrame = {
     val toks = split(lower(col("text")), " ")
-    val hits = size(filter(toks, t => t.isInCollection(blocklist)))
+    val hits = size(filter(toks, t => t.isInCollection(Seq("slow", "error", "crash"))))
     documents.select(col("doc_id"), col("source"),
         size(toks).cast("long").as("n_tokens"),
         hits.cast("long").as("n_hits"))
       .withColumn("kept",
-        col("n_hits") * 100 < col("n_tokens") * pctThreshold)
+        col("n_hits") * 100 < col("n_tokens") * 3)
   }
 
   /** Hybrid retrieval with reciprocal-rank fusion (q147) — the
@@ -1195,35 +1204,34 @@ object TextAnalysis {
     * re-cut q147's certified output, so it is documented rather than
     * silently altered.
     *
-    * Scale: both rankings are WindowGroupLimit-capped top-`kTop`
+    * Scale: both rankings are WindowGroupLimit-capped top-`RrfDepth`
     * per query before the fusion join; the full-outer fusion joins
-    * two (queries × kTop)-row frames — trivially small however large
+    * two (queries × RrfDepth)-row frames — trivially small however large
     * the corpus.
     */
   def hybridRrf(spark: SparkSession, documents: DataFrame,
-                embeddings: DataFrame, queries: Seq[(Long, Seq[String])],
-                kTop: Int = 20, kRrf: Int = 60, kOut: Int = 10): DataFrame = {
+                embeddings: DataFrame, queries: Seq[(Long, Seq[String])]): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bm = bm25(documents, queries)
     val wB = Window.partitionBy(col("query_id"))
       .orderBy((floor(col("score") * 10000 + lit(0.5)) / 10000).desc,
         col("doc_id").asc)
     val bmRank = bm.withColumn("r_bm", row_number().over(wB))
-      .filter(col("r_bm") <= kTop)
+      .filter(col("r_bm") <= RrfDepth)
       .select(col("query_id"), col("doc_id"), col("r_bm").cast("long").as("r_bm"))
     val qEmb = embeddings.filter(col("vec_id").isInCollection(queries.map(_._1)))
-    val emRank = Similarity.bruteForceTopK(spark, embeddings, qEmb, kTop)
+    val emRank = Similarity.bruteForceTopK(spark, embeddings, qEmb, RrfDepth)
       .select(col("query_id"), col("neighbor_id").as("doc_id"),
         col("rank").cast("long").as("r_em"))
     val fused = bmRank.join(emRank, Seq("query_id", "doc_id"), "full_outer")
       .select(col("query_id"), col("doc_id"), col("r_bm"), col("r_em"),
-        (coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("r_bm")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(kRrf.toDouble) + col("r_em")), lit(0.0)))
+        (coalesce(lit(1.0) / (lit(60.0) + col("r_bm")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(60.0) + col("r_em")), lit(0.0)))
           .as("rrf"))
     val wF = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf").desc, col("doc_id").asc)
     fused.withColumn("rank", row_number().over(wF).cast("long"))
-      .filter(col("rank") <= kOut)
+      .filter(col("rank") <= 10)
       .select(col("query_id"), col("rank"), col("doc_id"),
         col("r_bm"), col("r_em"), col("rrf"))
   }
@@ -1259,7 +1267,7 @@ object TextAnalysis {
   }
 
   /** Deterministic training-shard manifest (q157) — the last step of
-    * every corpus build: assign each document to one of `nShards`
+    * every corpus build: assign each document to one of `Shards`
     * output shards by a CONTENT-ADDRESSED key (seeded hash of the
     * doc id — reshuffle-stable, rerun-stable, no round-robin
     * coordination), and emit the per-shard manifest a trainer
@@ -1269,15 +1277,15 @@ object TextAnalysis {
     * prefixes in DECIMAL(38,0) — commutative, so shard writers can
     * emit partials in any order; HUGEINT-exact on the oracle side).
     *
-    * Scale: one scan; the groupBy carries `nShards` rows; the total
+    * Scale: one scan; the groupBy carries `Shards` rows; the total
     * is a 1-row broadcast. The manifest IS the driver artifact.
     */
-  def shardManifest(documents: DataFrame, nShards: Int = 16): DataFrame = {
+  def shardManifest(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     GraftFunctions.register(spark)
     val sharded = documents.select(col("doc_id"), col("n_chars"),
       pmod(GraftFunctions.hash64Seeded(lit(7L), col("doc_id").cast("string")),
-        lit(nShards.toLong)).as("shard_id"),
+        lit(Shards.toLong)).as("shard_id"),
       conv(substring(md5(col("text")), 1, 15), 16, 10)
         .cast("decimal(38,0)").as("fp"))
     val tot = sharded.agg(sum(col("n_chars")).as("total_bytes"))
@@ -1349,7 +1357,7 @@ object TextAnalysis {
     * Importance Resampling (Xie et al., NeurIPS 2023): score every raw
     * document by how target-like its HASHED n-gram features are, then
     * keep the most target-like slice per source. Features are hashed
-    * word unigrams in `buckets` power-of-two buckets (the q96 seed-1
+    * word unigrams in `FeatureBuckets` power-of-two buckets (the q96 seed-1
     * hash, so the oracle's bucket CTE is shared); the per-bucket
     * importance is the smoothed target/raw probability ratio
     *   ŵ_b = (cnt_t(b)+1)/(T+B) ÷ (cnt_r(b)+1)/(R+B).
@@ -1363,7 +1371,7 @@ object TextAnalysis {
     * DECIMAL(38,0) (HUGEINT on the oracle side), so the arithmetic is
     * exact up to corpus sizes of ~10³⁰ tokens.
     *
-    * Selection: per-source top-1/`keepDen` by (mean importance desc,
+    * Selection: per-source top-1/`DsirKeepDen` by (mean importance desc,
     * doc_id) — a per-source window rank, never a global sort.
     *
     * Scale: the bucket-count aggregates collapse to ≤ B rows via
@@ -1371,18 +1379,16 @@ object TextAnalysis {
     * token explode (a doc's tokens stay row-local, so the per-doc sum
     * also map-side-combines to one row per doc before the shuffle).
     */
-  def dsirSelect(documents: DataFrame, buckets: Int = 4096,
-                 targetLang: String = "en", keepDen: Int = 4): DataFrame = {
+  def dsirSelect(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
     GraftFunctions.register(spark)
-    require((buckets & (buckets - 1)) == 0, "buckets must be a power of two")
     val toks = documents.select(col("doc_id"), col("source"), col("lang"),
       explode(TextFunctions.wsTokens(col("text"))).as("token"))
       .withColumn("bucket",
         pmod(GraftFunctions.hash64Seeded(lit(1L), col("token")),
-          lit(buckets.toLong)))
+          lit(FeatureBuckets.toLong)))
     val cntR = toks.groupBy("bucket").agg(count(lit(1)).as("cnt_r"))
-    val cntT = toks.filter(col("lang") === targetLang)
+    val cntT = toks.filter(col("lang") === DsirTargetLang)
       .groupBy("bucket").agg(count(lit(1)).as("cnt_t"))
     val totR = cntR.agg(sum(col("cnt_r")).as("big_r"))
     val totT = cntT.agg(sum(col("cnt_t")).as("big_t"))
@@ -1393,9 +1399,9 @@ object TextAnalysis {
       .crossJoin(broadcast(totT))
       .select(col("bucket"),
         floor_div_dec(
-          (col("cnt_t") + 1).cast(dec) * (col("big_r") + buckets).cast(dec)
+          (col("cnt_t") + 1).cast(dec) * (col("big_r") + FeatureBuckets).cast(dec)
             * lit(65536).cast(dec),
-          (col("cnt_r") + 1).cast(dec) * (col("big_t") + buckets).cast(dec))
+          (col("cnt_r") + 1).cast(dec) * (col("big_t") + FeatureBuckets).cast(dec))
           .cast("long").as("w"))
     val scored = toks.join(broadcast(w), Seq("bucket"))
       .groupBy(col("doc_id"), col("source"))
@@ -1409,7 +1415,7 @@ object TextAnalysis {
         rankCol = "rank", countCol = "n_src")
       .select(col("doc_id"), col("source"), col("n_tokens"), col("score"),
         col("norm"),
-        (col("rank") * keepDen <= col("n_src")).as("kept"))
+        (col("rank") * DsirKeepDen <= col("n_src")).as("kept"))
   }
 
   /** Exact floor division on decimals: decimal `/` rounds HALF_UP, so
@@ -1436,10 +1442,9 @@ object TextAnalysis {
     * that frame, so the histogram costs one scan however large the
     * corpus; all four tiny frames broadcast back onto the doc scan.
     */
-  def lengthMatchedResample(documents: DataFrame,
-                            bucketWidth: Int = 100): DataFrame = {
+  def lengthMatchedResample(documents: DataFrame): DataFrame = {
     val docs = documents.select(col("doc_id"), col("source"), col("text"),
-      floor(col("n_chars") / lit(bucketWidth)).cast("long").as("bucket"))
+      floor(col("n_chars") / lit(100)).cast("long").as("bucket"))
     val sb = docs.groupBy("source", "bucket").agg(count(lit(1)).as("n_sb"))
       .localCheckpoint(true)
     val bTot = sb.groupBy("bucket").agg(sum(col("n_sb")).as("n_b"))
@@ -1486,8 +1491,8 @@ object TextAnalysis {
     * output certifies the full selected SET (count + sum + min + max),
     * not just a sample.
     */
-  def winnowFingerprints(documents: DataFrame, k: Int = 8,
-                         w: Int = 4): DataFrame = {
+  def winnowFingerprints(documents: DataFrame, k: Int = WinnowK,
+                         w: Int = WinnowW): DataFrame = {
     require(w >= 2, s"winnow window must be >= 2, got $w")
     val spark = documents.sparkSession
     GraftFunctions.register(spark)

@@ -25,6 +25,12 @@ import org.apache.spark.sql.functions._
   */
 object TimeSeries {
 
+  private[graft] val CusumSlack = 25.0       // CUSUM drift allowance and alarm level,
+  private[graft] val CusumThreshold = 200.0  // shared with StreamingCusum
+  private val Smoothing = 0.5                // Holt level/trend/season smoothing α = β = γ
+  private val MadBinWidth = 1.0              // madAnomaly's histogram bin width
+  private val AcfLags = 3                    // acf's lags 1..AcfLags
+
   /** EWMA (α=1/2, last `w` events) + rolling mean/min/max per
     * `user_id` ordered by `ts`. Emits one row per event.
     */
@@ -101,7 +107,7 @@ object TimeSeries {
   }
 
   /** Min-gap debounce: drop an event when the PREVIOUS event of the
-    * same (user_id, event_type) is closer than `gapUs` microseconds —
+    * same (user_id, event_type) is closer than 5 s —
     * the telemetry de-noise step (double-clicks, retry storms,
     * duplicate beacons). Lag-based semantics: each event is judged
     * against its immediate predecessor in event time, kept or not (a
@@ -115,14 +121,14 @@ object TimeSeries {
     * Scale: one shuffle on (user_id, event_type), one in-partition
     * sort, O(1) lag state — the cheapest possible keyed-sequence scan.
     */
-  def debounce(events: DataFrame, gapUs: Long = 5000000L): DataFrame = {
+  def debounce(events: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("tus"), col("event_id"))
     events
       .select(col("event_id"), col("user_id"), col("event_type"),
         unix_micros(col("ts")).as("tus"), col("value"))
       .withColumn("prev", lag(col("tus"), 1).over(w))
-      .filter(col("prev").isNull || col("tus") - col("prev") >= gapUs)
+      .filter(col("prev").isNull || col("tus") - col("prev") >= 5000000L)
       .select(col("event_id"), col("user_id"), col("event_type"),
         col("tus"), col("value"))
       .orderBy("event_id")
@@ -165,7 +171,7 @@ object TimeSeries {
     * each group would hold the whole column at 100 TB — a
     * memory-unbounded aggregate. The histogram sketch is bounded by
     * (types × range/width) counters, partial-aggregated map-side and
-    * merged by vector add; every estimate is within `width` of the
+    * merged by vector add; every estimate is within `MadBinWidth` of the
     * exact order statistic (the package-private exact twin,
     * `madAnomalyExact`, proves it at test SF). All arithmetic — floor(v/w)
     * binning, (bin+1)·w edges, the 3·MAD comparison — is the same
@@ -175,13 +181,13 @@ object TimeSeries {
     * |types|-row broadcasts back onto the scan. Nothing sorts or
     * buffers the data itself.
     */
-  def madAnomaly(events: DataFrame, width: Double = 1.0): DataFrame = {
+  def madAnomaly(events: DataFrame): DataFrame = {
     val ev = events.filter(col("value").isNotNull)
       .select(col("event_type"), col("value"))
-    val med = histMedian(ev, col("value"), width, "med")
+    val med = histMedian(ev, col("value"), MadBinWidth, "med")
     val dev = ev.join(broadcast(med), "event_type")
       .withColumn("adev", abs(col("value") - col("med")))
-    val mad = histMedian(dev, col("adev"), width, "mad")
+    val mad = histMedian(dev, col("adev"), MadBinWidth, "mad")
     dev.join(broadcast(mad), "event_type")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), max(col("med")).as("med"),
@@ -291,7 +297,7 @@ object TimeSeries {
       .orderBy("user_id", "hour_ts", "value_ffill", "age_us")
   }
 
-  /** Per-key autocorrelation function at lags 1..maxLag (q131): the
+  /** Per-key autocorrelation function at lags 1..AcfLags (q131): the
     * seasonality/persistence diagnostic of the series family —
     * r_k = Σ(y_t−ȳ)(y_{t−k}−ȳ) / Σ(y_t−ȳ)² over each key's series
     * in (ts, event_id) order. High r_1 → momentum (EWMA features are
@@ -302,23 +308,23 @@ object TimeSeries {
     *
     * Scale: the mean join, the lag window, and the final aggregate all
     * key on user_id — one partitioning reused across the chain; lag
-    * state is O(maxLag) per row. Same float contract as q86's OLS
+    * state is O(AcfLags) per row. Same float contract as q86's OLS
     * (r4-rounded sums under the oracle).
     */
-  def acf(events: DataFrame, maxLag: Int = 3): DataFrame = {
+  def acf(events: DataFrame): DataFrame = {
     val ev = events.filter(col("value").isNotNull)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
     val means = ev.groupBy("user_id")
       .agg(avg(col("value")).as("mu"), count(lit(1)).as("n"))
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-    val lagCols = (1 to maxLag).map(k =>
+    val lagCols = (1 to AcfLags).map(k =>
       (lag(col("value"), k).over(w) - col("mu")).as(s"d$k"))
     val lagged = ev.join(means, "user_id")
       .select(Seq(col("user_id"), col("n"),
         (col("value") - col("mu")).as("d")) ++ lagCols: _*)
     val den = sum(col("d") * col("d"))
-    val rCols = (1 to maxLag).map(k =>
+    val rCols = (1 to AcfLags).map(k =>
       when(den =!= 0.0, sum(col("d") * col(s"d$k")) / den).as(s"r$k"))
     lagged.groupBy("user_id")
       .agg(max(col("n")).cast("long").as("n_events"), rCols: _*)
@@ -339,7 +345,7 @@ object TimeSeries {
     * DuckDB oracle replays it with `list_reduce` verbatim (the q68
     * determinism argument).
     *
-    * Output per key: n, final level/trend, forecasts for h=1..horizon.
+    * Output per key: n, final level/trend, forecasts for h=1..3.
     */
   /** Two-sided CUSUM change-point detection per key (q151) — Page
     * (1954): against the key's own mean μ, track
@@ -361,8 +367,7 @@ object TimeSeries {
     * q140 contract). Output is one row per key: n, mean, the alarm
     * count, and the peak statistic.
     */
-  def cusum(events: DataFrame, slack: Double = 25.0,
-            threshold: Double = 200.0): DataFrame = {
+  def cusum(events: DataFrame): DataFrame = {
     val series = events.filter(col("value").isNotNull)
       .groupBy(col("user_id"))
       .agg(sort_array(collect_list(
@@ -378,13 +383,13 @@ object TimeSeries {
       (acc, x) => {
         val v = x.getField("value")
         val sp = greatest(lit(0.0),
-          element_at(acc, 1) + (v - col("mu") - lit(slack)))
+          element_at(acc, 1) + (v - col("mu") - lit(CusumSlack)))
         val sn = greatest(lit(0.0),
-          element_at(acc, 2) + (col("mu") - v - lit(slack)))
-        val alarm = sp > lit(threshold) || sn > lit(threshold)
+          element_at(acc, 2) + (col("mu") - v - lit(CusumSlack)))
+        val alarm = sp > lit(CusumThreshold) || sn > lit(CusumThreshold)
         array(
-          when(sp > lit(threshold), lit(0.0)).otherwise(sp),
-          when(sn > lit(threshold), lit(0.0)).otherwise(sn),
+          when(sp > lit(CusumThreshold), lit(0.0)).otherwise(sp),
+          when(sn > lit(CusumThreshold), lit(0.0)).otherwise(sn),
           element_at(acc, 3) + when(alarm, lit(1.0)).otherwise(lit(0.0)),
           greatest(element_at(acc, 4), sp, sn))
       })
@@ -417,8 +422,7 @@ object TimeSeries {
     * 0/6/12/18h, the one-step forecast for each of those hours being
     * l + b + s_h.
     */
-  def holtWintersHourly(events: DataFrame, alpha: Double = 0.5,
-                        beta: Double = 0.5, gamma: Double = 0.5): DataFrame = {
+  def holtWintersHourly(events: DataFrame): DataFrame = {
     val series = events.filter(col("value").isNotNull)
       .groupBy(col("user_id"))
       .agg(sort_array(collect_list(struct(col("ts"), col("event_id"),
@@ -431,9 +435,9 @@ object TimeSeries {
       val b = element_at(acc, 2)
       val n = element_at(acc, 27)
       val sj = element_at(acc, jIdx)
-      val l1 = lit(alpha) * (v - sj) + lit(1 - alpha) * (l + b)
-      val b1 = lit(beta) * (l1 - l) + lit(1 - beta) * b
-      val sj1 = lit(gamma) * (v - l1) + lit(1 - gamma) * sj
+      val l1 = lit(Smoothing) * (v - sj) + lit(1 - Smoothing) * (l + b)
+      val b1 = lit(Smoothing) * (l1 - l) + lit(1 - Smoothing) * b
+      val sj1 = lit(Smoothing) * (v - l1) + lit(1 - Smoothing) * sj
       val stepped = transform(sequence(lit(1), lit(27)), k =>
         when(k === 1, l1).when(k === 2, b1)
           .when(k === 27, n + lit(1.0))
@@ -453,8 +457,7 @@ object TimeSeries {
           r4c(element_at(col("st"), h + 3)).as(s"s$h")): _*)
   }
 
-  def holtForecast(events: DataFrame, alpha: Double = 0.5,
-                   beta: Double = 0.5, horizon: Int = 3): DataFrame = {
+  def holtForecast(events: DataFrame): DataFrame = {
     val series = events.filter(col("value").isNotNull)
       .groupBy(col("user_id"))
       .agg(sort_array(collect_list(
@@ -468,12 +471,12 @@ object TimeSeries {
         val l = element_at(acc, 1)
         val b = element_at(acc, 2)
         val n = element_at(acc, 3)
-        val l1 = lit(alpha) * v + lit(1 - alpha) * (l + b)
-        val b1 = lit(beta) * (l1 - l) + lit(1 - beta) * b
+        val l1 = lit(Smoothing) * v + lit(1 - Smoothing) * (l + b)
+        val b1 = lit(Smoothing) * (l1 - l) + lit(1 - Smoothing) * b
         when(n === 0.0, array(v, lit(0.0), lit(1.0)))
           .otherwise(array(l1, b1, n + lit(1.0)))
       })
-    val fCols = (1 to horizon).map(h =>
+    val fCols = (1 to 3).map(h =>
       (element_at(col("st"), 1) + lit(h.toDouble) * element_at(col("st"), 2))
         .as(s"f$h"))
     series.select(col("user_id"), size(col("xs")).cast("long").as("n"), st.as("st"))
@@ -490,13 +493,13 @@ object TimeSeries {
     * lives), but never materialize: with T span minutes, E events,
     * Σc² over active minutes, Fano = (T·Σc² − E²)/(T·E) — every term
     * an exact integer from the non-zero rows alone, so the flag
-    * `bursty` (Fano > threshold) is an exact integer comparison with
+    * `bursty` (Fano > 4) is an exact integer comparison with
     * no float in the decision path.
     *
     * Scale: two map-side-combined aggregations, (user, minute) then
     * user — no windows, no joins, no materialized zero rows.
     */
-  def burstinessAudit(events: DataFrame, fanoFlag: Int = 4): DataFrame = {
+  def burstinessAudit(events: DataFrame): DataFrame = {
     val minuteCol = floor(unix_micros(col("ts")) / 60000000L).cast("long")
     val pm = events
       .select(col("user_id"), minuteCol.as("minute"))
@@ -518,7 +521,7 @@ object TimeSeries {
           + lit(0.5)) / 10000).as("fano"),
         (col("span_min") * col("sum_c2") -
           col("n_events") * col("n_events") >
-          lit(fanoFlag.toLong) * col("span_min") * col("n_events"))
+          lit(4L) * col("span_min") * col("n_events"))
           .as("bursty"))
   }
 

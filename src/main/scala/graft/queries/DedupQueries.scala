@@ -15,6 +15,9 @@ import graft.QueryHelpers._
   */
 object DedupQueries {
 
+  // q182's truth cut, passed to the exact prefix filter and its oracle
+  private val CalibrationTruth = 0.3
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // ── Training-data pipeline (north star) ────────────────────────────
@@ -268,7 +271,7 @@ object DedupQueries {
       val sets = Dedup.shingleSets(docs, shingleSize = 3)
         .localCheckpoint(true)
       val truth = Dedup.prefixFilterJaccardPairsFromSets(sets,
-        threshold = 0.3)
+        threshold = CalibrationTruth)
       val cand = Dedup.minhashLshPairsFromShingles(s,
           sets.select(col("doc_id"), col("sh").as("shingles")),
           estimateThreshold = 0.0)
@@ -384,9 +387,7 @@ object DedupQueries {
 
     "q36_dedup_lsh_jaccard" -> OracleHashSql.q36LshBlockedJaccard,
 
-    "q37_dedup_embedding_lsh" -> OracleHashSql.q37LshBlockedCosine(
-      graft.operators.Similarity.defaultPlaneSets(planes = 3, tables = 12,
-        dim = 64, seed = 137L)),
+    "q37_dedup_embedding_lsh" -> OracleHashSql.q37LshBlockedCosine(Dedup.cosinePlaneSets),
 
     "q49_dedup_clusters" -> OracleHashSql.q49DedupClusters,
 
@@ -474,7 +475,7 @@ object DedupQueries {
         |WHERE q.q >= 0.3
         |ORDER BY 1, 2, 3""".stripMargin,
 
-    "q64_semantic_dedup" -> OracleHashSql.q64SemanticDedup(),
+    "q64_semantic_dedup" -> OracleHashSql.q64SemanticDedup,
 
 
     // q81: q36's bit-exact candidate CTEs + containment rerank.
@@ -513,7 +514,7 @@ object DedupQueries {
     "q136_cluster_safe_split" -> OracleHashSql.q136ClusterSafeSplit,
 
 
-    "q182_lsh_calibration" -> OracleHashSql.q182LshCalibration(),
+    "q182_lsh_calibration" -> OracleHashSql.q182LshCalibration(CalibrationTruth),
 
 
     // q195: the same three-tier cascade; the near-dup tier reuses the

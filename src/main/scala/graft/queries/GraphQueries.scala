@@ -20,6 +20,13 @@ object GraphQueries {
     */
   private[graft] final val PageRankRounds = 10
 
+  // q130/q137/q138/q139 pass these to their operator and oracle alike
+  private val KCoreK = 10
+  private val KCoreRounds = 4
+  private[graft] val CoreNumberRounds = 8
+  private[graft] val LabelRounds = 5
+  private[graft] val HitsIters = 10
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Fixed-iteration PageRank over the customer→supplier purchase
@@ -109,7 +116,7 @@ object GraphQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"),
           (lit(100000L) + col("l_suppkey")).as("dst"))
-      GraphOps.kCore(edges, k = 10, rounds = 4)
+      GraphOps.kCore(edges, k = KCoreK, rounds = KCoreRounds)
         .select(col("v").as("node_id"), col("deg"))
         .orderBy("node_id")
     }),
@@ -126,7 +133,7 @@ object GraphQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"),
           (lit(100000L) + col("l_suppkey")).as("dst"))
-      GraphOps.coreNumbers(edges, rounds = 8)
+      GraphOps.coreNumbers(edges, rounds = CoreNumberRounds)
         .orderBy("node_id")
     }),
 
@@ -140,7 +147,7 @@ object GraphQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"),
           (lit(100000L) + col("l_suppkey")).as("dst"))
-      GraphOps.labelPropagation(edges, rounds = 5)
+      GraphOps.labelPropagation(edges, rounds = LabelRounds)
         .orderBy("node_id")
     }),
 
@@ -154,7 +161,7 @@ object GraphQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("src"),
           (lit(100000L) + col("l_suppkey")).as("dst"))
-      GraphOps.hits(edges, iters = 10)
+      GraphOps.hits(edges, iters = HitsIters)
         .select(col("node_id"), r4(col("hub")).as("hub"),
           r4(col("authority")).as("authority"))
         .orderBy("node_id")
@@ -190,14 +197,14 @@ object GraphQueries {
     "q134_personalized_pagerank" ->
       OracleHashSql.q134PersonalizedPageRank(Seq(1L, 2L, 3L)),
 
-    "q132_image_dedup_survivors" -> OracleHashSql.q132ImageDedupSurvivors(),
+    "q132_image_dedup_survivors" -> OracleHashSql.q132ImageDedupSurvivors,
 
-    "q130_kcore" -> OracleHashSql.q130KCore(),
+    "q130_kcore" -> OracleHashSql.q130KCore(KCoreK, KCoreRounds),
 
-    "q137_core_numbers" -> OracleHashSql.q137CoreNumbers(),
+    "q137_core_numbers" -> OracleHashSql.q137CoreNumbers(CoreNumberRounds),
 
-    "q138_label_propagation" -> OracleHashSql.q138LabelPropagation(),
+    "q138_label_propagation" -> OracleHashSql.q138LabelPropagation(LabelRounds),
 
-    "q139_hits" -> OracleHashSql.q139Hits(),
+    "q139_hits" -> OracleHashSql.q139Hits(HitsIters),
   )
 }

@@ -107,7 +107,7 @@ object MultimodalQueries {
     // q117: hashes derived analytically from the text bytes; the
     // engine reads them from DECODED PNG pixels (q114 pattern) — see
     // OracleHashSql.q117ImageNearDup for the exactness notes.
-    "q117_image_neardup" -> OracleHashSql.q117ImageNearDup(),
+    "q117_image_neardup" -> OracleHashSql.q117ImageNearDup,
 
 
     // q120: video kind = doc_id % 3 == 2 (the syntheticMedia

@@ -849,9 +849,9 @@ object RelationalOpQueries {
         |  FROM d3)
         |ORDER BY stage_idx""".stripMargin,
 
-    "q169_erasure_audit" -> OracleHashSql.q169ErasureAudit(),
+    "q169_erasure_audit" -> OracleHashSql.q169ErasureAudit,
 
-    "q167_ab_cuped" -> OracleHashSql.q167AbCuped(),
+    "q167_ab_cuped" -> OracleHashSql.q167AbCuped,
 
 
     // q166: same duration/censoring bookkeeping; the survival product

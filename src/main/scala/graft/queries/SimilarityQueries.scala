@@ -15,6 +15,12 @@ import graft.QueryHelpers._
   */
 object SimilarityQueries {
 
+  // q21/q29/q44/q129's depth, q125's components and q158's query set (the first
+  // MmrQueries vectors), passed to the operator and the oracle alike
+  private val AnnK = 10
+  private val PcaRank = 4
+  private val MmrQueries = 5
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Brute-force cosine top-k (exact ANN baseline).
@@ -32,7 +38,7 @@ object SimilarityQueries {
     // SQL literals (OracleHashSql.q21AnnLsh).
     "q21_sim_ann_lsh" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.annTopK(s, emb, emb.filter(col("vec_id") < 5), 10)
+      Similarity.annTopK(s, emb, emb.filter(col("vec_id") < 5), AnnK)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -43,7 +49,7 @@ object SimilarityQueries {
     // SimilaritySpec). Fully relational → exact DuckDB oracle.
     "q29_sim_ivf" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopK(s, emb, emb.filter(col("vec_id") < 5), 10)
+      Similarity.ivfTopK(s, emb, emb.filter(col("vec_id") < 5), AnnK)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -58,7 +64,7 @@ object SimilarityQueries {
     // bit-exactly.
     "q44_sim_ivf_kmeans" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopKTrained(s, emb, emb.filter(col("vec_id") < 5), 10)
+      Similarity.ivfTopKTrained(s, emb, emb.filter(col("vec_id") < 5), AnnK)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -114,7 +120,7 @@ object SimilarityQueries {
     // pipeline is hash-certified; eigen GEOMETRY (orthonormality,
     // Jacobi cross-check, captured variance) is spec-verified.
     "q125_pca_project" -> ((s, dir) => {
-      val p = Similarity.pcaProject(s, Tables.embeddings(s, dir), r = 4)
+      val p = Similarity.pcaProject(s, Tables.embeddings(s, dir), r = PcaRank)
       p.select((col("vec_id") +:
         p.columns.filter(_.startsWith("c")).toIndexedSeq
           .map(c => r4(col(c)).as(c))): _*)
@@ -130,7 +136,7 @@ object SimilarityQueries {
     // (ivfPqTopK) is spec-bounded for recall.
     "q129_pq_adc_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.pqAdcTopK(s, emb, emb.filter(col("vec_id") < 5))
+      Similarity.pqAdcTopK(s, emb, emb.filter(col("vec_id") < 5), AnnK)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -141,7 +147,7 @@ object SimilarityQueries {
     // greedy rounds unrolled per query over the capped candidate pool.
     "q158_mmr_rerank" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.mmrRerank(s, emb, emb.filter(col("vec_id") < 5))
+      Similarity.mmrRerank(s, emb, emb.filter(col("vec_id") < MmrQueries))
         .select(col("query_id"), col("rank"), col("doc_id"),
           r4(col("rel")).as("rel"), r4(col("mmr")).as("mmr"))
         .orderBy("query_id", "rank")
@@ -199,11 +205,11 @@ object SimilarityQueries {
         |ORDER BY 1, 2""".stripMargin,
 
     "q21_sim_ann_lsh" ->
-      OracleHashSql.q21AnnLsh(graft.operators.Similarity.defaultPlaneSets()),
+      OracleHashSql.q21AnnLsh(Similarity.annPlaneSets, AnnK),
 
-    "q29_sim_ivf" -> OracleHashSql.q29Ivf,
+    "q29_sim_ivf" -> OracleHashSql.q29Ivf(AnnK),
 
-    "q44_sim_ivf_kmeans" -> OracleHashSql.q44IvfKmeans(),
+    "q44_sim_ivf_kmeans" -> OracleHashSql.q44IvfKmeans(AnnK),
 
 
     // q65: pairwise dim moments via a (vec, dim)-exploded self-join —
@@ -308,13 +314,13 @@ object SimilarityQueries {
         |ORDER BY 1, 2""".stripMargin,
 
 
-    "q125_pca_project" -> OracleHashSql.q125PcaPower(),
+    "q125_pca_project" -> OracleHashSql.q125PcaPower(PcaRank),
 
-    "q129_pq_adc_topk" -> OracleHashSql.q129PqAdc(),
+    "q129_pq_adc_topk" -> OracleHashSql.q129PqAdc(AnnK),
 
-    "q158_mmr_rerank" -> OracleHashSql.q158Mmr(),
+    "q158_mmr_rerank" -> OracleHashSql.q158Mmr(MmrQueries),
 
-    "q156_kcenter_coreset" -> OracleHashSql.q156KCenter(),
+    "q156_kcenter_coreset" -> OracleHashSql.q156KCenter,
 
 
     // q155: identical sign packing (two BIGINT words), xor+bit_count

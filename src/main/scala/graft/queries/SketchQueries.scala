@@ -113,7 +113,7 @@ object SketchQueries {
 
   /** DuckDB oracle SQL for every query above (same keys). */
   val oracleSql: Map[String, String] = Map(
-    "q52_cms_heavy_hitters" -> OracleHashSql.q52CmsHeavyHitters(),
+    "q52_cms_heavy_hitters" -> OracleHashSql.q52CmsHeavyHitters,
 
 
     // q63: same inverse-CDF rank rule (first bin edge with cum >=
@@ -139,7 +139,7 @@ object SketchQueries {
 
     // q69: registers reproduced bit-exactly (FNV-1a + splitmix on the
     // key string, integer rho ladder); single double division at the end.
-    "q69_hll_distinct" -> OracleHashSql.q69HllDistinct(),
+    "q69_hll_distinct" -> OracleHashSql.q69HllDistinct,
 
 
     // q70: the bloom is an optimization, not a semantic — the oracle is
@@ -155,7 +155,7 @@ object SketchQueries {
 
 
     // q95: bit-exact KMV sketches (fnv1a64Seeded mirror, signed rank).
-    "q95_kmv_overlap" -> OracleHashSql.q95KmvOverlap(),
+    "q95_kmv_overlap" -> OracleHashSql.q95KmvOverlap,
 
 
     // q126: in the exact regime (capacity >= per-group distinct) the
@@ -190,6 +190,6 @@ object SketchQueries {
         |       floor(quantile_disc(o_totalprice::DOUBLE, 0.95) * 10000 + 0.5) / 10000 AS p95
         |FROM orders GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    "q135_hll_union_rollup" -> OracleHashSql.q135HllUnionRollup(),
+    "q135_hll_union_rollup" -> OracleHashSql.q135HllUnionRollup,
   )
 }

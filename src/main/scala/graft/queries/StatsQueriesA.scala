@@ -15,6 +15,9 @@ import graft.QueryHelpers._
   */
 object StatsQueriesA {
 
+  // q97's negatives per anchor, passed to the query and its oracle alike
+  private val ContrastiveSlots = 4
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Document fingerprints: md5 over normalized text, oracle-backed.
@@ -493,7 +496,7 @@ object StatsQueriesA {
       val n = docs.groupBy().agg(count(lit(1)).as("n_docs"))
       val negs = docs.crossJoin(broadcast(n))
         .select(col("doc_id"), col("source"), col("n_docs"),
-          explode(sequence(lit(0L), lit(3L))).as("slot"))
+          explode(sequence(lit(0L), lit(ContrastiveSlots - 1L))).as("slot"))
         .withColumn("neg_id",
           pmod(GraftFunctions.hash64Seeded(lit(300L) + col("slot"),
             col("doc_id").cast("string")), col("n_docs")))
@@ -909,7 +912,7 @@ object StatsQueriesA {
 
 
     // q97: seeded hash of the anchor id's decimal string, signed pmod.
-    "q97_contrastive_pairs" -> OracleHashSql.q97ContrastivePairs(),
+    "q97_contrastive_pairs" -> OracleHashSql.q97ContrastivePairs(ContrastiveSlots),
 
 
     // q148/q149: classic TPC-H Q3/Q10 shapes; top-k membership is

@@ -1435,7 +1435,7 @@ object StatsQueriesB {
     "q199_quality_gate" -> ((s, dir) => {
       graft.functions.GraftFunctions.register(s)
       val toks = graft.functions.TextFunctions.wsTokens(col("text"))
-      val tri = graft.functions.HashFunctions.wordShingles(toks, 3)
+      val tri = graft.functions.GraftFunctions.wordShingles(toks, 3)
       val nTok = size(toks).cast("long")
       val nChars = length(col("text")).cast("long")
       val nAlpha = graft.functions.TextFunctions.alphaCount(col("text"))
@@ -1470,7 +1470,7 @@ object StatsQueriesB {
       import org.apache.spark.sql.expressions.Window
       graft.functions.GraftFunctions.register(s)
       val toks = graft.functions.TextFunctions.wsTokens(col("text"))
-      val tri = graft.functions.HashFunctions.wordShingles(toks, 3)
+      val tri = graft.functions.GraftFunctions.wordShingles(toks, 3)
       val nTok = size(toks).cast("long")
       val nChars = length(col("text")).cast("long")
       val nAlpha = graft.functions.TextFunctions.alphaCount(col("text"))

@@ -638,11 +638,11 @@ object TextQueries {
 
 
     // q76: the same 5 merge rounds unrolled as CTEs (OracleHashSql).
-    "q76_bpe_merges" -> OracleHashSql.q76BpeMerges(),
+    "q76_bpe_merges" -> OracleHashSql.q76BpeMerges,
 
 
     // q80: encode side of the shared BPE CTE chain.
-    "q80_bpe_encode" -> OracleHashSql.q80BpeEncode(),
+    "q80_bpe_encode" -> OracleHashSql.q80BpeEncode,
 
 
     // q82: same smoothed KL fold in SQL.
@@ -675,7 +675,7 @@ object TextQueries {
 
     // q96: token→bucket→weight hash chain mirrored over distinct
     // tokens; BIGINT sum is order-independent so grouping is free.
-    "q96_quality_classifier" -> OracleHashSql.q96QualityClassifier(),
+    "q96_quality_classifier" -> OracleHashSql.q96QualityClassifier,
 
 
     // q98: BM25 with every constant combination spelled as the same
@@ -780,7 +780,7 @@ object TextQueries {
         |FROM sc ORDER BY doc_id""".stripMargin,
 
 
-    "q103_shingle_novelty" -> OracleHashSql.q103ShingleNovelty(),
+    "q103_shingle_novelty" -> OracleHashSql.q103ShingleNovelty,
 
 
     // q106: every division is spelled ::DOUBLE (a bare DuckDB 1.0 is
@@ -1098,7 +1098,7 @@ object TextQueries {
         |       (n_hits * 100 < n_tokens * 3) AS kept
         |FROM t ORDER BY doc_id""".stripMargin,
 
-    "q152_dsir_selection" -> OracleHashSql.q152Dsir(),
+    "q152_dsir_selection" -> OracleHashSql.q152Dsir,
 
 
     // q159: identical window cumsum over the (priority, doc_id)
@@ -1120,7 +1120,7 @@ object TextQueries {
         |       (cum_tokens <= 800) AS kept
         |FROM c ORDER BY doc_id""".stripMargin,
 
-    "q157_shard_manifest" -> OracleHashSql.q157ShardManifest(),
+    "q157_shard_manifest" -> OracleHashSql.q157ShardManifest,
 
 
     // q153: identical injection + canonicalization chain; RE2 ('g'
@@ -1241,6 +1241,6 @@ object TextQueries {
     },
 
 
-    "q176_winnow_fingerprints" -> OracleHashSql.q176Winnow(),
+    "q176_winnow_fingerprints" -> OracleHashSql.q176Winnow,
   )
 }

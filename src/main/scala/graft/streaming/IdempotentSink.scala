@@ -34,7 +34,7 @@ object IdempotentSink {
     * `batchId`, idempotently. Pass as
     * `.foreachBatch(IdempotentSink.write(out) _)`.
     */
-  def write(out: String)(batch: DataFrame, batchId: Long): Unit = {
+  private[graft] def write(out: String)(batch: DataFrame, batchId: Long): Unit = {
     val root = new Path(out)
     val dir = new Path(root, s"batch_id=$batchId")
     val fs = root.getFileSystem(

@@ -47,9 +47,8 @@ object PriceAlertsStream {
     * (id, quantity, productid, ts); `products` is a static dimension.
     */
   def dslAlertsUpdate(purchasesStream: DataFrame, products: DataFrame,
-                      threshold: Double = PriceAlerts.DslThreshold,
-                      windowSize: String = "1 minute"): DataFrame =
-    PriceAlerts.dslPipeline(purchasesStream, products, threshold, windowSize)
+                      threshold: Double = PriceAlerts.DslThreshold): DataFrame =
+    PriceAlerts.dslPipeline(purchasesStream, products, threshold)
 
   /** Processor variant: append-mode with watermark — one emission per
     * closed window, state cleaned up behind the watermark.

@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   */
 object SessionStream {
 
-  def sessions(events: DataFrame, gap: String = "30 minutes",
-               watermark: String = "2 minutes"): DataFrame =
+  private[graft] def sessions(events: DataFrame, gap: String = "30 minutes",
+                              watermark: String = "2 minutes"): DataFrame =
     events
       .withWatermark("ts", watermark)
       .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))

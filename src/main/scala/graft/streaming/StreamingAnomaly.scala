@@ -65,11 +65,10 @@ object StreamingAnomaly {
 
   /** Flag |x − mean| > z·sigma per key, in-stream, judged pre-update. */
   def detect(spark: SparkSession, events: DataFrame, z: Double = 3.0,
-             minSamples: Int = 8,
-             watermarkDelay: String = "1 minute"): Dataset[Verdict] = {
+             minSamples: Int = 8): Dataset[Verdict] = {
     import spark.implicits._
     events.selectExpr("key", "ts", "event_id", "value").as[Pt]
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "1 minute")
       .groupByKey(_.key)
       .transformWithState(new WelfordProcessor(z, minSamples),
         TimeMode.EventTime(), OutputMode.Append())

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StatefulProcessor, TimeMode, TTLConfig}
 import org.apache.spark.sql.streaming.ValueState
 
+import graft.operators.TimeSeries.{CusumSlack, CusumThreshold}
+
 /** Per-key streaming CUSUM change-point detection — the in-stream
   * twin of q151 (`TimeSeries.cusum`): Page's two-sided accumulators
   *   s⁺ = max(0, s⁺ + (x − μ − k)),  s⁻ = max(0, s⁻ + (μ − x − k))
@@ -30,7 +32,7 @@ object StreamingCusum {
                       alarm: Boolean)
   case class CState(sPos: Double, sNeg: Double)
 
-  class CusumProcessor(slack: Double, threshold: Double)
+  class CusumProcessor
       extends StatefulProcessor[String, CPt, CVerdict] {
     @transient private var st: ValueState[CState] = _
 
@@ -46,11 +48,11 @@ object StreamingCusum {
       val out = sorted.map { p =>
         // identical op order to TimeSeries.cusum's fold — max, add,
         // subtract on doubles, so batch and stream agree bit-for-bit
-        val sp = math.max(0.0, s.sPos + (p.value - p.mean - slack))
-        val sn = math.max(0.0, s.sNeg + (p.mean - p.value - slack))
-        val alarm = sp > threshold || sn > threshold
-        s = CState(if (sp > threshold) 0.0 else sp,
-          if (sn > threshold) 0.0 else sn)
+        val sp = math.max(0.0, s.sPos + (p.value - p.mean - CusumSlack))
+        val sn = math.max(0.0, s.sNeg + (p.mean - p.value - CusumSlack))
+        val alarm = sp > CusumThreshold || sn > CusumThreshold
+        s = CState(if (sp > CusumThreshold) 0.0 else sp,
+          if (sn > CusumThreshold) 0.0 else sn)
         CVerdict(p.key, p.ts, p.event_id, p.value, sp, sn, alarm)
       }
       st.update(s)
@@ -61,14 +63,12 @@ object StreamingCusum {
   /** Emit one verdict per event: the post-update s± (pre-reset, so a
     * consumer sees the breaching value) and the alarm flag.
     */
-  def detect(spark: SparkSession, events: DataFrame, slack: Double = 25.0,
-             threshold: Double = 200.0,
-             watermarkDelay: String = "1 minute"): Dataset[CVerdict] = {
+  def detect(spark: SparkSession, events: DataFrame): Dataset[CVerdict] = {
     import spark.implicits._
     events.selectExpr("key", "ts", "event_id", "value", "mean").as[CPt]
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "1 minute")
       .groupByKey(_.key)
-      .transformWithState(new CusumProcessor(slack, threshold),
+      .transformWithState(new CusumProcessor,
         TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -30,7 +30,8 @@ object StreamingDedup {
     * md5(normalized text) — the 16-byte digest, not the document body,
     * is what the state store keys on.
     */
-  def byFingerprint(docStream: DataFrame, tsCol: String, delay: String): DataFrame =
+  private[graft] def byFingerprint(docStream: DataFrame, tsCol: String,
+                                   delay: String): DataFrame =
     exact(
       docStream.withColumn("fp", TextFunctions.fingerprintMd5(col("text"))),
       tsCol, delay, "fp")
@@ -48,14 +49,14 @@ object StreamingDedup {
     * hash is one long per row on the wire.
     */
   def byImageDHash(mediaStream: DataFrame, tsCol: String,
-                   delay: String, idCol: String = "doc_id"): DataFrame = {
+                   delay: String): DataFrame = {
     val dhashUdf = udf((payload: Array[Byte]) =>
       graft.operators.Multimodal.tryDecodeImage(payload)
         .map(graft.operators.Multimodal.dHash64))
     // ONE decode per payload: the previous union-of-filters shape ran
     // the ImageIO UDF once per union leg (streaming plans don't share
     // subexpressions across legs), doubling the dominant codec cost.
-    // Non-decodable rows key on their unique id (`idCol`), so they
+    // Non-decodable rows key on their unique `doc_id`, so they
     // never dedup against each other and cannot collide with a real
     // hash (disjoint string prefixes). CONTRACT: non-decodable rows
     // now share the decodable rows' watermark semantics — one arriving
@@ -67,7 +68,7 @@ object StreamingDedup {
     val keyed = mediaStream.withColumn("dh", dhashUdf(col("payload")))
       .withColumn("__ik",
         when(col("dh").isNotNull, concat(lit("h:"), col("dh")))
-          .otherwise(concat(lit("u:"), col(idCol))))
+          .otherwise(concat(lit("u:"), col("doc_id"))))
     exact(keyed, tsCol, delay, "__ik").drop("__ik")
   }
 

@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.Sketches
+
 /** Per-(window, group) heavy hitters IN-STREAM: the q126 SpaceSaving
   * sketch ([[graft.functions.Aggregators.SpaceSavingTopK]]) as the
   * aggregation function of a watermarked windowed groupBy — "top
@@ -26,7 +28,8 @@ object StreamingHeavyHitters {
 
   def topTokens(events: DataFrame, tsCol: String, windowLen: String,
                 watermarkDelay: String, groupCol: String, tokCol: String,
-                capacity: Int = 64, k: Int = 5): DataFrame = {
+                capacity: Int = Sketches.SpaceSavingCapacity,
+                k: Int = Sketches.SpaceSavingTopK): DataFrame = {
     val ss = udaf(new graft.functions.Aggregators.SpaceSavingTopK(capacity))
     events
       .withWatermark(tsCol, watermarkDelay)
@@ -52,7 +55,7 @@ object StreamingHeavyHitters {
     */
   def windowPercentiles(events: DataFrame, tsCol: String, windowLen: String,
                         watermarkDelay: String, groupCol: String,
-                        valCol: String, k: Int = 64): DataFrame = {
+                        valCol: String, k: Int = Sketches.MrlK): DataFrame = {
     val mrl = udaf(new graft.functions.Aggregators.MrlQuantiles(
       k, Seq(0.5, 0.95, 0.99)))
     events

@@ -41,13 +41,6 @@ class CheckpointRecoverySpec extends SparkSpec {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
-  private def withRocksDb(body: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally spark.conf.unset(key)
-  }
-
   /** Drive an append-mode pipeline to a parquet sink in `phases`:
     * each phase is a list of batches (addData + processAllAvailable
     * per batch). When `interrupt`, the query is stopped and restarted

@@ -142,10 +142,7 @@ class CodegenFallbackSpec extends SparkSpec {
     CodegenFallbackGuard.install()
     CodegenFallbackGuard.drain()
     graft.functions.GraftFunctions.register(spark)
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       implicit val sq = spark.sqlContext
       import spark.implicits._
       val in = MemoryStream[Doc2]
@@ -168,7 +165,7 @@ class CodegenFallbackSpec extends SparkSpec {
         q.processAllAvailable()
       } finally q.stop()
       assert(spark.table("cg_guard_out").count() >= 2)
-    } finally spark.conf.unset(providerKey)
+    }
     val hits = CodegenFallbackGuard.drain()
     assert(hits.isEmpty,
       s"codegen silently fell back to interpreted mode:\n${hits.mkString("\n")}")

@@ -32,14 +32,14 @@ class DedupSpec extends SparkSpec {
     // build doc pairs with known overlap structure from real fixture text
     val d = Tables.documents(spark, sf001).limit(40)
     val withSets = d.select(col("doc_id"),
-      HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3).as("sh"))
+      GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3).as("sh"))
       .filter(size(col("sh")) > 0)
-      .withColumn("sig", HashFunctions.minhashSignature(col("sh"), 128))
+      .withColumn("sig", GraftFunctions.minhashSig(col("sh"), 128))
     val a = withSets.as("a"); val b = withSets.as("b")
     val cmp = a.join(b, col("a.doc_id") < col("b.doc_id"))
       .select(
         HashFunctions.jaccard(col("a.sh"), col("b.sh")).as("exact"),
-        HashFunctions.minhashJaccardEstimate(col("a.sig"), col("b.sig")).as("est"))
+        GraftFunctions.minhashEst(col("a.sig"), col("b.sig")).as("est"))
       .collect()
     assert(cmp.nonEmpty)
     val maxErr = cmp.map(r => math.abs(r.getDouble(0) - r.getDouble(1))).max
@@ -169,7 +169,7 @@ class DedupSpec extends SparkSpec {
     val d = Tables.documents(spark, sf001).limit(100)
     for (n <- Seq(2, 3, 5, 8)) {
       val cmp = d.select(
-          HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), n).as("fused"),
+          GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), n).as("fused"),
           HashFunctions.wordShinglesHof(TextFunctions.wsTokens(col("text")), n).as("hof"))
         .filter(not(col("fused") <=> col("hof"))) // null-safe: a NULL-vs-[] divergence must FAIL, not filter out
       assert(cmp.count() == 0, s"n=$n mismatch")
@@ -177,7 +177,7 @@ class DedupSpec extends SparkSpec {
     // short-doc edge: fewer tokens than n -> empty array
     val tiny = docs((1L, "one two", "s"))
     val out = tiny.select(
-      HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3)).head
+      GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3)).head
     assert(out.getSeq[String](0).isEmpty)
   }
 
@@ -199,18 +199,18 @@ class DedupSpec extends SparkSpec {
     GraftFunctions.register(spark)
     val sigs = d
       .select(col("doc_id"),
-        HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3).as("sh"))
+        GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3).as("sh"))
       .filter(size(col("sh")) > 0)
-      .select(col("doc_id"), HashFunctions.minhashSignature(col("sh"), 64).as("sig"))
+      .select(col("doc_id"), GraftFunctions.minhashSig(col("sh"), 64).as("sig"))
     val buckets = sigs.select(col("doc_id"), col("sig"),
-        posexplode(HashFunctions.bandHashes(col("sig"), 16, 4)))
+        posexplode(GraftFunctions.bandHash(col("sig"), 16, 4)))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
     val l = buckets.as("l"); val r = buckets.as("r")
     val reference = l.join(r,
         col("l.band") === col("r.band") && col("l.bucket") === col("r.bucket") &&
           col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("a"), col("r.doc_id").as("b"),
-        HashFunctions.minhashJaccardEstimate(col("l.sig"), col("r.sig")).as("e"))
+        GraftFunctions.minhashEst(col("l.sig"), col("r.sig")).as("e"))
       .filter(col("e") >= 0.2)
       .distinct()
       .collect().map(r2 => (r2.getLong(0), r2.getLong(1)))
@@ -320,11 +320,11 @@ class DedupSpec extends SparkSpec {
     val got = Dedup.prefixFilterJaccardPairs(d, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val sets = d.select(col("doc_id"), array_sort(array_distinct(
-        HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3))).as("sh"))
+        GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3))).as("sh"))
       .filter(size(col("sh")) > 0)
     val brute = sets.as("a").join(sets.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id"), col("b.doc_id"),
-        HashFunctions.jaccardPresorted(col("a.sh"), col("b.sh")).as("j"))
+        GraftFunctions.jaccardSorted(col("a.sh"), col("b.sh")).as("j"))
       .filter(col("j") >= 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(got.nonEmpty, "fixture must contain near-dup pairs")

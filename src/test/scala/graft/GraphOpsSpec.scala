@@ -295,9 +295,9 @@ class GraphOpsSpec extends SparkSpec {
       "pageRank relTol" -> (() => GraphOps.pageRank(g, iters = 30, relTol = 1e-3)),
       "personalizedPageRank" -> (() => GraphOps.personalizedPageRank(g, Seq(1L))),
       "kCore" -> (() => GraphOps.kCore(g, k = 2, rounds = 4)),
-      "coreNumbers" -> (() => GraphOps.coreNumbers(g)),
-      "labelPropagation" -> (() => GraphOps.labelPropagation(g)),
-      "hits" -> (() => GraphOps.hits(g)),
+      "coreNumbers" -> (() => GraphOps.coreNumbers(g, GraphQueries.CoreNumberRounds)),
+      "labelPropagation" -> (() => GraphOps.labelPropagation(g, GraphQueries.LabelRounds)),
+      "hits" -> (() => GraphOps.hits(g, GraphQueries.HitsIters)),
       "triangleCount" -> (() => GraphOps.triangleCount(
         k4.toDF("a", "b"))))
     val sc = spark.sparkContext

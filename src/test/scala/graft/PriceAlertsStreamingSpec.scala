@@ -40,20 +40,6 @@ class PriceAlertsStreamingSpec extends SparkSpec {
     spark.table(name)
   }
 
-  /** transformWithState keeps state and timers in separate column
-    * families, which only the RocksDB provider supports.
-    */
-  private def withRocksDb(body: => Unit): Unit = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   private def joined(in: MemoryStream[P]): DataFrame =
     graft.operators.PriceAlerts.purchasesWithProducts(in.toDF(), products(300.0))
 

@@ -82,9 +82,9 @@ class PropertySpec extends SparkSpec {
     GraftFunctions.register(spark)
     for (a <- samples(tokenArrayGen, 10)) {
       val df = Seq(Tuple1(a)).toDF("t")
-        .withColumn("sig", HashFunctions.minhashSignature(col("t"), 32))
+        .withColumn("sig", GraftFunctions.minhashSig(col("t"), 32))
       val est = df.select(
-        HashFunctions.minhashJaccardEstimate(col("sig"), col("sig"))).head.getDouble(0)
+        GraftFunctions.minhashEst(col("sig"), col("sig"))).head.getDouble(0)
       assert(est == 1.0)
     }
   }
@@ -109,8 +109,8 @@ class PropertySpec extends SparkSpec {
     GraftFunctions.register(spark)
     val d = Tables.documents(spark, sf001).limit(30)
     val sigs = d.select(col("doc_id"),
-        HashFunctions.minhashSignature(
-          HashFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3), 64).as("sig"))
+        GraftFunctions.minhashSig(
+          GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3), 64).as("sig"))
       .filter(org.apache.spark.sql.functions.size(col("sig")) > 0)
     // self: band 0 always matches itself
     val self = sigs.select(GraftFunctions.firstSharedBand(col("sig"), col("sig"), 16, 4))
@@ -121,8 +121,8 @@ class PropertySpec extends SparkSpec {
     val cmp = a.join(b, col("a.doc_id") < col("b.doc_id"))
       .select(
         GraftFunctions.firstSharedBand(col("a.sig"), col("b.sig"), 16, 4).as("fsb"),
-        HashFunctions.bandHashes(col("a.sig"), 16, 4).as("ba"),
-        HashFunctions.bandHashes(col("b.sig"), 16, 4).as("bb"))
+        GraftFunctions.bandHash(col("a.sig"), 16, 4).as("ba"),
+        GraftFunctions.bandHash(col("b.sig"), 16, 4).as("bb"))
       .collect()
     cmp.foreach { r =>
       val ba = r.getSeq[Long](1); val bb = r.getSeq[Long](2)

@@ -17,12 +17,7 @@ class RateLimiterSpec extends SparkSpec {
 
   private def run(phases: Seq[Seq[Seq[Ev]]], interrupt: Boolean,
                   rate: Double, burst: Double): Seq[String] = {
-    // transformWithState needs the multi-column-family state store
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try runInner(phases, interrupt, rate, burst)
-    finally spark.conf.unset(providerKey)
+    withRocksDb(runInner(phases, interrupt, rate, burst))
   }
 
   private def runInner(phases: Seq[Seq[Seq[Ev]]], interrupt: Boolean,

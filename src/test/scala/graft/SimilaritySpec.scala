@@ -116,7 +116,7 @@ class SimilaritySpec extends SparkSpec {
     val got = Similarity.annTopK(spark, emb, queries, 10).collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Int]("rank"),
         r.getAs[Long]("neighbor_id"))).toSet
-    val planeSets = Similarity.defaultPlaneSets()
+    val planeSets = Similarity.annPlaneSets
     def buckets(df: org.apache.spark.sql.DataFrame, idAs: String, vecAs: String) = df
       .select(col("vec_id").as(idAs), col("embedding").as(vecAs),
         posexplode(org.apache.spark.sql.classic.GraftPlanBridge.column(

@@ -200,6 +200,49 @@ class SourceLintSpec extends AnyFunSuite {
       "src/main/scala/graft/Planted.scala: onlyInComment"))
   }
 
+  test("every default-valued parameter in src/main is passed at some call") {
+    // a default that no call overrides is a constant written as an
+    // option: make it a named constant of its object (or an inline
+    // literal), so the engine and its DuckDB oracle read one value
+    val main = sources
+    val callers = (main ++ scalaFiles(Paths.get("perfbench/src")) ++
+      scalaFiles(Paths.get("src/test/scala"))).map(_._2)
+    info(s"${DefaultParams.declared(main).size} default-valued parameters in src/main")
+    val unset = DefaultParams.unset(main, callers, DefaultParams.Allowed)
+    assert(unset.isEmpty,
+      s"default-valued parameters that no call passes:\n  " + unset.map(_.id).mkString("\n  "))
+  }
+
+  test("the default-parameter rule flags an unset default, not a set or allow-listed one") {
+    val planted = Seq(
+      "src/main/scala/graft/sources/Planted.scala" ->
+        """object Planted {
+          |  def f(a: Int, unset: Int = 1, byName: Int = 2): Int = a
+          |  def g(x: Int)(byPos: Int = 4, later: String = "s"): Int = x
+          |  def h[T](t: T, allowed: Int = 5, commented: Int = 6): T = t
+          |  private def local(fn: Int => Int = identity, inString: Int = 7): Int = 0
+          |  class Inner(n: Int = 0) { def k(a: Int, viaValue: Int = 8, otherArity: Int = 9): Int = a }
+          |}
+          |object Twin { def f(a: Int, b: Int, c: Int): Int = a }""".stripMargin)
+    val callers = Seq(
+      """object Calls {
+        |  Planted.f(1, byName = 9)
+        |  Twin.f(1, 2, 3) // another object's f
+        |  Planted.g(1)(5)
+        |  Planted.h[Int](1) // Planted.h(1, 2, commented = 3)
+        |  val s = s"${Planted.local()} local(1, 2)"
+        |  new Planted.Inner().k(1, 2)
+        |  k(1, 2, 3, 4) // fits no k
+        |}""".stripMargin)
+    val flagged = DefaultParams.unset(planted, callers, Set("Planted.h.allowed"))
+    assert(DefaultParams.declared(planted).map(p => s"${p.owner}.${p.defName}.${p.name}") == Seq(
+      "Planted.f.unset", "Planted.f.byName", "Planted.g.byPos", "Planted.g.later",
+      "Planted.h.allowed", "Planted.h.commented", "Planted.local.fn", "Planted.local.inString",
+      "Inner.k.viaValue", "Inner.k.otherArity"))
+    assert(flagged.map(p => s"${p.defName}.${p.name}") == Seq("f.unset", "g.later",
+      "h.commented", "local.fn", "local.inString", "k.otherArity"))
+  }
+
   test("udf( is confined to the streaming image dHash") {
     check("udf(", """(?<![\w.])udf\(""".r, Map(
       "src/main/scala/graft/streaming/StreamingDedup.scala" ->
@@ -253,6 +296,63 @@ object PublicSurface {
 
   private val Word = """\w+""".r
 
+  /** `src` with comments removed and each string or character literal
+    * reduced to `""`, keeping the code of its `${…}` splices, so that
+    * brackets, commas and `=` in the result are all code.
+    */
+  private[graft] def codeOnly(src: String): String = {
+    val s = stripComments(src)
+    val n = s.length
+    val out = new StringBuilder(n)
+    var i = 0
+    def at(p: String) = s.startsWith(p, i)
+    // copies code up to the `}` closing a splice (not consumed), or the end
+    def code(inSplice: Boolean): Unit = {
+      var depth = 0
+      while (i < n && !(inSplice && depth == 0 && s(i) == '}')) {
+        val c = s(i)
+        if (at("\"\"\"")) literal(triple = true)
+        else if (c == '"') literal(triple = false)
+        else if (c == '\'' && i + 2 < n && (s(i + 1) == '\\' || s(i + 2) == '\'')) {
+          val close = s.indexOf('\'', i + (if (s(i + 1) == '\\') 3 else 2))
+          out ++= "' '"
+          i = if (close < 0) n else close + 1
+        } else {
+          if (c == '{') depth += 1 else if (c == '}') depth -= 1
+          out += c
+          i += 1
+        }
+      }
+    }
+    def literal(triple: Boolean): Unit = {
+      val interpolated = i > 0 && (s(i - 1).isLetterOrDigit || s(i - 1) == '_')
+      out += '"'
+      i += (if (triple) 3 else 1)
+      var open = true
+      while (open && i < n) {
+        if (triple && at("\"\"\"")) {
+          i += 3
+          while (i < n && s(i) == '"') i += 1
+          open = false
+        } else if (!triple && (s(i) == '"' || s(i) == '\n')) {
+          if (s(i) == '"') i += 1
+          open = false
+        } else if (interpolated && at("$$")) i += 2
+        else if (interpolated && at("${")) {
+          out += '{'
+          i += 2
+          code(inSplice = true)
+          out += '}'
+          i += 1
+        } else if (!triple && s(i) == '\\') i += 2
+        else i += 1
+      }
+      out += '"'
+    }
+    code(inSplice = false)
+    out.toString
+  }
+
   /** `src` with line and (nested) block comments removed; string and
     * character literals are kept whole, so a `//` inside a string is
     * not taken for a comment. Newlines inside block comments are kept.
@@ -292,5 +392,205 @@ object PublicSurface {
       }
     }
     out.toString
+  }
+}
+
+/** The default-parameter rule: every default-valued parameter of a
+  * `def` in `src/main` must be passed, by name or by position, at some
+  * call of that def. A default that no call overrides is a constant
+  * written as an option; it belongs in the operator's object (or
+  * inline), where it is written once. A call `Owner.name(…)` counts
+  * only for the def that `Owner` encloses; a call with no qualifier, or
+  * with a value qualifier, counts for each def of that name whose
+  * parameter lists its arguments fit.
+  */
+object DefaultParams {
+
+  /** `<file base name>.<def>.<param>`: deployment settings that only a
+    * production caller sets — the Kafka and CSV readers of `graft.sources`.
+    */
+  val Allowed: Set[String] = Set(
+    "CsvIO.readCsv.multiLine",    // CSV files with quoted newlines
+    "KafkaIO.purchasesStream.mode") // the Avro parse mode of the Kafka source
+
+  /** Parameter `index` of list `list` of `defName`, declared in the
+    * object, class or trait `owner`; `lists` holds each parameter's
+    * declaration text.
+    */
+  final case class Param(file: String, owner: String, defName: String,
+                         lists: Seq[Seq[String]], list: Int, index: Int) {
+    def name: String = paramName(lists(list)(index))
+    def id: String = s"$file: $defName.$name"
+    def key: String = s"${file.split('/').last.stripSuffix(".scala")}.$defName.$name"
+  }
+
+  private val DefName = """\bdef\s+([A-Za-z_]\w*)""".r
+  private val DefBefore = """(?s).*\bdef\s+""".r
+  private val Named = """(?s)^\s*([A-Za-z_]\w*)\s*=(?![=>]).*""".r
+  private val TypeDef = """\b(?:object|class|trait)\s+([A-Za-z_]\w*)""".r
+  private val Qualifier = """(?s).*?([A-Za-z_]\w*)?\s*\.\s*$""".r
+  private val Keyword = """(?:def|val|var|object|class|trait|case)\b""".r
+
+  /** Every default-valued parameter declared in `main` (path → source). */
+  def declared(main: Seq[(String, String)]): Seq[Param] =
+    main.flatMap { case (f, src) =>
+      val code = PublicSurface.codeOnly(src)
+      val bodies = TypeDef.findAllMatchIn(code).flatMap { t =>
+        body(code, t.end).map(open => (open, close(code, open), t.group(1)))
+      }.toSeq
+      DefName.findAllMatchIn(code).flatMap { m =>
+        val owner = bodies.filter { case (open, end, _) => open < m.start && m.start < end }
+          .maxByOption(_._1).fold("")(_._3)
+        val lists = argGroups(code, m.end, declaration = true).map(topLevel)
+        for {
+          (decls, l) <- lists.zipWithIndex
+          (d, i) <- decls.zipWithIndex if defaultAt(d) >= 0
+        } yield Param(f, owner, m.group(1), lists, l, i)
+      }
+    }
+
+  /** The parameters of `declared(main)`, `allowed` aside, that no call
+    * in `callers` (sources; comments and literals do not count) passes,
+    * by name or by position.
+    */
+  def unset(main: Seq[(String, String)], callers: Seq[String],
+            allowed: Set[String]): Seq[Param] = {
+    val params = declared(main)
+    val names = params.map(_.defName).toSet
+    // def name -> (qualifier, argument groups) of each call
+    val calls = callers.map(PublicSurface.codeOnly).flatMap { code =>
+      """\b([A-Za-z_]\w*)\b""".r.findAllMatchIn(code).collect {
+        case m if names(m.group(1)) &&
+            !DefBefore.matches(code.substring(math.max(0, m.start - 12), m.start)) =>
+          val before = code.substring(math.max(0, m.start - 80), m.start)
+          val qualifier = before match {
+            case Qualifier(q) => Some(Option(q).getOrElse(""))
+            case _ => None
+          }
+          m.group(1) -> (qualifier, argGroups(code, m.end, declaration = false).map(topLevel))
+      }
+    }.groupMap(_._1)(_._2)
+    params.filterNot { p =>
+      allowed(p.key) || calls.getOrElse(p.defName, Nil).exists { case (qualifier, groups) =>
+        val resolves = qualifier match {
+          case Some(q) if q.headOption.exists(_.isUpper) => q == p.owner
+          case _ => fits(groups, p.lists)
+        }
+        resolves && groups.lift(p.list).exists { args =>
+          args.lift(p.index).exists(!Named.matches(_)) ||
+            args.exists { case Named(n) => n == p.name; case _ => false }
+        }
+      }
+    }
+  }
+
+  /** Whether a call's argument groups fit a def's parameter lists: no
+    * more positional arguments than parameters (varargs aside), every
+    * named argument names a parameter, and every parameter without a
+    * default is given.
+    */
+  private def fits(groups: Seq[Seq[String]], lists: Seq[Seq[String]]): Boolean =
+    groups.size <= lists.size && groups.zip(lists).forall { case (args, decls) =>
+      val named = args.collect { case Named(n) => n }
+      val positional = args.size - named.size
+      val varargs = decls.lastOption.exists(_.trim.endsWith("*"))
+      named.forall(decls.map(paramName).contains) &&
+        (positional <= decls.size || varargs) &&
+        positional + named.size >= decls.count(d => defaultAt(d) < 0 && !d.trim.endsWith("*"))
+    }
+
+  /** Index of the `{` opening the body of the type whose header starts
+    * at `from`, or None if the header ends without one.
+    */
+  private def body(code: String, from: Int): Option[Int] = {
+    var i = from
+    while (i < code.length) {
+      code(i) match {
+        case '(' | '[' => i = close(code, i)
+        case '{' => return Some(i)
+        case '}' | ';' | '=' => return None
+        case _ if !(code(i - 1).isLetterOrDigit || code(i - 1) == '_') &&
+            Keyword.findPrefixOf(code.substring(i, math.min(code.length, i + 7))).isDefined =>
+          return None
+        case _ =>
+      }
+      i += 1
+    }
+    None
+  }
+
+  /** The bracketed groups that follow `from`: an optional `[…]`, then
+    * each `(…)` (and, at a call, `{…}`) group's inner text. Declarations
+    * may break lines between groups; calls may not.
+    */
+  private def argGroups(code: String, from: Int, declaration: Boolean): Seq[String] = {
+    val out = Seq.newBuilder[String]
+    def skip(i: Int): Int = {
+      var j = i
+      while (j < code.length && (code(j) == ' ' || code(j) == '\t' ||
+          (declaration && code(j) == '\n'))) j += 1
+      j
+    }
+    var i = skip(from)
+    if (i < code.length && code(i) == '[') i = skip(close(code, i) + 1)
+    while (i < code.length && (code(i) == '(' || (!declaration && code(i) == '{'))) {
+      val end = close(code, i)
+      out += code.substring(i + 1, end)
+      i = skip(end + 1)
+    }
+    out.result()
+  }
+
+  /** Index of the bracket closing the one at `open`. */
+  private def close(code: String, open: Int): Int = {
+    var depth = 0
+    var i = open
+    while (i < code.length) {
+      code(i) match {
+        case '(' | '[' | '{' => depth += 1
+        case ')' | ']' | '}' =>
+          depth -= 1
+          if (depth == 0) return i
+        case _ =>
+      }
+      i += 1
+    }
+    code.length - 1
+  }
+
+  /** `group` split at its depth-0 commas; an empty group has no parts. */
+  private def topLevel(group: String): Seq[String] = if (group.trim.isEmpty) Nil else {
+    val parts = Seq.newBuilder[String]
+    var depth = 0
+    var start = 0
+    for (i <- group.indices) group(i) match {
+      case '(' | '[' | '{' => depth += 1
+      case ')' | ']' | '}' => depth -= 1
+      case ',' if depth == 0 =>
+        parts += group.substring(start, i); start = i + 1
+      case _ =>
+    }
+    (parts += group.substring(start)).result()
+  }
+
+  /** Index of the depth-0 `=` that opens a parameter's default, or -1. */
+  private def defaultAt(param: String): Int = {
+    var depth = 0
+    for (i <- param.indices) param(i) match {
+      case '(' | '[' | '{' => depth += 1
+      case ')' | ']' | '}' => depth -= 1
+      case '=' if depth == 0 &&
+          !param.lift(i + 1).exists(c => c == '>' || c == '=') &&
+          !param.lift(i - 1).exists("=!<>:".contains(_)) =>
+        return i
+      case _ =>
+    }
+    -1
+  }
+
+  private def paramName(decl: String): String = {
+    val at = defaultAt(decl)
+    """[A-Za-z_]\w*""".r.findAllIn((if (at < 0) decl else decl.substring(0, at))
+      .takeWhile(_ != ':')).toSeq.last
   }
 }

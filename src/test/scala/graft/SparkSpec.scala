@@ -26,6 +26,21 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def sf001 = "/root/testdata/sf0.001"
 
+  /** Runs `body` on the RocksDB state-store provider (transformWithState
+    * keeps state and timers in column families, which only RocksDB
+    * has), then restores the session's prior provider setting.
+    */
+  protected def withRocksDb[T](body: => T): T = {
+    val key = "spark.sql.streaming.stateStore.providerClass"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try body finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   override protected def beforeAll(): Unit = {
     // Session FIRST: Spark's first-init REPLACES the log4j configuration
     // (DefaultConfiguration, root=ERROR → Spark's, root=INFO), which

@@ -4,8 +4,7 @@ import graft.functions.GraftFunctions
 import graft.sources.Tables
 
 /** The SQL front-end surface: temp views + spark.sql, including the
-  * custom expressions by SQL name (as a cluster user would get them via
-  * spark.sql.extensions=graft.functions.GraftExtensions).
+  * custom expressions by SQL name (registered by GraftFunctions.register).
   */
 class SqlSurfaceSpec extends SparkSpec {
 

@@ -37,67 +37,65 @@ class StateStoreCleanupSpec extends SparkSpec {
   }
 
   test("stopping one of two RocksDB queries closes only its providers (listener-scoped unload)") {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    StateStoreCleanupListener.install(spark)
-    GraftStateStoreBridge.setMaintenancePaused(true)
-    // quiesce leftovers from earlier suites so the id sets below are ours
-    GraftStateStoreBridge.unloadAllStateStores()
-    try {
-      val inA = MemoryStream[Long]
-      val inB = MemoryStream[Long]
-      // dropDuplicates = one stateful operator → one provider per
-      // shuffle partition, the minimal RocksDB-backed shape
-      def dedup(s: MemoryStream[Long]) =
-        s.toDF().toDF("k").dropDuplicates("k")
-      val qA = dedup(inA).writeStream.format("noop")
-        .option("checkpointLocation", tmpDir("graft-ssc-a"))
-        .outputMode("append").start()
-      val qB = dedup(inB).writeStream.format("noop")
-        .option("checkpointLocation", tmpDir("graft-ssc-b"))
-        .outputMode("append").start()
+    withRocksDb {
+      StateStoreCleanupListener.install(spark)
+      GraftStateStoreBridge.setMaintenancePaused(true)
+      // quiesce leftovers from earlier suites so the id sets below are ours
+      GraftStateStoreBridge.unloadAllStateStores()
       try {
-        inA.addData(1L, 2L, 3L); qA.processAllAvailable()
-        inB.addData(10L, 20L); qB.processAllAvailable()
+        val inA = MemoryStream[Long]
+        val inB = MemoryStream[Long]
+        // dropDuplicates = one stateful operator → one provider per
+        // shuffle partition, the minimal RocksDB-backed shape
+        def dedup(s: MemoryStream[Long]) =
+          s.toDF().toDF("k").dropDuplicates("k")
+        val qA = dedup(inA).writeStream.format("noop")
+          .option("checkpointLocation", tmpDir("graft-ssc-a"))
+          .outputMode("append").start()
+        val qB = dedup(inB).writeStream.format("noop")
+          .option("checkpointLocation", tmpDir("graft-ssc-b"))
+          .outputMode("append").start()
+        try {
+          inA.addData(1L, 2L, 3L); qA.processAllAvailable()
+          inB.addData(10L, 20L); qB.processAllAvailable()
 
-        val loaded0 = GraftStateStoreBridge.loadedProviderIds
-        val runsLoaded0 = loaded0.map(_.queryRunId).toSet
-        assert(runsLoaded0.contains(qA.runId) && runsLoaded0.contains(qB.runId),
-          s"both runs must have loaded providers, got $runsLoaded0")
-        val nB = loaded0.count(_.queryRunId == qB.runId)
-        assert(nB > 0)
+          val loaded0 = GraftStateStoreBridge.loadedProviderIds
+          val runsLoaded0 = loaded0.map(_.queryRunId).toSet
+          assert(runsLoaded0.contains(qA.runId) && runsLoaded0.contains(qB.runId),
+            s"both runs must have loaded providers, got $runsLoaded0")
+          val nB = loaded0.count(_.queryRunId == qB.runId)
+          assert(nB > 0)
 
-        qA.stop()
-        // the listener (async, listener-bus thread) must close qA's
-        // providers; maintenance is paused, so nobody else can
-        awaitCond("stopped query's providers closed by the listener") {
-          !GraftStateStoreBridge.loadedProviderIds.exists(_.queryRunId == qA.runId)
-        }
-        // SURVIVOR: providers still loaded, same count — not evicted
-        val bAfter = GraftStateStoreBridge.loadedProviderIds
-          .count(_.queryRunId == qB.runId)
-        assert(bAfter == nB,
-          s"survivor's providers must stay loaded ($nB), got $bAfter")
+          qA.stop()
+          // the listener (async, listener-bus thread) must close qA's
+          // providers; maintenance is paused, so nobody else can
+          awaitCond("stopped query's providers closed by the listener") {
+            !GraftStateStoreBridge.loadedProviderIds.exists(_.queryRunId == qA.runId)
+          }
+          // SURVIVOR: providers still loaded, same count — not evicted
+          val bAfter = GraftStateStoreBridge.loadedProviderIds
+            .count(_.queryRunId == qB.runId)
+          assert(bAfter == nB,
+            s"survivor's providers must stay loaded ($nB), got $bAfter")
 
-        // and the survivor still processes (its state was not yanked)
-        inB.addData(20L, 30L); qB.processAllAvailable()
-        assert(qB.isActive)
-        assert(GraftStateStoreBridge.loadedProviderIds
-          .count(_.queryRunId == qB.runId) == nB)
+          // and the survivor still processes (its state was not yanked)
+          inB.addData(20L, 30L); qB.processAllAvailable()
+          assert(qB.isActive)
+          assert(GraftStateStoreBridge.loadedProviderIds
+            .count(_.queryRunId == qB.runId) == nB)
 
-        qB.stop()
-        awaitCond("second query's providers closed on termination") {
-          !GraftStateStoreBridge.loadedProviderIds.exists(_.queryRunId == qB.runId)
+          qB.stop()
+          awaitCond("second query's providers closed on termination") {
+            !GraftStateStoreBridge.loadedProviderIds.exists(_.queryRunId == qB.runId)
+          }
+        } finally {
+          try { if (qA.isActive) qA.stop(); if (qB.isActive) qB.stop() }
+          finally GraftStateStoreBridge.unloadAllStateStores()
         }
       } finally {
-        try { if (qA.isActive) qA.stop(); if (qB.isActive) qB.stop() }
-        finally GraftStateStoreBridge.unloadAllStateStores()
+        GraftStateStoreBridge.setMaintenancePaused(false)
+        StateStoreCleanupListener.uninstall(spark)
       }
-    } finally {
-      GraftStateStoreBridge.setMaintenancePaused(false)
-      StateStoreCleanupListener.uninstall(spark)
-      spark.conf.unset(key)
     }
   }
 }

@@ -53,18 +53,11 @@ class StreamEquivSpec extends SparkSpec {
     */
   private def run(name: String, df: DataFrame, mode: String = "append")
       (feed: StreamingQuery => Unit): Array[Row] = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).start()
       try feed(q)
       finally try q.stop() finally GraftStateStoreBridge.unloadAllStateStores()
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
     }
     spark.table(name).collect()
   }

@@ -17,10 +17,7 @@ class StreamingAnomalySpec extends SparkSpec {
 
   private def run(phases: Seq[Seq[Seq[Pt]]], interrupt: Boolean,
                   z: Double, minSamples: Int): Map[Long, Boolean] = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val cp = tmp("graft-an-cp"); val out = tmp("graft-an-out")
       val in = MemoryStream[Pt]
       val df = StreamingAnomaly.detect(spark, in.toDF(), z, minSamples).toDF()
@@ -37,7 +34,7 @@ class StreamingAnomalySpec extends SparkSpec {
       spark.read.parquet(out).collect()
         .map(r => r.getAs[Long]("event_id") -> r.getAs[Boolean]("is_anomaly"))
         .toMap
-    } finally spark.conf.unset(providerKey)
+    }
   }
 
   test("streaming anomaly: wild point flagged against pre-update stats; warm-up never flags") {
@@ -69,10 +66,7 @@ class StreamingAnomalySpec extends SparkSpec {
   }
 
   test("streaming anomaly: emitted mean/sigma are the pre-update pair that reproduces the verdict") {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val cp = tmp("graft-an2-cp"); val out = tmp("graft-an2-out")
       val calm = (0 until 10).map(i =>
         Pt("A", t(i), i.toLong, 10.0 + (i % 3) * 0.5))
@@ -103,7 +97,7 @@ class StreamingAnomalySpec extends SparkSpec {
         if (flag) assert(s > 0.0 && math.abs(v - m) > 3.0 * s,
           s"verdict not reproducible from emitted fields: v=$v m=$m s=$s")
       }
-    } finally spark.conf.unset(providerKey)
+    }
   }
 
   test("streaming anomaly: keys are independent") {
@@ -120,10 +114,7 @@ class StreamingAnomalySpec extends SparkSpec {
   private def runCusum(phases: Seq[Seq[Seq[graft.streaming.StreamingCusum.CPt]]],
                        interrupt: Boolean): Map[Long, Boolean] = {
     import graft.streaming.StreamingCusum
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val cp = tmp("graft-cu-cp"); val out = tmp("graft-cu-out")
       val in = MemoryStream[StreamingCusum.CPt]
       val df = StreamingCusum.detect(spark, in.toDF()).toDF()
@@ -140,7 +131,7 @@ class StreamingAnomalySpec extends SparkSpec {
       spark.read.parquet(out).collect()
         .map(r => r.getAs[Long]("event_id") -> r.getAs[Boolean]("alarm"))
         .toMap
-    } finally spark.conf.unset(providerKey)
+    }
   }
 
   test("streaming CUSUM: alarm-for-alarm equality with the q151 batch fold") {

@@ -28,10 +28,7 @@ class StreamingAsofSpec extends SparkSpec {
 
   private def run(phases: Seq[Seq[Seq[Ev]]],
                   interrupt: Boolean): Set[(Long, Long, Long)] = {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    withRocksDb {
       val cp = tmp("graft-fa-cp"); val out = tmp("graft-fa-out")
       val in = MemoryStream[Ev]
       val df = StreamingAsof.matches(spark, in.toDF(), TolMs,
@@ -49,7 +46,7 @@ class StreamingAsofSpec extends SparkSpec {
       spark.read.parquet(out).collect()
         .map(r => (r.getAs[Long]("p_id"), r.getAs[Long]("next_error_id"),
           r.getAs[Long]("delta_s"))).toSet
-    } finally spark.conf.unset(providerKey)
+    }
   }
 
   private val handCase: Seq[Seq[Ev]] = Seq(
