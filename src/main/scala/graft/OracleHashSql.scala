@@ -234,7 +234,7 @@ SELECT doc_id, survivor_id, tier FROM (
 ORDER BY doc_id, tier"""
 
   /** Oracle for q36: LSH candidates (est >= 0.2) exact-reranked with
-    * word-set jaccard >= 0.5 (= Dedup.lshBlockedJaccardPairs defaults).
+    * word-set jaccard >= `Dedup.LshJaccardThreshold` (= Dedup.lshBlockedJaccardPairs).
     */
   def q36LshBlockedJaccard: String =
     s"""WITH $minhashCtes,
@@ -250,7 +250,7 @@ rerank AS (
   JOIN rtoks tb ON tb.doc_id = doc_b)
 SELECT doc_a, doc_b, floor(j * 10000 + 0.5) / 10000 AS jaccard
 FROM rerank
-WHERE j >= 0.5
+WHERE j >= ${Dedup.LshJaccardThreshold}
 ORDER BY 1, 2"""
 
   /** q81: the q36 candidate CTEs reranked by set containment
@@ -296,7 +296,7 @@ FROM rr
 ORDER BY 1, 2, 3, 4"""
 
   /** Oracle for q18: 64-bit simhash (= HashImpl.simHash64) bucketed by
-    * 16-bit chunks, pairs at hamming <= 3 (= Dedup.simhashPairs).
+    * 16-bit chunks, pairs at hamming <= `Dedup.SimhashMaxHamming` (= Dedup.simhashPairs).
     */
   def q18Simhash: String =
     s"""WITH dtoks AS (
@@ -330,7 +330,7 @@ pairs AS (
     ON l.band = r.band AND l.bucket = r.bucket AND l.doc_id < r.doc_id)
 SELECT doc_a, doc_b, hamming
 FROM pairs
-WHERE hamming <= 3
+WHERE hamming <= ${Dedup.SimhashMaxHamming}
 ORDER BY 1, 2"""
 
   /** A double rendered so DuckDB parses back the identical IEEE bits
@@ -340,7 +340,7 @@ ORDER BY 1, 2"""
 
   /** Oracle for q21: multi-table random-hyperplane LSH ANN top-k
     * (= Similarity.annTopK over `planeSets`, `Similarity.AnnProbes`
-    * probes, queries vec_id < 5). The exact Gaussian plane constants are
+    * probes, queries vec_id < `SimilarityQueries.QueryIds`). The exact Gaussian plane constants are
     * embedded as SQL literals; the dot product is folded sequentially
     * (list_reduce) in the same element order as HashImpl.lshBuckets so
     * the sign decisions are IEEE-identical.
@@ -376,7 +376,7 @@ bucks AS (
 qprobe AS (
   SELECT vec_id AS query_id, tbl, xor(bucket, f.f) AS bucket
   FROM bucks, (SELECT unnest($flips) AS f) f
-  WHERE vec_id < 5),
+  WHERE vec_id < ${SimilarityQueries.QueryIds}),
 cand AS (
   SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id
   FROM qprobe q JOIN bucks c ON q.tbl = c.tbl AND q.bucket = c.bucket
@@ -401,7 +401,7 @@ ORDER BY 1, 2"""
 
   /** Oracle for q29: IVF ANN top-k with the deterministic
     * first-`IvfCells`-by-id centroids (= Similarity.ivfTopK: `IvfCells`
-    * cells, `IvfProbes` probed, queries vec_id < 5) — the whole pipeline
+    * cells, `IvfProbes` probed, queries vec_id < `SimilarityQueries.QueryIds`) — the whole pipeline
     * is relational, so DuckDB reproduces it exactly.
     */
   def q29Ivf(k: Int): String =
@@ -424,7 +424,7 @@ qassign AS (
              ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
                                              CAST(ct.centroid AS DOUBLE[])) DESC,
                       ct.cell_id ASC) AS crank
-    FROM embeddings e, cent ct WHERE e.vec_id < 5)
+    FROM embeddings e, cent ct WHERE e.vec_id < ${SimilarityQueries.QueryIds})
   WHERE crank <= ${Similarity.IvfProbes}),
 scored AS (
   SELECT DISTINCT q.query_id, a.neighbor_id,
@@ -509,7 +509,7 @@ qassign AS (
              ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]),
                                              ct.centroid) DESC,
                       ct.cell_id ASC) AS crank
-    FROM embeddings e, cent$iters ct WHERE e.vec_id < 5)
+    FROM embeddings e, cent$iters ct WHERE e.vec_id < ${SimilarityQueries.QueryIds})
   WHERE crank <= $nProbe),
 scored AS (
   SELECT q.query_id, a.neighbor_id,
@@ -1249,39 +1249,25 @@ SELECT doc_id, count(*)::BIGINT AS n_shingles,
          AS novelty
 FROM f GROUP BY 1 ORDER BY 1"""
 
-  /** Oracle for q117 (= Multimodal.perceptualNearDupPairs): dHash/aHash
-    * per document image derived ANALYTICALLY from the text's UTF-8
-    * bytes (the engine computes them from the decoded PNG raster —
-    * matching hashes certify codec + hash together, the q114 pattern),
-    * then every a<b pair with dHash hamming ≤ `maxHamming`. The
-    * engine's 16-bit-chunk bucket join is pigeonhole-complete for
-    * hamming ≤ 3, so the oracle's plain quadratic join over the tiny
-    * verify fixture produces the identical pair set.
-    *
-    * Integer-exactness notes: block means are floor divisions of raw
-    * byte sums; the 64-bit hash is packed as two 32-bit halves in
-    * BIGINT (a HUGEINT list_sum would round through DOUBLE) and
-    * sign-folded to match Java's signed long; `bit_count(xor(..))` on
-    * BIGINT counts two's-complement bits exactly like Long.bitCount.
-    */
   /** The b/px/cells/hashes CTE chain shared by q117 and q132: exact
     * integer dHash/aHash derived analytically from the document bytes
     * (the same grid/pack arithmetic the engine computes from the
     * DECODED PNG raster — the hash match certifies codec + hash).
     */
   private def imageHashCtes(): String = {
-    // floor-mean of grid cell c (gw columns × 8 rows) over the 32-wide
+    val w = Multimodal.ImageWidth
+    // floor-mean of grid cell c (gw columns × 8 rows) over the w-wide
     // pixel list `p` of an h-row image — same boundaries as the
     // engine's blockMeans: floor(g*dim/grid), degenerate rows widened
     def meanCells(gw: Int): String = {
       val y0 = s"((c // $gw) * h) // 8"
       val y1raw = s"(((c // $gw) + 1) * h) // 8"
       val y1 = s"(CASE WHEN $y1raw <= $y0 THEN $y0 + 1 ELSE $y1raw END)"
-      val x0 = s"((c % $gw) * 32) // $gw"
-      val x1 = s"(((c % $gw) + 1) * 32) // $gw"
+      val x0 = s"((c % $gw) * $w) // $gw"
+      val x1 = s"(((c % $gw) + 1) * $w) // $gw"
       val xw = s"($x1 - $x0)"
       val cnt = s"(($y1 - $y0) * $xw)"
-      val idx = s"(($y0 + k // $xw) * 32 + $x0 + k % $xw + 1)"
+      val idx = s"(($y0 + k // $xw) * $w + $x0 + k % $xw + 1)"
       s"""list_transform(range(${8 * gw}), c ->
     list_sum(list_transform(range($cnt), k -> p[$idx])) // $cnt)"""
     }
@@ -1303,8 +1289,8 @@ FROM f GROUP BY 1 ORDER BY 1"""
          lower(hex(encode(text))) AS hx
   FROM documents),
 px AS (
-  SELECT doc_id, greatest(1, (nb + 31) // 32)::BIGINT AS h,
-         list_transform(range(greatest(1, (nb + 31) // 32) * 32),
+  SELECT doc_id, greatest(1, (nb + ${w - 1}) // $w)::BIGINT AS h,
+         list_transform(range(greatest(1, (nb + ${w - 1}) // $w) * $w),
            i -> CASE WHEN i < nb
                 THEN ('0x' || substr(hx, (2 * i + 1)::INT, 2))::BIGINT
                 ELSE 0 END) AS p
@@ -1315,6 +1301,21 @@ hashes AS MATERIALIZED (
   SELECT doc_id, ${pack(dhBit)} AS dh, ${pack(ahBit)} AS ah FROM cells)"""
   }
 
+  /** Oracle for q117 (= Multimodal.perceptualNearDupPairs): dHash/aHash
+    * per document image derived ANALYTICALLY from the text's UTF-8
+    * bytes (the engine computes them from the decoded PNG raster —
+    * matching hashes certify codec + hash together, the q114 pattern),
+    * then every a<b pair with dHash hamming ≤ `Multimodal.ImageMaxHamming`.
+    * The engine's 16-bit-chunk bucket join is pigeonhole-complete at
+    * that bound, so the oracle's plain quadratic join over the tiny
+    * verify fixture produces the identical pair set.
+    *
+    * Integer-exactness notes: block means are floor divisions of raw
+    * byte sums; the 64-bit hash is packed as two 32-bit halves in
+    * BIGINT (a HUGEINT list_sum would round through DOUBLE) and
+    * sign-folded to match Java's signed long; `bit_count(xor(..))` on
+    * BIGINT counts two's-complement bits exactly like Long.bitCount.
+    */
   def q117ImageNearDup: String =
     s"""WITH ${imageHashCtes()}
 SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
@@ -1417,7 +1418,7 @@ lut AS (
          list_reduce(list_prepend(0.0::DOUBLE,
              list_transform(range(1, ${ds + 1}), d -> qs.sv[d] * c.cent[d])),
            (x, y) -> x + y) AS dp
-  FROM esub qs JOIN pq$iters c ON c.j = qs.j WHERE qs.vec_id < 5),
+  FROM esub qs JOIN pq$iters c ON c.j = qs.j WHERE qs.vec_id < ${SimilarityQueries.QueryIds}),
 adc AS (
   SELECT l.query_id, en.vec_id AS neighbor_id,
          list_reduce(list_prepend(0.0::DOUBLE, list(l.dp ORDER BY l.j)),
@@ -1740,7 +1741,7 @@ FROM f ORDER BY user_id"""
     * over the capped per-query candidate pool (q156 technique,
     * per-query). λ=1/2 exact binary.
     */
-  def q158Mmr(nQueries: Int): String = {
+  def q158Mmr: String = {
     val (k, cand) = (Similarity.MmrK, Similarity.MmrCand)
     val rounds = (2 to k).map { r =>
       s"""m$r AS (
@@ -1761,7 +1762,7 @@ sel$r AS (SELECT * FROM sel${r - 1} UNION ALL SELECT * FROM p$r)"""
     }.mkString(",\n")
     s"""WITH q AS (
   SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qe
-  FROM embeddings WHERE vec_id < $nQueries),
+  FROM embeddings WHERE vec_id < ${SimilarityQueries.QueryIds}),
 x AS (SELECT vec_id AS cid, CAST(embedding AS DOUBLE[]) AS e
       FROM embeddings),
 relscan AS (

@@ -164,7 +164,7 @@ object StreamBench {
           (0L until 64L).map(i => (i, s"stream image payload $i " * 8))
             .toDF("doc_id", "text")).collect().map(_.payload).toSeq
         val mkPng = udf((s: String) =>
-          graft.operators.Multimodal.pngOf(s, 32))
+          graft.operators.Multimodal.pngOf(s))
         val s = purchases(200000L).select(
           col("id").as("doc_id"),
           // two salted sha2-512 digests → 256 hex chars → an 8-pixel-row

@@ -35,14 +35,13 @@ object AsOfJoin {
     * @param leftTs     event-time column in `left`
     * @param rightTs    version-time column in `right`
     * @param rightTie   deterministic tie-break among equal-ts right rows
-    * @param inner      drop left rows with no match (true mirrors
-    *                   DuckDB ASOF JOIN; false = left outer)
-    * @return left.* plus each right payload column as `asof_<name>`
+    * @return left.* plus each right payload column as `asof_<name>`; a
+    *         left row with no match is dropped (inner, as DuckDB's ASOF JOIN)
     */
-  def asof(left: DataFrame, right: DataFrame,
-           leftKey: String, rightKey: String,
-           leftTs: String, rightTs: String,
-           rightTie: String, inner: Boolean = true): DataFrame = {
+  private[graft] def asof(left: DataFrame, right: DataFrame,
+                          leftKey: String, rightKey: String,
+                          leftTs: String, rightTs: String,
+                          rightTie: String): DataFrame = {
     val rightPayload = right.columns.filterNot(_ == rightKey).toSeq
     val leftStruct = struct(left.columns.map(col).toIndexedSeq: _*)
     val rightStruct = struct(rightPayload.map(col).toIndexedSeq: _*)
@@ -61,14 +60,12 @@ object AsOfJoin {
     val w = Window.partitionBy(col("__key"))
       .orderBy(col("__ts").asc, col("__side").asc, col("__tie").asc_nulls_last)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val carried = l.unionByName(r)
+    val matched = l.unionByName(r)
       .withColumn("__match", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-
-    val filtered = if (inner) carried.filter(col("__match").isNotNull) else carried
+      .filter(col("__side") === 1 && col("__match").isNotNull)
     val leftCols: Seq[Column] = left.columns.toSeq.map(c => col(s"__l.$c").as(c))
     val rightCols: Seq[Column] = rightPayload.map(c => col(s"__match.$c").as(s"asof_$c"))
-    filtered.select(leftCols ++ rightCols: _*)
+    matched.select(leftCols ++ rightCols: _*)
   }
 
   /** FORWARD as-of join with a tolerance (q180) — pandas
@@ -92,8 +89,7 @@ object AsOfJoin {
   def asofForward(left: DataFrame, right: DataFrame,
                   leftKey: String, rightKey: String,
                   leftTs: String, rightTs: String,
-                  rightTie: String, toleranceUs: Long,
-                  inner: Boolean = true): DataFrame = {
+                  rightTie: String, toleranceUs: Long): DataFrame = {
     val rightPayload = right.columns.filterNot(_ == rightKey).toSeq
     val leftStruct = struct(left.columns.map(col).toIndexedSeq: _*)
     val rightStruct = struct(rightPayload.map(col).toIndexedSeq: _*)
@@ -112,18 +108,12 @@ object AsOfJoin {
     val w = Window.partitionBy(col("__key"))
       .orderBy(col("__ts").desc, col("__side").asc, col("__tie").desc_nulls_last)
       .rowsBetween(Window.unboundedPreceding, 0)
-    val withinTol =
-      unix_micros(col("__next").getField(rightTs)) -
-        unix_micros(col("__ts")) <= toleranceUs
-    val carried = l.unionByName(r)
-      .withColumn("__next", last(col("__r"), ignoreNulls = true).over(w))
-      .filter(col("__side") === 1)
-      .withColumn("__match",
-        when(col("__next").isNotNull && withinTol, col("__next")))
-
-    val filtered = if (inner) carried.filter(col("__match").isNotNull) else carried
+    val matched = l.unionByName(r)
+      .withColumn("__match", last(col("__r"), ignoreNulls = true).over(w))
+      .filter(col("__side") === 1 && col("__match").isNotNull &&
+        unix_micros(col("__match").getField(rightTs)) - unix_micros(col("__ts")) <= toleranceUs)
     val leftCols: Seq[Column] = left.columns.toSeq.map(c => col(s"__l.$c").as(c))
     val rightCols: Seq[Column] = rightPayload.map(c => col(s"__match.$c").as(s"asof_$c"))
-    filtered.select(leftCols ++ rightCols: _*)
+    matched.select(leftCols ++ rightCols: _*)
   }
 }

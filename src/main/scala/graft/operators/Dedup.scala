@@ -14,7 +14,7 @@ import graft.functions.{GraftFunctions, HashFunctions, TextFunctions}
   * (fingerprint), LSH band bucket (minhash), 16-bit chunk (simhash) —
   * followed by a within-bucket self-join. The PROBABILISTIC variants
   * (minhash/cosine-LSH blocks, k-means cells) bound bucket population
-  * (`maxBucketSize`) so a degenerate bucket (all-identical spam)
+  * ([[MaxBucketSize]]) so a degenerate bucket (all-identical spam)
   * cannot quadratically explode an executor; dropped buckets are the
   * standard trade there (those docs are trivially all-duplicates and
   * are caught by the exact/fingerprint pass anyway). [[simhashPairs]]
@@ -28,8 +28,10 @@ import graft.functions.{GraftFunctions, HashFunctions, TextFunctions}
 object Dedup {
 
   private[graft] val MaxBucketSize = 1000     // LSH bucket cap of boundedByCount (q17, q37 oracles too)
-  private[graft] val LshCosineThreshold = 0.3 // lshBlockedCosinePairs' default cosine cut (q37)
-  private[graft] val SemDedupThreshold = 0.3  // semanticDedup's default cosine cut (q64) ...
+  private[graft] val LshJaccardThreshold = 0.5 // lshBlockedJaccardPairs' jaccard cut (q36)
+  private[graft] val SimhashMaxHamming = 3    // simhashPairs' hamming cut (q18): the 4-chunk pigeonhole bound
+  private[graft] val LshCosineThreshold = 0.3 // lshBlockedCosinePairs' cosine cut (q37)
+  private[graft] val SemDedupThreshold = 0.3  // semanticDedup's cosine cut (q64) ...
   private[graft] val SemDedupCells = 16       // ... over SemDedupCells k-means cells,
   private[graft] val SemDedupMaxCell = 1000   // ... a cell past this size skipped whole
   private[graft] val MinhashK = 64            // minhashLshPairs' signature length ...
@@ -145,8 +147,7 @@ object Dedup {
     * are ever paired, so the shuffle key is the bucket, not the pair.
     */
   def minhashLshPairs(spark: SparkSession, documents: DataFrame,
-                      estimateThreshold: Double = 0.5,
-                      maxBucketSize: Int = MaxBucketSize): DataFrame = {
+                      estimateThreshold: Double = 0.5): DataFrame = {
     GraftFunctions.register(spark) // before the eager select analysis
     minhashLshPairsFromShingles(spark,
       documents
@@ -154,7 +155,7 @@ object Dedup {
           GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), 3)
             .as("shingles"))
         .filter(size(col("shingles")) > 0),
-      estimateThreshold, maxBucketSize)
+      estimateThreshold)
   }
 
   /** [[minhashLshPairs]] over a PRECOMPUTED (doc_id, shingles) frame —
@@ -176,8 +177,7 @@ object Dedup {
     * guarantees (r16 ADVICE).
     */
   def minhashLshPairsFromShingles(spark: SparkSession, shingled: DataFrame,
-                                  estimateThreshold: Double = 0.5,
-                                  maxBucketSize: Int = MaxBucketSize): DataFrame = {
+                                  estimateThreshold: Double = 0.5): DataFrame = {
     GraftFunctions.register(spark)
     val rowsPerBand = MinhashK / MinhashBands
     // sigs feeds BOTH bucket self-join sides: materialize the
@@ -199,7 +199,7 @@ object Dedup {
 
     // Bound degenerate buckets before the self-join ([[boundedByCount]]
     // — the 2.5×-slower anti-join alternative is measured in its doc).
-    val bounded = boundedByCount(buckets, Seq("band", "bucket"), maxBucketSize)
+    val bounded = boundedByCount(buckets, Seq("band", "bucket"), MaxBucketSize)
 
     val l = bounded.as("l")
     val r = bounded.as("r")
@@ -220,12 +220,6 @@ object Dedup {
       .filter(col("est_jaccard") >= estimateThreshold)
   }
 
-  /** LSH-blocked EXACT jaccard: MinHash+LSH proposes candidate pairs
-    * (no quadratic pair space), then the exact sorted-merge jaccard
-    * reranks them — the 100 TB-correct form of [[ngramJaccardPairs]],
-    * whose `source` blocking key is a fixture stand-in. Recall is the
-    * LSH S-curve; precision is exact.
-    */
   /** Containment detection over the LSH candidate pairs: the
     * asymmetric cousin of q36's Jaccard rerank — |A∩B| / min(|A|,|B|)
     * — which catches a document QUOTED INSIDE a larger one (high
@@ -256,8 +250,13 @@ object Dedup {
       .filter(col("n_inter") * lit(10L) >= col("n_min") * lit(7L))
   }
 
-  def lshBlockedJaccardPairs(spark: SparkSession, documents: DataFrame,
-                             threshold: Double = 0.5): DataFrame = {
+  /** LSH-blocked EXACT jaccard: MinHash+LSH proposes candidate pairs
+    * (no quadratic pair space), then the exact sorted-merge jaccard
+    * reranks them — the 100 TB-correct form of [[ngramJaccardPairs]],
+    * whose `source` blocking key is a fixture stand-in. Recall is the
+    * LSH S-curve; precision is exact.
+    */
+  def lshBlockedJaccardPairs(spark: SparkSession, documents: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     val cands = minhashLshPairs(spark, documents, estimateThreshold = CandidateEst)
       .select(col("doc_a"), col("doc_b"))
@@ -266,7 +265,7 @@ object Dedup {
     joinPairSides(cands, toks, "toks")
       .select(col("doc_a"), col("doc_b"),
         GraftFunctions.jaccardSorted(col("toks_a"), col("toks_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+      .filter(col("jaccard") >= LshJaccardThreshold)
   }
 
   /** EXACT all-pairs shingle-set similarity join via prefix filtering
@@ -368,10 +367,13 @@ object Dedup {
 
   /** SimHash near-dup pairs: 64-bit simhash per doc, bucketed by each of
     * its four 16-bit chunks; pairs sharing a chunk are checked for
-    * hamming distance ≤ maxHamming (pigeonhole-complete for ≤ 3).
+    * hamming distance ≤ [[SimhashMaxHamming]] (pigeonhole-complete).
     */
-  def simhashPairs(spark: SparkSession, documents: DataFrame,
-                   maxHamming: Int = 3): DataFrame = {
+  def simhashPairs(spark: SparkSession, documents: DataFrame): DataFrame = {
+    require(SimhashMaxHamming <= 3,
+      "simhashPairs: the 4x16-bit chunk bucketing is complete only for " +
+        "hamming <= 3 (pigeonhole) — a larger threshold would silently " +
+        "miss qualifying pairs; widen the band scheme instead")
     GraftFunctions.register(spark)
     val hashed = documents.select(col("doc_id"),
       GraftFunctions.simhash64(TextFunctions.wsTokens(col("text"))).as("sh"))
@@ -400,7 +402,7 @@ object Dedup {
       .filter(col("l.band") === firstChunk)
       .select(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"),
         HashFunctions.hamming64(col("l.sh"), col("r.sh")).as("hamming"))
-      .filter(col("hamming") <= maxHamming)
+      .filter(col("hamming") <= SimhashMaxHamming)
   }
 
   /** LSH-blocked embedding near-dup pairs — the at-scale form of
@@ -410,8 +412,7 @@ object Dedup {
     * space), then the exact cosine reranks them. Precision is exact;
     * recall is the hyperplane S-curve of [[cosinePlaneSets]].
     */
-  def lshBlockedCosinePairs(spark: SparkSession, embeddings: DataFrame,
-                            threshold: Double = LshCosineThreshold): DataFrame = {
+  def lshBlockedCosinePairs(spark: SparkSession, embeddings: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     val planeSets = cosinePlaneSets
     // the fused bucket computation (tables × planes dot products per
@@ -444,7 +445,7 @@ object Dedup {
       .join(vecs.withColumnsRenamed(Map("vec_id" -> "vec_b", "embedding" -> "emb_b")), "vec_b")
       .select(col("vec_a"), col("vec_b"),
         GraftFunctions.cosineSim(col("emb_a"), col("emb_b")).as("cos"))
-      .filter(col("cos") >= threshold)
+      .filter(col("cos") >= LshCosineThreshold)
   }
 
   /** SemDeDup-style semantic dedup (Abbas et al., 2023): cluster the
@@ -452,7 +453,7 @@ object Dedup {
     * ([[Similarity.sampledKmeansCentroids]] — the q44 trainer, so the
     * centroids are bit-identical across engines), then WITHIN each
     * cluster drop every vector that has a lower-id neighbor at
-    * cosine ≥ `threshold`. Pairwise comparison never leaves a
+    * cosine ≥ [[SemDedupThreshold]]. Pairwise comparison never leaves a
     * cluster: the all-pairs cost is Σ|cell|², controlled by the cell
     * count (production picks cells ≈ N/targetCellSize; a
     * `SemDedupMaxCell` guard — MIRRORED in the oracle — excludes
@@ -466,8 +467,7 @@ object Dedup {
     * cluster geometry (cell sizes, centroids) the curation pipeline
     * reuses for mixture balancing.
     */
-  def semanticDedup(spark: SparkSession, embeddings: DataFrame,
-                    threshold: Double = SemDedupThreshold): DataFrame = {
+  def semanticDedup(spark: SparkSession, embeddings: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
     val centroids = Similarity.sampledKmeansCentroids(spark, embeddings,
@@ -497,7 +497,7 @@ object Dedup {
         col("a.cell_id") === col("b.cell_id") &&
           col("a.vec_id") < col("b.vec_id"))
       .filter(GraftFunctions.cosineSim(
-        col("a.embedding"), col("b.embedding")) >= threshold)
+        col("a.embedding"), col("b.embedding")) >= SemDedupThreshold)
       .select(col("b.vec_id").as("vec_id"))
     bounded.join(dropped, Seq("vec_id"), "left_anti")
       .select(col("vec_id"), col("cell_id"), col("cell_n"))

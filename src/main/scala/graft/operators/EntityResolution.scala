@@ -39,6 +39,8 @@ import org.apache.spark.sql.functions._
   */
 object EntityResolution {
 
+  private[graft] val MaxBlockSize = 10000 // per-side block cap of each blocking pass (q121 oracle too)
+
   /** Link each customer to its best-matching supplier.
     *
     * Blocking keys: (a) nationkey — the natural domain block; (b) the
@@ -52,8 +54,7 @@ object EntityResolution {
     */
   def linkCustomersToSuppliers(
       customer: DataFrame,
-      supplier: DataFrame,
-      maxBlockSize: Int = 10000): DataFrame = {
+      supplier: DataFrame): DataFrame = {
 
     // Trigram sets are computed HERE, once per entity — not after the
     // pair join, where the same set would be rebuilt once per
@@ -102,10 +103,10 @@ object EntityResolution {
       val rb = rk(r)
       val lCapped = lb.withColumn("bn",
           count(lit(1)).over(Window.partitionBy(col("bkey"))))
-        .filter(col("bn") <= maxBlockSize).drop("bn")
+        .filter(col("bn") <= MaxBlockSize).drop("bn")
       val rCapped = rb.withColumn("bn",
           count(lit(1)).over(Window.partitionBy(col("bkey"))))
-        .filter(col("bn") <= maxBlockSize).drop("bn")
+        .filter(col("bn") <= MaxBlockSize).drop("bn")
       lCapped.join(rCapped, "bkey")
         .select(col("c_custkey"), col("s_suppkey"))
     }

@@ -30,7 +30,9 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  private[graft] val ImageMaxHamming = 3 // perceptualNearDupPairs' default cut (q117, q132)
+  private[graft] val ImageMaxHamming = 3 // perceptualNearDupPairs' dHash cut (q117, q132); the 4-chunk pigeonhole bound
+  private[graft] val ImageWidth = 32     // synthetic PNG row width (q114 oracle too)
+  private[graft] val FrameStride = 2     // videoFrameStats keeps every FrameStride-th frame (q120 oracle too)
 
   /** A media file: opaque payload + typed metadata. */
   case class MediaRecord(media_id: Long, kind: String, payload: Array[Byte],
@@ -73,7 +75,7 @@ object Multimodal {
   }
 
   /** Deterministic grayscale PNG per document: the text's UTF-8 bytes
-    * laid out row-major into a `width`×ceil(n/width) TYPE_BYTE_GRAY
+    * laid out row-major into an [[ImageWidth]]×ceil(n/ImageWidth) TYPE_BYTE_GRAY
     * image (zero-padded tail, min height 1), PNG-encoded — a REAL
     * image payload whose decoded pixel content is an analytic
     * function of the text bytes, which is what lets q114 put the
@@ -82,26 +84,26 @@ object Multimodal {
     * production tables arrive with real payloads; this is the
     * generator side of the round-trip proof.
     */
-  def syntheticImages(spark: SparkSession, documents: DataFrame,
-                      width: Int = 32): Dataset[MediaRecord] = {
+  def syntheticImages(spark: SparkSession, documents: DataFrame): Dataset[MediaRecord] = {
     import spark.implicits._
     documents.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         ImageIO.setUseCache(false)
         it.map { case (id, text) =>
-          val payload = pngOf(text, width)
+          val payload = pngOf(text)
           MediaRecord(id, "image", payload, payload.length.toLong)
         }
       }
   }
 
-  /** Render `text`'s UTF-8 bytes as the pixels of a `width`-wide
+  /** Render `text`'s UTF-8 bytes as the pixels of an [[ImageWidth]]-wide
     * grayscale PNG — the deterministic codec seam shared by
     * [[syntheticImages]] and StreamBench's in-stream unique-image
     * traffic (a per-row novel payload whose dHash actually varies,
     * which a pre-rendered pool cannot provide).
     */
-  private[graft] def pngOf(text: String, width: Int): Array[Byte] = {
+  private[graft] def pngOf(text: String): Array[Byte] = {
+    val width = ImageWidth
     val bytes = text.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val h = math.max(1, (bytes.length + width - 1) / width)
     val img = new BufferedImage(width, h, BufferedImage.TYPE_BYTE_GRAY)
@@ -337,10 +339,9 @@ object Multimodal {
     * pair space, and each surviving pair is emitted exactly once with
     * no distinct() exchange.
     */
-  def perceptualNearDupPairs(spark: SparkSession, documents: DataFrame,
-                             maxHamming: Int = ImageMaxHamming): DataFrame = {
+  def perceptualNearDupPairs(spark: SparkSession, documents: DataFrame): DataFrame = {
     import graft.functions.HashFunctions
-    require(maxHamming <= 3,
+    require(ImageMaxHamming <= 3,
       "perceptualNearDupPairs: the 4x16-bit chunk bucketing is complete " +
         "only for hamming <= 3 (pigeonhole) — a larger threshold would " +
         "silently miss qualifying pairs; widen the band scheme instead")
@@ -370,7 +371,7 @@ object Multimodal {
           .cast("long").as("dhash_dist"),
         HashFunctions.hamming64(col("l.ahash"), col("r.ahash"))
           .cast("long").as("ahash_dist"))
-      .filter(col("dhash_dist") <= maxHamming)
+      .filter(col("dhash_dist") <= ImageMaxHamming)
   }
 
   /** Decode a payload as an image via the JDK's ImageIO (PNG/BMP/GIF/
@@ -513,10 +514,9 @@ object Multimodal {
     * cannot hash-match. Scale: flatMap explode inside the task — no
     * shuffle before the canonical output sort.
     */
-  def videoFrameStats(spark: SparkSession, documents: DataFrame,
-                      stride: Int = 2): DataFrame = {
+  def videoFrameStats(spark: SparkSession, documents: DataFrame): DataFrame = {
     import spark.implicits._
-    sampleFrames(syntheticMedia(spark, documents), stride)
+    sampleFrames(syntheticMedia(spark, documents), FrameStride)
       .map { f =>
         var s = 0L; var i = 0
         while (i < f.frame_bytes.length) { s += f.frame_bytes(i) & 0xff; i += 1 }

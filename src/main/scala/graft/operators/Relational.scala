@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
 object Relational {
 
   private[graft] val ErasureModulus = 37                   // erasureAudit cohort: hash ≡ 0 (q169)
-  private[graft] val CupedSplitTs = "2024-01-16 00:00:00"  // abCuped's default split (q167)
+  private[graft] val CupedSplitTs = "2024-01-16 00:00:00"  // abCuped's pre/post split (q167)
 
   /** Multi-aggregate pricing summary (TPC-H Q1 shape): sum/avg/count per
     * (returnflag, linestatus). One shuffle, map-side partials.
@@ -628,11 +628,10 @@ object Relational {
     * KB-scale moment aggregate, one broadcast back. The experiment
     * readout is a 2-row frame.
     */
-  def abCuped(events: DataFrame, splitTs: String = CupedSplitTs)
-      : DataFrame = {
+  def abCuped(events: DataFrame): DataFrame = {
     val spark = events.sparkSession
     graft.functions.GraftFunctions.register(spark)
-    val split = to_timestamp(lit(splitTs))
+    val split = to_timestamp(lit(CupedSplitTs))
     val cents = floor(col("value") * 100 + lit(0.5)).cast("long")
     val perUser = events.filter(col("value").isNotNull)
       .groupBy(col("user_id"))
@@ -651,7 +650,7 @@ object Relational {
       sum(col("x_c").cast(dec) * col("x_c").cast(dec)).as("sxx"))
     // θ = (n·Σxy − ΣxΣy) / (n·Σx² − (Σx)²): one division over exact
     // integers; x̄ likewise. Both engines read the same decimals.
-    // zero pre-period variance (splitTs before all events, or constant
+    // zero pre-period variance (the split before all events, or constant
     // covariate) makes the denominator 0 and theta 0/0 = NaN — which
     // the r4 floor would silently coerce into a garbage adjusted mean.
     // theta = 0 is the correct degenerate fallback: CUPED with a

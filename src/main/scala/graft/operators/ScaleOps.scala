@@ -56,6 +56,13 @@ object ScaleOps {
           "(years, languages, sources, nations); for entity-grained keys " +
           "use a plain partitioned window, which is already scale-safe.")
 
+  /** `df` range-shuffled into the session's shuffle-partition count on
+    * `orderCols` and sorted within each partition.
+    */
+  private def rangeSorted(df: DataFrame, orderCols: Seq[Column]): DataFrame =
+    df.repartitionByRange(df.sparkSession.sessionState.conf.numShufflePartitions, orderCols: _*)
+      .sortWithinPartitions(orderCols: _*)
+
   /** Collect the offset pass's per-partition vectors with an
     * INCREMENTAL total-size guard: task results flow through a runJob
     * result handler as they arrive, and the job aborts (the handler's
@@ -123,14 +130,10 @@ object ScaleOps {
     * materialized frame.
     */
   def distributedRank(df: DataFrame, orderCols: Seq[Column],
-                      rankCol: String = "rk",
-                      partitions: Int = 0): DataFrame = {
+                      rankCol: String = "rk"): DataFrame = {
     require(!df.columns.contains(rankCol),
       s"distributedRank: column $rankCol already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(n, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
+    val ranged = rangeSorted(df, orderCols)
     val schema = org.apache.spark.sql.types.StructType(
       ranged.schema.fields :+ org.apache.spark.sql.types.StructField(
         rankCol, org.apache.spark.sql.types.LongType, nullable = false))
@@ -170,16 +173,11 @@ object ScaleOps {
     */
   def groupedRank(df: DataFrame, groupCols: Seq[String],
                   orderCols: Seq[Column], rankCol: String = "rk",
-                  countCol: String = "n_grp",
-                  partitions: Int = 0): DataFrame = {
+                  countCol: String = "n_grp"): DataFrame = {
     require(groupCols.nonEmpty, "groupedRank needs at least one group column")
     require(!df.columns.contains(rankCol) && !df.columns.contains(countCol),
       s"groupedRank: output column $rankCol/$countCol already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ordered = groupCols.map(col(_).asc) ++ orderCols
-    val ranged = df.repartitionByRange(n, ordered: _*)
-      .sortWithinPartitions(ordered: _*)
+    val ranged = rangeSorted(df, groupCols.map(col(_).asc) ++ orderCols)
     val gIdx = groupCols.map(ranged.schema.fieldIndex)
     val rdd0 = ranged.rdd
     val perPart = collectOffsetsGuarded("groupedRank",
@@ -294,14 +292,10 @@ object ScaleOps {
     */
   def distributedCumSum(df: DataFrame, orderCols: Seq[Column],
                         valueCol: String, cumCol: String = "cum",
-                        rankCol: String = "rk",
-                        partitions: Int = 0): DataFrame = {
+                        rankCol: String = "rk"): DataFrame = {
     require(!df.columns.contains(cumCol) && !df.columns.contains(rankCol),
       s"distributedCumSum: output column $cumCol/$rankCol already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ranged = df.repartitionByRange(n, orderCols: _*)
-      .sortWithinPartitions(orderCols: _*)
+    val ranged = rangeSorted(df, orderCols)
     val vIdx = ranged.schema.fieldIndex(valueCol)
     val rdd0 = ranged.rdd
     // per-partition (rowCount, valueTotal): one pair per partition —
@@ -356,16 +350,11 @@ object ScaleOps {
     */
   def groupedCumSum(df: DataFrame, groupCols: Seq[String],
                     orderCols: Seq[Column], valueCol: String,
-                    cumCol: String = "cum",
-                    partitions: Int = 0): DataFrame = {
+                    cumCol: String = "cum"): DataFrame = {
     require(groupCols.nonEmpty, "groupedCumSum needs a group column")
     require(!df.columns.contains(cumCol) && !df.columns.contains("rk"),
       s"groupedCumSum: output column $cumCol/rk already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ordered = groupCols.map(col(_).asc) ++ orderCols
-    val ranged = df.repartitionByRange(n, ordered: _*)
-      .sortWithinPartitions(ordered: _*)
+    val ranged = rangeSorted(df, groupCols.map(col(_).asc) ++ orderCols)
     val gIdx = groupCols.map(ranged.schema.fieldIndex)
     val vIdx = ranged.schema.fieldIndex(valueCol)
     val rdd0 = ranged.rdd
@@ -436,15 +425,11 @@ object ScaleOps {
     */
   def groupedFill(df: DataFrame, groupCols: Seq[String],
                   orderCols: Seq[Column], fillCol: String,
-                  outCol: String, partitions: Int = 0): DataFrame = {
+                  outCol: String): DataFrame = {
     require(groupCols.nonEmpty, "groupedFill needs a group column")
     require(!df.columns.contains(outCol),
       s"groupedFill: output column $outCol already exists")
-    val n = if (partitions > 0) partitions
-            else df.sparkSession.sessionState.conf.numShufflePartitions
-    val ordered = groupCols.map(col(_).asc) ++ orderCols
-    val ranged = df.repartitionByRange(n, ordered: _*)
-      .sortWithinPartitions(ordered: _*)
+    val ranged = rangeSorted(df, groupCols.map(col(_).asc) ++ orderCols)
     val gIdx = groupCols.map(ranged.schema.fieldIndex)
     val fIdx = ranged.schema.fieldIndex(fillCol)
     val rdd0 = ranged.rdd

@@ -35,9 +35,12 @@ object Similarity {
   private[graft] val PqKs = 16        // ... of PqKs centroids each,
   private[graft] val PqIters = 2      // ... trained in PqIters Lloyd rounds (ivfPqTopK's cells too);
   private[graft] val PqTopC = 100     // ADC candidates reranked by exact cosine
-  private[graft] val MmrK = 5         // mmrRerank's default depth ...
+  private[graft] val MmrK = 5         // mmrRerank's depth ...
   private[graft] val MmrCand = 20     // ... and candidate pool
-  private[graft] val KCenterK = 8     // kCenterCoreset's default coreset size
+  private[graft] val KCenterK = 8     // kCenterCoreset's coreset size
+  private[graft] val BinaryCand = 40  // binaryHammingTopK's Hamming candidates per query
+  private[graft] val ProjK = 16       // randomProjection's output dimensions
+  private[graft] val DimCorrK = 20    // dimCorrelationTopK's top |Pearson| pairs
   private[graft] val AnnProbes = 3    // annTopK's single-bit-flip probes per table
 
   private def cos(a: Column, b: Column): Column = GraftFunctions.cosineSim(a, b)
@@ -335,9 +338,9 @@ object Similarity {
         avg(col("cos")).as("avg_cos"), min(col("cos")).as("min_cos"))
   }
 
-  def dimCorrelationTopK(spark: SparkSession, embeddings: DataFrame,
-                         k: Int = 20, dim: Int = 64): DataFrame = {
+  def dimCorrelationTopK(spark: SparkSession, embeddings: DataFrame): DataFrame = {
     import spark.implicits._
+    val dim = Dim
     // One fused fold: [n, sums(dim), upper-tri gram] accumulated into a
     // single primitive buffer per task — zero per-row allocation (the
     // earlier HOF formulation built a boxed dim(dim+1)/2 array per row,
@@ -372,7 +375,7 @@ object Similarity {
       .filter(!isnan(col("corr")))
       .withColumn("rank", row_number().over(Window.orderBy(
         abs(col("corr")).desc, col("d1").asc, col("d2").asc)).cast("long"))
-      .filter(col("rank") <= k)
+      .filter(col("rank") <= DimCorrK)
   }
 
   // ── Deterministic sparse random projection (q123) ─────────────────────
@@ -392,20 +395,7 @@ object Similarity {
       }
     }
 
-  /** Johnson–Lindenstrauss-style dimensionality reduction with a
-    * DETERMINISTIC dense ±1 projection (Achlioptas 2003 — a ±1 matrix
-    * preserves pairwise geometry like a Gaussian one, at integer cost):
-    * the d-dim embedding is absmax-int8-quantized (cosine is invariant
-    * to the per-vector scale), then each of the k output components is
-    * Σ_i sign(j,i)·q_i — pure integer arithmetic, which is what puts a
-    * projection under the bit-exact oracle gate at all.
-    *
-    * Scale: row-local HOFs over literal sign arrays — no shuffle, no
-    * per-row hashing (signs are plan constants), embarrassingly
-    * parallel; output is k longs per row (k≪d storage win, the point
-    * of projecting before an ANN index or a near-dup pass).
-    */
-  /** k-center greedy coreset (q156) — Gonzalez (1985) farthest-first
+  /** k-center greedy coreset (q156, k = [[KCenterK]]) — Gonzalez (1985) farthest-first
     * traversal, the diversity-sampling tier of training-data curation
     * (pick k maximally-spread exemplars, then assign every vector to
     * its nearest): seed with the min-id vector, then k−1 rounds of
@@ -422,8 +412,7 @@ object Similarity {
     * partial sort — Spark's TakeOrdered); center state on the driver
     * is k vectors by construction.
     */
-  def kCenterCoreset(spark: SparkSession, embeddings: DataFrame,
-                     k: Int = KCenterK): DataFrame = {
+  def kCenterCoreset(spark: SparkSession, embeddings: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     import spark.implicits._
     // x feeds every greedy round's scan AND the final assignment pass —
@@ -439,7 +428,7 @@ object Similarity {
     var centers = Seq[(Long, Seq[Float])](
       seed.getLong(0) -> seed.getSeq[Float](1))
     var remaining = true
-    for (_ <- 2 to k if remaining) {
+    for (_ <- 2 to KCenterK if remaining) {
       val selDf = centers.toDF("c_id", "c_emb")
       // `first(embedding)` is deterministic here: embedding is
       // functionally determined by the vec_id group key (every row in
@@ -453,7 +442,7 @@ object Similarity {
           first(col("embedding")).as("embedding"))
         .orderBy(col("mc").asc, col("vec_id").asc)
         .limit(1).collect()
-      // fewer than k vectors in the corpus: every point is already a
+      // fewer than KCenterK vectors in the corpus: every point is already a
       // center — stop instead of NoSuchElementException on the empty
       // selection (the coreset is then the whole corpus, which is the
       // correct degenerate answer)
@@ -485,16 +474,15 @@ object Similarity {
     * is an anti-join off the accumulated picks, one per-query max-sim
     * aggregate against the ≤k-row pick set, and a rank-1 window cut
     * with (score, id) tiebreak — all partitioned by query, so rounds
-    * never see more than |queries|·`cand` rows.
+    * never see more than |queries|·[[MmrCand]] rows (k = [[MmrK]]).
     *
-    * Scale: the candidate pool is WindowGroupLimit-capped to `cand`
+    * Scale: the candidate pool is WindowGroupLimit-capped to [[MmrCand]]
     * per query BEFORE any pairwise work; each round's pairwise stage
     * is |queries|·cand·(round) cosines. The corpus is touched once,
     * by the relevance scan.
     */
   def mmrRerank(spark: SparkSession, embeddings: DataFrame,
-                queries: DataFrame, k: Int = MmrK,
-                cand: Int = MmrCand): DataFrame = {
+                queries: DataFrame): DataFrame = {
     GraftFunctions.register(spark)
     val q = queries.select(col("vec_id").as("query_id"),
       col("embedding").as("qv"))
@@ -505,14 +493,14 @@ object Similarity {
     val candPool = c.join(broadcast(q), col("query_id") =!= col("cid"))
       .withColumn("rel", cos(col("qv"), col("cv")))
       .withColumn("crank", row_number().over(wRel))
-      .filter(col("crank") <= cand)
+      .filter(col("crank") <= MmrCand)
       .select(col("query_id"), col("cid"), col("cv"), col("rel"))
       .localCheckpoint(true)
     var sel = candPool.withColumn("rn", row_number().over(wRel))
       .filter(col("rn") === 1)
       .select(col("query_id"), col("cid"), col("cv"), col("rel"),
         lit(1L).as("rank"), col("rel").as("mmr"))
-    for (r <- 2 to k) {
+    for (r <- 2 to MmrK) {
       val picks = sel.select(col("query_id"), col("cid").as("sid"),
         col("cv").as("sv"))
       val rem = candPool.join(picks.select(col("query_id"),
@@ -545,7 +533,7 @@ object Similarity {
     * each 64-dim vector packs to TWO 64-bit words of sign bits (32×
     * smaller than float32), candidate generation is xor+popcount —
     * pure integer whole-stage-codegen at scan speed — and only the
-    * `cand` Hamming-nearest per query pay the exact float cosine
+    * [[BinaryCand]] Hamming-nearest per query pay the exact float cosine
     * rerank. Candidate and final cuts rank on (integer hamming, id)
     * and (cos, id) — the q20 determinism contract.
     *
@@ -554,8 +542,7 @@ object Similarity {
     * work, so rerank cost is |queries|·cand, not |queries|·|corpus|.
     */
   def binaryHammingTopK(spark: SparkSession, embeddings: DataFrame,
-                        queries: DataFrame, cand: Int = 40,
-                        k: Int = 10): DataFrame = {
+                        queries: DataFrame, k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)
     def signWord(emb: Column, lo: Int): Column =
       (0 until 32).map { i =>
@@ -577,7 +564,7 @@ object Similarity {
     val wC = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     scored.withColumn("crank", row_number().over(wH))
-      .filter(col("crank") <= cand)
+      .filter(col("crank") <= BinaryCand)
       .withColumn("cos", cos(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(wC))
       .filter(col("rank") <= k)
@@ -585,8 +572,21 @@ object Similarity {
         col("neighbor_id"), col("hamming"), col("cos"))
   }
 
-  def randomProjection(embeddings: DataFrame, k: Int = 16): DataFrame = {
-    val signs = projSigns(k, Dim)
+  /** Johnson–Lindenstrauss-style dimensionality reduction with a
+    * DETERMINISTIC dense ±1 projection (Achlioptas 2003 — a ±1 matrix
+    * preserves pairwise geometry like a Gaussian one, at integer cost):
+    * the d-dim embedding is absmax-int8-quantized (cosine is invariant
+    * to the per-vector scale), then each of the [[ProjK]] output components is
+    * Σ_i sign(j,i)·q_i — pure integer arithmetic, which is what puts a
+    * projection under the bit-exact oracle gate at all.
+    *
+    * Scale: row-local HOFs over literal sign arrays — no shuffle, no
+    * per-row hashing (signs are plan constants), embarrassingly
+    * parallel; output is k longs per row (k≪d storage win, the point
+    * of projecting before an ANN index or a near-dup pass).
+    */
+  def randomProjection(embeddings: DataFrame): DataFrame = {
+    val signs = projSigns(ProjK, Dim)
     val q = GraftFunctions.quantizeI8(col("embedding"))
     val comps = signs.zipWithIndex.map { case (sj, j) =>
       val sLit = array(sj.map(v => lit(v.toLong)): _*)
@@ -740,9 +740,8 @@ object Similarity {
     * pass (count + per-dim sums + upper-tri Gram) then local cyclic
     * Jacobi — the orthodox route for d ≤ a few hundred.
     */
-  private[graft] def pcaModel(spark: SparkSession, embeddings: DataFrame,
-                              dim: Int = Dim): PcaModel = {
-    val (mean, cov) = covarianceMoments(spark, embeddings, dim)
+  private[graft] def pcaModel(spark: SparkSession, embeddings: DataFrame): PcaModel = {
+    val (mean, cov) = covarianceMoments(spark, embeddings, Dim)
     val (vals, vecs) = jacobiEigen(cov)
     PcaModel(mean, vals, vecs)
   }

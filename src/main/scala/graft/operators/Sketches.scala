@@ -21,6 +21,9 @@ object Sketches {
   private[graft] val CmsWidth = 1024            // ... of CmsWidth counters,
   private[graft] val CmsTopK = 50               // ... reported on the exact top tokens
   private[graft] val HllP = 8                   // 2^HllP HLL registers (q69, q135)
+  private[graft] val BloomBits = 1 << 15        // bloomSemiJoin's filter bits (4 KB) ...
+  private[graft] val BloomK = 5                 // ... and hash functions (q70)
+  private[graft] val HistWidth = 1000.0         // histogramQuantiles' bin width (q63)
   private[graft] val RollupLabel = "ALL"        // q135's union-level group label
   private[graft] val KmvK = 64                  // KMV hashes kept per source (q95)
   private[graft] val SpaceSavingCapacity = 64   // SpaceSaving counters per group (q126)
@@ -142,10 +145,8 @@ object Sketches {
           .cast("double")).as("hll_raw"))
   }
 
-  def hllDistinct(df: DataFrame, keyCol: String, groupCol: String,
-                  p: Int = HllP): DataFrame = {
-    require(p >= 4 && p <= 16, s"p must be in [4,16], got $p")
-    val est = hllEstimates(hllRegisters(df, keyCol, col(groupCol), p), p)
+  def hllDistinct(df: DataFrame, keyCol: String, groupCol: String): DataFrame = {
+    val est = hllEstimates(hllRegisters(df, keyCol, col(groupCol), HllP), HllP)
     val exact = df.groupBy(col(groupCol).as("grp"))
       .agg(countDistinct(col(keyCol)).as("n_exact"))
     exact.join(est, Seq("grp"))
@@ -202,8 +203,7 @@ object Sketches {
     * `mBits` must be a power of two (positions come from a mask, not a
     * modulo).
     */
-  def bloomBits(dim: DataFrame, keyCol: String,
-                mBits: Int = 1 << 15, k: Int = 5): Array[Long] = {
+  def bloomBits(dim: DataFrame, keyCol: String, mBits: Int, k: Int): Array[Long] = {
     require(mBits >= 64 && (mBits & (mBits - 1)) == 0,
       s"mBits must be a power of two >= 64, got $mBits")
     val hashed = dim.filter(col(keyCol).isNotNull)
@@ -258,23 +258,22 @@ object Sketches {
     * volume drops from |fact| to |matches| + fpp·|fact|.
     */
   def bloomSemiJoin(big: DataFrame, dim: DataFrame,
-                    bigKey: String, dimKey: String,
-                    mBits: Int = 1 << 15, k: Int = 5): DataFrame = {
-    val bits = bloomBits(dim, dimKey, mBits, k)
-    big.filter(bloomMightContain(bits, mBits, k, col(bigKey)))
+                    bigKey: String, dimKey: String): DataFrame = {
+    val bits = bloomBits(dim, dimKey, BloomBits, BloomK)
+    big.filter(bloomMightContain(bits, BloomBits, BloomK, col(bigKey)))
       .join(dim.select(col(dimKey).as(bigKey)).distinct(), Seq(bigKey),
         "left_semi")
   }
 
   /** One-pass mergeable quantile estimation via a fixed-width
-    * histogram: per group, bin counts (bin = floor(value/width)) are
+    * histogram: per group, bin counts (bin = floor(value/[[HistWidth]])) are
     * the sketch state — trivially mergeable (vector add), built with
     * map-side partial aggregation so the shuffle carries at most
     * (groups × occupied bins) counter rows regardless of input size.
     * Each requested quantile q is answered with the inclusive upper
     * edge of the first bin whose cumulative count reaches ceil(q·n) —
     * the inverse-CDF rank definition — giving a deterministic
-    * estimate within one `width` of the exact order statistic
+    * estimate within one bin width of the exact order statistic
     * (spec-asserted against the exact percentile).
     *
     * This is the 100 TB path where q33's exact interpolated
@@ -284,12 +283,11 @@ object Sketches {
     * arithmetic is exact (integer counts, literal·integer edges), so
     * the oracle matches bit-for-bit.
     */
-  def histogramQuantiles(df: DataFrame, valueCol: String, groupCol: String,
-                         width: Double = 1000.0): DataFrame = {
+  def histogramQuantiles(df: DataFrame, valueCol: String, groupCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val bins = df
       .groupBy(col(groupCol).as("grp"),
-        floor(col(valueCol) / lit(width)).cast("long").as("bin"))
+        floor(col(valueCol) / lit(HistWidth)).cast("long").as("bin"))
       .agg(count(lit(1)).as("cnt"))
     val wAll = Window.partitionBy(col("grp"))
     val wCum = wAll.orderBy(col("bin"))
@@ -299,7 +297,7 @@ object Sketches {
       .withColumn("n", sum(col("cnt")).over(wAll))
     val picks = Seq(0.25, 0.5, 0.75, 0.95).map { q =>
       min(when(col("cum") >= ceil(lit(q) * col("n")),
-        (col("bin") + lit(1)) * lit(width))).as(s"p${(q * 100).round}")
+        (col("bin") + lit(1)) * lit(HistWidth))).as(s"p${(q * 100).round}")
     }
     c.groupBy(col("grp"))
       .agg(max(col("n")).as("n"), picks: _*)
@@ -317,15 +315,15 @@ object Sketches {
     * ordering is used consistently on both sides, so "space below h"
     * is h/2^64 + 0.5.
     *
-    * Scale: after the per-source distinct, only k=`k` hash values per
+    * Scale: after the per-source distinct, only k=[[KmvK]] hash values per
     * source survive — the pairwise stage touches |sources|·k rows no
     * matter how large the corpus. The exact jaccard column is the
     * fixture-scale verification (one token self-join); production
     * keeps the sketch columns and drops the exact pass, exactly like
     * q52's CMS-vs-exact layout.
     */
-  def kmvSourceOverlap(spark: SparkSession, documents: DataFrame,
-                       k: Int = KmvK): DataFrame = {
+  def kmvSourceOverlap(spark: SparkSession, documents: DataFrame): DataFrame = {
+    val k = KmvK
     GraftFunctions.register(spark)
     import org.apache.spark.sql.expressions.Window
     val toks = documents

@@ -21,8 +21,20 @@ object TextAnalysis {
   private[graft] val Shards = 16             // shardManifest's output shards (q157)
   private[graft] val DsirTargetLang = "en"   // dsirSelect's target language ...
   private[graft] val DsirKeepDen = 4         // ... and kept share 1/DsirKeepDen per source
-  private[graft] val WinnowK = 8             // winnowFingerprints' default k-gram ...
+  private[graft] val WinnowK = 8             // winnowFingerprints' k-gram ...
   private[graft] val WinnowW = 4             // ... and window (q176)
+  private[graft] val PackTokens = 2048       // sequencePacking's tokens per sequence (q45)
+  private[graft] val DropBelow = 0.2         // lengthPercentileFilter's dropped bottom share (q46)
+  private[graft] val TfidfK = 3              // tfidfTerms' terms per document (q50)
+  private[graft] val PassageWindow = 32      // passageChunks' chunk length ...
+  private[graft] val PassageStride = 24      // ... and chunk start stride
+  private[graft] val RetrievalK = 10         // retrievalEval's cutoff k
+  private[graft] val VocabSize = 500         // vocabCoverage's corpus vocabulary size
+  private[graft] val PostingCap = 16         // postingLists' doc ids kept per term
+  private[graft] val TempAlpha = 0.3         // temperatureMixture's exponent
+  private[graft] val TokenBudget = 800L      // tokenBudgetFill's tokens per source (q159)
+  private[graft] val RepeatN = 8             // repeatedSubstringSpans' shingle length ...
+  private[graft] val RepeatMinSpan = 16      // ... and shortest span kept (q118, q119)
   private val SegmentTokens = 8              // segmentDedupRebuild's segment length
   private val Bm25K1 = 1.2                   // BM25 tf saturation (length norm b = 0.75)
   private val RrfDepth = 20                  // hybridRrf's per-ranking depth before fusion
@@ -82,7 +94,7 @@ object TextAnalysis {
     * layout key ((source, hash(doc_id) % k)) when a source exceeds a
     * partition budget — the packing contract per shard is unchanged.
     */
-  def sequencePacking(documents: DataFrame, tokenBudget: Int = 2048): DataFrame = {
+  def sequencePacking(documents: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("source")).orderBy(col("doc_id"))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -91,12 +103,12 @@ object TextAnalysis {
         TextFunctions.tokenCountWs(col("text")).cast("long").as("n_tokens"))
       .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
       // integral `div`, not double `/`: exact at any corpus size
-      .withColumn("seq_id", expr(s"(cum_tokens - n_tokens) div $tokenBudget"))
+      .withColumn("seq_id", expr(s"(cum_tokens - n_tokens) div $PackTokens"))
       .select(col("doc_id"), col("source"), col("n_tokens"), col("seq_id"))
   }
 
   /** Per-source length-percentile filter: drop each source's shortest
-    * documents (bottom `dropBelow` fraction by token count) — the
+    * documents (bottom [[DropBelow]] fraction by token count) — the
     * quantile-based quality gate of a corpus build, computed per source
     * so verbose sources don't starve terse ones. percent_rank over the
     * (n_tokens, doc_id) total order is deterministic (no ties) and
@@ -106,15 +118,14 @@ object TextAnalysis {
     * [[sequencePacking]]. The global variant (no partition) needs a
     * range-partitioned sort — prefer per-source.
     */
-  def lengthPercentileFilter(documents: DataFrame,
-                             dropBelow: Double = 0.2): DataFrame = {
+  def lengthPercentileFilter(documents: DataFrame): DataFrame = {
     // percent_rank reconstructed from ScaleOps.groupedRank: the order
     // (n_tokens, doc_id) is TOTAL, so rank == row_number and
     // pr = (rk−1)/(n−1) — exactly percent_rank, without the per-source
     // single-task sort (SQL defines pr = 0 for a 1-row group).
     // Boundary contract (inherited from percent_rank, oracle-pinned):
     // each source's MINIMUM doc has pr = 0 and is dropped for any
-    // dropBelow > 0 — including a single-doc source, which therefore
+    // DropBelow > 0 — including a single-doc source, which therefore
     // vanishes entirely. A caller that must keep at least one doc per
     // source should pre-filter tiny sources or use rank-based cuts.
     ScaleOps.groupedRank(
@@ -126,33 +137,32 @@ object TextAnalysis {
       .withColumn("pr", when(col("n") > 1L,
         (col("rk") - 1L).cast("double") / (col("n") - 1L).cast("double"))
         .otherwise(0.0))
-      .filter(col("pr") >= dropBelow)
+      .filter(col("pr") >= DropBelow)
       .select(col("doc_id"), col("source"), col("n_tokens"), col("pr"))
   }
 
   /** Cross-document boilerplate n-gram detection (C4-style): n-grams
-    * occurring in at least `minDocs` DISTINCT documents, with their
+    * occurring in at least 2 DISTINCT documents, with their
     * document frequency — the candidate set for boilerplate stripping
     * and the df side of contamination sweeps. Per-doc grams are
     * array_distinct'ed BEFORE the explode so each doc votes once and
     * the aggregate is a plain count; one shuffle on the gram. At
     * 100 TB: partial map-side counts make the shuffle scale with
-    * distinct grams per partition, and a `minDocs` this low is only
+    * distinct grams per partition, and a document floor this low is only
     * for fixtures — production df thresholds shrink the output to the
     * true boilerplate tail.
     */
-  def boilerplateNgrams(documents: DataFrame, n: Int = 4,
-                        minDocs: Int = 2): DataFrame = {
+  def boilerplateNgrams(documents: DataFrame): DataFrame = {
     GraftFunctions.register(documents.sparkSession)
     documents
       .select(explode(array_distinct(GraftFunctions.wordShingles(
-        TextFunctions.wsTokens(col("text")), n))).as("g"))
+        TextFunctions.wsTokens(col("text")), 4))).as("g"))
       .groupBy(col("g"))
       .agg(count(lit(1)).as("n_docs"))
-      .filter(col("n_docs") >= minDocs)
+      .filter(col("n_docs") >= 2)
   }
 
-  /** Per-document top-`k` rarity-weighted terms (TF-IDF keyword
+  /** Per-document top-[[TfidfK]] rarity-weighted terms (TF-IDF keyword
     * extraction): score = tf · N / df with a LINEAR idf instead of the
     * textbook log — the ranking signal is the same monotone df-inverse,
     * but every score stays a ratio of exact integers, so the oracle
@@ -165,7 +175,7 @@ object TextAnalysis {
     * window rides the doc_id shuffle. Nothing quadratic, no driver
     * state — textbook map-reduce TF-IDF declared relationally.
     */
-  def tfidfTerms(documents: DataFrame, k: Int = 3): DataFrame = {
+  def tfidfTerms(documents: DataFrame): DataFrame = {
     val toks = documents.select(col("doc_id"),
       explode(TextFunctions.wsTokens(col("text"))).as("term"))
     val tf = toks.groupBy(col("doc_id"), col("term"))
@@ -180,7 +190,7 @@ object TextAnalysis {
       // long*long exact, then IEEE double division — deterministic
       .withColumn("score", col("tf") * col("n_docs") / col("df"))
       .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= k)
+      .filter(col("rk") <= TfidfK)
       .select(col("doc_id"), col("term"), col("tf"), col("df"),
         col("score"), col("rk"))
   }
@@ -323,8 +333,8 @@ object TextAnalysis {
     *
     * Returns one row per round: (round, l, r, cnt).
     */
-  def bpeMerges(documents: DataFrame, k: Int = BpeK): DataFrame =
-    bpeLoop(documents, k)._1
+  def bpeMerges(documents: DataFrame): DataFrame =
+    bpeLoop(documents)._1
 
   /** [[bpeMerges]]' rules APPLIED back to the corpus: per-source token
     * compression stats after the k learned merges —
@@ -334,7 +344,7 @@ object TextAnalysis {
     * only once.
     */
   def bpeEncode(documents: DataFrame): DataFrame = {
-    val encoded = bpeLoop(documents, BpeK)._2 // (w, t, freq) — vocab-sized
+    val encoded = bpeLoop(documents)._2 // (w, t, freq) — vocab-sized
     val bySource = documents
       .select(col("source"),
         explode(TextFunctions.wsTokensCased(col("text"))).as("w"))
@@ -385,15 +395,15 @@ object TextAnalysis {
       .agg(sum(col("term")).as("kl"), count(lit(1)).as("n_vocab_terms"))
   }
 
-  /** Final per-word symbol table after `k` merges — (w, t, freq).
+  /** Final per-word symbol table after [[BpeK]] merges — (w, t, freq).
     * Exposed for the structural invariant spec: concatenating a
     * word's final symbols must reproduce the word.
     */
-  private[graft] def bpeEncodeSymbols(documents: DataFrame, k: Int = BpeK): DataFrame =
-    bpeLoop(documents, k)._2
+  private[graft] def bpeEncodeSymbols(documents: DataFrame): DataFrame =
+    bpeLoop(documents)._2
 
-  private def bpeLoop(documents: DataFrame,
-                      k: Int): (DataFrame, DataFrame) = {
+  private def bpeLoop(documents: DataFrame): (DataFrame, DataFrame) = {
+    val k = BpeK
     val spark = documents.sparkSession
     val words = documents
       .select(explode(TextFunctions.wsTokensCased(col("text"))).as("w"))
@@ -700,8 +710,8 @@ object TextAnalysis {
   }
 
   /** Overlapping passage chunking (the RAG / retrieval-index unit):
-    * each document becomes chunks of up to `window` tokens starting
-    * every `stride` tokens (overlap = window - stride), with token
+    * each document becomes chunks of up to [[PassageWindow]] tokens starting
+    * every [[PassageStride]] tokens (overlap = window - stride), with token
     * offsets and an md5 chunk fingerprint — the downstream embed/index
     * stages key on (doc_id, chunk_id). Differs from sequencePacking
     * (q45), which concatenates docs INTO fixed budgets; this splits
@@ -713,9 +723,8 @@ object TextAnalysis {
     * 2·stride … while start < dl, so every token lands in ≥1 chunk and
     * the last chunk is never empty.
     */
-  def passageChunks(documents: DataFrame, window: Int = 32,
-                    stride: Int = 24): DataFrame = {
-    require(stride > 0 && window >= stride, "need window >= stride > 0")
+  def passageChunks(documents: DataFrame): DataFrame = {
+    val (window, stride) = (PassageWindow, PassageStride)
     val start = (col("chunk_id") * stride).cast("long")
     documents
       .select(col("doc_id"), TextFunctions.wsTokens(col("text")).as("toks"))
@@ -791,8 +800,8 @@ object TextAnalysis {
     * partitions on query_id — posting-set sized, top-k prunable via
     * WindowGroupLimit if only the metrics' k rows mattered.
     */
-  def retrievalEval(documents: DataFrame, queries: Seq[(Long, Seq[String])],
-                    k: Int = 10): DataFrame = {
+  def retrievalEval(documents: DataFrame, queries: Seq[(Long, Seq[String])]): DataFrame = {
+    val k = RetrievalK
     val spark = documents.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -836,7 +845,7 @@ object TextAnalysis {
       .orderBy("query_id")
   }
 
-  /** Tokenizer-vocabulary coverage: build the top-`vocabSize` corpus
+  /** Tokenizer-vocabulary coverage: build the top-[[VocabSize]] corpus
     * vocabulary (count desc, token asc — the tie-break makes the
     * boundary deterministic), then report each source's out-of-
     * vocabulary token rate. The standard pre-training check that a
@@ -852,12 +861,12 @@ object TextAnalysis {
     * collapse to |sources| rows on the wire; the corpus side never
     * wide-shuffles. `oov_rate` is one integer÷integer IEEE division.
     */
-  def vocabCoverage(documents: DataFrame, vocabSize: Int = 500): DataFrame = {
+  def vocabCoverage(documents: DataFrame): DataFrame = {
     val toks = documents.select(col("doc_id"), col("source"),
         explode(TextFunctions.wsTokens(col("text"))).as("token"))
     val vocab = toks.groupBy("token").agg(count(lit(1)).as("cnt"))
       .orderBy(col("cnt").desc, col("token").asc)
-      .limit(vocabSize)
+      .limit(VocabSize)
       .select(col("token"), lit(1L).as("in_vocab"))
     toks.join(broadcast(vocab), Seq("token"), "left")
       .groupBy("source").agg(
@@ -983,26 +992,26 @@ object TextAnalysis {
 
   /** Inverted-index construction (the retrieval-index build step):
     * per term, document frequency over the whole corpus plus a CAPPED
-    * posting list — the first `cap` doc_ids in ascending order,
+    * posting list — the first [[PostingCap]] doc_ids in ascending order,
     * comma-joined (strings compare bit-exactly across engines; a
     * native array column would differ only in container repr).
     *
     * Scale: per-doc `array_distinct` bounds the explode to distinct
     * terms per doc; `df` is a count-only aggregate (never a list);
     * the posting list is rank-filtered BEFORE collection, so no
-    * aggregation buffer ever holds more than `cap` entries — a
+    * aggregation buffer ever holds more than [[PostingCap]] entries — a
     * stopword's millions of docs cost a WindowGroupLimit-pruned
     * top-cap per term, not an unbounded collect_list. Postings and
     * df ride the same (term)-keyed shuffle pair.
     */
-  def postingLists(documents: DataFrame, cap: Int = 16): DataFrame = {
+  def postingLists(documents: DataFrame): DataFrame = {
     val toks = documents.select(col("doc_id"),
       explode(array_distinct(TextFunctions.wsTokens(col("text")))).as("term"))
     val dfv = toks.groupBy("term").agg(count(lit(1)).as("df"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("term")).orderBy(col("doc_id"))
     val capped = toks
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= cap)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= PostingCap)
       .groupBy("term")
       .agg(
         concat_ws(",", transform(sort_array(collect_list(col("doc_id"))),
@@ -1011,29 +1020,14 @@ object TextAnalysis {
     dfv.join(capped, "term").orderBy("term")
   }
 
-  /** Temperature-weighted source mixture (the multilingual/multi-source
-    * LM mixing rule): raw source probability p_raw ∝ token count, and
-    * sampling probability p_temp ∝ p_raw^alpha renormalized —
-    * alpha < 1 upsamples the tail, alpha = 1 is proportional, alpha = 0
-    * is uniform. `upsample = p_temp / p_raw` is the per-source
-    * replication factor a sampler applies.
-    *
-    * Scale: one count/sum aggregate per source (map-side combined) —
-    * the corpus is scanned exactly ONCE; the normalizing totals are
-    * global-window sums over the |sources|-row aggregate (the
-    * single-partition WindowExec warning is that ~20-row frame, q111's
-    * documented pattern — cross-joining broadcast scalar aggregates
-    * instead would re-derive the aggregate from its own scan and read
-    * the corpus three times).
-    */
   /** q118 — cross-document repeated-substring spans (the Lee et al.
     * 2022 "Deduplicating Training Data" shape) at finer grain than
     * q62's fixed k-token segments: every n-token shingle occurring at
     * ≥ 2 positions corpus-wide marks its start position as duplicated,
     * and maximal CONSECUTIVE runs of duplicated positions within a doc
     * chain-extend into spans `[span_start, span_end]` (token indices,
-    * end inclusive: last run position + n − 1). Spans shorter than
-    * `minSpanTokens` are noise and dropped; the surviving (doc, span)
+    * end inclusive: last run position + n − 1, n = [[RepeatN]]). Spans shorter than
+    * [[RepeatMinSpan]] tokens are noise and dropped; the surviving (doc, span)
     * pairs are what a curation pass cuts out of the text.
     *
     * Scale: NO suffix-array global sort — the duplicate test is one
@@ -1045,9 +1039,9 @@ object TextAnalysis {
     * as the string here so the oracle needs no hash mirroring (a
     * 64-bit collision would silently merge two shingles' counts).
     */
-  def repeatedSubstringSpans(documents: DataFrame, n: Int = 8,
-                             minSpanTokens: Int = 16): DataFrame = {
+  def repeatedSubstringSpans(documents: DataFrame): DataFrame = {
     GraftFunctions.register(documents.sparkSession)
+    val n = RepeatN
     import org.apache.spark.sql.expressions.Window
     val sh = documents
       .select(col("doc_id"), TextFunctions.wsTokens(col("text")).as("t"))
@@ -1068,7 +1062,7 @@ object TextAnalysis {
         (max(col("pos")) + lit(n - 1)).cast("long").as("span_end"))
       .select(col("doc_id"), col("span_start"), col("span_end"),
         (col("span_end") - col("span_start") + 1).as("span_tokens"))
-      .filter(col("span_tokens") >= minSpanTokens)
+      .filter(col("span_tokens") >= RepeatMinSpan)
   }
 
   /** q119 — the actionable half of [[repeatedSubstringSpans]]: cut
@@ -1084,9 +1078,8 @@ object TextAnalysis {
     * itself is a per-row HOF filter (position ∉ any span), no explode
     * of token positions.
     */
-  def removeRepeatedSubstrings(documents: DataFrame, n: Int = 8,
-                               minSpanTokens: Int = 16): DataFrame = {
-    val spans = repeatedSubstringSpans(documents, n, minSpanTokens)
+  def removeRepeatedSubstrings(documents: DataFrame): DataFrame = {
+    val spans = repeatedSubstringSpans(documents)
       .groupBy("doc_id")
       .agg(collect_list(struct(col("span_start").as("s"),
         col("span_end").as("e"))).as("spans"))
@@ -1103,7 +1096,22 @@ object TextAnalysis {
         array_join(col("kept"), " ").as("rebuilt"))
   }
 
-  def temperatureMixture(documents: DataFrame, alpha: Double = 0.3): DataFrame = {
+  /** Temperature-weighted source mixture (the multilingual/multi-source
+    * LM mixing rule): raw source probability p_raw ∝ token count, and
+    * sampling probability p_temp ∝ p_raw^alpha (alpha = [[TempAlpha]]) renormalized —
+    * alpha < 1 upsamples the tail, alpha = 1 is proportional, alpha = 0
+    * is uniform. `upsample = p_temp / p_raw` is the per-source
+    * replication factor a sampler applies.
+    *
+    * Scale: one count/sum aggregate per source (map-side combined) —
+    * the corpus is scanned exactly ONCE; the normalizing totals are
+    * global-window sums over the |sources|-row aggregate (the
+    * single-partition WindowExec warning is that ~20-row frame, q111's
+    * documented pattern — cross-joining broadcast scalar aggregates
+    * instead would re-derive the aggregate from its own scan and read
+    * the corpus three times).
+    */
+  def temperatureMixture(documents: DataFrame): DataFrame = {
     val per = documents
       .select(col("source"),
         size(TextFunctions.wsTokens(col("text"))).cast("long").as("n_tok"))
@@ -1116,7 +1124,7 @@ object TextAnalysis {
     per
       .withColumn("p_raw",
         col("n_tokens").cast("double") / sum(col("n_tokens")).over(all))
-      .withColumn("pa", pow(col("p_raw"), lit(alpha)))
+      .withColumn("pa", pow(col("p_raw"), lit(TempAlpha)))
       .withColumn("p_temp", col("pa") / sum(col("pa")).over(all))
       .select(col("source"), col("n_docs"), col("n_tokens"), col("p_raw"),
         col("p_temp"), (col("p_temp") / col("p_raw")).as("upsample"))
@@ -1252,8 +1260,7 @@ object TextAnalysis {
     * one window partition (the r11 retirement of that caveat; the
     * pre-r11 advice was pre-splitting by (source, md5-range)).
     */
-  def tokenBudgetFill(documents: DataFrame,
-                      budget: Long = 800L): DataFrame = {
+  def tokenBudgetFill(documents: DataFrame): DataFrame = {
     val toks = TextFunctions.wsTokens(col("text"))
     val pr = conv(substring(md5(col("text")), 1, 8), 16, 10).cast("long")
     ScaleOps.groupedCumSum(
@@ -1263,7 +1270,7 @@ object TextAnalysis {
         "n_tokens", cumCol = "cum_tokens")
       .select(col("doc_id"), col("source"), col("n_tokens"),
         col("priority"), col("cum_tokens"),
-        (col("cum_tokens") <= budget).as("kept"))
+        (col("cum_tokens") <= TokenBudget).as("kept"))
   }
 
   /** Deterministic training-shard manifest (q157) — the last step of
@@ -1491,9 +1498,8 @@ object TextAnalysis {
     * output certifies the full selected SET (count + sum + min + max),
     * not just a sample.
     */
-  def winnowFingerprints(documents: DataFrame, k: Int = WinnowK,
-                         w: Int = WinnowW): DataFrame = {
-    require(w >= 2, s"winnow window must be >= 2, got $w")
+  def winnowFingerprints(documents: DataFrame): DataFrame = {
+    val (k, w) = (WinnowK, WinnowW)
     val spark = documents.sparkSession
     GraftFunctions.register(spark)
     // repartition on doc_id BEFORE the gram explode (r17, guide §2.3/§8):

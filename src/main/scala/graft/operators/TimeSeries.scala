@@ -27,13 +27,11 @@ object TimeSeries {
 
   private[graft] val CusumSlack = 25.0       // CUSUM drift allowance and alarm level,
   private[graft] val CusumThreshold = 200.0  // shared with StreamingCusum
+  private[graft] val EwmaWindow = 32         // ewmaFeatures' events per rolling frame (q68)
   private val Smoothing = 0.5                // Holt level/trend/season smoothing α = β = γ
   private val MadBinWidth = 1.0              // madAnomaly's histogram bin width
   private val AcfLags = 3                    // acf's lags 1..AcfLags
 
-  /** EWMA (α=1/2, last `w` events) + rolling mean/min/max per
-    * `user_id` ordered by `ts`. Emits one row per event.
-    */
   /** Exact 2-sigma outlier counts per (user, event_type), computed
     * entirely in integer/decimal space so the threshold comparison is
     * bit-identical on any engine: values go to cents via
@@ -223,14 +221,17 @@ object TimeSeries {
       .orderBy("event_type")
   }
 
-  def ewmaFeatures(events: DataFrame, w: Int = 32): DataFrame = {
+  /** EWMA (α=1/2, last [[EwmaWindow]] events) + rolling mean/min/max per
+    * `user_id` ordered by `ts`. Emits one row per event.
+    */
+  def ewmaFeatures(events: DataFrame): DataFrame = {
     // event_id tie-break makes the frame order TOTAL: with ts alone,
     // equal timestamps would leave the collect_list order (and so the
     // EWMA fold) partition-order nondeterministic — every sibling
     // keyed-sequence operator here tie-breaks the same way
     val win = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-      .rowsBetween(-(w - 1), Window.currentRow)
+      .rowsBetween(-(EwmaWindow - 1), Window.currentRow)
     val vals = collect_list(col("value")).over(win)
     val n = size(col("vals"))
     // ewma = Σ_{j=1..n} vals[j] · 2^{-(n-j+1)}: newest gets weight 1/2,

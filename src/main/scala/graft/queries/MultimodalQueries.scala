@@ -72,12 +72,12 @@ object MultimodalQueries {
     // DECODED pixels; matching hashes prove the codec is real and
     // lossless.
     "q114_image_roundtrip" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT doc_id, octet_length(encode(text))::BIGINT AS nb,
         |         lower(hex(encode(text))) AS hx
         |  FROM documents)
-        |SELECT doc_id, 32::BIGINT AS width,
-        |       greatest(1, CAST(ceil(nb / 32.0) AS BIGINT)) AS height,
+        |SELECT doc_id, ${Multimodal.ImageWidth}::BIGINT AS width,
+        |       greatest(1, CAST(ceil(nb / ${Multimodal.ImageWidth}.0) AS BIGINT)) AS height,
         |       coalesce(list_sum(list_transform(range(nb),
         |         i -> ('0x' || substr(hx, (2 * i + 1)::INT, 2))::BIGINT)),
         |         0)::BIGINT AS pixel_sum,
@@ -114,13 +114,13 @@ object MultimodalQueries {
     // round-robin); frame j covers bytes [64j, min(64(j+1), nb)),
     // kept when j % 2 = 0; byte sums from the hex dump (q114 pattern).
     "q120_video_frames" ->
-      """WITH b AS (
+      s"""WITH b AS (
         |  SELECT doc_id, octet_length(encode(text))::BIGINT AS nb,
         |         lower(hex(encode(text))) AS hx
         |  FROM documents WHERE doc_id % 3 = 2),
         |f AS (
         |  SELECT doc_id, nb, hx,
-        |         unnest(list_filter(range((nb + 63) // 64), j -> j % 2 = 0)) AS j
+        |         unnest(list_filter(range((nb + 63) // 64), j -> j % ${Multimodal.FrameStride} = 0)) AS j
         |  FROM b WHERE nb > 0)
         |SELECT doc_id, j::BIGINT AS frame_no,
         |       least(64, nb - 64 * j)::BIGINT AS n_bytes,

@@ -686,7 +686,7 @@ object RelationalOpQueries {
     // expression tree on both engines; trigram sets are distinct lists
     // so intersection/union sizes match Spark's array_intersect exactly.
     "q121_entity_match" ->
-      """WITH l AS (
+      s"""WITH l AS (
         |  SELECT c_custkey, c_nationkey::BIGINT AS l_nation,
         |         regexp_extract(c_name, '([0-9]+)', 1) AS l_digits,
         |         c_acctbal AS l_bal
@@ -706,10 +706,10 @@ object RelationalOpQueries {
         |  SELECT s_suppkey, 's' || right(r_digits, 2) FROM r),
         |lc AS (SELECT c_custkey, bkey FROM (
         |         SELECT *, count(*) OVER (PARTITION BY bkey) AS bn FROM lb)
-        |       WHERE bn <= 10000),
+        |       WHERE bn <= ${EntityResolution.MaxBlockSize}),
         |rc AS (SELECT s_suppkey, bkey FROM (
         |         SELECT *, count(*) OVER (PARTITION BY bkey) AS bn FROM rb)
-        |       WHERE bn <= 10000),
+        |       WHERE bn <= ${EntityResolution.MaxBlockSize}),
         |cands AS (
         |  SELECT DISTINCT c_custkey, s_suppkey
         |  FROM lc JOIN rc USING (bkey)),

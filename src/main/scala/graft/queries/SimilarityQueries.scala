@@ -15,18 +15,21 @@ import graft.QueryHelpers._
   */
 object SimilarityQueries {
 
-  // q21/q29/q44/q129's depth, q125's components and q158's query set (the first
-  // MmrQueries vectors), passed to the operator and the oracle alike
+  // q21/q29/q44/q129's depth and q125's components, passed to the operator
+  // and the oracle alike
   private val AnnK = 10
   private val PcaRank = 4
-  private val MmrQueries = 5
+  /** The query set of the top-k queries: the first `QueryIds` vectors by id.
+    * The engine filters on it and every oracle reads it.
+    */
+  private[graft] final val QueryIds = 5
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // Brute-force cosine top-k (exact ANN baseline).
     "q20_sim_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.bruteForceTopK(s, emb, emb.filter(col("vec_id") < 5), 10)
+      Similarity.bruteForceTopK(s, emb, emb.filter(col("vec_id") < QueryIds), 10)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -38,7 +41,7 @@ object SimilarityQueries {
     // SQL literals (OracleHashSql.q21AnnLsh).
     "q21_sim_ann_lsh" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.annTopK(s, emb, emb.filter(col("vec_id") < 5), AnnK)
+      Similarity.annTopK(s, emb, emb.filter(col("vec_id") < QueryIds), AnnK)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -49,7 +52,7 @@ object SimilarityQueries {
     // SimilaritySpec). Fully relational → exact DuckDB oracle.
     "q29_sim_ivf" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopK(s, emb, emb.filter(col("vec_id") < 5), AnnK)
+      Similarity.ivfTopK(s, emb, emb.filter(col("vec_id") < QueryIds), AnnK)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -64,7 +67,7 @@ object SimilarityQueries {
     // bit-exactly.
     "q44_sim_ivf_kmeans" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.ivfTopKTrained(s, emb, emb.filter(col("vec_id") < 5), AnnK)
+      Similarity.ivfTopKTrained(s, emb, emb.filter(col("vec_id") < QueryIds), AnnK)
         .select(col("query_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -106,7 +109,7 @@ object SimilarityQueries {
     // disequality in the join).
     "q124_hard_negatives" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.hardNegatives(s, emb, emb.filter(col("vec_id") < 5), 10)
+      Similarity.hardNegatives(s, emb, emb.filter(col("vec_id") < QueryIds), 10)
         .select(col("anchor_id"), col("rank").cast("long").as("rank"),
           col("neighbor_id"), r4(col("cos")).as("cos"))
         .orderBy("anchor_id", "rank")
@@ -136,7 +139,7 @@ object SimilarityQueries {
     // (ivfPqTopK) is spec-bounded for recall.
     "q129_pq_adc_topk" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.pqAdcTopK(s, emb, emb.filter(col("vec_id") < 5), AnnK)
+      Similarity.pqAdcTopK(s, emb, emb.filter(col("vec_id") < QueryIds), AnnK)
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -147,7 +150,7 @@ object SimilarityQueries {
     // greedy rounds unrolled per query over the capped candidate pool.
     "q158_mmr_rerank" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.mmrRerank(s, emb, emb.filter(col("vec_id") < MmrQueries))
+      Similarity.mmrRerank(s, emb, emb.filter(col("vec_id") < QueryIds))
         .select(col("query_id"), col("rank"), col("doc_id"),
           r4(col("rel")).as("rel"), r4(col("mmr")).as("mmr"))
         .orderBy("query_id", "rank")
@@ -169,7 +172,7 @@ object SimilarityQueries {
     // capped candidate set (the 1-bit tier after int8 q47 / PQ q129).
     "q155_binary_hamming_ann" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.binaryHammingTopK(s, emb, emb.filter(col("vec_id") < 5))
+      Similarity.binaryHammingTopK(s, emb, emb.filter(col("vec_id") < QueryIds))
         .select(col("query_id"), col("rank"), col("neighbor_id"),
           col("hamming"), r4(col("cos")).as("cos"))
         .orderBy("query_id", "rank")
@@ -190,12 +193,12 @@ object SimilarityQueries {
   val oracleSql: Map[String, String] = Map(
 
     "q20_sim_topk" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
         |         list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
         |                                CAST(c.embedding AS DOUBLE[])) AS cos
         |  FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-        |  WHERE q.vec_id < 5)
+        |  WHERE q.vec_id < $QueryIds)
         |SELECT query_id, rank, neighbor_id, floor((cos) * 10000 + 0.5) / 10000 AS cos
         |FROM (SELECT query_id, neighbor_id, cos,
         |             row_number() OVER (PARTITION BY query_id
@@ -216,12 +219,12 @@ object SimilarityQueries {
     // the oracle can afford dim²·N rows at fixture scale; the engine's
     // Gram fold computes the same sums (order-noise ~1e-15 only).
     "q65_dim_correlation" ->
-      """WITH x AS MATERIALIZED (
+      s"""WITH x AS MATERIALIZED (
         |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
         |dims AS MATERIALIZED (
         |  SELECT vec_id, s.d AS d, s.v AS v FROM (
         |    SELECT vec_id,
-        |           unnest(list_transform(range(64), j ->
+        |           unnest(list_transform(range(${Similarity.Dim}), j ->
         |             {'d': j, 'v': e[(j+1)::INT]})) AS s
         |    FROM x)),
         |stats AS (
@@ -239,7 +242,7 @@ object SimilarityQueries {
         |           (sqrt(n*sxx - sx*sx) * sqrt(n*syy - sy*sy))) DESC,
         |           d1, d2)::BIGINT AS rank
         |  FROM stats)
-        |WHERE rank <= 20
+        |WHERE rank <= ${Similarity.DimCorrK}
         |ORDER BY rank""".stripMargin,
 
 
@@ -272,10 +275,10 @@ object SimilarityQueries {
     // literals (Similarity.projSigns is the single source of truth,
     // like q21's plane constants) — all-integer, hash-exact.
     "q123_random_projection" -> {
-      val signs = Similarity.projSigns(16, 64)
+      val signs = Similarity.projSigns(Similarity.ProjK, Similarity.Dim)
       val comps = signs.zipWithIndex.map { case (sj, j) =>
         val lits = sj.map(_.toString).mkString("[", ",", "]::BIGINT[]")
-        f"list_sum(list_transform(range(64), i -> q[(i+1)::INT] * ($lits)[(i+1)::INT]))::BIGINT AS p$j%02d"
+        f"list_sum(list_transform(range(${Similarity.Dim}), i -> q[(i+1)::INT] * ($lits)[(i+1)::INT]))::BIGINT AS p$j%02d"
       }.mkString(",\n       ")
       s"""WITH s AS (
          |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
@@ -296,13 +299,13 @@ object SimilarityQueries {
 
     // q124: q20's oracle with the label-disequality join condition.
     "q124_hard_negatives" ->
-      """WITH scored AS (
+      s"""WITH scored AS (
         |  SELECT q.vec_id AS anchor_id, c.vec_id AS neighbor_id,
         |         list_cosine_similarity(CAST(q.embedding AS DOUBLE[]),
         |                                CAST(c.embedding AS DOUBLE[])) AS cos
         |  FROM embeddings q JOIN embeddings c
         |    ON q.vec_id <> c.vec_id AND q.label <> c.label
-        |  WHERE q.vec_id < 5)
+        |  WHERE q.vec_id < $QueryIds)
         |SELECT anchor_id, rank, neighbor_id,
         |       floor((cos) * 10000 + 0.5) / 10000 AS cos
         |FROM (SELECT anchor_id, neighbor_id, cos,
@@ -318,7 +321,7 @@ object SimilarityQueries {
 
     "q129_pq_adc_topk" -> OracleHashSql.q129PqAdc(AnnK),
 
-    "q158_mmr_rerank" -> OracleHashSql.q158Mmr(MmrQueries),
+    "q158_mmr_rerank" -> OracleHashSql.q158Mmr,
 
     "q156_kcenter_coreset" -> OracleHashSql.q156KCenter,
 
@@ -326,7 +329,7 @@ object SimilarityQueries {
     // q155: identical sign packing (two BIGINT words), xor+bit_count
     // Hamming, integer candidate cut, then the q20 cosine contract.
     "q155_binary_hamming_ann" ->
-      """WITH b AS MATERIALIZED (
+      s"""WITH b AS MATERIALIZED (
         |  SELECT vec_id, embedding,
         |    list_reduce(list_prepend(0::BIGINT, list_transform(range(0, 32),
         |      i -> CASE WHEN embedding[(i+1)::INT] > 0
@@ -344,12 +347,12 @@ object SimilarityQueries {
         |         CAST(q.embedding AS DOUBLE[]) AS qe,
         |         CAST(c.embedding AS DOUBLE[]) AS ce
         |  FROM b q JOIN b c ON q.vec_id <> c.vec_id
-        |  WHERE q.vec_id < 5),
+        |  WHERE q.vec_id < $QueryIds),
         |cand AS (
         |  SELECT * FROM (
         |    SELECT *, row_number() OVER (PARTITION BY query_id
         |                 ORDER BY hamming, neighbor_id) AS crank
-        |    FROM sc) WHERE crank <= 40),
+        |    FROM sc) WHERE crank <= ${Similarity.BinaryCand}),
         |rr AS (
         |  SELECT query_id, neighbor_id, hamming,
         |         list_cosine_similarity(qe, ce) AS cos

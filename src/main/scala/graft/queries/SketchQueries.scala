@@ -119,8 +119,8 @@ object SketchQueries {
     // q63: same inverse-CDF rank rule (first bin edge with cum >=
     // ceil(q*n)); all-integer counts and literal*integer edges.
     "q63_histogram_quantiles" ->
-      """WITH bins AS (
-        |  SELECT l_returnflag, floor(l_extendedprice / 1000.0)::BIGINT AS bin,
+      s"""WITH bins AS (
+        |  SELECT l_returnflag, floor(l_extendedprice / ${Sketches.HistWidth})::BIGINT AS bin,
         |         count(*)::BIGINT AS cnt
         |  FROM lineitem GROUP BY 1, 2),
         |c AS (
@@ -129,10 +129,10 @@ object SketchQueries {
         |         sum(cnt) OVER (PARTITION BY l_returnflag)::BIGINT AS n
         |  FROM bins)
         |SELECT l_returnflag, max(n) AS n,
-        |       min(CASE WHEN cum >= ceil(0.25 * n) THEN CAST(bin + 1 AS DOUBLE) * 1000 END) AS p25,
-        |       min(CASE WHEN cum >= ceil(0.5 * n)  THEN CAST(bin + 1 AS DOUBLE) * 1000 END) AS p50,
-        |       min(CASE WHEN cum >= ceil(0.75 * n) THEN CAST(bin + 1 AS DOUBLE) * 1000 END) AS p75,
-        |       min(CASE WHEN cum >= ceil(0.95 * n) THEN CAST(bin + 1 AS DOUBLE) * 1000 END) AS p95
+        |       min(CASE WHEN cum >= ceil(0.25 * n) THEN CAST(bin + 1 AS DOUBLE) * ${Sketches.HistWidth.toLong} END) AS p25,
+        |       min(CASE WHEN cum >= ceil(0.5 * n)  THEN CAST(bin + 1 AS DOUBLE) * ${Sketches.HistWidth.toLong} END) AS p50,
+        |       min(CASE WHEN cum >= ceil(0.75 * n) THEN CAST(bin + 1 AS DOUBLE) * ${Sketches.HistWidth.toLong} END) AS p75,
+        |       min(CASE WHEN cum >= ceil(0.95 * n) THEN CAST(bin + 1 AS DOUBLE) * ${Sketches.HistWidth.toLong} END) AS p95
         |FROM c GROUP BY l_returnflag
         |ORDER BY l_returnflag""".stripMargin,
 

@@ -434,7 +434,7 @@ object TextQueries {
 
 
     "q45_sequence_packing" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, source,
         |         len(list_filter(string_split(lower(text), ' '), x -> length(x) > 0))::BIGINT AS n_tokens
         |  FROM documents),
@@ -444,7 +444,7 @@ object TextQueries {
         |                             ROWS UNBOUNDED PRECEDING)::BIGINT AS cum_tokens
         |  FROM t)
         |SELECT doc_id, source, n_tokens,
-        |       ((cum_tokens - n_tokens) // 2048)::BIGINT AS seq_id
+        |       ((cum_tokens - n_tokens) // ${TextAnalysis.PackTokens})::BIGINT AS seq_id
         |FROM c
         |ORDER BY 1, 2, 3, 4""".stripMargin,
 
@@ -452,7 +452,7 @@ object TextQueries {
     "q46_length_percentile" ->
       // prr vs pr: the filter must see the UNROUNDED rank (DuckDB WHERE
       // can bind SELECT aliases, so the output alias is kept distinct)
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, source,
         |         len(list_filter(string_split(lower(text), ' '), x -> length(x) > 0))::BIGINT AS n_tokens
         |  FROM documents),
@@ -461,7 +461,7 @@ object TextQueries {
         |         percent_rank() OVER (PARTITION BY source ORDER BY n_tokens, doc_id) AS prr
         |  FROM t)
         |SELECT doc_id, source, n_tokens, floor(prr * 10000 + 0.5) / 10000 AS pr
-        |FROM p WHERE prr >= 0.2
+        |FROM p WHERE prr >= ${TextAnalysis.DropBelow}
         |ORDER BY 1, 2, 3, 4""".stripMargin,
 
 
@@ -481,7 +481,7 @@ object TextQueries {
 
 
     "q50_tfidf_terms" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, unnest(list_filter(string_split(lower(text),' '), x -> length(x) > 0)) AS term
         |  FROM documents),
         |tf AS (
@@ -500,7 +500,7 @@ object TextQueries {
         |  FROM scored)
         |SELECT doc_id, term, tf, df,
         |       floor(sc * 10000 + 0.5) / 10000 AS score, rk::BIGINT AS rk
-        |FROM ranked WHERE rk <= 3
+        |FROM ranked WHERE rk <= ${TextAnalysis.TfidfK}
         |ORDER BY 1, 6""".stripMargin,
 
 
@@ -718,7 +718,7 @@ object TextQueries {
     // q99: integer/string chunking — truncating and floor division
     // agree because dl > 0 is enforced on both sides.
     "q99_passage_chunks" ->
-      """WITH dd AS (
+      s"""WITH dd AS (
         |  SELECT doc_id,
         |         list_filter(string_split(lower(text), ' '),
         |                     x -> length(x) > 0) AS toks
@@ -726,15 +726,15 @@ object TextQueries {
         |d AS (SELECT doc_id, toks, len(toks)::BIGINT AS dl FROM dd
         |      WHERE len(toks) > 0),
         |c AS (
-        |  SELECT doc_id, toks, dl, unnest(range((dl - 1) // 24 + 1)) AS chunk_id
+        |  SELECT doc_id, toks, dl, unnest(range((dl - 1) // ${TextAnalysis.PassageStride} + 1)) AS chunk_id
         |  FROM d),
         |x AS (
         |  SELECT doc_id, chunk_id::BIGINT AS chunk_id,
-        |         (chunk_id * 24)::BIGINT AS start_tok,
-        |         least(32, dl - chunk_id * 24)::BIGINT AS n_tok,
+        |         (chunk_id * ${TextAnalysis.PassageStride})::BIGINT AS start_tok,
+        |         least(${TextAnalysis.PassageWindow}, dl - chunk_id * ${TextAnalysis.PassageStride})::BIGINT AS n_tok,
         |         array_to_string(
-        |           list_slice(toks, chunk_id * 24 + 1,
-        |                      chunk_id * 24 + least(32, dl - chunk_id * 24)),
+        |           list_slice(toks, chunk_id * ${TextAnalysis.PassageStride} + 1,
+        |                      chunk_id * ${TextAnalysis.PassageStride} + least(${TextAnalysis.PassageWindow}, dl - chunk_id * ${TextAnalysis.PassageStride})),
         |           ' ') AS chunk_text
         |  FROM c)
         |SELECT doc_id, chunk_id, start_tok, n_tok, chunk_text,
@@ -813,25 +813,25 @@ object TextQueries {
         |a AS (
         |  SELECT query_id, count(*)::BIGINT AS n_cand,
         |         SUM(rel)::BIGINT AS n_rel,
-        |         SUM(CASE WHEN rank <= 10 THEN rel ELSE 0 END)::BIGINT
+        |         SUM(CASE WHEN rank <= ${TextAnalysis.RetrievalK} THEN rel ELSE 0 END)::BIGINT
         |           AS rel_at_k,
-        |         MAX(CASE WHEN rank <= 10 AND rel = 1
+        |         MAX(CASE WHEN rank <= ${TextAnalysis.RetrievalK} AND rel = 1
         |             THEN 1.0::DOUBLE / rank ELSE 0.0::DOUBLE END) AS mrr,
-        |         SUM(CASE WHEN rank <= 10 AND rel = 1
+        |         SUM(CASE WHEN rank <= ${TextAnalysis.RetrievalK} AND rel = 1
         |             THEN 1.0::DOUBLE / ln(rank + 1.0::DOUBLE)
         |             ELSE 0.0::DOUBLE END) AS dcg
         |  FROM r GROUP BY 1),
         |i AS (
         |  SELECT *, CASE WHEN n_rel = 0 THEN 0.0::DOUBLE ELSE
         |      coalesce(list_sum(list_transform(
-        |        range(1, least(n_rel, 10) + 1),
+        |        range(1, least(n_rel, ${TextAnalysis.RetrievalK}) + 1),
         |        i -> 1.0::DOUBLE / ln(i::DOUBLE + 1.0::DOUBLE))),
         |        0.0::DOUBLE) END AS idcg
         |  FROM a)
         |SELECT query_id::BIGINT AS query_id, n_cand, n_rel, rel_at_k, mrr,
         |       CASE WHEN idcg > 0.0 THEN dcg / idcg
         |            ELSE 0.0::DOUBLE END AS ndcg,
-        |       rel_at_k::DOUBLE / 10.0::DOUBLE AS p_at_k,
+        |       rel_at_k::DOUBLE / ${TextAnalysis.RetrievalK}.0::DOUBLE AS p_at_k,
         |       CASE WHEN n_rel > 0 THEN rel_at_k::DOUBLE / n_rel
         |            ELSE 0.0::DOUBLE END AS recall_at_k
         |FROM i ORDER BY 1""".stripMargin
@@ -841,14 +841,14 @@ object TextQueries {
     // q107: vocab boundary is deterministic both engines — (count
     // desc, token asc) tie-break; oov_rate is one int÷int IEEE op.
     "q107_vocab_coverage" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT doc_id, source,
         |         unnest(list_filter(string_split(lower(text), ' '),
         |                            x -> length(x) > 0)) AS token
         |  FROM documents),
         |vocab AS (
         |  SELECT token FROM toks GROUP BY token
-        |  ORDER BY count(*) DESC, token ASC LIMIT 500)
+        |  ORDER BY count(*) DESC, token ASC LIMIT ${TextAnalysis.VocabSize})
         |SELECT source, count(DISTINCT doc_id)::BIGINT AS n_docs,
         |       count(*)::BIGINT AS n_tokens,
         |       SUM(CASE WHEN v.token IS NULL THEN 1 ELSE 0 END)::BIGINT
@@ -922,7 +922,7 @@ object TextQueries {
     // the explode — same per-doc term set); string_agg with ORDER BY
     // mirrors the sorted comma-joined postings.
     "q112_posting_lists" ->
-      """WITH toks AS (
+      s"""WITH toks AS (
         |  SELECT DISTINCT doc_id, term FROM (
         |    SELECT doc_id,
         |           unnest(list_filter(string_split(lower(text), ' '),
@@ -937,7 +937,7 @@ object TextQueries {
         |  SELECT term,
         |         string_agg(doc_id::VARCHAR, ',' ORDER BY doc_id) AS postings,
         |         count(*)::BIGINT AS n_postings
-        |  FROM top WHERE rn <= 16 GROUP BY 1)
+        |  FROM top WHERE rn <= ${TextAnalysis.PostingCap} GROUP BY 1)
         |SELECT term, df, postings, n_postings
         |FROM dfv JOIN cap USING (term) ORDER BY term""".stripMargin,
 
@@ -946,7 +946,7 @@ object TextQueries {
     // double arithmetic both engines; the 20-term z sum is far inside
     // the 1e-9 tolerance whatever the fold order.
     "q113_temperature_mixture" ->
-      """WITH per AS (
+      s"""WITH per AS (
         |  SELECT source, count(*)::BIGINT AS n_docs,
         |         SUM(len(list_filter(string_split(lower(text), ' '),
         |                             x -> length(x) > 0)))::BIGINT AS n_tokens
@@ -955,7 +955,7 @@ object TextQueries {
         |p AS (
         |  SELECT source, n_docs, n_tokens,
         |         n_tokens::DOUBLE / tot AS p_raw,
-        |         pow(n_tokens::DOUBLE / tot, 0.3) AS pa
+        |         pow(n_tokens::DOUBLE / tot, ${TextAnalysis.TempAlpha}) AS pa
         |  FROM per CROSS JOIN t),
         |z AS (SELECT SUM(pa) AS z FROM p)
         |SELECT source, n_docs, n_tokens, p_raw, pa / z AS p_temp,
@@ -1104,7 +1104,7 @@ object TextQueries {
     // q159: identical window cumsum over the (priority, doc_id)
     // order; md5-prefix priority parses hex on both engines.
     "q159_token_budget_fill" ->
-      """WITH t AS (
+      s"""WITH t AS (
         |  SELECT doc_id, source,
         |         len(list_filter(string_split(lower(text), ' '),
         |             x -> length(x) > 0))::BIGINT AS n_tokens,
@@ -1117,7 +1117,7 @@ object TextQueries {
         |           ROWS UNBOUNDED PRECEDING)::BIGINT AS cum_tokens
         |  FROM t)
         |SELECT doc_id, source, n_tokens, priority, cum_tokens,
-        |       (cum_tokens <= 800) AS kept
+        |       (cum_tokens <= ${TextAnalysis.TokenBudget}) AS kept
         |FROM c ORDER BY doc_id""".stripMargin,
 
     "q157_shard_manifest" -> OracleHashSql.q157ShardManifest,

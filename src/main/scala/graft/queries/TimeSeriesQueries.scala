@@ -140,14 +140,14 @@ object TimeSeriesQueries {
     // binary doubles, so the fold matches bit-for-bit); rolling stats
     // over the identical ROWS frame.
     "q68_ewma_features" ->
-      """WITH f AS (
+      s"""WITH f AS (
         |  SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS tsu, value,
         |         list(value) OVER win AS vals,
         |         min(value) OVER win AS rmin,
         |         max(value) OVER win AS rmax
         |  FROM events
         |  WINDOW win AS (PARTITION BY user_id ORDER BY ts
-        |                 ROWS BETWEEN 31 PRECEDING AND CURRENT ROW))
+        |                 ROWS BETWEEN ${TimeSeries.EwmaWindow - 1} PRECEDING AND CURRENT ROW))
         |SELECT event_id, user_id,
         |       strftime(tsu, '%Y-%m-%d %H:%M:%S') AS ts,
         |       floor(value*100+0.5)/100 AS value,

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 /** Streaming twin of q28's batch sessionization: where the batch side
   * finds sessions after the fact with gaps-and-islands windows, the
   * stream assigns each event to a native `session_window` whose extent
-  * grows while events keep arriving within `gap`, and emits the
-  * finished session exactly once when the watermark passes its close
-  * (append mode) — the real-time feed of the same per-session rows.
+  * grows while events keep arriving within a 30-minute gap, and emits the
+  * finished session exactly once when the 2-minute watermark passes its
+  * close (append mode) — the real-time feed of the same per-session rows.
   *
   * Scale posture: state is one open session per active (user, window)
   * key, merged incrementally by the SessionWindowStateStore — never a
@@ -18,11 +18,10 @@ import org.apache.spark.sql.functions._
   */
 object SessionStream {
 
-  private[graft] def sessions(events: DataFrame, gap: String = "30 minutes",
-                              watermark: String = "2 minutes"): DataFrame =
+  private[graft] def sessions(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
-      .groupBy(col("user_id"), session_window(col("ts"), gap).as("w"))
+      .withWatermark("ts", "2 minutes")
+      .groupBy(col("user_id"), session_window(col("ts"), "30 minutes").as("w"))
       .agg(count(lit(1)).as("n_events"), sum(col("value")).as("sum_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n_events"), col("sum_value"))

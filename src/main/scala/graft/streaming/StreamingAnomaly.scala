@@ -12,7 +12,7 @@ import org.apache.spark.sql.streaming.ValueState
   * `Aggregators.WelfordVariance`) in `transformWithState` ValueState,
   * and every event is judged against the state BEFORE it is folded in,
   * so a wild value cannot dilute the very statistics that should flag
-  * it. Events during warm-up (fewer than `minSamples` prior points) are
+  * it. Events during warm-up (fewer than `MinSamples` prior points) are
   * never flagged — a z-score against 2 points is noise.
   *
   * Determinism: within a batch, events fold in event-time order (ties
@@ -25,13 +25,16 @@ import org.apache.spark.sql.streaming.ValueState
   */
 object StreamingAnomaly {
 
+  private val Z = 3.0          // flag |x − mean| > Z·sigma ...
+  private val MinSamples = 8   // ... once a key has MinSamples prior points
+
   case class Pt(key: String, ts: Timestamp, event_id: Long, value: Double)
   case class Verdict(key: String, ts: Timestamp, event_id: Long,
                      value: Double, mean: Double, sigma: Double,
                      is_anomaly: Boolean)
   case class Stats(n: Long, mean: Double, m2: Double)
 
-  class WelfordProcessor(z: Double, minSamples: Int)
+  class WelfordProcessor
       extends StatefulProcessor[String, Pt, Verdict] {
     @transient private var stats: ValueState[Stats] = _
 
@@ -50,7 +53,7 @@ object StreamingAnomaly {
         val mean0 = s.mean
         val sigma = if (s.n >= 2) math.sqrt(s.m2 / s.n) else 0.0
         val anomalous =
-          s.n >= minSamples && sigma > 0.0 && math.abs(p.value - mean0) > z * sigma
+          s.n >= MinSamples && sigma > 0.0 && math.abs(p.value - mean0) > Z * sigma
         // Welford fold
         val n1 = s.n + 1
         val d = p.value - mean0
@@ -63,14 +66,13 @@ object StreamingAnomaly {
     }
   }
 
-  /** Flag |x − mean| > z·sigma per key, in-stream, judged pre-update. */
-  def detect(spark: SparkSession, events: DataFrame, z: Double = 3.0,
-             minSamples: Int = 8): Dataset[Verdict] = {
+  /** Flag |x − mean| > Z·sigma per key, in-stream, judged pre-update. */
+  def detect(spark: SparkSession, events: DataFrame): Dataset[Verdict] = {
     import spark.implicits._
     events.selectExpr("key", "ts", "event_id", "value").as[Pt]
       .withWatermark("ts", "1 minute")
       .groupByKey(_.key)
-      .transformWithState(new WelfordProcessor(z, minSamples),
+      .transformWithState(new WelfordProcessor,
         TimeMode.EventTime(), OutputMode.Append())
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ListState, OutputMode, StatefulProcessor, TimerValues}
 
 import graft.functions.{GraftFunctions, HashFunctions, TextFunctions}
+import graft.operators.Dedup
 
 /** Streaming deduplication for the ingest path of a training-data
   * pipeline: exact and fingerprint dedup with watermark-bounded state.
@@ -89,7 +90,7 @@ object StreamingDedup {
 
   /** Per-(chunk, bucket) state: the simhashes seen within the watermark
     * horizon. A doc is flagged when any prior hash in the bucket is
-    * within `maxHamming` bits. Every doc's hash enters state (flagged
+    * within `Dedup.SimhashMaxHamming` bits. Every doc's hash enters state (flagged
     * or not) — same candidate-universe semantics as the batch
     * [[graft.operators.Dedup.simhashPairs]]. State is evicted lazily:
     * entries whose event time has fallen behind the watermark can never
@@ -97,7 +98,7 @@ object StreamingDedup {
     * to the bucket (the exact bound `dropDuplicatesWithinWatermark`
     * uses for its keys).
     */
-  class NearDupProcessor(maxHamming: Int)
+  class NearDupProcessor
       extends StatefulProcessor[(Int, Long), ChunkDoc, BucketVerdict] {
     @transient private var seen: ListState[SeenEntry] = _
 
@@ -118,7 +119,7 @@ object StreamingDedup {
       }
       // deterministic within-batch order: earliest (ts, doc_id) first
       val out = rows.toSeq.sortBy(r => (r.ts.getTime, r.doc_id)).map { r =>
-        val dup = live.exists(e => java.lang.Long.bitCount(e.sh ^ r.sh) <= maxHamming)
+        val dup = live.exists(e => java.lang.Long.bitCount(e.sh ^ r.sh) <= Dedup.SimhashMaxHamming)
         live += SeenEntry(r.sh, r.ts.getTime)
         BucketVerdict(r.doc_id, r.ts, r.text, dup)
       }
@@ -127,8 +128,8 @@ object StreamingDedup {
     }
   }
 
-  /** Streaming near-dup simhash dedup, hamming ≤ `maxHamming` (≤ 3 is
-    * pigeonhole-complete over the four 16-bit chunks): the streaming
+  /** Streaming near-dup simhash dedup, hamming ≤ `Dedup.SimhashMaxHamming`
+    * (pigeonhole-complete over the four 16-bit chunks): the streaming
     * twin of [[graft.operators.Dedup.simhashPairs]]. Topology: explode
     * each doc to its 4 chunk buckets (the shuffle key is the bucket —
     * state shards by bucket exactly like the batch self-join), per-
@@ -139,7 +140,6 @@ object StreamingDedup {
     * candidate semantics within the horizon.
     */
   def bySimhashNearDup(docStream: DataFrame, tsCol: String, delay: String,
-                       maxHamming: Int = 3,
                        reconcileWindow: String = "1 minute"): DataFrame = {
     val spark = docStream.sparkSession
     GraftFunctions.register(spark)
@@ -155,7 +155,7 @@ object StreamingDedup {
       .as[ChunkDoc]
     val verdicts = chunks
       .groupByKey(c => (c.band, c.bucket))
-      .transformWithState(new NearDupProcessor(maxHamming), "ts", OutputMode.Append())
+      .transformWithState(new NearDupProcessor, "ts", OutputMode.Append())
     // no second withWatermark: transformWithState's eventTimeColumnName
     // already re-declares `ts` as the output's event time, and the
     // upstream watermark propagates to the reconciliation aggregate

@@ -27,17 +27,15 @@ import graft.operators.Sketches
 object StreamingHeavyHitters {
 
   def topTokens(events: DataFrame, tsCol: String, windowLen: String,
-                watermarkDelay: String, groupCol: String, tokCol: String,
-                capacity: Int = Sketches.SpaceSavingCapacity,
-                k: Int = Sketches.SpaceSavingTopK): DataFrame = {
-    val ss = udaf(new graft.functions.Aggregators.SpaceSavingTopK(capacity))
+                watermarkDelay: String, groupCol: String, tokCol: String): DataFrame = {
+    val ss = udaf(new graft.functions.Aggregators.SpaceSavingTopK(Sketches.SpaceSavingCapacity))
     events
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowLen), col(groupCol))
       .agg(ss(col(tokCol)).as("top"))
       .select(col("window.start").as("window_start"), col(groupCol),
         posexplode(col("top")))
-      .filter(col("pos") < k)
+      .filter(col("pos") < Sketches.SpaceSavingTopK)
       .select(col("window_start"), col(groupCol),
         (col("pos") + 1).cast("long").as("rank"),
         col("col.token").as("token"), col("col.cnt").as("cnt"),
@@ -46,7 +44,7 @@ object StreamingHeavyHitters {
 
   /** Per-(window, group) value percentiles IN-STREAM — the q128 MRL
     * sketch under the same composition: the state store holds the
-    * O(k·log(n/k)) level buffer per (window, group) key, merges it
+    * O(k·log(n/k)) level buffer (k = `Sketches.MrlK`) per (window, group) key, merges it
     * across micro-batches, and append mode emits each closed window's
     * p50/p95/p99 once — the latency-dashboard aggregation, state
     * bounded however many events a window sees. Exact below 2k events
@@ -55,9 +53,9 @@ object StreamingHeavyHitters {
     */
   def windowPercentiles(events: DataFrame, tsCol: String, windowLen: String,
                         watermarkDelay: String, groupCol: String,
-                        valCol: String, k: Int = Sketches.MrlK): DataFrame = {
+                        valCol: String): DataFrame = {
     val mrl = udaf(new graft.functions.Aggregators.MrlQuantiles(
-      k, Seq(0.5, 0.95, 0.99)))
+      Sketches.MrlK, Seq(0.5, 0.95, 0.99)))
     events
       .withWatermark(tsCol, watermarkDelay)
       .groupBy(window(col(tsCol), windowLen), col(groupCol))

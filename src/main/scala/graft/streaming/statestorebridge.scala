@@ -85,11 +85,4 @@ object GraftStateStoreBridge {
     mine.foreach(id => StateStore.removeFromLoadedProvidersAndClose(id))
     mine.size
   }
-
-  /** Pause/resume the maintenance task (test hook — public Spark API,
-    * re-exported so specs outside the `state` package can hold the
-    * 60 s tick still while asserting WHO unloaded a provider).
-    */
-  def setMaintenancePaused(paused: Boolean): Unit =
-    StateStore.setMaintenancePaused(paused)
 }

@@ -49,16 +49,15 @@ class AggregatorSpec extends SparkSpec {
   }
 
   test("dim correlation ranks a planted perfectly-correlated pair first") {
-    // dim1 = 2*dim0 (corr 1); remaining dims decorrelate by construction
-    val rows = (1 to 40).map { i =>
-      val x = i.toDouble
-      (i.toLong, Array(x.toFloat, (2 * x).toFloat,
-        (if (i % 2 == 0) x else -x).toFloat,
-        (x * x % 7).toFloat))
+    // dim1 = 2*dim0 (corr 1); the remaining dims are seeded noise
+    val rng = new scala.util.Random(3)
+    val rows = (1 to 200).map { i =>
+      val x = i.toFloat
+      (i.toLong, Array(x, 2 * x) ++ Array.fill(graft.operators.Similarity.Dim - 2)(rng.nextFloat()))
     }
     val df = rows.toDF("vec_id", "embedding")
-    val top = graft.operators.Similarity
-      .dimCorrelationTopK(spark, df, k = 1, dim = 4).head
+    val top = graft.operators.Similarity.dimCorrelationTopK(spark, df)
+      .filter(col("rank") === 1).head
     assert((top.getLong(0), top.getLong(1)) == ((0L, 1L)))
     assert(math.abs(top.getDouble(2) - 1.0) < 1e-9)
   }

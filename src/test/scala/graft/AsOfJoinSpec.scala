@@ -21,9 +21,8 @@ class AsOfJoinSpec extends SparkSpec {
     rows.zipWithIndex.map { case ((k, t), i) => (100L + i, k, ts(t)) }
       .toDF("event_id", "user_id", "ts")
 
-  private def run(left: org.apache.spark.sql.DataFrame, inner: Boolean = true) =
-    AsOfJoin.asof(left, quotes, "user_id", "user_id", "ts", "ts", "event_id",
-      inner = inner)
+  private def run(left: org.apache.spark.sql.DataFrame) =
+    AsOfJoin.asof(left, quotes, "user_id", "user_id", "ts", "ts", "event_id")
 
   test("picks the latest right row at or before left ts") {
     val out = run(trades((1L, "2024-01-01 00:03:00"))).collect()
@@ -36,12 +35,8 @@ class AsOfJoinSpec extends SparkSpec {
     assert(out.head.getAs[Double]("asof_value") == 101.0)
   }
 
-  test("no earlier right row: inner drops, outer keeps with nulls") {
-    val l = trades((1L, "2023-12-31 23:59:00"))
-    assert(run(l).collect().isEmpty)
-    val outer = run(l, inner = false).collect()
-    assert(outer.length == 1)
-    assert(outer.head.isNullAt(outer.head.fieldIndex("asof_value")))
+  test("no earlier right row: the left row is dropped") {
+    assert(run(trades((1L, "2023-12-31 23:59:00"))).collect().isEmpty)
   }
 
   test("keys do not leak across partitions") {
@@ -115,10 +110,9 @@ class AsOfJoinSpec extends SparkSpec {
 
   // ---- forward + tolerance variant (q180) ----
 
-  private def runFwd(left: org.apache.spark.sql.DataFrame,
-                     tolUs: Long, inner: Boolean = true) =
+  private def runFwd(left: org.apache.spark.sql.DataFrame, tolUs: Long) =
     AsOfJoin.asofForward(left, quotes, "user_id", "user_id", "ts", "ts",
-      "event_id", tolUs, inner = inner)
+      "event_id", tolUs)
 
   test("forward: picks the earliest right row at or after left ts") {
     val out = runFwd(trades((1L, "2024-01-01 00:02:00")), 600000000L).collect()
@@ -133,11 +127,7 @@ class AsOfJoinSpec extends SparkSpec {
 
   test("forward: tolerance excludes a too-distant next match") {
     // next right after 00:02 is at 00:05 (180 s away); tol 60 s -> none
-    val l = trades((1L, "2024-01-01 00:02:00"))
-    assert(runFwd(l, 60000000L).collect().isEmpty)
-    val outer = runFwd(l, 60000000L, inner = false).collect()
-    assert(outer.length == 1 &&
-      outer.head.isNullAt(outer.head.fieldIndex("asof_value")))
+    assert(runFwd(trades((1L, "2024-01-01 00:02:00")), 60000000L).collect().isEmpty)
   }
 
   test("forward: equal-ts right rows break ties to the smallest tie id") {

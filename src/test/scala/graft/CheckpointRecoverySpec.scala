@@ -190,18 +190,18 @@ class CheckpointRecoverySpec extends SparkSpec {
   test("session windows recover from checkpoint: open session merges across restart") {
     def mk() = {
       val in = MemoryStream[V]
-      (in, graft.streaming.SessionStream.sessions(
-        in.toDF(), gap = "30 seconds", watermark = "10 seconds"))
+      (in, graft.streaming.SessionStream.sessions(in.toDF()))
     }
+    // 30-minute session gap, 2-minute watermark
     val phases: Seq[Seq[Seq[V]]] = Seq(
-      // phase 1: two events 10 s apart — ONE open session in state
-      Seq(Seq(V(1L, 1.0, Timestamp.valueOf("2024-01-01 00:00:10")),
-              V(1L, 2.0, Timestamp.valueOf("2024-01-01 00:00:20")))),
+      // phase 1: two events 10 min apart — ONE open session in state
+      Seq(Seq(V(1L, 1.0, Timestamp.valueOf("2024-01-01 00:10:00")),
+              V(1L, 2.0, Timestamp.valueOf("2024-01-01 00:20:00")))),
       // phase 2 (after kill): a third event extends the RECOVERED
       // session; then a late sentinel advances the watermark past the
       // gap so the merged session closes and is emitted
-      Seq(Seq(V(1L, 4.0, Timestamp.valueOf("2024-01-01 00:00:25"))),
-          Seq(V(9L, 0.0, Timestamp.valueOf("2024-01-01 00:10:00")))))
+      Seq(Seq(V(1L, 4.0, Timestamp.valueOf("2024-01-01 00:25:00"))),
+          Seq(V(9L, 0.0, Timestamp.valueOf("2024-01-01 03:00:00")))))
     val resumed = runAppendPhases(mk _, phases, interrupt = true)
     val straight = runAppendPhases(mk _, phases, interrupt = false)
     assert(resumed == straight,

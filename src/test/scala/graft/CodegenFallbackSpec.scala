@@ -41,13 +41,7 @@ class CodegenFallbackSpec extends SparkSpec {
 
   private def withFactoryMode[A](mode: String)(body: => A): A = {
     SparkSession.setActiveSession(spark)
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, mode)
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(modeKey, v)
-      case None => spark.conf.unset(modeKey)
-    }
+    withConf(modeKey -> mode)(body)
   }
 
   /** Round-trip `value` through its ExpressionEncoder. UnsafeProjection

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.{GraftFunctions, HashFunctions, TextFunctions}
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 import graft.sources.Tables
 
 class DedupSpec extends SparkSpec {
@@ -67,15 +67,23 @@ class DedupSpec extends SparkSpec {
     val base = sentence * 10
     val near = (sentence * 9) + sentence.replace("rain", "snow")
     val unrelated = "entirely distinct vocabulary about spacecraft telemetry and orbital mechanics analysis systems " * 10
-    val out = Dedup.simhashPairs(spark, docs(
-      (1L, base, "s"), (2L, base, "s"), (3L, near, "s"), (4L, unrelated, "s")),
-      maxHamming = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
-    assert(out((1L, 2L)) == 0, "identical docs must have distance 0")
-    val dNear = out((1L, 3L))
+    val d = docs((1L, base, "s"), (2L, base, "s"), (3L, near, "s"), (4L, unrelated, "s"))
+    GraftFunctions.register(spark)
+    val sh = d.select(col("doc_id"),
+        GraftFunctions.simhash64(TextFunctions.wsTokens(col("text"))))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def dist(a: Long, b: Long) = java.lang.Long.bitCount(sh(a) ^ sh(b))
+    assert(dist(1L, 2L) == 0, "identical docs must have distance 0")
+    val dNear = dist(1L, 3L)
     assert(dNear <= 12, s"near-dup distance unexpectedly high: $dNear")
-    // unrelated doc: either no shared chunk (not a candidate) or far away
-    out.get((1L, 4L)).foreach(d => assert(d > dNear))
+    assert(dist(1L, 4L) > dNear)
+    // the pairs are exactly those within the hamming cut, with their distance
+    val out = Dedup.simhashPairs(spark, d)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getInt(2)).toMap
+    val within = for {
+      a <- 1L to 4L; b <- a + 1 to 4L if dist(a, b) <= Dedup.SimhashMaxHamming
+    } yield (a, b) -> dist(a, b)
+    assert(out == within.toMap)
   }
 
   test("embedding cosine pairs: identical vectors cos=1, orthogonal excluded") {
@@ -120,7 +128,7 @@ class DedupSpec extends SparkSpec {
     val tiny = Seq(
       (1L, v(1.0f, 0.1f), 0), (2L, v(1.0f, 0.1f), 0), (3L, v(-1.0f, 0.2f), 0))
       .toDF("vec_id", "embedding", "label")
-    val tinyOut = Dedup.lshBlockedCosinePairs(spark, tiny, threshold = 0.9)
+    val tinyOut = Dedup.lshBlockedCosinePairs(spark, tiny)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(tinyOut == Set((1L, 2L)), "identical vectors must pair; opposite must not")
 
@@ -255,36 +263,51 @@ class DedupSpec extends SparkSpec {
   }
 
   test("skew guard: oversized LSH buckets are dropped, join still completes") {
-    // 60 identical docs -> every band bucket has 60 members > maxBucketSize=10
-    val many = (1L to 60L).map(i => (i, "same text repeated for everyone here ok", "s"))
-    val out = Dedup.minhashLshPairs(spark, docs(many: _*), maxBucketSize = 10)
+    // n identical docs -> every band bucket has n members: at the cap
+    // the buckets pair, one doc past it every bucket drops
+    def identical(n: Int) = docs((1L to n.toLong)
+      .map(i => (i, "same text repeated for everyone here ok", "s")): _*)
+    val out = Dedup.minhashLshPairs(spark, identical(Dedup.MaxBucketSize + 1))
     assert(out.collect().isEmpty, "all buckets over the cap must be dropped")
-    val kept = Dedup.minhashLshPairs(spark, docs(many: _*), maxBucketSize = 100)
-    assert(kept.count() == 60L * 59 / 2)
+    val atCap = Dedup.minhashLshPairs(spark, identical(Dedup.MaxBucketSize))
+    assert(!atCap.isEmpty, "buckets at the cap must be kept")
+    // below the cap every pair comes out exactly once
+    assert(Dedup.minhashLshPairs(spark, identical(60)).count() == 60L * 59 / 2)
   }
 
   test("semantic dedup: cell minima survive; drops exactly = has-closer-lower-id-neighbor") {
     val emb = Tables.embeddings(spark, sf001)
-    // threshold > 1 drops nothing -> the full cluster assignment
-    val all = Dedup.semanticDedup(spark, emb, threshold = 1.1)
-    assert(all.count() == emb.count())
-    val kept = Dedup.semanticDedup(spark, emb, threshold = 0.3)
-    val keptIds = kept.collect().map(_.getLong(0)).toSet
+    // the full cluster assignment: each vector's nearest centroid by
+    // cosine, ties to the lower cell id
+    val centroids = Similarity.sampledKmeansCentroids(spark, emb,
+      Dedup.SemDedupCells, Similarity.KmeansIters, Similarity.SampleN).toDF("cell_id", "centroid")
+    val all = emb.crossJoin(centroids)
+      .withColumn("cdist", GraftFunctions.cosineSim(col("embedding"), col("centroid")))
+      .withColumn("crank", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("vec_id")).orderBy(col("cdist").desc, col("cell_id").asc)))
+      .filter(col("crank") === 1)
     val assign = all.select("vec_id", "cell_id").collect()
       .map(r => (r.getLong(0), r.getInt(1)))
+    assert(assign.length == emb.count())
+    val kept = Dedup.semanticDedup(spark, emb).collect()
+    val keptIds = kept.map(_.getLong(0)).toSet
+    // each survivor carries its cell and that cell's pre-dedup population
+    val cellN = assign.groupBy(_._2).view.mapValues(_.length.toLong).toMap
+    assert(kept.forall(r => assign.contains((r.getLong(0), r.getInt(1))) &&
+      r.getLong(2) == cellN(r.getInt(1))))
     // the lowest id of every cell can never be dropped
     assign.groupBy(_._2).values.foreach { vs =>
       assert(keptIds.contains(vs.map(_._1).min))
     }
     assert(keptIds.size < assign.length, "threshold 0.3 should drop some")
     // drop set == vectors with a lower-id same-cell neighbor at cos>=t
-    val withVec = all.join(emb.select("vec_id", "embedding"), "vec_id")
+    val withVec = all.select("vec_id", "cell_id", "embedding")
     val justified = withVec.as("a")
       .join(withVec.as("b"),
         col("a.cell_id") === col("b.cell_id") &&
           col("a.vec_id") < col("b.vec_id"))
       .filter(GraftFunctions.cosineSim(
-        col("a.embedding"), col("b.embedding")) >= 0.3)
+        col("a.embedding"), col("b.embedding")) >= Dedup.SemDedupThreshold)
       .select(col("b.vec_id")).distinct()
       .collect().map(_.getLong(0)).toSet
     val dropped = assign.map(_._1).filterNot(keptIds).toSet
@@ -305,8 +328,8 @@ class DedupSpec extends SparkSpec {
       .lshContainmentPairs(spark, docs)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(cont.contains((1L, 2L)), s"containment pair missing: ${cont.toSeq}")
-    val jac = graft.operators.Dedup
-      .lshBlockedJaccardPairs(spark, docs, threshold = 0.8)
+    val jac = graft.operators.Dedup.lshBlockedJaccardPairs(spark, docs)
+      .filter(col("jaccard") >= 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(!jac.contains((1L, 2L)),
       "jaccard>=0.8 should miss the 0.5-jaccard containment pair")

@@ -55,11 +55,30 @@ class EntityResolutionSpec extends SparkSpec {
   }
 
   test("q121: block-size cap drops hot blocks instead of exploding them") {
-    val out = EntityResolution.linkCustomersToSuppliers(
-      Tables.customer(spark, sf001), Tables.supplier(spark, sf001),
-      maxBlockSize = 1)
-    // with cap 1 nearly every block is dropped; far fewer matches remain
-    assert(out.count() < Tables.customer(spark, sf001).count())
+    import spark.implicits._
+    // n customers share nation 1 with supplier 1; every digit-suffix
+    // block holds about n/100 of them. Supplier 2 (nation 2, suffix
+    // "02") has two customers of its own nation, suffixes "50"/"51".
+    def link(n: Int) = {
+      val cust = ((1 to n).map(i => (i.toLong, 1, f"Customer#$i%09d", 0.0)) ++
+          Seq((20050L, 2, "Customer#000020050", 0.0), (20051L, 2, "Customer#000020051", 0.0)))
+        .toDF("c_custkey", "c_nationkey", "c_name", "c_acctbal")
+      val supp = Seq((1L, 1, "Supplier#000000001", 0.0), (2L, 2, "Supplier#000000002", 0.0))
+        .toDF("s_suppkey", "s_nationkey", "s_name", "s_acctbal")
+      EntityResolution.linkCustomersToSuppliers(cust, supp)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    val cap = EntityResolution.MaxBlockSize
+    // at the cap the nation block is linked whole
+    val atCap = link(cap)
+    assert(atCap.size == cap + 2)
+    // one customer past it the nation-1 block is dropped: its customers
+    // link only through the suffix blocks "01" and "02", while the
+    // small nation-2 block still links
+    val over = link(cap + 1)
+    val viaSuffix = (1 to cap + 1).filter(i => i % 100 == 1 || i % 100 == 2)
+    assert(over.keySet == viaSuffix.map(_.toLong).toSet ++ Set(20050L, 20051L), over.size)
+    assert(over(20050L) == 2L && over(20051L) == 2L)
   }
 
   test("q122: SCD2 intervals are contiguous, versioned, single-current") {

@@ -76,20 +76,21 @@ class MultimodalSpec extends SparkSpec {
 
   test("codec round-trip: text bytes → gray PNG → decode recovers every byte") {
     import spark.implicits._
-    // "abc" (97,98,99) at width 4 → 4×1 image [97,98,99,0]; a 9-char
-    // text at width 4 → 4×3 with three padding zeros
-    val d = Seq((1L, "abc"), (2L, "123456789"), (3L, ""))
+    // rows are 32 pixels wide: "abc" (97,98,99) → 32×1 image
+    // [97,98,99,0,…]; a 70-char text → 32×3 with 26 padding zeros
+    assert(Multimodal.ImageWidth == 32)
+    val long = "0123456789" * 7
+    val d = Seq((1L, "abc"), (2L, long), (3L, ""))
       .toDF("doc_id", "text")
-    val feats = Multimodal.extractFeatures(
-        Multimodal.syntheticImages(spark, d, width = 4))
+    val feats = Multimodal.extractFeatures(Multimodal.syntheticImages(spark, d))
       .collect().map(f => f.media_id -> f).toMap
     assert(feats.values.forall(_.decoded), "every synthetic PNG must decode")
-    assert(feats(1L).width == 4 && feats(1L).height == 1)
+    assert(feats(1L).width == 32 && feats(1L).height == 1)
     assert(feats(1L).pixel_sum == 97L + 98 + 99)
-    assert(feats(2L).width == 4 && feats(2L).height == 3)
-    assert(feats(2L).pixel_sum == "123456789".map(_.toLong).sum)
-    assert(feats(3L).width == 4 && feats(3L).height == 1 &&
-      feats(3L).pixel_sum == 0L, "empty text → all-zero 4x1 image")
+    assert(feats(2L).width == 32 && feats(2L).height == 3)
+    assert(feats(2L).pixel_sum == long.map(_.toLong).sum)
+    assert(feats(3L).width == 32 && feats(3L).height == 1 &&
+      feats(3L).pixel_sum == 0L, "empty text → all-zero 32x1 image")
     // gray raster read must bypass the sRGB conversion getRGB applies
     // to TYPE_BYTE_GRAY (sample 128 would read back as ~186)
     val img = new java.awt.image.BufferedImage(2, 2,
@@ -179,7 +180,7 @@ class MultimodalSpec extends SparkSpec {
       (3L, base.dropRight(4) + "eli!"),        // tail edit → near
       (10L, "totally unrelated text with other bytes and rhythm " * 13))
       .toDF("doc_id", "text")
-    val pairs = Multimodal.perceptualNearDupPairs(spark, d, maxHamming = 3)
+    val pairs = Multimodal.perceptualNearDupPairs(spark, d)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
       .toMap
@@ -190,7 +191,7 @@ class MultimodalSpec extends SparkSpec {
     assert(pairs.keys.forall { case (a, b) => a != 10L && b != 10L },
       "unrelated doc must not pair")
     // single emission: each pair appears exactly once
-    val all = Multimodal.perceptualNearDupPairs(spark, d, maxHamming = 3)
+    val all = Multimodal.perceptualNearDupPairs(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(all.length == all.distinct.length, "no duplicate pair emissions")
   }
@@ -202,7 +203,7 @@ class MultimodalSpec extends SparkSpec {
     val text = ("x" * 64) + ("y" * 64) + ("z" * 22)
     val d = Seq((2L, text), (5L, ""), (1L, "not video " * 20))
       .toDF("doc_id", "text")
-    val out = Multimodal.videoFrameStats(spark, d, stride = 2)
+    val out = Multimodal.videoFrameStats(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.toSeq == Seq(
       (2L, 0L, 64L, 64L * 'x'.toLong),

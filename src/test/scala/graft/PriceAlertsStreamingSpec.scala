@@ -301,8 +301,7 @@ class PriceAlertsStreamingSpec extends SparkSpec {
       .select(col("doc_id").as("grp"), col("ts"),
         explode(split(col("text"), " ")).as("tok"))
     val hh = graft.streaming.StreamingHeavyHitters.topTokens(
-      toks, "ts", "1 minute", "30 seconds", "grp", "tok",
-      capacity = 16, k = 3)
+      toks, "ts", "1 minute", "30 seconds", "grp", "tok")
     val out = runQuery(hh, "append", "hh_out") { q =>
       in.addData(
         Doc(1L, "a a a b b c", Timestamp.valueOf("2024-01-01 00:00:10")),
@@ -318,11 +317,12 @@ class PriceAlertsStreamingSpec extends SparkSpec {
         Timestamp.valueOf("2024-01-01 00:00:00"))
       .map(r => (r.getAs[Long]("grp"), r.getAs[Long]("rank"),
         r.getAs[String]("token"), r.getAs[Long]("cnt"), r.getAs[Long]("err")))
-    // capacity 16 > distinct tokens → exact regime: counts are true
+    // capacity 64 > distinct tokens → exact regime: counts are true;
+    // the top 5 hold every token, ties in token order
     val g1 = rows.filter(_._1 == 1L).sortBy(_._2)
     assert(g1.map(t => (t._3, t._4, t._5)).toSeq ==
-      Seq(("a", 4L, 0L), ("b", 3L, 0L), ("c", 1L, 0L)),
-      s"group-1 top-3 wrong: ${g1.toSeq}")
+      Seq(("a", 4L, 0L), ("b", 3L, 0L), ("c", 1L, 0L), ("d", 1L, 0L)),
+      s"group-1 top-5 wrong: ${g1.toSeq}")
     val g2 = rows.filter(_._1 == 2L).sortBy(_._2)
     assert(g2.map(t => (t._3, t._4)).toSeq == Seq(("y", 2L), ("x", 1L)))
   }
@@ -334,7 +334,7 @@ class PriceAlertsStreamingSpec extends SparkSpec {
       .select(col("productid").as("grp"), col("ts"),
         col("quantity").cast("double").as("v"))
     val pct = graft.streaming.StreamingHeavyHitters.windowPercentiles(
-      vals, "ts", "1 minute", "30 seconds", "grp", "v", k = 64)
+      vals, "ts", "1 minute", "30 seconds", "grp", "v")
     val out = runQuery(pct, "append", "pct_out") { q =>
       // group 1: values 1..10 in one window → p50=5, p95=10, p99=10
       in.addData((1 to 10).map(i =>
@@ -478,9 +478,9 @@ class PriceAlertsStreamingSpec extends SparkSpec {
   test("streaming simhash dedup: token-reordered near-dup dropped, distinct kept") {
     withRocksDb {
       val in = MemoryStream[Doc]
-      // hamming 0: only an exact simhash collision counts as a duplicate
+      // a reordered token multiset collides exactly (hamming 0)
       val deduped = graft.streaming.StreamingDedup.bySimhashNearDup(
-        in.toDF(), "ts", "10 minutes", maxHamming = 0)
+        in.toDF(), "ts", "10 minutes")
       val out = runQuery(deduped, "append", "simdedup_out") { q =>
         in.addData(
           Doc(1L, "the quick brown fox jumps high", Timestamp.valueOf("2024-01-01 00:00:01")),
@@ -615,8 +615,8 @@ class PriceAlertsStreamingSpec extends SparkSpec {
 
   test("streaming session window: gap-merged sessions emit once on close") {
     val in = MemoryStream[SE]
-    val sessions = graft.streaming.SessionStream.sessions(
-      in.toDF(), gap = "30 minutes", watermark = "2 minutes")
+    // 30-minute session gap, 2-minute watermark
+    val sessions = graft.streaming.SessionStream.sessions(in.toDF())
     val out = runQuery(sessions, "append", "sess_close_out") { q =>
       in.addData(
         SE(1L, 10.0, Timestamp.valueOf("2024-01-01 00:00:00")),

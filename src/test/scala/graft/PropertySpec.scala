@@ -197,15 +197,16 @@ class PropertySpec extends SparkSpec {
   }
 
   test("repeated-substring spans match a brute-force local model on random corpora") {
-    // small alphabet + short shingles so cross-doc collisions actually
-    // occur; the local model recomputes duplicated positions, islands,
-    // and the min-span filter from first principles
-    val n = 3; val minSpan = 5
+    // a two-letter alphabet so that cross-doc shingle collisions and
+    // spans past the floor actually occur; the local model recomputes
+    // duplicated positions, islands, and the min-span filter from first
+    // principles
+    val (n, minSpan) = (graft.operators.TextAnalysis.RepeatN, graft.operators.TextAnalysis.RepeatMinSpan)
     val corpusGen = for {
       nDocs <- Gen.choose(3, 7)
       docs <- Gen.listOfN(nDocs,
-        Gen.choose(0, 30).flatMap(len =>
-          Gen.listOfN(len, Gen.oneOf("a", "b", "c"))))
+        Gen.choose(0, 60).flatMap(len =>
+          Gen.listOfN(len, Gen.oneOf("a", "b"))))
     } yield docs.zipWithIndex.map { case (toks, i) =>
       (i.toLong, toks.mkString(" "))
     }
@@ -228,7 +229,7 @@ class PropertySpec extends SparkSpec {
           .filter(s => s._3 - s._2 + 1 >= minSpan)
       }).flatten.toSet
       val got = graft.operators.TextAnalysis
-        .repeatedSubstringSpans(corpus.toDF("doc_id", "text"), n, minSpan)
+        .repeatedSubstringSpans(corpus.toDF("doc_id", "text"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got == expect, s"corpus=$corpus\ngot $got\nexpect $expect")
     }
@@ -283,11 +284,11 @@ class PropertySpec extends SparkSpec {
     // run the merges, then re-derive the final symbol table by
     // encoding — the invariant is structural: merging never loses or
     // reorders characters
-    val rules = graft.operators.TextAnalysis.bpeMerges(docs, k = 5)
+    val rules = graft.operators.TextAnalysis.bpeMerges(docs)
       .collect() // forces the loop; rules themselves checked in q76
-    assert(rules.length == 5)
+    assert(rules.length == graft.operators.TextAnalysis.BpeK)
     val bad = graft.operators.TextAnalysis
-      .bpeEncodeSymbols(docs, k = 5)
+      .bpeEncodeSymbols(docs)
       .filter(concat_ws("", col("t")) =!= col("w"))
       .count()
     assert(bad == 0L, "some word's symbols no longer concatenate to it")

@@ -20,7 +20,7 @@ class ScaleOpsSpec extends SparkSpec {
     facts.write.bucketBy(8, "k").sortBy("k").mode("overwrite").saveAsTable("b_facts")
     dims.write.bucketBy(8, "k").sortBy("k").mode("overwrite").saveAsTable("b_dims")
     // disable broadcast so the join would normally shuffle both sides
-    withSQLConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val joined = spark.table("b_facts").join(spark.table("b_dims"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange hashpartitioning"),
@@ -68,6 +68,9 @@ class ScaleOpsSpec extends SparkSpec {
       ev.filter(col("event_type").isin("click", "purchase")).count())
   }
 
+  private def withPartitions[T](n: Int)(body: => T): T =
+    withConf("spark.sql.shuffle.partitions" -> n.toString)(body)
+
   test("distributedRank equals the single-partition global row_number") {
     import org.apache.spark.sql.expressions.Window
     val o = graft.sources.Tables.orders(spark, sf001)
@@ -76,8 +79,8 @@ class ScaleOpsSpec extends SparkSpec {
       Window.orderBy(col("o_totalprice"), col("o_orderkey"))).cast("long"))
       .select(col("o_orderkey"), col("rk"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val got = ScaleOps.distributedRank(o,
-      Seq(col("o_totalprice"), col("o_orderkey")), partitions = 7)
+    val got = withPartitions(7)(ScaleOps.distributedRank(o,
+      Seq(col("o_totalprice"), col("o_orderkey"))))
       .select(col("o_orderkey"), col("rk"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got == expected)
@@ -101,7 +104,7 @@ class ScaleOpsSpec extends SparkSpec {
       val expected = df.withColumn("rk",
         row_number().over(Window.orderBy(ord: _*)).cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
-      val got = ScaleOps.distributedRank(df, ord, partitions = parts)
+      val got = withPartitions(parts)(ScaleOps.distributedRank(df, ord))
         .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
       assert(got == expected,
         s"trial $trial (n=$n parts=$parts asc=$ascending) diverged")
@@ -111,8 +114,8 @@ class ScaleOpsSpec extends SparkSpec {
   test("distributedRank plan keeps the frame out of a single partition") {
     val o = graft.sources.Tables.orders(spark, sf001)
       .select(col("o_orderkey"), col("o_totalprice"))
-    val ranked = ScaleOps.distributedRank(o,
-      Seq(col("o_totalprice"), col("o_orderkey")), partitions = 7)
+    val ranked = withPartitions(7)(ScaleOps.distributedRank(o,
+      Seq(col("o_totalprice"), col("o_orderkey"))))
     // no window operator anywhere: ranks come from zipWithIndex over
     // the range-shuffled RDD, so there is nothing that could collapse
     // the frame to one task
@@ -156,7 +159,7 @@ class ScaleOpsSpec extends SparkSpec {
           Window.partitionBy(col("g"))))
         .collect().map(r => (r.getLong(0), (r.getLong(3), r.getLong(4))))
         .toMap
-      val got = ScaleOps.groupedRank(df, Seq("g"), ord, partitions = parts)
+      val got = withPartitions(parts)(ScaleOps.groupedRank(df, Seq("g"), ord))
         .select(col("id"), col("rk"), col("n_grp"))
         .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
         .toMap
@@ -182,7 +185,7 @@ class ScaleOpsSpec extends SparkSpec {
       val expected = df.withColumn("b",
         ntile(k).over(Window.orderBy(ord: _*)).cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(2))).toMap
-      val ranked = ScaleOps.distributedRank(df, ord, partitions = 3)
+      val ranked = withPartitions(3)(ScaleOps.distributedRank(df, ord))
       val cnt = ranked.agg(count(lit(1)).as("n"))
       val got = ranked.crossJoin(broadcast(cnt))
         .select(col("id"),
@@ -215,8 +218,7 @@ class ScaleOpsSpec extends SparkSpec {
         .withColumn("cum", sum(col("x")).over(wOrd))
         .collect().map(r => (r.getLong(0), (r.getLong(3), r.getLong(4))))
         .toMap
-      val got = ScaleOps.groupedCumSum(df, Seq("g"), ord, "x",
-          partitions = parts)
+      val got = withPartitions(parts)(ScaleOps.groupedCumSum(df, Seq("g"), ord, "x"))
         .select(col("id"), col("rk"), col("cum"))
         .collect().map(r => (r.getLong(0), (r.getLong(1), r.getLong(2))))
         .toMap
@@ -247,8 +249,7 @@ class ScaleOpsSpec extends SparkSpec {
         .withColumn("f", last(col("v"), ignoreNulls = true).over(w))
         .collect().map(r => (r.getLong(0),
           if (r.isNullAt(3)) null else r.getLong(3))).toMap
-      val got = ScaleOps.groupedFill(df, Seq("g"), ord, "v", "f",
-          partitions = parts)
+      val got = withPartitions(parts)(ScaleOps.groupedFill(df, Seq("g"), ord, "v", "f"))
         .collect().map(r => (r.getLong(0),
           if (r.isNullAt(3)) null else r.getLong(3))).toMap
       assert(got == expected,
@@ -270,12 +271,12 @@ class ScaleOpsSpec extends SparkSpec {
         .map(x => Option(x.getMessage).getOrElse("")).toSeq
     for ((label, run) <- Seq[(String, () => Unit)](
         ("groupedRank", () => ScaleOps.groupedRank(
-          df, Seq("g"), Seq(col("v").asc), partitions = 1)),
+          df, Seq("g"), Seq(col("v").asc))),
         ("groupedCumSum", () => ScaleOps.groupedCumSum(
-          df, Seq("g"), Seq(col("v").asc), "v", partitions = 1)),
+          df, Seq("g"), Seq(col("v").asc), "v")),
         ("groupedFill", () => ScaleOps.groupedFill(
-          df, Seq("g"), Seq(col("v").asc), "v", "f", partitions = 1)))) {
-      val e = intercept[Exception] { run() }
+          df, Seq("g"), Seq(col("v").asc), "v", "f")))) {
+      val e = intercept[Exception] { withPartitions(1)(run()) }
       assert(chain(e).exists(m =>
         m.contains("entity-grained") && m.contains(label)),
         s"$label: expected the bounded-group guard to fire, got: $e")
@@ -296,7 +297,7 @@ class ScaleOpsSpec extends SparkSpec {
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(x => Option(x.getMessage).getOrElse("")).toSeq
     val e = intercept[Exception] {
-      ScaleOps.groupedRank(df, Seq("g"), Seq(col("v").asc), partitions = 32)
+      withPartitions(32)(ScaleOps.groupedRank(df, Seq("g"), Seq(col("v").asc)))
     }
     assert(chain(e).exists(m =>
       m.contains("across all partitions") && m.contains("groupedRank")),
@@ -325,7 +326,7 @@ class ScaleOpsSpec extends SparkSpec {
         .withColumn("cum", sum(col("x")).over(w))
         .collect().map(r => (r.getLong(0), (r.getLong(3), r.getLong(4))))
         .toMap
-      val got = ScaleOps.distributedCumSum(df, ord, "x", partitions = parts)
+      val got = withPartitions(parts)(ScaleOps.distributedCumSum(df, ord, "x"))
         .collect().map(r => (r.getLong(0), (r.getLong(3), r.getLong(4))))
         .toMap
       assert(got == expected,
@@ -337,8 +338,8 @@ class ScaleOpsSpec extends SparkSpec {
     val o = graft.sources.Tables.orders(spark, sf001)
       .select(col("o_orderkey"),
         floor(col("o_totalprice") * 100 + lit(0.5)).cast("long").as("c"))
-    val cum = ScaleOps.distributedCumSum(o,
-      Seq(col("c").desc, col("o_orderkey")), "c", partitions = 7)
+    val cum = withPartitions(7)(ScaleOps.distributedCumSum(o,
+      Seq(col("c").desc, col("o_orderkey")), "c"))
     val plan = cum.queryExecution.executedPlan.toString
     assert(!plan.toLowerCase.contains("window"),
       s"expected a window-free plan:\n$plan")
@@ -457,7 +458,7 @@ class ScaleOpsSpec extends SparkSpec {
     // can't match die at the scan, before the exchange). Thresholds
     // are floored to force it at fixture scale; broadcast is disabled
     // so the join actually shuffles.
-    withSQLConf(
+    withConf(
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       // creationSideThreshold is a MAX (creation side must be small);
       // applicationSideScanSizeThreshold is a MIN (probe side must be
@@ -477,22 +478,13 @@ class ScaleOpsSpec extends SparkSpec {
         s"no bloom runtime filter injected:\n${optimized.take(3000)}")
       val withBloom = j.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       // semantics unchanged vs the un-filtered plan
-      withSQLConf("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
+      withConf("spark.sql.optimizer.runtime.bloomFilter.enabled" -> "false") {
         val plain = li.join(urgent, col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n"))
           .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
         assert(withBloom == plain, s"$withBloom vs $plain")
       }
-    }
-  }
-
-  private def withSQLConf(pairs: (String, String)*)(f: => Unit): Unit = {
-    val olds = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -197,18 +197,13 @@ class SimilaritySpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") < 200) // batch, not a handful
     val small = Similarity.annTopK(spark, emb, queries, 5)
       .collect().map(_.toString).sorted.toSeq
-    val olds = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val batch = Similarity.annTopK(spark, emb, queries, 5)
       val plan = batch.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastHashJoin"),
         s"batch mode must not broadcast:\n$plan")
       assert(batch.collect().map(_.toString).sorted.toSeq == small,
         "shuffle-join plan must produce identical top-k")
-    } finally olds match {
-      case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
-      case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
 
@@ -234,12 +229,27 @@ class SimilaritySpec extends SparkSpec {
     val pairs = ids.sliding(2).collect { case Seq(a, b) => (a, b) }.toSeq
     val xs = pairs.map { case (a, b) => cosv(orig(a), orig(b)) }
 
+    // the projection at any k, from the same signs and int8 quantization
+    val quant = emb.select(col("vec_id"),
+        GraftFunctions.quantizeI8(col("embedding")).cast("array<bigint>"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    def projectAt(k: Int): Map[Long, Array[Double]] = {
+      val signs = Similarity.projSigns(k, Similarity.Dim)
+      quant.map { case (id, q) =>
+        id -> signs.map(sj => sj.zip(q).map { case (a, b) => a * b }.sum.toDouble).toArray
+      }
+    }
+    // the engine's projection is exactly that one at ProjK
+    val proj = Similarity.randomProjection(emb)
+    val pCols = proj.columns.filter(_.startsWith("p"))
+    val engine = proj.collect()
+      .map(r => r.getLong(0) ->
+        pCols.indices.map(i => r.getLong(i + 1).toDouble).toArray).toMap
+    val atProjK = projectAt(Similarity.ProjK)
+    assert(engine.keySet == atProjK.keySet &&
+      engine.forall { case (id, v) => v.sameElements(atProjK(id)) })
     def rmseAt(k: Int): Double = {
-      val proj = Similarity.randomProjection(emb, k = k)
-      val pCols = proj.columns.filter(_.startsWith("p"))
-      val pr = proj.collect()
-        .map(r => r.getLong(0) ->
-          pCols.indices.map(i => r.getLong(i + 1).toDouble).toArray).toMap
+      val pr = if (k == Similarity.ProjK) engine else projectAt(k)
       val ys = pairs.map { case (a, b) => cosv(pr(a), pr(b)) }
       math.sqrt(xs.zip(ys).map { case (x, y) => (x - y) * (x - y) }.sum / xs.size)
     }
@@ -288,7 +298,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("q125 cross-check: Jacobi eigensystem is orthonormal with descending eigenvalues") {
     val emb = Tables.embeddings(spark, sf001)
-    val pca = Similarity.pcaModel(spark, emb, dim = 64)
+    val pca = Similarity.pcaModel(spark, emb)
     val (vals, vecs) = (pca.eigvals, pca.eigvecs)
     // descending, non-negative (covariance is PSD)
     assert(vals.zip(vals.tail).forall { case (a, b) => a >= b - 1e-9 })
@@ -334,7 +344,7 @@ class SimilaritySpec extends SparkSpec {
   test("q125: fixed-round power basis — unit norm, near-orthogonal, near-optimal captured variance") {
     val emb = Tables.embeddings(spark, sf001)
     val model = Similarity.pcaPowerModel(spark, emb, r = 4)
-    val jVals = Similarity.pcaModel(spark, emb, dim = 64).eigvals
+    val jVals = Similarity.pcaModel(spark, emb).eigvals
     // unit norm is exact (each round ends in an explicit normalize)
     model.eigvecs.foreach { v =>
       val nrm = math.sqrt(v.map(x => x * x).sum)
@@ -397,7 +407,7 @@ class SimilaritySpec extends SparkSpec {
     val emb = Seq((0L, a), (1L, a.clone), (2L, flipped), (3L, near))
       .toDF("vec_id", "embedding")
     val out = Similarity.binaryHammingTopK(spark, emb,
-      emb.filter(col("vec_id") === 0L), cand = 4, k = 3)
+      emb.filter(col("vec_id") === 0L), k = 3)
       .orderBy("rank").collect()
     assert(out.length == 3)
     val top = out.head
@@ -422,20 +432,18 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("q156 k-center coreset: one exemplar per well-separated cluster, all assigned home") {
-    val dirs = Seq(
-      Array(1f, 0f, 0f, 0f), Array(0f, 1f, 0f, 0f), Array(0f, 0f, 1f, 0f))
-    // 3 tight clusters x 3 members (tiny jitter keeps direction)
-    val emb = (for {
-      (d, c) <- dirs.zipWithIndex; j <- 0 until 3
-    } yield {
-      val v = d.clone(); v(3) = 0.01f * (j + 1)
+    // one tight cluster per center along each axis, 3 members each
+    // (tiny jitter in the last dimension keeps the direction)
+    val k = Similarity.KCenterK
+    val emb = (for (c <- 0 until k; j <- 0 until 3) yield {
+      val v = Array.fill(k + 1)(0f); v(c) = 1f; v(k) = 0.01f * (j + 1)
       ((c * 3 + j).toLong, v)
     }).toDF("vec_id", "embedding")
-    val out = Similarity.kCenterCoreset(spark, emb, k = 3).collect()
+    val out = Similarity.kCenterCoreset(spark, emb).collect()
     val centers = out.filter(_.getAs[Boolean]("is_center"))
       .map(_.getAs[Long]("vec_id")).toSet
     // farthest-first must take one exemplar from each cluster
-    assert(centers.map(_ / 3) == Set(0L, 1L, 2L), s"centers: $centers")
+    assert(centers.map(_ / 3) == (0L until k.toLong).toSet, s"centers: $centers")
     // every vector's nearest center is its own cluster's exemplar
     out.foreach { r =>
       assert(r.getAs[Long]("center_id") / 3 == r.getAs[Long]("vec_id") / 3,
@@ -454,7 +462,7 @@ class SimilaritySpec extends SparkSpec {
       (3L, Array(0f, 1f, 0f, 0f)))
       .toDF("vec_id", "embedding")
     val out = Similarity.mmrRerank(spark, emb,
-      emb.filter(col("vec_id") === 0L), k = 3, cand = 3)
+      emb.filter(col("vec_id") === 0L))
       .orderBy("rank").collect()
     assert(out.map(_.getAs[Long]("doc_id")).toSeq == Seq(2L, 3L, 1L),
       s"MMR order: ${out.toSeq}")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Sketches, TextAnalysis}
@@ -29,9 +30,9 @@ class SketchesSpec extends SparkSpec {
 
   test("HLL estimate lands within 4 sigma of the exact distinct count") {
     val li = Tables.lineitem(spark, sf001)
-    val p = 8
+    val p = Sketches.HllP
     val sigma = 1.04 / math.sqrt((1 << p).toDouble)
-    val rows = Sketches.hllDistinct(li, "l_orderkey", "l_returnflag", p)
+    val rows = Sketches.hllDistinct(li, "l_orderkey", "l_returnflag")
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -67,8 +68,8 @@ class SketchesSpec extends SparkSpec {
       (2L, "common words plus other stuff", "s"),
       (3L, "common words plus more stuff", "s"))
       .toDF("doc_id", "text", "source")
-    val top1 = TextAnalysis.tfidfTerms(docs, k = 1)
-      .filter(col("doc_id") === 1L).head()
+    val top1 = TextAnalysis.tfidfTerms(docs)
+      .filter(col("doc_id") === 1L && col("rk") === 1L).head()
     assert(top1.getAs[String]("term") == "zebra")
   }
 
@@ -92,9 +93,8 @@ class SketchesSpec extends SparkSpec {
 
   test("histogram quantiles land within one bin width of the exact order statistic") {
     val li = Tables.lineitem(spark, sf001)
-    val width = 1000.0
-    val got = Sketches.histogramQuantiles(li, "l_extendedprice", "l_returnflag",
-        width = width)
+    val width = Sketches.HistWidth
+    val got = Sketches.histogramQuantiles(li, "l_extendedprice", "l_returnflag")
       .collect().map(r => r.getString(0) -> r).toMap
     val exact = li.groupBy("l_returnflag")
       .agg(expr("percentile(l_extendedprice, array(0.25, 0.5, 0.75, 0.95))").as("ps"))
@@ -114,9 +114,9 @@ class SketchesSpec extends SparkSpec {
     // counts must reproduce the single-pass result exactly
     val li = Tables.lineitem(spark, sf001)
     val Array(h1, h2) = li.randomSplit(Array(0.5, 0.5), seed = 7)
-    def binCounts(df: org.apache.spark.sql.DataFrame) = df
+    def binCounts(df: DataFrame) = df
       .groupBy(col("l_returnflag"),
-        floor(col("l_extendedprice") / 1000.0).cast("long").as("bin"))
+        floor(col("l_extendedprice") / Sketches.HistWidth).cast("long").as("bin"))
       .agg(count(lit(1)).as("cnt"))
     val merged = binCounts(h1).union(binCounts(h2))
       .groupBy("l_returnflag", "bin").agg(sum("cnt").as("cnt"))
@@ -135,25 +135,39 @@ class SketchesSpec extends SparkSpec {
         Seq("c_custkey"), "left_semi")
       .select("c_custkey").collect().map(_.getLong(0)).toSet
 
+    def probe(big: DataFrame, bigKey: String, dim: DataFrame, dimKey: String,
+              m: Int, k: Int) = {
+      val bits = Sketches.bloomBits(dim, dimKey, m, k)
+      big.filter(Sketches.bloomMightContain(bits, m, k, col(bigKey)))
+        .select(bigKey).collect().map(_.getLong(0)).toSet
+    }
     // no false negatives: every true key passes the probe
-    val m = 1 << 15
-    val bits = Sketches.bloomBits(urgent, "o_custkey", m, 5)
-    val probed = cust
-      .filter(Sketches.bloomMightContain(bits, m, 5, col("c_custkey")))
-      .select("c_custkey").collect().map(_.getLong(0)).toSet
+    val probed = probe(cust, "c_custkey", urgent, "o_custkey",
+      Sketches.BloomBits, Sketches.BloomK)
     assert(truth.subsetOf(probed), "bloom dropped a true key")
 
-    // FP rate sanity at the default size
+    // FP rate sanity at the operator's size
     val nCust = cust.count().toDouble
     val fpObserved = (probed.size - truth.size) / math.max(1.0, nCust - truth.size)
     assert(fpObserved < 0.05, s"fp rate $fpObserved out of bounds")
 
-    // a deliberately tiny sketch floods FPs, yet the closing exact semi
-    // join makes the composed operator byte-identical to plain semi join
-    val viaTiny = Sketches.bloomSemiJoin(cust, urgent,
-        "c_custkey", "o_custkey", mBits = 256, k = 2)
-      .select("c_custkey").collect().map(_.getLong(0)).toSet
-    assert(viaTiny == truth)
+    // a deliberately tiny sketch floods FPs, keeping no true key out
+    val tiny = probe(cust, "c_custkey", urgent, "o_custkey", 256, 2)
+    assert(truth.subsetOf(tiny) && tiny.size > probed.size, "tiny sketch must flood FPs")
+
+    // the closing exact semi join makes the composed operator
+    // byte-identical to plain semi join even where the operator's own
+    // filter floods: 20k dim keys set most of its BloomBits bits, so
+    // (1 - e^{-kn/m})^k ≈ 0.79 of the 40k non-member keys pass the probe
+    val dimKeys = spark.range(0, 60000, 3).select(col("id").as("dk"))
+    val bigKeys = spark.range(0, 60000).select(col("id").as("bk"))
+    val bigTruth = (0L until 60000L by 3).toSet
+    val flooded = probe(bigKeys, "bk", dimKeys, "dk", Sketches.BloomBits, Sketches.BloomK)
+    assert(bigTruth.subsetOf(flooded) && flooded.size > bigTruth.size,
+      s"the operator's filter must pass false positives here: ${flooded.size}")
+    val composed = Sketches.bloomSemiJoin(bigKeys, dimKeys, "bk", "dk")
+      .collect().map(_.getLong(0)).toSet
+    assert(composed == bigTruth)
   }
 
   test("stratified sample is reshuffle-stable (content-addressed)") {
@@ -190,8 +204,8 @@ class SketchesSpec extends SparkSpec {
 
   test("KMV overlap: estimates track exact jaccard and union size") {
     val docs = Tables.documents(spark, sf001)
-    val k = 64
-    val rows = Sketches.kmvSourceOverlap(spark, docs, k).collect()
+    val k = Sketches.KmvK
+    val rows = Sketches.kmvSourceOverlap(spark, docs).collect()
     // 20 sources -> 190 ordered pairs, every one present
     assert(rows.length == 190)
     // fixture-scale ground truth computed once on the driver
@@ -227,10 +241,15 @@ class SketchesSpec extends SparkSpec {
 
   test("KMV sketch rows per source never exceed k regardless of corpus") {
     // the scale contract: after the sketch stage only |sources|*k rows
-    // survive — verified through the public output (kk <= k always)
-    val out = Sketches.kmvSourceOverlap(spark,
-      Tables.documents(spark, sf001), k = 8).collect()
-    assert(out.forall(_.getAs[Long]("kk") <= 8))
+    // survive — verified through the public output on sources holding
+    // twice k distinct tokens each, where every pair's merged sketch
+    // is cut to exactly k
+    val k = Sketches.KmvK
+    val docs = Seq("a", "b", "c").zipWithIndex.map { case (src, i) =>
+      (i.toLong, (0 until 2 * k).map(j => s"t${i * k + j}").mkString(" "), src)
+    }.toDF("doc_id", "text", "source")
+    val out = Sketches.kmvSourceOverlap(spark, docs).collect()
+    assert(out.length == 3 && out.forall(_.getAs[Long]("kk") == k), out.toSeq)
   }
 
   test("SpaceSaving: exact regime equals full counts; approximate regime keeps its bounds") {

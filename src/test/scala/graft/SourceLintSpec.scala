@@ -171,7 +171,7 @@ class SourceLintSpec extends AnyFunSuite {
     // with its spec, or narrow it to private[graft] when the spec pins
     // a baseline the engine is compared against
     val uncalled = PublicSurface.uncalled(sources,
-      scalaFiles(Paths.get("perfbench/src")).map(_._2), PublicSurface.Allowed)
+      sources ++ scalaFiles(Paths.get("perfbench/src")), PublicSurface.Allowed)
     assert(uncalled.isEmpty,
       s"public defs with no caller outside their own declaration:\n  " +
         uncalled.mkString("\n  "))
@@ -190,14 +190,20 @@ class SourceLintSpec extends AnyFunSuite {
           |  /* def commentedOut(): Int = 0 */
           |  def afterString(): Int = 1
           |  def fromBench(): Int = 2
+          |  def write(x: Int): Int = x // only a spec calls Planted.write
           |}""".stripMargin,
       "src/main/scala/graft/Caller.scala" ->
-        """object Caller { val url = "file://x"; val y = Planted.afterString() }""")
-    val flagged = PublicSurface.uncalled(planted,
-      Seq("object Main { Planted.fromBench() }"), Set("Planted.entry"))
+        """object Caller { val url = "file://x"; val y = Planted.afterString() + Other.write(1) }
+          |object Other { def write(x: Int): Int = x }""".stripMargin)
+    val callers = planted ++ Seq(
+      "perfbench/src/main/scala/Main.scala" -> "object Main { Planted.fromBench() }",
+      "src/test/scala/graft/PlantedSpec.scala" ->
+        "class PlantedSpec { Planted.specOnly(1); Planted.write(2) }")
+    val flagged = PublicSurface.uncalled(planted, callers, Set("Planted.entry"))
     assert(flagged == Seq(
       "src/main/scala/graft/Planted.scala: specOnly",
-      "src/main/scala/graft/Planted.scala: onlyInComment"))
+      "src/main/scala/graft/Planted.scala: onlyInComment",
+      "src/main/scala/graft/Planted.scala: write"))
   }
 
   test("every default-valued parameter in src/main is passed at some call") {
@@ -205,10 +211,10 @@ class SourceLintSpec extends AnyFunSuite {
     // option: make it a named constant of its object (or an inline
     // literal), so the engine and its DuckDB oracle read one value
     val main = sources
-    val callers = (main ++ scalaFiles(Paths.get("perfbench/src")) ++
-      scalaFiles(Paths.get("src/test/scala"))).map(_._2)
-    info(s"${DefaultParams.declared(main).size} default-valued parameters in src/main")
-    val unset = DefaultParams.unset(main, callers, DefaultParams.Allowed)
+    info(s"${DefaultParams.declared(main).size} default-valued parameters in src/main, " +
+      s"${DefaultParams.Allowed.size} of them allow-listed")
+    val unset = DefaultParams.unset(main, main ++ scalaFiles(Paths.get("perfbench/src")),
+      DefaultParams.Allowed)
     assert(unset.isEmpty,
       s"default-valued parameters that no call passes:\n  " + unset.map(_.id).mkString("\n  "))
   }
@@ -217,7 +223,7 @@ class SourceLintSpec extends AnyFunSuite {
     val planted = Seq(
       "src/main/scala/graft/sources/Planted.scala" ->
         """object Planted {
-          |  def f(a: Int, unset: Int = 1, byName: Int = 2): Int = a
+          |  def f(a: Int, unset: Int = 1, byName: Int = 2, bySpec: Int = 3): Int = a
           |  def g(x: Int)(byPos: Int = 4, later: String = "s"): Int = x
           |  def h[T](t: T, allowed: Int = 5, commented: Int = 6): T = t
           |  private def local(fn: Int => Int = identity, inString: Int = 7): Int = 0
@@ -225,21 +231,25 @@ class SourceLintSpec extends AnyFunSuite {
           |}
           |object Twin { def f(a: Int, b: Int, c: Int): Int = a }""".stripMargin)
     val callers = Seq(
-      """object Calls {
-        |  Planted.f(1, byName = 9)
-        |  Twin.f(1, 2, 3) // another object's f
-        |  Planted.g(1)(5)
-        |  Planted.h[Int](1) // Planted.h(1, 2, commented = 3)
-        |  val s = s"${Planted.local()} local(1, 2)"
-        |  new Planted.Inner().k(1, 2)
-        |  k(1, 2, 3, 4) // fits no k
-        |}""".stripMargin)
+      "src/main/scala/graft/Calls.scala" ->
+        """object Calls {
+          |  Planted.f(1, byName = 9)
+          |  Twin.f(1, 2, 3) // another object's f
+          |  Planted.g(1)(5)
+          |  Planted.h[Int](1) // Planted.h(1, 2, commented = 3)
+          |  val s = s"${Planted.local()} local(1, 2)"
+          |  new Planted.Inner().k(1, 2)
+          |  k(1, 2, 3, 4) // fits no k
+          |}""".stripMargin,
+      // a spec is not a caller
+      "src/test/scala/graft/PlantedSpec.scala" ->
+        "class PlantedSpec { Planted.f(1, bySpec = 4); Planted.g(1)(2, \"t\") }")
     val flagged = DefaultParams.unset(planted, callers, Set("Planted.h.allowed"))
     assert(DefaultParams.declared(planted).map(p => s"${p.owner}.${p.defName}.${p.name}") == Seq(
-      "Planted.f.unset", "Planted.f.byName", "Planted.g.byPos", "Planted.g.later",
+      "Planted.f.unset", "Planted.f.byName", "Planted.f.bySpec", "Planted.g.byPos", "Planted.g.later",
       "Planted.h.allowed", "Planted.h.commented", "Planted.local.fn", "Planted.local.inString",
       "Inner.k.viaValue", "Inner.k.otherArity"))
-    assert(flagged.map(p => s"${p.defName}.${p.name}") == Seq("f.unset", "g.later",
+    assert(flagged.map(p => s"${p.defName}.${p.name}") == Seq("f.unset", "f.bySpec", "g.later",
       "h.commented", "local.fn", "local.inString", "k.otherArity"))
   }
 
@@ -257,11 +267,13 @@ class SourceLintSpec extends AnyFunSuite {
 
 /** The public-surface rule: every `def` in `src/main`, declared at the
   * start of a line, that is neither `private`, `protected` nor
-  * `override` must have its name occur, with comments stripped,
-  * somewhere other than its own declaration: in `src/main` or in the
-  * benchmark's sources. A spec is not a caller. The match is by name,
-  * so the rule errs towards passing: a name that is also a local, a
-  * string or another declaration (the mains, overloads) passes.
+  * `override`, and is not a `main` (which the JVM calls), must be
+  * mentioned, with comments and literals stripped, somewhere other
+  * than a declaration: in `src/main` or in the benchmark's sources. A
+  * spec is not a caller. A mention `Owner.name`
+  * counts only for the def that `Owner` encloses; any other mention of
+  * the name counts for every def of that name, so the rule errs towards
+  * passing where a name is also a local or a value's member.
   */
 object PublicSurface {
 
@@ -275,26 +287,27 @@ object PublicSurface {
     """override\s+|final\s+|implicit\s+|lazy\s+|@\w+(?:\([^)\n]*\))?\s+)*)""" +
     """def\s+([A-Za-z_]\w*)""").r
 
-  /** `file: def` for each public def of `main` (path → source) whose
-    * name occurs nowhere in `main` or `others` but at its declaration,
-    * in declaration order.
+  /** `file: def` for each public def of `main` (path → source) that no
+    * mention in `callers` (path → source) reaches, in declaration order.
     */
-  def uncalled(main: Seq[(String, String)], others: Seq[String],
+  def uncalled(main: Seq[(String, String)], callers: Seq[(String, String)],
                allowed: Set[String]): Seq[String] = {
-    val code = main.map { case (f, src) => (f, stripComments(src)) }
-    val uses = (code.map(_._2) ++ others.map(stripComments))
-      .flatMap(Word.findAllIn(_)).groupMapReduce(identity)(_ => 1)(_ + _)
-    code.flatMap { case (f, text) =>
+    val decls = main.flatMap { case (f, src) =>
+      val code = codeOnly(src)
       val obj = f.split('/').last.stripSuffix(".scala")
-      Decl.findAllMatchIn(text).collect {
+      val ownerAt = DefaultParams.owners(code)
+      Decl.findAllMatchIn(code).collect {
         case m if !Seq("private", "protected", "override").exists(m.group(1).contains) &&
-            !allowed(s"$obj.${m.group(2)}") && uses(m.group(2)) <= 1 =>
-          s"$f: ${m.group(2)}"
+            m.group(2) != "main" && !allowed(s"$obj.${m.group(2)}") =>
+          (f, m.group(2), ownerAt(m.start))
       }
     }
+    val mentions = DefaultParams.mentions(callers, decls.map(_._2).toSet)
+    decls.collect {
+      case (f, name, owner) if !mentions.getOrElse(name, Nil).exists(_.reaches(owner)) =>
+        s"$f: $name"
+    }
   }
-
-  private val Word = """\w+""".r
 
   /** `src` with comments removed and each string or character literal
     * reduced to `""`, keeping the code of its `${…}` splices, so that
@@ -397,21 +410,32 @@ object PublicSurface {
 
 /** The default-parameter rule: every default-valued parameter of a
   * `def` in `src/main` must be passed, by name or by position, at some
-  * call of that def. A default that no call overrides is a constant
-  * written as an option; it belongs in the operator's object (or
-  * inline), where it is written once. A call `Owner.name(…)` counts
-  * only for the def that `Owner` encloses; a call with no qualifier, or
-  * with a value qualifier, counts for each def of that name whose
-  * parameter lists its arguments fit.
+  * call of that def in `src/main` or in the benchmark's sources. A spec
+  * is not a caller: a default that only a spec overrides is an option
+  * the engine never runs at another value. A default that no call
+  * overrides is a constant written as an option; it belongs in the
+  * operator's object (or inline), where it is written once. A call
+  * `Owner.name(…)` counts only for the def that `Owner` encloses; a
+  * call with no qualifier, or with a value qualifier, counts for each
+  * def of that name whose parameter lists its arguments fit.
   */
 object DefaultParams {
 
-  /** `<file base name>.<def>.<param>`: deployment settings that only a
-    * production caller sets — the Kafka and CSV readers of `graft.sources`.
+  /** `<file base name>.<def>.<param>`: the defaults a call in `src/main`
+    * or the benchmark need not set. Only two kinds qualify: a setting of
+    * the deployment or of input from outside the program, which only a
+    * production caller sets, and a safety cap whose guard a spec must
+    * trip with a small value.
     */
   val Allowed: Set[String] = Set(
-    "CsvIO.readCsv.multiLine",    // CSV files with quoted newlines
-    "KafkaIO.purchasesStream.mode") // the Avro parse mode of the Kafka source
+    "CsvIO.readCsv.multiLine",                 // CSV files with quoted newlines
+    "CsvIO.readCsv.mode",                      // parse mode for malformed CSV input
+    "JsonIO.readJsonl.mode",                   // parse mode for malformed JSON lines
+    "KafkaIO.purchasesStream.mode",            // the Avro parse mode of the Kafka source
+    "KafkaIO.purchasesStream.topic",           // the deployment's purchases topic
+    "KafkaIO.productsSnapshot.topic",          // the deployment's products topic
+    "KafkaIO.decodeAvroFrames.writerSchemasById", // the registry's writer schemas, outside the program
+    "Dedup.ngramJaccardPairs.maxBlockSize")    // block cap: a spec trips the guard
 
   /** Parameter `index` of list `list` of `defName`, declared in the
     * object, class or trait `owner`; `lists` holds each parameter's
@@ -431,51 +455,77 @@ object DefaultParams {
   private val Qualifier = """(?s).*?([A-Za-z_]\w*)?\s*\.\s*$""".r
   private val Keyword = """(?:def|val|var|object|class|trait|case)\b""".r
 
+  /** A mention of a name outside its declarations: the word before the
+    * `.` that precedes it (`Some("")` after a bracket, `None` with no
+    * `.`), and the argument groups that follow it.
+    */
+  final case class Mention(qualifier: Option[String], groups: Seq[Seq[String]]) {
+    /** A capitalized qualifier names an object, class or trait. */
+    def qualified: Boolean = qualifier.exists(_.headOption.exists(_.isUpper))
+    /** Whether this mention can refer to a def that `owner` encloses. */
+    def reaches(owner: String): Boolean = !qualified || qualifier.contains(owner)
+  }
+
+  /** The source roots whose calls count: the engine and the benchmark. */
+  private val CallerRoots = Seq("src/main/", "perfbench/src/")
+
+  /** name → each mention of a name in `names` in the files of `sources`
+    * (path → source) under [[CallerRoots]], comments and literals aside.
+    */
+  private[graft] def mentions(sources: Seq[(String, String)],
+                              names: Set[String]): Map[String, Seq[Mention]] =
+    sources.collect { case (f, src) if CallerRoots.exists(f.startsWith) =>
+      PublicSurface.codeOnly(src)
+    }.flatMap { code =>
+      """\b([A-Za-z_]\w*)\b""".r.findAllMatchIn(code).collect {
+        case m if names(m.group(1)) &&
+            !DefBefore.matches(code.substring(math.max(0, m.start - 12), m.start)) =>
+          val qualifier = code.substring(math.max(0, m.start - 80), m.start) match {
+            case Qualifier(q) => Some(Option(q).getOrElse(""))
+            case _ => None
+          }
+          m.group(1) -> Mention(qualifier,
+            argGroups(code, m.end, declaration = false).map(topLevel))
+      }
+    }.groupMap(_._1)(_._2)
+
+  /** The innermost object, class or trait of `code` (comments and
+    * literals stripped) enclosing each position; "" at the top level.
+    */
+  private[graft] def owners(code: String): Int => String = {
+    val bodies = TypeDef.findAllMatchIn(code).flatMap { t =>
+      body(code, t.end).map(open => (open, close(code, open), t.group(1)))
+    }.toSeq
+    pos => bodies.filter { case (open, end, _) => open < pos && pos < end }
+      .maxByOption(_._1).fold("")(_._3)
+  }
+
   /** Every default-valued parameter declared in `main` (path → source). */
   def declared(main: Seq[(String, String)]): Seq[Param] =
     main.flatMap { case (f, src) =>
       val code = PublicSurface.codeOnly(src)
-      val bodies = TypeDef.findAllMatchIn(code).flatMap { t =>
-        body(code, t.end).map(open => (open, close(code, open), t.group(1)))
-      }.toSeq
+      val ownerAt = owners(code)
       DefName.findAllMatchIn(code).flatMap { m =>
-        val owner = bodies.filter { case (open, end, _) => open < m.start && m.start < end }
-          .maxByOption(_._1).fold("")(_._3)
         val lists = argGroups(code, m.end, declaration = true).map(topLevel)
         for {
           (decls, l) <- lists.zipWithIndex
           (d, i) <- decls.zipWithIndex if defaultAt(d) >= 0
-        } yield Param(f, owner, m.group(1), lists, l, i)
+        } yield Param(f, ownerAt(m.start), m.group(1), lists, l, i)
       }
     }
 
   /** The parameters of `declared(main)`, `allowed` aside, that no call
-    * in `callers` (sources; comments and literals do not count) passes,
+    * in `callers` (path → source; only [[CallerRoots]] count) passes,
     * by name or by position.
     */
-  def unset(main: Seq[(String, String)], callers: Seq[String],
+  def unset(main: Seq[(String, String)], callers: Seq[(String, String)],
             allowed: Set[String]): Seq[Param] = {
     val params = declared(main)
-    val names = params.map(_.defName).toSet
-    // def name -> (qualifier, argument groups) of each call
-    val calls = callers.map(PublicSurface.codeOnly).flatMap { code =>
-      """\b([A-Za-z_]\w*)\b""".r.findAllMatchIn(code).collect {
-        case m if names(m.group(1)) &&
-            !DefBefore.matches(code.substring(math.max(0, m.start - 12), m.start)) =>
-          val before = code.substring(math.max(0, m.start - 80), m.start)
-          val qualifier = before match {
-            case Qualifier(q) => Some(Option(q).getOrElse(""))
-            case _ => None
-          }
-          m.group(1) -> (qualifier, argGroups(code, m.end, declaration = false).map(topLevel))
-      }
-    }.groupMap(_._1)(_._2)
+    val calls = mentions(callers, params.map(_.defName).toSet)
     params.filterNot { p =>
-      allowed(p.key) || calls.getOrElse(p.defName, Nil).exists { case (qualifier, groups) =>
-        val resolves = qualifier match {
-          case Some(q) if q.headOption.exists(_.isUpper) => q == p.owner
-          case _ => fits(groups, p.lists)
-        }
+      allowed(p.key) || calls.getOrElse(p.defName, Nil).exists { c =>
+        val groups = c.groups
+        val resolves = c.reaches(p.owner) && (c.qualified || fits(groups, p.lists))
         resolves && groups.lift(p.list).exists { args =>
           args.lift(p.index).exists(!Named.matches(_)) ||
             args.exists { case Named(n) => n == p.name; case _ => false }

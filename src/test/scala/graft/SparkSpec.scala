@@ -26,20 +26,25 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def sf001 = "/root/testdata/sf0.001"
 
-  /** Runs `body` on the RocksDB state-store provider (transformWithState
-    * keeps state and timers in column families, which only RocksDB
-    * has), then restores the session's prior provider setting.
+  /** Runs `body` with each conf key set to its value, then restores each
+    * key's prior value, or unsets a key that had none.
     */
-  protected def withRocksDb[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  protected def withConf[T](settings: (String, String)*)(body: => T): T = {
+    val prior = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** Runs `body` on the RocksDB state-store provider (transformWithState
+    * keeps state and timers in column families, which only RocksDB
+    * has).
+    */
+  protected def withRocksDb[T](body: => T): T =
+    withConf("spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   override protected def beforeAll(): Unit = {
     // Session FIRST: Spark's first-init REPLACES the log4j configuration

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.execution.streaming.state.GraftStateStoreBridge
+import org.apache.spark.sql.execution.streaming.state.{GraftStateStoreBridge, MaintenancePause}
 
 import graft.streaming.StateStoreCleanupListener
 
@@ -17,7 +17,7 @@ import graft.streaming.StateStoreCleanupListener
   * bridge path is the production form.
   *
   * The maintenance task is PAUSED for the duration
-  * (`setMaintenancePaused`), so the only code that can remove a
+  * (`MaintenancePause`), so the only code that can remove a
   * provider during the assertion window is the listener — without the
   * pause a 60 s tick landing inside the window could unload the
   * deactivated providers itself and mask a dead listener.
@@ -39,7 +39,7 @@ class StateStoreCleanupSpec extends SparkSpec {
   test("stopping one of two RocksDB queries closes only its providers (listener-scoped unload)") {
     withRocksDb {
       StateStoreCleanupListener.install(spark)
-      GraftStateStoreBridge.setMaintenancePaused(true)
+      MaintenancePause.set(true)
       // quiesce leftovers from earlier suites so the id sets below are ours
       GraftStateStoreBridge.unloadAllStateStores()
       try {
@@ -93,7 +93,7 @@ class StateStoreCleanupSpec extends SparkSpec {
           finally GraftStateStoreBridge.unloadAllStateStores()
         }
       } finally {
-        GraftStateStoreBridge.setMaintenancePaused(false)
+        MaintenancePause.set(false)
         StateStoreCleanupListener.uninstall(spark)
       }
     }

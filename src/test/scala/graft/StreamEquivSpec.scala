@@ -159,7 +159,7 @@ class StreamEquivSpec extends SparkSpec {
     val in = MemoryStream[Ev]
     val pct = StreamingHeavyHitters.windowPercentiles(
       in.toDF().select(col("event_type").as("grp"), col("ts"), col("value").as("v")),
-      "ts", "1 day", "5 minutes", "grp", "v", k = 64)
+      "ts", "1 day", "5 minutes", "grp", "v")
     val got = run("eq_pct", pct)(feed(in, _))
       .filter(_.getString(1) != "zz_sentinel")
       .map(r => (r.getTimestamp(0), r.getString(1)) ->
@@ -201,11 +201,11 @@ class StreamEquivSpec extends SparkSpec {
     assertSums(got, want)
   }
 
-  test("7-day windowed heavy hitters in the exact regime (5 types < capacity 16) equal count + rank") {
+  test("7-day windowed heavy hitters in the exact regime (5 types < capacity 64) equal count + rank") {
     val in = MemoryStream[Ev]
     val hh = StreamingHeavyHitters.topTokens(
       in.toDF().select(col("user_id").as("grp"), col("ts"), col("event_type").as("tok")),
-      "ts", "7 days", "5 minutes", "grp", "tok", capacity = 16, k = 3)
+      "ts", "7 days", "5 minutes", "grp", "tok")
     val got = run("eq_hh", hh)(feed(in, _))
       .filter(_.getLong(1) != -1L)
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getLong(2)) ->
@@ -218,7 +218,7 @@ class StreamEquivSpec extends SparkSpec {
         col("user_id").as("grp"), col("event_type").as("tok"))
       .groupBy("ws", "grp", "tok").agg(count(lit(1)).as("cnt"))
       .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 3)
+      .filter(col("rank") <= graft.operators.Sketches.SpaceSavingTopK)
       .collect()
       // exact regime: every count is exact, so the error bound is 0
       .map(r => (r.getTimestamp(0), r.getLong(1), r.getAs[Long]("rank")) ->

@@ -15,12 +15,12 @@ class StreamingAnomalySpec extends SparkSpec {
   private def t(s: Int) = Timestamp.valueOf(f"2024-01-01 00:00:$s%02d")
   private def tmp(p: String) = Files.createTempDirectory(p).toFile.getAbsolutePath
 
-  private def run(phases: Seq[Seq[Seq[Pt]]], interrupt: Boolean,
-                  z: Double, minSamples: Int): Map[Long, Boolean] = {
+  // detect flags |x − mean| > 3·sigma once a key has 8 prior points
+  private def run(phases: Seq[Seq[Seq[Pt]]], interrupt: Boolean): Map[Long, Boolean] = {
     withRocksDb {
       val cp = tmp("graft-an-cp"); val out = tmp("graft-an-out")
       val in = MemoryStream[Pt]
-      val df = StreamingAnomaly.detect(spark, in.toDF(), z, minSamples).toDF()
+      val df = StreamingAnomaly.detect(spark, in.toDF()).toDF()
       def start() = df.writeStream.format("parquet")
         .option("checkpointLocation", cp).option("path", out)
         .outputMode("append").start()
@@ -43,8 +43,7 @@ class StreamingAnomalySpec extends SparkSpec {
       Pt("A", t(i), i.toLong, 10.0 + (i % 3) * 0.5))
     val wild = Pt("A", t(10), 100L, 1000.0)
     val after = Pt("A", t(11), 101L, 10.5)
-    val got = run(Seq(Seq(calm, Seq(wild, after))),
-      interrupt = false, z = 3.0, minSamples = 8)
+    val got = run(Seq(Seq(calm, Seq(wild, after))), interrupt = false)
     assert(got(100L), "the wild point must be flagged")
     assert(calm.forall(p => !got(p.event_id)),
       "warm-up and calm points must not be flagged")
@@ -58,8 +57,8 @@ class StreamingAnomalySpec extends SparkSpec {
       Pt("A", t(i), i.toLong, 10.0 + (i % 3) * 0.5))
     val phase2 = Seq(Pt("A", t(10), 100L, 1000.0), Pt("A", t(11), 101L, 10.5))
     val phases = Seq(Seq(calm), Seq(phase2))
-    val resumed = run(phases, interrupt = true, z = 3.0, minSamples = 8)
-    val straight = run(phases, interrupt = false, z = 3.0, minSamples = 8)
+    val resumed = run(phases, interrupt = true)
+    val straight = run(phases, interrupt = false)
     assert(resumed == straight,
       s"verdicts must match:\n$resumed\nvs\n$straight")
     assert(resumed(100L), "recovered stats must still flag the wild point")
@@ -72,7 +71,7 @@ class StreamingAnomalySpec extends SparkSpec {
         Pt("A", t(i), i.toLong, 10.0 + (i % 3) * 0.5))
       val wild = Pt("A", t(10), 100L, 1000.0)
       val in = MemoryStream[Pt]
-      val df = StreamingAnomaly.detect(spark, in.toDF(), 3.0, 8).toDF()
+      val df = StreamingAnomaly.detect(spark, in.toDF()).toDF()
       val q = df.writeStream.format("parquet")
         .option("checkpointLocation", cp).option("path", out)
         .outputMode("append").start()
@@ -105,8 +104,7 @@ class StreamingAnomalySpec extends SparkSpec {
     // key B's scale is 100x A's — B's points are normal FOR B
     val b = (0 until 10).map(i => Pt("B", t(i), 200L + i, 1000.0 + (i % 2) * 50))
     val probe = Seq(Pt("A", t(10), 100L, 1000.0), Pt("B", t(10), 300L, 1050.0))
-    val got = run(Seq(Seq(a ++ b, probe)), interrupt = false,
-      z = 3.0, minSamples = 8)
+    val got = run(Seq(Seq(a ++ b, probe)), interrupt = false)
     assert(got(100L), "1000 is anomalous for key A")
     assert(!got(300L), "1050 is normal for key B")
   }

@@ -20,25 +20,28 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("sequence packing: docs assigned to the budget-chunk they start in") {
-    // per-source doc_id order; budget 5 tokens
-    // s1: doc 1 (3 tok, starts at 0 -> seq 0), doc 2 (4 tok, starts at 3 -> seq 0),
-    //     doc 3 (2 tok, starts at 7 -> seq 1), doc 4 (5 tok, starts at 9 -> seq 1)
-    // s2: doc 5 (6 tok, starts at 0 -> seq 0), doc 6 (1 tok, starts at 6 -> seq 1)
+    // per-source doc_id order; budget 2048 tokens per sequence
+    // s1: doc 1 (1200 tok, starts at 0 -> seq 0), doc 2 (900 tok, starts at 1200 -> seq 0),
+    //     doc 3 (100 tok, starts at 2100 -> seq 1), doc 4 (3000 tok, starts at 2200 -> seq 1)
+    // s2: doc 5 (2048 tok, starts at 0 -> seq 0), doc 6 (1 tok, starts at 2048 -> seq 1)
+    assert(graft.operators.TextAnalysis.PackTokens == 2048)
+    def toks(n: Int) = Seq.fill(n)("a").mkString(" ")
     val d = Seq(
-      (1L, "a b c", "s1"), (2L, "a b c d", "s1"), (3L, "a b", "s1"),
-      (4L, "a b c d e", "s1"), (5L, "a b c d e f", "s2"), (6L, "a", "s2"))
+      (1L, toks(1200), "s1"), (2L, toks(900), "s1"), (3L, toks(100), "s1"),
+      (4L, toks(3000), "s1"), (5L, toks(2048), "s2"), (6L, toks(1), "s2"))
       .toDF("doc_id", "text", "source")
-    val got = graft.operators.TextAnalysis.sequencePacking(d, tokenBudget = 5)
+    val got = graft.operators.TextAnalysis.sequencePacking(d)
       .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(got == Map(1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 1L, 5L -> 0L, 6L -> 1L))
   }
 
   test("length-percentile filter drops each source's shortest fraction") {
-    // s1 has 5 docs with 1..5 tokens: dropBelow 0.2 removes only the
+    // s1 has 5 docs with 1..5 tokens: dropping below 0.2 removes only the
     // 1-token doc (pr 0.0); all of tiny s2 with pr {0, 1} keeps the max
     val d = ((1L to 5L).map(i => (i, ("w " * i.toInt).trim, "s1")) ++
       Seq((10L, "a b", "s2"), (11L, "a b c", "s2"))).toDF("doc_id", "text", "source")
-    val got = graft.operators.TextAnalysis.lengthPercentileFilter(d, dropBelow = 0.2)
+    assert(graft.operators.TextAnalysis.DropBelow == 0.2)
+    val got = graft.operators.TextAnalysis.lengthPercentileFilter(d)
       .collect().map(_.getLong(0)).toSet
     assert(got == Set(2L, 3L, 4L, 5L, 11L), s"got $got")
   }
@@ -51,7 +54,7 @@ class TextFunctionsSpec extends SparkSpec {
       (3L, "terms of service apply terms of service apply", "s"),
       (4L, "completely unrelated words in this doc", "s"))
       .toDF("doc_id", "text", "source")
-    val got = graft.operators.TextAnalysis.boilerplateNgrams(d, n = 4, minDocs = 2)
+    val got = graft.operators.TextAnalysis.boilerplateNgrams(d)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got("terms of service apply") == 3L)
     assert(!got.keys.exists(_.startsWith("completely")))
@@ -140,34 +143,18 @@ class TextFunctionsSpec extends SparkSpec {
           "jaccard_sorted(array('a','b'), array('b','c')) as js")
         .collect().toSeq
     }
-    val modeKey = "spark.sql.codegen.factoryMode"
-    val wsKey = "spark.sql.codegen.wholeStage"
-    val wsFbKey = "spark.sql.codegen.fallback"
-    val (m0, w0) = (spark.conf.getOption(modeKey), spark.conf.get(wsKey))
-    val fb0 = spark.conf.get(wsFbKey)
     val codegen = battery()
-    try {
-      spark.conf.set(modeKey, "NO_CODEGEN")
-      spark.conf.set(wsKey, "false")
-      val interpreted = battery()
-      assert(codegen.map(_.toString) == interpreted.map(_.toString))
-      // CODEGEN_ONLY direction (r13 verdict): the FALLBACK default hides
-      // a codegen FAILURE by silently running interpreted; here any
-      // Janino error in the battery throws (projection layer via
-      // factoryMode, whole-stage via fallback=false) instead of passing.
-      spark.conf.set(modeKey, "CODEGEN_ONLY")
-      spark.conf.set(wsKey, "true")
-      spark.conf.set(wsFbKey, "false")
-      val codegenOnly = battery()
-      assert(codegen.map(_.toString) == codegenOnly.map(_.toString))
-    } finally {
-      spark.conf.set(wsFbKey, fb0)
-      m0 match {
-        case Some(v) => spark.conf.set(modeKey, v)
-        case None => spark.conf.unset(modeKey)
-      }
-      spark.conf.set(wsKey, w0)
-    }
+    val interpreted = withConf("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")(battery())
+    assert(codegen.map(_.toString) == interpreted.map(_.toString))
+    // CODEGEN_ONLY direction (r13 verdict): the FALLBACK default hides
+    // a codegen FAILURE by silently running interpreted; here any
+    // Janino error in the battery throws (projection layer via
+    // factoryMode, whole-stage via fallback=false) instead of passing.
+    val codegenOnly = withConf("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.wholeStage" -> "true",
+      "spark.sql.codegen.fallback" -> "false")(battery())
+    assert(codegen.map(_.toString) == codegenOnly.map(_.toString))
   }
 
   test("PII redaction: emails, phones, IPs counted and replaced") {
@@ -215,16 +202,20 @@ class TextFunctionsSpec extends SparkSpec {
     import graft.operators.TextAnalysis
     // docs 1 and 2 share a 24-token prefix (positions 0..23) and then
     // diverge; doc 3 is unrelated; doc 4 repeats its own 20-token
-    // phrase twice back to back (within-doc duplication must count)
+    // phrase twice back to back (within-doc duplication must count);
+    // docs 5 and 6 share only a 12-token prefix, below the 16-token floor
     val shared = (1 to 24).map(i => s"w$i").mkString(" ")
     val phrase = (1 to 20).map(i => s"p$i").mkString(" ")
+    val short = (1 to 12).map(i => s"s$i").mkString(" ")
     val docs = Seq(
       (1L, shared + " tail1 only here alpha beta gamma delta"),
       (2L, shared + " tail2 other words epsilon zeta eta theta"),
       (3L, (1 to 40).map(i => s"u$i").mkString(" ")),
-      (4L, phrase + " " + phrase))
+      (4L, phrase + " " + phrase),
+      (5L, short + " " + (1 to 10).map(i => s"x$i").mkString(" ")),
+      (6L, short + " " + (1 to 10).map(i => s"y$i").mkString(" ")))
       .toDF("doc_id", "text")
-    val out = TextAnalysis.repeatedSubstringSpans(docs, n = 8, minSpanTokens = 16)
+    val out = TextAnalysis.repeatedSubstringSpans(docs)
       .orderBy("doc_id", "span_start").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // shared prefix: duplicated shingle starts are 0..16 (17 shingles),
@@ -241,17 +232,14 @@ class TextFunctionsSpec extends SparkSpec {
     val d4 = out.filter(_._1 == 4L)
     assert(d4.toSeq == Seq((4L, 0L, 19L, 20L), (4L, 20L, 39L, 20L)),
       s"within-doc repeat must yield both copies' spans, got ${d4.toSeq}")
-    // sub-threshold spans are dropped: with minSpanTokens above the
-    // span length nothing survives
-    val none = TextAnalysis.repeatedSubstringSpans(docs, n = 8,
-      minSpanTokens = 64).collect()
-    assert(none.isEmpty)
+    // sub-threshold spans are dropped: the 12-token shared prefix of
+    // docs 5 and 6 is a run of duplicated shingles, yet yields no span
+    assert(!out.exists(t => t._1 == 5L || t._1 == 6L), s"short span kept: ${out.toSeq}")
 
     // removal rebuild: the shared prefix is cut from BOTH docs (every
     // copy goes — ExactSubstr policy), tails survive verbatim, the
     // unrelated doc passes through untouched, doc 4 empties entirely
-    val rb = TextAnalysis.removeRepeatedSubstrings(docs, n = 8,
-        minSpanTokens = 16)
+    val rb = TextAnalysis.removeRepeatedSubstrings(docs)
       .orderBy("doc_id").collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getString(3))))
       .toMap
@@ -280,7 +268,7 @@ class TextFunctionsSpec extends SparkSpec {
   test("BPE merges: hand-traced rounds on the classic low/lower corpus") {
     val docs = Seq((1L, "low low low"), (2L, "lower lower"), (3L, "newest"))
       .toDF("doc_id", "text")
-    val out = graft.operators.TextAnalysis.bpeMerges(docs, k = 5)
+    val out = graft.operators.TextAnalysis.bpeMerges(docs)
       .collect().map(r => (r.getString(1), r.getString(2), r.getLong(3)))
     // round ties resolve (cnt desc, l asc, r asc); greedy merges:
     // lo(5) -> low(5) -> er(2) -> low+er(2) -> es(1, from newest)
@@ -393,7 +381,9 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("passage chunks: offsets, overlap, and full token coverage") {
     val docs = graft.sources.Tables.documents(spark, sf001)
-    val out = graft.operators.TextAnalysis.passageChunks(docs, 32, 24)
+    val (window, stride) =
+      (graft.operators.TextAnalysis.PassageWindow, graft.operators.TextAnalysis.PassageStride)
+    val out = graft.operators.TextAnalysis.passageChunks(docs)
       .collect().groupBy(_.getLong(0))
     val toks = docs.select("doc_id", "text").collect()
       .map(r => r.getLong(0) ->
@@ -403,18 +393,18 @@ class TextFunctionsSpec extends SparkSpec {
       val sorted = chunks.sortBy(_.getAs[Long]("chunk_id"))
       val dl = toks(id).length.toLong
       assert(sorted.map(_.getAs[Long]("chunk_id")).toSeq ==
-        (0L until ((dl - 1) / 24 + 1)).toSeq)
+        (0L until ((dl - 1) / stride + 1)).toSeq)
       sorted.foreach { c =>
         val start = c.getAs[Long]("start_tok")
-        assert(start == c.getAs[Long]("chunk_id") * 24)
-        assert(c.getAs[Long]("n_tok") == math.min(32L, dl - start))
+        assert(start == c.getAs[Long]("chunk_id") * stride)
+        assert(c.getAs[Long]("n_tok") == math.min(window.toLong, dl - start))
         assert(c.getAs[String]("chunk_text") ==
           toks(id).slice(start.toInt,
             start.toInt + c.getAs[Long]("n_tok").toInt).mkString(" "))
       }
       // stride-prefixes concatenated + last chunk == the whole doc
       val rebuilt = sorted.init.map(_.getAs[String]("chunk_text")
-        .split(" ").take(24).mkString(" ")) :+
+        .split(" ").take(stride).mkString(" ")) :+
         sorted.last.getAs[String]("chunk_text")
       assert(rebuilt.mkString(" ") == toks(id).mkString(" "),
         s"doc $id not covered")
@@ -473,19 +463,21 @@ class TextFunctionsSpec extends SparkSpec {
   }
 
   test("posting lists: df over the full corpus, postings capped and ascending") {
-    val d = Seq(
-      (3L, "b a a b"),   // per-doc distinct: {a, b}
-      (1L, "a c"),
-      (2L, "a"),
-      (4L, "a d"))
-      .toDF("doc_id", "text")
-    val out = graft.operators.TextAnalysis.postingLists(d, cap = 2).collect()
+    // "a" is in all 20 docs; its postings keep the 16 smallest ids
+    assert(graft.operators.TextAnalysis.PostingCap == 16)
+    val d = (20L to 1L by -1L).map {
+      case 3L => (3L, "b a a b") // per-doc distinct: {a, b}
+      case 1L => (1L, "a c")
+      case 4L => (4L, "a d")
+      case i => (i, "a")
+    }.toDF("doc_id", "text")
+    val out = graft.operators.TextAnalysis.postingLists(d).collect()
       .map(r => r.getString(0) ->
         (r.getAs[Long]("df"), r.getAs[String]("postings"),
           r.getAs[Long]("n_postings"))).toMap
     // df counts EVERY doc containing the term; postings keep only the
     // cap smallest doc_ids, comma-joined ascending
-    assert(out("a") == ((4L, "1,2", 2L)), s"got ${out("a")}")
+    assert(out("a") == ((20L, (1 to 16).mkString(","), 16L)), s"got ${out("a")}")
     assert(out("b") == ((1L, "3", 1L)))
     assert(out("c") == ((1L, "1", 1L)))
     assert(out("d") == ((1L, "4", 1L)))
@@ -497,14 +489,15 @@ class TextFunctionsSpec extends SparkSpec {
       (1L, ("x " * 90).trim, "A"),
       (2L, ("x " * 10).trim, "B"))
       .toDF("doc_id", "text", "source")
-    val out = graft.operators.TextAnalysis.temperatureMixture(d, alpha = 0.5)
+    val out = graft.operators.TextAnalysis.temperatureMixture(d)
       .collect().map(r => r.getString(0) ->
         (r.getAs[Double]("p_raw"), r.getAs[Double]("p_temp"),
           r.getAs[Double]("upsample"))).toMap
-    val z = math.sqrt(0.9) + math.sqrt(0.1)
+    def pa(p: Double) = math.pow(p, graft.operators.TextAnalysis.TempAlpha)
+    val z = pa(0.9) + pa(0.1)
     assert(math.abs(out("A")._1 - 0.9) < 1e-15)
-    assert(math.abs(out("A")._2 - math.sqrt(0.9) / z) < 1e-12)
-    assert(math.abs(out("B")._2 - math.sqrt(0.1) / z) < 1e-12)
+    assert(math.abs(out("A")._2 - pa(0.9) / z) < 1e-12)
+    assert(math.abs(out("B")._2 - pa(0.1) / z) < 1e-12)
     assert(out("A")._2 + out("B")._2 > 1.0 - 1e-12 &&
       out("A")._2 + out("B")._2 < 1.0 + 1e-12, "p_temp sums to 1")
     assert(out("B")._3 > 1.0 && out("A")._3 < 1.0,
@@ -550,36 +543,42 @@ class TextFunctionsSpec extends SparkSpec {
       (4L, "join join join hash hash"), (5L, "hash"), (6L, "join me"))
       .toDF("doc_id", "text")
     val qs = Seq(1L -> Seq("join", "hash"), 2L -> Seq("absent"))
-    val out = graft.operators.TextAnalysis.retrievalEval(docs, qs, k = 10)
+    val k = graft.operators.TextAnalysis.RetrievalK
+    val out = graft.operators.TextAnalysis.retrievalEval(docs, qs)
       .collect()
     // query 2 matches nothing -> no row (no candidates at all)
     assert(out.map(_.getAs[Long]("query_id")).toSeq == Seq(1L))
     val r = out.head
     assert(r.getAs[Long]("n_cand") == 5L) // docs 1,2,4,5,6
     val (nRel, relK) = (r.getAs[Long]("n_rel"), r.getAs[Long]("rel_at_k"))
-    assert(relK == nRel) // 5 candidates, k=10: everything is in the top k
+    assert(k >= 5 && relK == nRel) // 5 candidates: everything is in the top k
     val (mrr, ndcg) = (r.getAs[Double]("mrr"), r.getAs[Double]("ndcg"))
     assert(ndcg >= 0.0 && ndcg <= 1.0 + 1e-12)
     assert((mrr == 0.0) == (relK == 0L)) // mrr>0 iff a relevant hit
-    assert(r.getAs[Double]("p_at_k") == relK.toDouble / 10.0)
+    assert(r.getAs[Double]("p_at_k") == relK.toDouble / k)
     assert(nRel == 0L || r.getAs[Double]("recall_at_k") == 1.0)
-    val again = graft.operators.TextAnalysis.retrievalEval(docs, qs, k = 10)
+    val again = graft.operators.TextAnalysis.retrievalEval(docs, qs)
       .collect()
     assert(out.map(_.toString).toSeq == again.map(_.toString).toSeq)
   }
 
   test("vocab coverage: top-V boundary and per-source OOV rates") {
-    // counts: a=4, b=4, c=2, d=1 -> top-2 vocab (count desc, token asc)
-    // = {a, b}; src1 oov = {c}: 1/6; src2 oov = {c, d}: 2/5.
+    // counts: t000..t499 = 3 each, u = 3, c = 2, d = 1 -> the top-500
+    // vocab (count desc, token asc) is t000..t499, and u, tied at the
+    // boundary count, falls out on the token order; src1 oov = {u, c}:
+    // 2/502; src2 oov = {u, u, c, d}: 4/1004.
+    assert(graft.operators.TextAnalysis.VocabSize == 500)
+    val vocab = (0 until 500).map(i => f"t$i%03d")
     val docs = Seq(
-      (1L, "src1", "a a a b b c"), (2L, "src2", "b b a c d"))
+      (1L, "src1", (vocab ++ Seq("u", "c")).mkString(" ")),
+      (2L, "src2", (vocab ++ vocab ++ Seq("u", "u", "c", "d")).mkString(" ")))
       .toDF("doc_id", "source", "text")
-    val out = graft.operators.TextAnalysis.vocabCoverage(docs, vocabSize = 2)
+    val out = graft.operators.TextAnalysis.vocabCoverage(docs)
       .collect().map(r => r.getString(0) ->
         (r.getAs[Long]("n_docs"), r.getAs[Long]("n_tokens"),
           r.getAs[Long]("n_oov"), r.getAs[Double]("oov_rate"))).toMap
-    assert(out("src1") == ((1L, 6L, 1L, 1.0 / 6.0)))
-    assert(out("src2") == ((1L, 5L, 2L, 2.0 / 5.0)))
+    assert(out("src1") == ((1L, 502L, 2L, 2.0 / 502.0)))
+    assert(out("src2") == ((1L, 1004L, 4L, 4.0 / 1004.0)))
   }
 
   test("char entropy: degenerate, uniform, and empty docs") {
@@ -767,20 +766,23 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("q159 token-budget fill: cumsum follows priority order, prefix rule cuts at the boundary") {
     import graft.operators.TextAnalysis
-    val docs = Seq(
-      (1L, "one two", "A"), (2L, "three four", "A"), (3L, "five six", "A"),
-      (4L, "seven eight", "B"))
-      .map { case (id, t, src) => (id, t, "en", src, t.length.toLong) }
+    // 300 tokens per doc against the 800-token budget
+    assert(TextAnalysis.TokenBudget >= 600L && TextAnalysis.TokenBudget < 900L)
+    val docs = Seq((1L, "A"), (2L, "A"), (3L, "A"), (4L, "B"))
+      .map { case (id, src) =>
+        val t = Seq.fill(300)(s"w$id").mkString(" ")
+        (id, t, "en", src, t.length.toLong)
+      }
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val out = TextAnalysis.tokenBudgetFill(docs, budget = 5L).collect()
+    val out = TextAnalysis.tokenBudgetFill(docs).collect()
     val a = out.filter(_.getString(1) == "A")
       .sortBy(r => (r.getLong(3), r.getLong(0)))
     // cumulative sums accumulate in (priority, doc_id) order
-    assert(a.map(_.getLong(4)).toSeq == Seq(2L, 4L, 6L), s"${a.toSeq}")
-    // prefix rule: 2 and 4 fit the 5-token budget, 6 does not
+    assert(a.map(_.getLong(4)).toSeq == Seq(300L, 600L, 900L), s"${a.toSeq}")
+    // prefix rule: 300 and 600 fit the budget, 900 does not
     assert(a.map(_.getBoolean(5)).toSeq == Seq(true, true, false))
     // sources fill independently
     val b = out.filter(_.getString(1) == "B").head
-    assert(b.getLong(4) == 2L && b.getBoolean(5))
+    assert(b.getLong(4) == 300L && b.getBoolean(5))
   }
 }

@@ -29,15 +29,16 @@ class TimeSeriesSpec extends SparkSpec {
   }
 
   test("window truncation drops history beyond w events; users are independent") {
-    val out = TimeSeries.ewmaFeatures(ev(
-      (1L, 1L, 10L, 100.0), (2L, 1L, 20L, 2.0), (3L, 1L, 30L, 3.0),
-      (4L, 2L, 10L, 7.0)), w = 2)
+    // user 1: a 100 at t1, then w events of 1.0
+    val w = TimeSeries.EwmaWindow
+    val user1 = (1L, 1L, 10L, 100.0) +: (2 to w + 1).map(i => (i.toLong, 1L, 10L * i, 1.0))
+    val out = TimeSeries.ewmaFeatures(ev(user1 :+ (((w + 2).toLong, 2L, 10L, 7.0)): _*))
       .orderBy("event_id").collect()
-    // event 3 frame = [2,3]: the 100 at t1 is out of the window
-    assert(out(2).getAs[Double]("ewma") == 2.0 * 0.25 + 3.0 * 0.5)
-    assert(out(2).getAs[Double]("roll_max") == 3.0)
+    // the last user-1 frame holds only the w ones: the 100 is out of the window
+    assert(out(w).getAs[Double]("ewma") == 1.0 - math.pow(0.5, w))
+    assert(out(w).getAs[Double]("roll_max") == 1.0)
     // user 2 starts fresh
-    assert(out(3).getAs[Double]("ewma") == 3.5)
+    assert(out(w + 1).getAs[Double]("ewma") == 3.5)
   }
 
   test("outlier counts: strict 2-sigma boundary is exact in decimal space") {
@@ -439,7 +440,7 @@ class TimeSeriesSpec extends SparkSpec {
     val df = evs.map { case (id, u, sec, v) =>
       (id, u, new Timestamp(sec * 1000L), v) }
       .toDF("event_id", "user_id", "ts", "value")
-    val out = Relational.abCuped(df, "2024-01-01 00:00:00").collect()
+    val out = Relational.abCuped(df).collect()
     assert(out.length == 2, s"${out.toSeq}")
     val thetas = out.map(_.getDouble(4)).distinct
     assert(thetas.toSeq == Seq(1.0), s"theta: ${thetas.toSeq}")
