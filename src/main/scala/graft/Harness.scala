@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
 object Harness {
 
   /** `local[SPARK_GRAFT_CPUS]` (else `defaultCpus`), shuffle partitions
-    * equal to the core count, UTC, no UI, the given log level; `confs`
-    * add the main's own settings (state-store provider, scheduler).
+    * equal to the core count, UTC, no UI, the given log level, fork-free
+    * local checkpoints ([[sources.LocalFs]]); `confs` add the main's own
+    * settings (state-store provider, scheduler).
     */
   def session(defaultCpus: Int, logLevel: String,
               confs: (String, String)*): SparkSession = {
@@ -27,6 +28,7 @@ object Harness {
     val spark = confs.foldLeft(builder) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
+    sources.LocalFs.install(spark)
     spark
   }
 

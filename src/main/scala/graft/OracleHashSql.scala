@@ -338,13 +338,6 @@ ORDER BY 1, 2"""
     */
   private def dlit(d: Double): String = java.lang.Double.toString(d)
 
-  /** Oracle for q21: multi-table random-hyperplane LSH ANN top-k
-    * (= Similarity.annTopK over `planeSets`, `Similarity.AnnProbes`
-    * probes, queries vec_id < `SimilarityQueries.QueryIds`). The exact Gaussian plane constants are
-    * embedded as SQL literals; the dot product is folded sequentially
-    * (list_reduce) in the same element order as HashImpl.lshBuckets so
-    * the sign decisions are IEEE-identical.
-    */
   /** VALUES rows `(tbl, pl, w)` embedding a plane-set matrix. */
   private def planeValues(planeSets: Seq[Seq[Seq[Double]]]): String =
     (for {
@@ -359,6 +352,13 @@ ORDER BY 1, 2"""
   private val planeDot = "list_reduce(list_prepend(0.0::DOUBLE, " +
     s"list_transform(range(1,${Similarity.Dim + 1}), i -> e.embedding[i]::DOUBLE * p.w[i])), (a,b) -> a+b)"
 
+  /** Oracle for q21: multi-table random-hyperplane LSH ANN top-k
+    * (= Similarity.annTopK over `planeSets`, `Similarity.AnnProbes`
+    * probes, queries vec_id < `SimilarityQueries.QueryIds`). The exact Gaussian plane constants are
+    * embedded as SQL literals; the dot product is folded sequentially
+    * (list_reduce) in the same element order as HashImpl.lshBuckets so
+    * the sign decisions are IEEE-identical.
+    */
   def q21AnnLsh(planeSets: Seq[Seq[Seq[Double]]], k: Int): String = {
     val planeRows = planeValues(planeSets)
     val dot = planeDot
@@ -442,15 +442,6 @@ SELECT query_id, rank::BIGINT AS rank, neighbor_id,
 FROM ranked WHERE rank <= $k
 ORDER BY 1, 2"""
 
-  /** Oracle for q44: IVF ANN top-k with deterministic sampled-k-means
-    * centroids (= Similarity.ivfTopKTrained defaults). The Lloyd
-    * training is UNROLLED as `iters` CTE stages that reproduce the
-    * driver-side trainer's float arithmetic verbatim: stride init over
-    * the rank-sorted sample, assignment by cosine (ties → lowest cell),
-    * per-dim mean as a sequential vec_id-ordered list_reduce fold
-    * starting at 0.0 then one division by the count, empty cells
-    * keeping their previous centroid. Probe/rerank then mirrors q29.
-    */
   /** The deterministic sampled-k-means centroid CTE chain shared by
     * q44 and q64: `sample`, `cent0`, and the unrolled Lloyd stages up
     * through `cent$iters` (see [[q44IvfKmeans]] for the arithmetic
@@ -489,6 +480,15 @@ cent0 AS (
 $iterCtes"""
   }
 
+  /** Oracle for q44: IVF ANN top-k with deterministic sampled-k-means
+    * centroids (= Similarity.ivfTopKTrained defaults). The Lloyd
+    * training is UNROLLED as `iters` CTE stages that reproduce the
+    * in-JVM trainer's float arithmetic verbatim: stride init over
+    * the rank-sorted sample, assignment by cosine (ties → lowest cell),
+    * per-dim mean as a sequential vec_id-ordered list_reduce fold
+    * starting at 0.0 then one division by the count, empty cells
+    * keeping their previous centroid. Probe/rerank then mirrors q29.
+    */
   def q44IvfKmeans(k: Int): String = {
     val (cells, iters, sampleN, nProbe, dim) = (Similarity.IvfCells,
       Similarity.KmeansIters, Similarity.SampleN, Similarity.IvfProbes, Similarity.Dim)
@@ -675,14 +675,6 @@ ORDER BY cluster_id"""
     s"list_reduce(list_prepend(0::HUGEINT, $bytesList), " +
       s"(h, c) -> (${mulMod("h", "1315423911")} + c) % $TWO64)"
 
-  /** Oracle for q54: content-defined chunking + cross-document chunk
-    * dedup (= Dedup.cdcChunkDedup defaults: window 16, mask 63,
-    * minDocs 2). The engine's single rolling pass is mirrored by
-    * hashing each 16-byte window directly (mathematically identical —
-    * the rolling recurrence subtracts the departing byte·B^w); cut
-    * positions where the window hash ≡ 0 mod 64 become chunk
-    * boundaries via a sorted boundary list.
-    */
   /** Oracle for q176: robust winnowing fingerprints
     * (= TextAnalysis.winnowFingerprints, k-gram polyhash64 folded to
     * 32 bits, window w, min-rightmost selection). The engine's
@@ -734,6 +726,14 @@ SELECT doc_id, count(*)::BIGINT AS n_grams,
 FROM s GROUP BY doc_id ORDER BY doc_id"""
   }
 
+  /** Oracle for q54: content-defined chunking + cross-document chunk
+    * dedup (= Dedup.cdcChunkDedup defaults: window 16, mask 63,
+    * minDocs 2). The engine's single rolling pass is mirrored by
+    * hashing each 16-byte window directly (mathematically identical —
+    * the rolling recurrence subtracts the departing byte·B^w); cut
+    * positions where the window hash ≡ 0 mod 64 become chunk
+    * boundaries via a sorted boundary list.
+    */
   def q54CdcChunks: String =
     s"""WITH t AS (
   SELECT doc_id, text,
@@ -1583,20 +1583,6 @@ LEFT JOIN h$iters h ON h.v = n.v
 ORDER BY 1"""
   }
 
-  /** Oracle for q125: fixed-round power-iteration PCA projection
-    * (= Similarity.pcaProject via pcaPowerModel defaults), unrolled
-    * like q61's PageRank and q129's k-means. Mirrors
-    * Similarity.covarianceMoments / powerBasis / the projection fold
-    * ORDER-EXACTLY: covariance entry `(Σxy − ΣxΣy/n)/n` over d1≤d2
-    * pairs, init v=1/√d, each round w=Cv as a 0.0-seeded ascending-j
-    * left fold then v=w/‖w‖ (the norm the same fold over w²), Rayleigh
-    * λ=v·Cv, deflation C−λvvᵀ with the RAW iterate, output sign fixed
-    * at the first max-|component| (list_position finds the first
-    * occurrence, matching Scala maxBy), projection
-    * Σᵢ(eᵢ−meanᵢ)·uᵢ left-folded from 0.0, r4-rounded. Every CTE in
-    * the 4×60 iteration chain is MATERIALIZED — DuckDB's default
-    * inlining would re-expand the whole chain (q130's lesson).
-    */
   /** Oracle for q157: shard manifest. Seed-7 hash of the decimal
     * doc_id string (q97 machinery), signed pmod shards, HUGEINT
     * fingerprint sums.
@@ -1858,6 +1844,20 @@ SELECT doc_id, source, n_tokens, score, norm,
           * ${TextAnalysis.DsirKeepDen} <= count(*) OVER (PARTITION BY source)) AS kept
 FROM r ORDER BY doc_id"""
 
+  /** Oracle for q125: fixed-round power-iteration PCA projection
+    * (= Similarity.pcaProject via pcaPowerModel defaults), unrolled
+    * like q61's PageRank and q129's k-means. Mirrors
+    * Similarity.covarianceMoments / powerBasis / the projection fold
+    * ORDER-EXACTLY: covariance entry `(Σxy − ΣxΣy/n)/n` over d1≤d2
+    * pairs, init v=1/√d, each round w=Cv as a 0.0-seeded ascending-j
+    * left fold then v=w/‖w‖ (the norm the same fold over w²), Rayleigh
+    * λ=v·Cv, deflation C−λvvᵀ with the RAW iterate, output sign fixed
+    * at the first max-|component| (list_position finds the first
+    * occurrence, matching Scala maxBy), projection
+    * Σᵢ(eᵢ−meanᵢ)·uᵢ left-folded from 0.0, r4-rounded. Every CTE in
+    * the 4×60 iteration chain is MATERIALIZED — DuckDB's default
+    * inlining would re-expand the whole chain (q130's lesson).
+    */
   def q125PcaPower(r: Int): String = {
     val (iters, dim) = (Similarity.PcaPowerIters, Similarity.Dim)
     def fold(listExpr: String): String =

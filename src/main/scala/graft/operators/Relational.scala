@@ -149,33 +149,6 @@ object Relational {
       .orderBy(col("cnt").desc, col("token").asc)
       .limit(k)
 
-  /** Apply a CDC changeset to a snapshot (the MERGE INTO / Delta-merge
-    * pattern without a table format): `changes` carries the key, an
-    * `op` column ('U' = upsert whole row, 'D' = delete), and the same
-    * payload columns as `base`. Result = base rows untouched by any
-    * change, plus every 'U' row (updates AND inserts — whole-row
-    * replace semantics).
-    *
-    * Shape chosen for scale: anti-join + union, NOT a full-outer join —
-    * a changeset is normally orders of magnitude smaller than the
-    * snapshot, and a full-outer join can never broadcast, while the
-    * LEFT ANTI side here broadcasts the (key) set and the base table
-    * never shuffles at all. (If a changeset ever rivals the snapshot,
-    * drop the broadcast hint and AQE plans the sort-merge.)
-    */
-  /** Ordered conversion funnel over the event stream: how many users
-    * reach each stage of `stages` IN ORDER (each stage's event must be
-    * strictly later than the previous stage's first qualifying event —
-    * the "first touch" semantics analytics tools ship). Returns one
-    * row per stage: (stage_idx, stage, n_users).
-    *
-    * Scale shape: one narrow groupBy per stage over only that stage's
-    * events, joined to the previous stage's (user, t) frame — which is
-    * users-sized, not events-sized, so AQE broadcasts it when it fits
-    * and falls back to a shuffle join when it doesn't (no forced
-    * hint). The fact stream is scanned once per stage with column
-    * pruning to (user_id, ts); only per-stage counts reach the driver.
-    */
   /** Funnel stage-transition latency (q142): [[funnel]]'s strictly-
     * after first-touch chaining, but keeping each user's first-touch
     * TIME per stage and reporting, per transition, how many users
@@ -260,6 +233,19 @@ object Relational {
     }
   }
 
+  /** Ordered conversion funnel over the event stream: how many users
+    * reach each stage of `stages` IN ORDER (each stage's event must be
+    * strictly later than the previous stage's first qualifying event —
+    * the "first touch" semantics analytics tools ship). Returns one
+    * row per stage: (stage_idx, stage, n_users).
+    *
+    * Scale shape: one narrow groupBy per stage over only that stage's
+    * events, joined to the previous stage's (user, t) frame — which is
+    * users-sized, not events-sized, so AQE broadcasts it when it fits
+    * and falls back to a shuffle join when it doesn't (no forced
+    * hint). The fact stream is scanned once per stage with column
+    * pruning to (user_id, ts); only per-stage counts are collected.
+    */
   def funnel(events: DataFrame, stages: Seq[String]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
@@ -322,6 +308,20 @@ object Relational {
       .limit(20)
   }
 
+  /** Apply a CDC changeset to a snapshot (the MERGE INTO / Delta-merge
+    * pattern without a table format): `changes` carries the key, an
+    * `op` column ('U' = upsert whole row, 'D' = delete), and the same
+    * payload columns as `base`. Result = base rows untouched by any
+    * change, plus every 'U' row (updates AND inserts — whole-row
+    * replace semantics).
+    *
+    * Shape chosen for scale: anti-join + union, NOT a full-outer join —
+    * a changeset is normally orders of magnitude smaller than the
+    * snapshot, and a full-outer join can never broadcast, while the
+    * LEFT ANTI side here broadcasts the (key) set and the base table
+    * never shuffles at all. (If a changeset ever rivals the snapshot,
+    * drop the broadcast hint and AQE plans the sort-merge.)
+    */
   def mergeApply(base: DataFrame, changes: DataFrame,
                  key: String = "doc_id"): DataFrame = {
     val touched = changes.select(col(key))
@@ -471,25 +471,6 @@ object Relational {
         col("valid_to_ts").isNull.as("is_current"))
   }
 
-  /** Marketing-style touch attribution (q133): each purchase's value
-    * is credited to the FIRST and to the LAST qualifying touch (click/
-    * view) by the same user within the lookback window [t−w, t);
-    * purchases with no in-window touch credit 'direct'. Emits the long
-    * report (model ∈ {first, last}) × touch_type with purchase counts
-    * and attributed revenue — the standard last-touch dashboard next
-    * to its first-touch counterpart.
-    *
-    * Determinism: the first/last touch per purchase is min/max of
-    * struct(ts, event_id, type) — lexicographic, total, no float
-    * involvement; revenue sums ride q86's float contract (r4 under
-    * the oracle).
-    *
-    * Scale: one user-keyed sort-merge join with the range predicate as
-    * the join residual (touches per purchase bounded by the lookback
-    * window), the per-purchase reduction is a struct min/max (no
-    * window sort), `direct` is the anti-join remainder, and the final
-    * rollup is a 10-row aggregate.
-    */
   /** Join fan-out audit (q164) — the pre-flight a 100 TB join should
     * always run: per-key multiplicities on BOTH sides collapse to a
     * (multiplicity-left × multiplicity-right) histogram whose
@@ -916,6 +897,25 @@ object Relational {
         col("carry_in"), col("n_starts"), col("n_ends"), col("peak"))
   }
 
+  /** Marketing-style touch attribution (q133): each purchase's value
+    * is credited to the FIRST and to the LAST qualifying touch (click/
+    * view) by the same user within the lookback window [t−w, t);
+    * purchases with no in-window touch credit 'direct'. Emits the long
+    * report (model ∈ {first, last}) × touch_type with purchase counts
+    * and attributed revenue — the standard last-touch dashboard next
+    * to its first-touch counterpart.
+    *
+    * Determinism: the first/last touch per purchase is min/max of
+    * struct(ts, event_id, type) — lexicographic, total, no float
+    * involvement; revenue sums ride q86's float contract (r4 under
+    * the oracle).
+    *
+    * Scale: one user-keyed sort-merge join with the range predicate as
+    * the join residual (touches per purchase bounded by the lookback
+    * window), the per-purchase reduction is a struct min/max (no
+    * window sort), `direct` is the anti-join remainder, and the final
+    * rollup is a 10-row aggregate.
+    */
   def touchAttribution(events: DataFrame): DataFrame = {
     val touches = events.filter(col("event_type").isin("click", "view"))
       .select(col("user_id"), col("ts").as("t_ts"),

@@ -295,21 +295,6 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("cos"))
   }
 
-  /** Embedding-space hygiene: the `k` most correlated dimension pairs
-    * (Pearson |corr|, ties broken by (d1, d2)) — the diagnostic behind
-    * whitening / dead-dim pruning decisions before ANN indexing.
-    *
-    * Scale design — the Gram-matrix pattern, NOT a dims×dims join:
-    * each row locally expands to its upper-triangle outer product
-    * (codegen HOF, dim(dim+1)/2 doubles), and a typed vector-sum
-    * Aggregator ([[graft.functions.Aggregators.VectorSum]]) folds every
-    * partition into ONE moment vector map-side, so the exchange moves
-    * a single ~2080-double row per task — corpus size never appears in
-    * the shuffle. Moments → corr happens on the 1-row result joined
-    * with a broadcast (idx → (d1,d2)) triangle map. At 100 TB this is
-    * the only shape that works: any formulation that explodes
-    * (row × dim-pair) into the shuffle is dim²·N rows.
-    */
   /** Cluster cohesion per label: centroid (mean vector via the
     * VectorSum fold — one vector per task on the shuffle) and each
     * member's cosine to its centroid, reported as per-label mean/min.
@@ -338,6 +323,21 @@ object Similarity {
         avg(col("cos")).as("avg_cos"), min(col("cos")).as("min_cos"))
   }
 
+  /** Embedding-space hygiene: the [[DimCorrK]] most correlated dimension pairs
+    * (Pearson |corr|, ties broken by (d1, d2)) — the diagnostic behind
+    * whitening / dead-dim pruning decisions before ANN indexing.
+    *
+    * Scale design — the Gram-matrix pattern, NOT a dims×dims join:
+    * each row locally expands to its upper-triangle outer product
+    * (codegen HOF, dim(dim+1)/2 doubles), and a typed vector-sum
+    * Aggregator ([[graft.functions.Aggregators.VectorSum]]) folds every
+    * partition into ONE moment vector map-side, so the exchange moves
+    * a single ~2080-double row per task — corpus size never appears in
+    * the shuffle. Moments → corr happens on the 1-row result joined
+    * with a broadcast (idx → (d1,d2)) triangle map. At 100 TB this is
+    * the only shape that works: any formulation that explodes
+    * (row × dim-pair) into the shuffle is dim²·N rows.
+    */
   def dimCorrelationTopK(spark: SparkSession, embeddings: DataFrame): DataFrame = {
     import spark.implicits._
     val dim = Dim
@@ -894,26 +894,6 @@ object Similarity {
     }
   }
 
-  /** PQ-ADC approximate top-k (q129): the codebook-compression ANN
-    * tier — each corpus vector is encoded ONCE into m one-byte codes
-    * (argmin-L2 per subspace against its codebook), and a query scores
-    * a vector by summing m lookup-table entries (asymmetric distance
-    * computation: LUT[j][code_j] = ⟨q_j, c_{j,code_j}⟩) instead of a
-    * dim-wide float op. Top-`PqTopC` ADC candidates per query are then
-    * reranked by EXACT cosine; precision of the final top-k is exact
-    * given the candidates, recall is the PQ approximation (spec-bounded
-    * against brute force).
-    *
-    * Scale: encoding is a per-row codegen HOF against codebook
-    * LITERALS (m·ks·ds doubles ≈ KBs in the plan — the standard
-    * broadcast-model pattern), zero shuffle; the scored stream's
-    * rank-filter runs through WindowGroupLimit (map-side top-topC per
-    * query before the exchange), so the shuffle carries
-    * O(queries × topC) rows. This variant scans all codes per query —
-    * PQ's fast-scan design point; at cell-restricted scale compose
-    * with IVF ([[ivfPqTopK]]). All arithmetic is in-order left folds,
-    * mirrored exactly by OracleHashSql.q129PqAdc.
-    */
   /** m × ks per-row tables against the codebook literal, shared by
     * [[pqAdcTopK]] and [[ivfPqTopK]] so the fold order the oracle
     * mirrors term-for-term exists in exactly one place: squared-L2
@@ -940,6 +920,26 @@ object Similarity {
           acc + x * c
         })))
 
+  /** PQ-ADC approximate top-k (q129): the codebook-compression ANN
+    * tier — each corpus vector is encoded ONCE into m one-byte codes
+    * (argmin-L2 per subspace against its codebook), and a query scores
+    * a vector by summing m lookup-table entries (asymmetric distance
+    * computation: LUT[j][code_j] = ⟨q_j, c_{j,code_j}⟩) instead of a
+    * dim-wide float op. Top-`PqTopC` ADC candidates per query are then
+    * reranked by EXACT cosine; precision of the final top-k is exact
+    * given the candidates, recall is the PQ approximation (spec-bounded
+    * against brute force).
+    *
+    * Scale: encoding is a per-row codegen HOF against codebook
+    * LITERALS (m·ks·ds doubles ≈ KBs in the plan — the standard
+    * broadcast-model pattern), zero shuffle; the scored stream's
+    * rank-filter runs through WindowGroupLimit (map-side top-topC per
+    * query before the exchange), so the shuffle carries
+    * O(queries × topC) rows. This variant scans all codes per query —
+    * PQ's fast-scan design point; at cell-restricted scale compose
+    * with IVF ([[ivfPqTopK]]). All arithmetic is in-order left folds,
+    * mirrored exactly by OracleHashSql.q129PqAdc.
+    */
   def pqAdcTopK(spark: SparkSession, embeddings: DataFrame,
                 queries: DataFrame, k: Int = 10): DataFrame = {
     GraftFunctions.register(spark)

@@ -81,34 +81,6 @@ object Sketches {
     alpha * m * m * 9223372036854775808.0 // 2^63
   }
 
-  /** HyperLogLog distinct-count sketch per group: hash each key,
-    * route the top `p` bits to one of m=2^p registers, keep the max
-    * "rho" (position of the first 1-bit in the remaining 64-p bits),
-    * and answer with the harmonic-mean raw estimate
-    * alpha_m * m^2 / sum_j 2^-M_j. Registers are built by a plain
-    * `groupBy(grp, bucket).agg(max(rho))` — map-side partial max IS the
-    * per-partition sketch, the shuffle carries at most m counter rows
-    * per group regardless of input size, and max-merge makes the state
-    * trivially mergeable across any partitioning (spec-asserted).
-    *
-    * Exactness contract: every step up to the final division is 64-bit
-    * integer arithmetic (the denominator sum 2^-M_j is kept as the
-    * exact integer sum of 2^(63-M_j), empty registers contributing
-    * 2^63), so the DuckDB oracle reproduces the registers bit-for-bit
-    * and the single double division rounds identically (the estimate is
-    * reported at 4 decimals to absorb HUGEINT->double cast differences).
-    * The raw estimate is reported WITHOUT the small-range linear-
-    * counting correction (it needs ln(), which is not bit-stable across
-    * libm implementations); callers in the n < 2.5m regime should apply
-    * it. NOTE: the output's `nz` is the NON-zero (occupied) register
-    * count — linear counting is m·ln(m/V) with V = m − nz zero
-    * registers, so plug in (m − nz), not nz.
-    *
-    * The exact `count(DISTINCT key)` rides along per group as ground
-    * truth, same reporting shape as [[cmsHeavyHitters]]; production at
-    * 100 TB keeps only the sketch side (one narrow shuffle, no
-    * distinct's exact-key exchange).
-    */
   /** Per-(grp, bucket) max-rho HLL registers — the mergeable core
     * shared by [[hllDistinct]] and [[hllDistinctRollup]]. `groupExpr`
     * is taken as-is so hllDistinct keeps the caller's group type;
@@ -145,6 +117,34 @@ object Sketches {
           .cast("double")).as("hll_raw"))
   }
 
+  /** HyperLogLog distinct-count sketch per group: hash each key,
+    * route the top `p` bits to one of m=2^p registers, keep the max
+    * "rho" (position of the first 1-bit in the remaining 64-p bits),
+    * and answer with the harmonic-mean raw estimate
+    * alpha_m * m^2 / sum_j 2^-M_j. Registers are built by a plain
+    * `groupBy(grp, bucket).agg(max(rho))` — map-side partial max IS the
+    * per-partition sketch, the shuffle carries at most m counter rows
+    * per group regardless of input size, and max-merge makes the state
+    * trivially mergeable across any partitioning (spec-asserted).
+    *
+    * Exactness contract: every step up to the final division is 64-bit
+    * integer arithmetic (the denominator sum 2^-M_j is kept as the
+    * exact integer sum of 2^(63-M_j), empty registers contributing
+    * 2^63), so the DuckDB oracle reproduces the registers bit-for-bit
+    * and the single double division rounds identically (the estimate is
+    * reported at 4 decimals to absorb HUGEINT->double cast differences).
+    * The raw estimate is reported WITHOUT the small-range linear-
+    * counting correction (it needs ln(), which is not bit-stable across
+    * libm implementations); callers in the n < 2.5m regime should apply
+    * it. NOTE: the output's `nz` is the NON-zero (occupied) register
+    * count — linear counting is m·ln(m/V) with V = m − nz zero
+    * registers, so plug in (m − nz), not nz.
+    *
+    * The exact `count(DISTINCT key)` rides along per group as ground
+    * truth, same reporting shape as [[cmsHeavyHitters]]; production at
+    * 100 TB keeps only the sketch side (one narrow shuffle, no
+    * distinct's exact-key exchange).
+    */
   def hllDistinct(df: DataFrame, keyCol: String, groupCol: String): DataFrame = {
     val est = hllEstimates(hllRegisters(df, keyCol, col(groupCol), HllP), HllP)
     val exact = df.groupBy(col(groupCol).as("grp"))
@@ -388,18 +388,6 @@ object Sketches {
       .orderBy("source_a", "source_b")
   }
 
-  /** Per-group top-k tokens via the SpaceSaving sketch (q126) — the
-    * "top domains per language / top terms per source" one-pass
-    * report. Each task folds its partition into ≤ `capacity` counters
-    * PER GROUP before the exchange (typed Aggregator partial
-    * aggregation), so the shuffle carries O(groups × capacity) rows
-    * however large the token stream is — the per-group sibling of
-    * q52's fixed-keyspace CMS. With capacity ≥ the group's distinct
-    * count the result is exact (err = 0) — the regime the DuckDB
-    * oracle certifies; the approximate regime's guarantees
-    * (overcount ≤ err, guaranteed presence above n/capacity) are
-    * property-tested in SketchesSpec.
-    */
   /** Per-customer order-value quantiles via the MRL mergeable quantile
     * sketch (q128) — the "per-entity percentile profile" one-pass
     * report. The typed Aggregator partial-aggregates each task's slice
@@ -428,6 +416,18 @@ object Sketches {
       .orderBy("o_custkey")
   }
 
+  /** Per-group top-k tokens via the SpaceSaving sketch (q126) — the
+    * "top domains per language / top terms per source" one-pass
+    * report. Each task folds its partition into ≤ [[SpaceSavingCapacity]] counters
+    * PER GROUP before the exchange (typed Aggregator partial
+    * aggregation), so the shuffle carries O(groups × capacity) rows
+    * however large the token stream is — the per-group sibling of
+    * q52's fixed-keyspace CMS. With capacity ≥ the group's distinct
+    * count the result is exact (err = 0) — the regime the DuckDB
+    * oracle certifies; the approximate regime's guarantees
+    * (overcount ≤ err, guaranteed presence above n/capacity) are
+    * property-tested in SketchesSpec.
+    */
   def spaceSavingTopTokens(spark: SparkSession, documents: DataFrame): DataFrame = {
     val ss = udaf(new graft.functions.Aggregators.SpaceSavingTopK(SpaceSavingCapacity))
     documents

@@ -283,10 +283,6 @@ object TextAnalysis {
         md5(col("rebuilt")).as("rebuilt_md5"))
   }
 
-  /** Intra-document repetition (Gopher-style quality signal): total vs
-    * distinct word n-gram counts and the distinct ratio — low ratios
-    * flag boilerplate/spam. Pure per-row, scan speed.
-    */
   /** Unigram language-model quality score (the CCNet/KenLM-style
     * perplexity filter, with the corpus itself as the model): per
     * document, the mean negative log-likelihood of its tokens under
@@ -545,6 +541,10 @@ object TextAnalysis {
       .limit(100)
   }
 
+  /** Intra-document repetition (Gopher-style quality signal): total vs
+    * distinct word n-gram counts and the distinct ratio — low ratios
+    * flag boilerplate/spam. Pure per-row, scan speed.
+    */
   def repetition(documents: DataFrame, n: Int = 3): DataFrame = {
     GraftFunctions.register(documents.sparkSession)
     val grams = GraftFunctions.wordShingles(TextFunctions.wsTokens(col("text")), n)

@@ -331,23 +331,6 @@ object TimeSeries {
       .agg(max(col("n")).cast("long").as("n_events"), rCols: _*)
   }
 
-  /** Holt linear-trend exponential smoothing + h-step forecast per key
-    * (q140) — the level/trend recurrence (Holt 1957; Hyndman &
-    * Athanasopoulos FPP §8.2):
-    *   l₁ = x₁, b₁ = 0;
-    *   lₜ = α·xₜ + (1−α)(lₜ₋₁ + bₜ₋₁),  bₜ = β(lₜ − lₜ₋₁) + (1−β)bₜ₋₁
-    * and forecast x̂(n+h) = lₙ + h·bₙ. A per-key RECURSIVE fold is
-    * inherently sequential, so it runs as ONE codegen `aggregate` HOF
-    * over the (ts, event_id)-sorted collected series — the q68-EWMA
-    * tradeoff taken the other way: exact recursion, bounded per-key
-    * history (the fixture keyspace grows with SF, per-key counts
-    * don't). α=β=1/2 default: every coefficient is an exact binary
-    * double, so the fold is bit-identical on any IEEE engine and the
-    * DuckDB oracle replays it with `list_reduce` verbatim (the q68
-    * determinism argument).
-    *
-    * Output per key: n, final level/trend, forecasts for h=1..3.
-    */
   /** Two-sided CUSUM change-point detection per key (q151) — Page
     * (1954): against the key's own mean μ, track
     *   s⁺ₜ = max(0, s⁺ₜ₋₁ + (xₜ − μ − k)),
@@ -458,6 +441,23 @@ object TimeSeries {
           r4c(element_at(col("st"), h + 3)).as(s"s$h")): _*)
   }
 
+  /** Holt linear-trend exponential smoothing + h-step forecast per key
+    * (q140) — the level/trend recurrence (Holt 1957; Hyndman &
+    * Athanasopoulos FPP §8.2):
+    *   l₁ = x₁, b₁ = 0;
+    *   lₜ = α·xₜ + (1−α)(lₜ₋₁ + bₜ₋₁),  bₜ = β(lₜ − lₜ₋₁) + (1−β)bₜ₋₁
+    * and forecast x̂(n+h) = lₙ + h·bₙ. A per-key RECURSIVE fold is
+    * inherently sequential, so it runs as ONE codegen `aggregate` HOF
+    * over the (ts, event_id)-sorted collected series — the q68-EWMA
+    * tradeoff taken the other way: exact recursion, bounded per-key
+    * history (the fixture keyspace grows with SF, per-key counts
+    * don't). α=β=1/2 default: every coefficient is an exact binary
+    * double, so the fold is bit-identical on any IEEE engine and the
+    * DuckDB oracle replays it with `list_reduce` verbatim (the q68
+    * determinism argument).
+    *
+    * Output per key: n, final level/trend, forecasts for h=1..3.
+    */
   def holtForecast(events: DataFrame): DataFrame = {
     val series = events.filter(col("value").isNotNull)
       .groupBy(col("user_id"))

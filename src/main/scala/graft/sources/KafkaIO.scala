@@ -180,11 +180,14 @@ object KafkaIO {
   /** K1/K2 — the alerts sink: key = product id string (the reference's
     * output Kafka key, dsl/PriceAlertsApp.java:117,132), value =
     * Confluent-framed Avro PriceAlert record (window_start as
-    * timestamp-millis, dsl/PriceAlertsApp.java:128-131).
+    * timestamp-millis, dsl/PriceAlertsApp.java:128-131). It owns the
+    * `checkpoint`, so it installs the fork-free local checkpoint file
+    * system ([[LocalFs]]) into whichever session the alerts run in.
     */
   def alertsSink(alerts: DataFrame, bootstrap: String, topic: String,
                  checkpoint: String): DataStreamWriter[Row] = {
     GraftFunctions.register(alerts.sparkSession)
+    LocalFs.install(alerts.sparkSession)
     alerts
       .select(col("product_id").cast("string").as("key"),
         GraftFunctions.toAvro(

@@ -11,9 +11,13 @@ import graft.operators.PriceAlerts
   * Two emission semantics, matching the reference's two variants:
   *
   *  - [[dslAlertsUpdate]] — the DSL variant (W3): every qualifying
-  *    update flows to the sink; no watermark, state retained
-  *    indefinitely (mirrors KS 2.8's default 24 h grace). Run with
-  *    `outputMode("update")`.
+  *    update flows to the sink; no watermark, so every (window,
+  *    product) row stays in state for the life of the query. This
+  *    DIVERGES from the reference: Kafka Streams 2.8 drops a window once
+  *    stream time passes its end plus the grace (24 h − window size;
+  *    SURVEY.md W5), so its state is bounded and records later than
+  *    that are dropped. Bounding the state by that grace with a
+  *    watermark is ROADMAP direction 4. Run with `outputMode("update")`.
   *  - [[processorAlertsAppend]] — the Processor variant (W4): emit ONCE
   *    per closed window, then drop the state. Spark's
   *    watermark+append mode is exactly this semantics with event-time

@@ -5,6 +5,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.{PriceAlertsStream, ProcessorAlerts, StreamingDedup}
 
@@ -110,9 +111,19 @@ class CheckpointRecoverySpec extends SparkSpec {
 
   // ---- update mode: idempotent keyed upsert through foreachBatch -------
 
-  private def runUpdatePhases(phases: Seq[Seq[Seq[P]]], interrupt: Boolean)
+  /** Runs `body` with `file:` checkpoints on Hadoop's stock `LocalFs`
+    * when `stock`, else on the fork-free one the session installs.
+    */
+  private def onFs[T](stock: Boolean)(body: => T): T =
+    if (stock) withConf("fs.AbstractFileSystem.file.impl" -> "org.apache.hadoop.fs.local.LocalFs")(body)
+    else body
+
+  /** Drives the DSL update-mode alerts through `phases` into checkpoint
+    * `cp`; phase `i` runs on the stock `LocalFs` when `stockPhases(i)`.
+    */
+  private def runUpdatePhases(phases: Seq[Seq[Seq[P]]], interrupt: Boolean,
+      stockPhases: Set[Int] = Set.empty, cp: String = tmpDir("graft-cp-upd"))
       : Map[(String, Timestamp), Double] = {
-    val cp = tmpDir("graft-cp-upd")
     val results = new java.util.concurrent.ConcurrentHashMap[(String, Timestamp), Double]
     val in = MemoryStream[P]
     val alerts = PriceAlertsStream.dslAlertsUpdate(in.toDF(), products(300.0))
@@ -126,28 +137,69 @@ class CheckpointRecoverySpec extends SparkSpec {
             r.getAs[Double]("total_sum_per_minute"))
         }
       }.start()
-    var q = start()
+    var q: StreamingQuery = null
     try {
       phases.zipWithIndex.foreach { case (batches, i) =>
-        if (i > 0 && interrupt) { q.stop(); q = start() }
-        batches.foreach { b => in.addData(b); q.processAllAvailable() }
+        onFs(stockPhases(i)) {
+          if (q == null) q = start()
+          else if (interrupt) { q.stop(); q = start() }
+          batches.foreach { b => in.addData(b); q.processAllAvailable() }
+        }
       }
-    } finally q.stop()
+    } finally if (q != null) q.stop()
     import scala.jdk.CollectionConverters._
     results.asScala.toMap
   }
 
+  private val updatePhases: Seq[Seq[Seq[P]]] = Seq(
+    Seq((1L to 6L).map(i => P(i, 2L, 1L, t0230))),          // 3600 emitted
+    Seq(Seq(P(7L, 1L, 1L, t0230)),                          // refine → 3900
+        Seq(P(8L, 2L, 1L, t0500))))                         // new window 1200... <10*300? no: 600
+
   test("update-mode alerts recover from checkpoint: refinement continues across restart") {
-    val phases: Seq[Seq[Seq[P]]] = Seq(
-      Seq((1L to 6L).map(i => P(i, 2L, 1L, t0230))),          // 3600 emitted
-      Seq(Seq(P(7L, 1L, 1L, t0230)),                          // refine → 3900
-          Seq(P(8L, 2L, 1L, t0500))))                         // new window 1200... <10*300? no: 600
-    val resumed = runUpdatePhases(phases, interrupt = true)
-    val straight = runUpdatePhases(phases, interrupt = false)
+    val resumed = runUpdatePhases(updatePhases, interrupt = true)
+    val straight = runUpdatePhases(updatePhases, interrupt = false)
     assert(resumed == straight, s"final upserted state must match:\n$resumed\nvs\n$straight")
     // the post-restart refinement must build on pre-restart state: 3600+300
     assert(resumed(("1", w0200)) == 3900.0,
       "restarted query must refine the checkpointed window sum, not restart it")
+  }
+
+  // ---- checkpoint interop: fork-free and stock local file systems ------
+
+  test("checkpoint interop: stock LocalFs resumes a fork-free checkpoint, and the reverse") {
+    withRocksDb {
+      val straight = runUpdatePhases(updatePhases, interrupt = false)
+      val forkFreeThenStock = runUpdatePhases(updatePhases, interrupt = true, stockPhases = Set(1))
+      val stockThenForkFree = runUpdatePhases(updatePhases, interrupt = true, stockPhases = Set(0))
+      assert(forkFreeThenStock == straight, s"$forkFreeThenStock\nvs\n$straight")
+      assert(stockThenForkFree == straight, s"$stockThenForkFree\nvs\n$straight")
+      assert(straight(("1", w0200)) == 3900.0)
+    }
+  }
+
+  /** Every file and directory under `root`, relative, with its mode. */
+  private def tree(root: String): Seq[(String, String)] = {
+    import java.nio.file.Paths
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    val base = Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator().asScala.map(p => (base.relativize(p).toString,
+      PosixFilePermissions.toString(Files.getPosixFilePermissions(p)))).toSeq.sorted
+    finally walk.close()
+  }
+
+  test("checkpoint layout: the fork-free file system writes the stock tree, .crc files and modes") {
+    val (stock, forkFree) = (tmpDir("graft-cp-stock"), tmpDir("graft-cp-forkfree"))
+    runUpdatePhases(updatePhases, interrupt = true, stockPhases = Set(0, 1), cp = stock)
+    runUpdatePhases(updatePhases, interrupt = true, cp = forkFree)
+    val expected = tree(stock)
+    // both checksum layers: Spark's `1.delta.crc` beside `1.delta`, and
+    // Hadoop's `.crc` of each of the two
+    assert(Seq("1.delta", "1.delta.crc", ".1.delta.crc", ".1.delta.crc.crc")
+      .forall(f => expected.exists(_._1 == s"state/0/0/$f")), expected)
+    assert(tree(forkFree) == expected)
   }
 
   // ---- funnel stage machine (transformWithState, TimeMode.None) --------

@@ -166,6 +166,26 @@ class SourceLintSpec extends AnyFunSuite {
         (1, "Harness.session: the one session policy of the artifact mains")))
   }
 
+  test("the file: AbstractFileSystem key is confined to the LocalFs install") {
+    // the fork-free checkpoint file system is installed in one place; a
+    // second writer of the key would fork that install path
+    check("fs.AbstractFileSystem.file.impl", """fs\.AbstractFileSystem\.file\.impl""".r, Map(
+      "src/main/scala/graft/sources/LocalFs.scala" ->
+        (1, "LocalFs.install: the one install of the fork-free file: scheme")))
+  }
+
+  test("no scaladoc block sits directly above another one") {
+    // the first block of such a pair describes a def that is not below it:
+    // scaladoc keeps only the second, and the described def has none
+    val orphans = sources.flatMap { case (f, text) =>
+      text.linesIterator.sliding(2).zipWithIndex.collect {
+        case (Seq(a, b), i) if a.trim.endsWith("*/") && b.trim.startsWith("/**") => s"$f:${i + 1}"
+      }
+    }
+    assert(orphans.isEmpty, s"scaladoc block followed directly by another (line of its */): " +
+      orphans.mkString(", "))
+  }
+
   test("every public def in src/main has a caller in src/main or perfbench/src") {
     // a def that only its spec calls is API nothing uses: delete it
     // with its spec, or narrow it to private[graft] when the spec pins

@@ -17,12 +17,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-suite attribution is exact.)
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = SparkSession.builder()
+      .master("local[4]")
+      .config("spark.sql.shuffle.partitions", "4")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    // streaming specs checkpoint through the file system the mains use
+    sources.LocalFs.install(s)
+    s
+  }
 
   def sf001 = "/root/testdata/sf0.001"
 
